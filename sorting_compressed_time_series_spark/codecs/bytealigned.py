@@ -39,17 +39,28 @@ import numpy as np
 # class code -> payload byte width (class 0 is the widest, matching the
 # reference's "code 0 = 8 bytes" convention)
 CLASS_WIDTH = np.array([8, 1, 2, 4], dtype=np.int64)
+# (class code, little-endian dtype of that payload width)
+_CLASS_DTYPES = tuple((c, np.dtype(f"<u{w}")) for c, w in enumerate(CLASS_WIDTH.tolist()))
+# elements per bucket pass: bounds the index temporaries of the gathers
+_BLOCK = 1 << 16
+_U8_MAX, _U16_MAX, _U32_MAX = (np.uint64(2**b - 1) for b in (8, 16, 32))
 
 
 def zigzag(v: np.ndarray) -> np.ndarray:
     """Map signed int64 -> unsigned magnitude order-preserving code."""
     v = v.astype(np.int64, copy=False)
-    return ((v << 1) ^ (v >> 63)).view(np.uint64)
+    z = v << 1
+    z ^= v >> 63
+    return z.view(np.uint64)
 
 
 def unzigzag(z: np.ndarray) -> np.ndarray:
     z = z.astype(np.uint64, copy=False)
-    return ((z >> np.uint64(1)).view(np.int64)) ^ -((z & np.uint64(1)).view(np.int64))
+    out = (z >> np.uint64(1)).view(np.int64)
+    sign = (z & np.uint64(1)).view(np.int64)
+    np.negative(sign, out=sign)
+    out ^= sign
+    return out
 
 
 @dataclass
@@ -64,18 +75,6 @@ class ByteAlignedData:
     vals: np.ndarray  # uint8[total_payload_bytes]
     codes: np.ndarray  # uint8[count], values in {0,1,2,3}
     count: int
-
-    def widths(self) -> np.ndarray:
-        return CLASS_WIDTH[self.codes]
-
-    def byte_offsets(self) -> np.ndarray:
-        """Start offset of each element's payload in ``vals``."""
-        w = self.widths()
-        off = np.empty(len(w), dtype=np.int64)
-        if len(w):
-            np.cumsum(w[:-1], out=off[1:])
-            off[0] = 0
-        return off
 
     def pack_lens(self) -> bytes:
         n = self.count
@@ -97,41 +96,67 @@ class ByteAlignedData:
 
 def _classify(zz: np.ndarray) -> np.ndarray:
     """Smallest length class whose width holds each zigzag code."""
-    codes = np.full(zz.shape, 0, dtype=np.uint8)  # default class 0 = 8B
-    codes[zz < np.uint64(1) << np.uint64(32)] = 3
-    codes[zz < np.uint64(1) << np.uint64(16)] = 2
-    codes[zz < np.uint64(1) << np.uint64(8)] = 1
-    return codes
+    rank = (zz > _U8_MAX).view(np.uint8)  # 0..3 = width 1, 2, 4, 8
+    rank += zz > _U16_MAX
+    rank += zz > _U32_MAX
+    rank += 1
+    rank &= 3  # rank -> class code (width 8 is class 0)
+    return rank
+
+
+def _offsets(codes: np.ndarray) -> np.ndarray:
+    """Payload start offset of every element, plus the plane length as the
+    last entry. int32 while any plane of this length fits in 2 GiB."""
+    idt = np.int32 if 8 * len(codes) < 2**31 else np.int64
+    off = np.empty(len(codes) + 1, dtype=idt)
+    off[0] = 0
+    w = codes + np.uint8(3)  # width = 1 << ((code - 1) mod 4), no lookup
+    w &= 3
+    np.left_shift(np.uint8(1), w, out=w).cumsum(dtype=idt, out=off[1:])
+    return off
+
+
+def _window(plane: np.ndarray, dt: np.dtype) -> np.ndarray:
+    """Zero-copy view of ``plane`` whose element j is the ``dt.itemsize``
+    bytes starting at byte j, so one fancy index reads or writes a whole
+    payload at any byte offset (no per-byte passes, no n x 8 temporaries).
+    Index it with intp arrays; ``take`` would copy the whole overlapping
+    view first."""
+    plane = np.ascontiguousarray(plane)
+    return np.ndarray(
+        (max(len(plane) - dt.itemsize + 1, 0),), dtype=dt, buffer=plane, strides=(1,)
+    )
+
+
+def _buckets(codes: np.ndarray):
+    """(element indices, payload dtype) per width class present in ``codes``,
+    block by block, so index temporaries stay `_BLOCK`-sized whatever n."""
+    for lo in range(0, len(codes), _BLOCK):
+        block = codes[lo : lo + _BLOCK]
+        for code, dt in _CLASS_DTYPES:
+            idx = (block == code).nonzero()[0]
+            if len(idx):
+                idx += lo
+                yield idx, dt
 
 
 def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Scatter little-endian payload bytes for all elements at once."""
-    w = CLASS_WIDTH[codes]
-    total = int(w.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    off = np.empty(len(w), dtype=np.int64)
-    if len(w):
-        np.cumsum(w[:-1], out=off[1:])
-        off[0] = 0
-    for b in range(8):  # 8 fixed vectorized passes, not per-element
-        m = w > b
-        if not m.any():
-            break
-        out[off[m] + b] = ((zz[m] >> np.uint64(8 * b)) & np.uint64(0xFF)).astype(np.uint8)
+    """Little-endian payload plane of all elements, one scatter per width
+    class."""
+    off = _offsets(codes)
+    out = np.empty(int(off[-1]), dtype=np.uint8)
+    for idx, dt in _buckets(codes):
+        _window(out, dt)[off[idx].astype(np.intp)] = zz[idx]
     return out
 
 
 def _gather_payload(data: ByteAlignedData) -> np.ndarray:
-    """Inverse of `_emit_payload`: vals + codes -> zigzag codes."""
-    w = data.widths()
-    off = data.byte_offsets()
-    zz = np.zeros(data.count, dtype=np.uint64)
-    vals = data.vals
-    for b in range(8):
-        m = w > b
-        if not m.any():
-            break
-        zz[m] |= vals[off[m] + b].astype(np.uint64) << np.uint64(8 * b)
+    """Inverse of `_emit_payload`: vals + codes -> zigzag codes, one gather
+    per width class."""
+    off = _offsets(data.codes)
+    zz = np.empty(data.count, dtype=np.uint64)
+    for idx, dt in _buckets(data.codes):
+        zz[idx] = _window(data.vals, dt)[off[idx].astype(np.intp)]
     return zz
 
 
@@ -169,12 +194,12 @@ def delta_decode(data: ByteAlignedData, backward: bool = False) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     zz = _gather_payload(data)
     deltas = unzigzag(zz)
-    first = np.uint64(zz[0]).reshape(1).view(np.int64)[0]
-    deltas[0] = 0
+    first = zz[0].view(np.int64)
+    del zz
     if not backward:
-        out = np.cumsum(deltas)
-        out += first
-        return out
+        deltas[0] = first
+        return np.cumsum(deltas, out=deltas)
+    deltas[0] = 0
     # backward: v[i] = v[n-1] - sum(deltas[i+1:]); the suffix-sum over the
     # reversed delta stream proves the lens plane is walkable from the tail
     # (reference TS_DELTA_decoder.backwardDecode semantics). All int64 math
@@ -210,21 +235,79 @@ def permute(data: ByteAlignedData, order: np.ndarray) -> ByteAlignedData:
 
     This is the generalized form of the value-plane rotation the reference
     sorter performs (CompressedDataSorter.dataMove — byte-range rotation);
-    a gather expresses any permutation, rotation included, with one pass.
+    a gather expresses any permutation, rotation included, with one pass
+    per width class.
     """
-    w = data.widths()
-    off = data.byte_offsets()
-    new_codes = data.codes[order]
-    new_w = w[order]
-    new_off = np.empty(len(new_w), dtype=np.int64)
-    if len(new_w):
-        np.cumsum(new_w[:-1], out=new_off[1:])
-        new_off[0] = 0
-    out = np.empty(int(new_w.sum()), dtype=np.uint8)
-    src_off = off[order]
-    for b in range(8):
-        m = new_w > b
-        if not m.any():
-            break
-        out[new_off[m] + b] = data.vals[src_off[m] + b]
-    return ByteAlignedData(out, new_codes, data.count)
+    codes = data.codes[order]
+    off = _offsets(codes)
+    src_off = _offsets(data.codes)
+    out = np.empty(int(off[-1]), dtype=np.uint8)
+    for idx, dt in _buckets(codes):
+        src = _window(data.vals, dt)[src_off[order[idx]].astype(np.intp)]
+        _window(out, dt)[off[idx].astype(np.intp)] = src
+    return ByteAlignedData(out, codes, len(codes))
+
+
+def move_runs(
+    data: ByteAlignedData,
+    runs: np.ndarray,
+    order: np.ndarray | None = None,
+    heads: tuple[np.ndarray, np.ndarray] | None = None,
+) -> ByteAlignedData:
+    """Permute a column by ``order`` (identity when None), moving whole runs.
+
+    ``runs`` lists, ascending and starting with 0, every output position i
+    where ``order[i] != order[i-1] + 1``. Between two run starts the source
+    elements are consecutive, so each run's payload moves as one byte slice
+    and the payload plane is assembled by one concatenation: O(n) bytes
+    copied plus O(runs) slicing, against one gather per element in
+    `permute`. Pays off while runs are few (a nearly sorted series).
+
+    ``heads=(zz, codes)`` replaces the first element of run k with payload
+    ``zz[k]`` in class ``codes[k]`` instead of copying it.
+    """
+    n = data.count
+    src = runs if order is None else order[runs]
+    stop = src + np.diff(runs, append=n)
+    first = src if heads is None else src + 1
+    off = _offsets(data.codes)
+    v = data.vals
+    pieces = [v[a:b] for a, b in zip(off[first].tolist(), off[stop].tolist())]
+    codes = data.codes.copy() if order is None else data.codes[order]
+    if heads is not None:
+        zz, head_codes = heads
+        hv = _emit_payload(zz, head_codes)
+        ho = _offsets(head_codes).tolist()
+        body = pieces
+        pieces = [None] * (2 * len(body))
+        pieces[0::2] = [hv[a:b] for a, b in zip(ho[:-1], ho[1:])]
+        pieces[1::2] = body
+        codes[runs] = head_codes
+    return ByteAlignedData(np.concatenate(pieces), codes, n)
+
+
+def delta_splice(
+    data: ByteAlignedData,
+    ts: np.ndarray,
+    runs: np.ndarray,
+    order: np.ndarray | None = None,
+) -> ByteAlignedData:
+    """`move_runs` for the delta (time) column: re-encode only each run's
+    first delta, whose predecessor changed; ``ts`` is the decoded column.
+
+    Run 0 starts with the raw first value (class 0); every later run with
+    the canonical delta against the previous run's last element. Interior
+    deltas are copied as stored, so with canonical input the result equals
+    ``delta_encode(ts[order])``. Source elements holding a raw value (page
+    starts of stacked pages) must each start a run.
+    """
+    src = runs if order is None else order[runs]
+    prev = runs[1:] - 1  # output position before each later run head
+    d = np.empty(len(runs), dtype=np.int64)
+    d[0] = 0
+    np.subtract(ts[src[1:]], ts[prev if order is None else order[prev]], out=d[1:])
+    zz = zigzag(d)
+    codes = _classify(zz)
+    zz[0] = ts[src[0]].view(np.uint64)
+    codes[0] = 0
+    return move_runs(data, runs, order, (zz, codes))

@@ -1,28 +1,43 @@
 """Compressed-domain sort: the reference's signature operator, re-expressed.
 
 The reference observes that time-series points arrive *mostly* ordered, so a
-nearly-sorted compressed series can be fixed up by (1) locating the
-out-of-order run, (2) patching the 2–3 boundary delta codes, and (3) rotating
-the affected byte ranges of the payload plane and the 2-bit entries of the
-length plane — never touching the (vast) in-order remainder
+nearly-sorted compressed series can be fixed up without re-encoding it:
+move the payload bytes and the 2-bit length-plane entries of the displaced
+elements, and re-encode only the delta codes whose predecessor changed
 (reference CompressedDataSorter.blockSort / persistentSortOpeHoldLen,
 db/iotdb-core/datanode/.../compressedsort/CompressedDataSorter.java:24-176;
 semantics re-derived, no code copied).
 
-Two interchangeable paths, byte-identical outputs:
+Paths, byte-identical outputs:
 
-- `compressed_sort`    — the in-place path: rotations on the encoded planes
-  plus canonical re-encode of the three boundary deltas. Because our delta
-  encoder is deterministic per delta value, the result equals a fresh encode
-  of the sorted arrays — which the oracle test asserts byte-for-byte.
-- `sort_reencode`      — decode → stable argsort → encode. This is the
-  fallback for heavily shuffled input and the semantic oracle
-  (reference flush-sort `CompressedTVList.convertAndSort2`,
-  CompressedTVList.java:616-716, is semantically a stable sort by ts).
+- `compressed_sort` — one decode of the time column, one stable
+  permutation (timsort, linear on nearly sorted input). The permutation
+  splits into runs of consecutive source elements; each run moves as one
+  byte slice of the payload plane, and each plane is assembled by one
+  concatenation (`move_runs`); the length planes move by one gather. Only
+  the *seams* are re-encoded: output positions whose source predecessor
+  changed (``order[i] != order[i-1] + 1``; position 0 takes the raw first
+  value). Their payloads are spliced in during the same concatenation;
+  every other delta code is copied as stored (`delta_splice`). The
+  reference applies the same moves as one block rotation per out-of-order
+  run; one permutation expresses all of them at once, so k runs cost
+  O(n + k), not O(n·k). Because our delta encoder is deterministic per
+  delta value, the result equals a fresh encode of the sorted arrays,
+  which the oracle tests assert byte for byte. Every run costs a few
+  Python-level slices, so above `ROTATION_INVERSION_THRESHOLD` descents
+  per point it re-encodes instead.
+- `sort_reencode` — decode → stable argsort → encode. The fallback for
+  heavily shuffled input and the semantic oracle (reference flush-sort
+  `CompressedTVList.convertAndSort2`, CompressedTVList.java:616-716, is
+  semantically a stable sort by ts).
+- `bounded_ooo_sort` and `ts_delta_sort_dc` — the reference's experimental
+  alternatives, kept as baselines. `ts_delta_sort_dc` still splices one
+  block rotation at a time (`_rotation_sort_range`).
 
 Stability contract (matches the reference's TimSort-based oracle,
 MemtableSortTest.java:377-389): equal timestamps keep arrival order, and the
-value column is permuted in lockstep with the time column.
+value column is permuted in lockstep with the time column. No sorter
+mutates its arguments.
 """
 
 from __future__ import annotations
@@ -36,15 +51,20 @@ from ..codecs.bytealigned import (
     _emit_payload,
     delta_decode,
     delta_encode,
+    delta_splice,
+    move_runs,
     permute,
     zigzag,
 )
 
-# how out-of-order a series may be before we give up on rotations and
-# re-encode wholesale; mirrors the BackwardSort inversion-ratio idea
-# (reference datanode/.../datastructure/BackwardSort.java:28,
-# INVERSION_RATIOS_THRESHOLD = 0.004)
-ROTATION_INVERSION_THRESHOLD = 0.05
+# how out-of-order a series may be (descents / points) before the run
+# moves give way to a wholesale re-encode; mirrors the BackwardSort
+# inversion-ratio idea (reference datanode/.../datastructure/
+# BackwardSort.java:28, INVERSION_RATIOS_THRESHOLD = 0.004). Set from
+# tools/sort_microbench.py (tools/sort_microbench.json): the run moves beat
+# the re-encode on 10k-1M point pages up to about 0.7% descents per point;
+# on 10k-point pages they break even at 0.7% and lose from 1%.
+ROTATION_INVERSION_THRESHOLD = 0.007
 
 
 def is_sorted(ts: np.ndarray) -> bool:
@@ -57,18 +77,74 @@ def stable_sort_order(ts: np.ndarray) -> np.ndarray:
     return np.argsort(ts, kind="stable")
 
 
+def _runs(order: np.ndarray) -> tuple[np.ndarray, int]:
+    """Output positions where ``order`` starts a new run of consecutive
+    source elements (0 first), and the number of elements that move: a
+    run either keeps every element in place or moves them all."""
+    n = len(order)
+    runs = np.concatenate(([0], 1 + (np.diff(order) != 1).nonzero()[0]))
+    lens = np.diff(runs, append=n)
+    return runs, n - int(lens[order[runs] == runs].sum())
+
+
 def sort_reencode(
     time_data: ByteAlignedData, value_data: ByteAlignedData
 ) -> tuple[ByteAlignedData, ByteAlignedData, int]:
     """Decode-sort-reencode fallback. Returns (time, value, n_moves)."""
     ts = delta_decode(time_data)
     order = stable_sort_order(ts)
-    moved = int((order != np.arange(len(order))).sum())
+    moved = _runs(order)[1]
     if moved == 0:
         return time_data, value_data, 0
     new_time = delta_encode(ts[order])
     new_value = permute(value_data, order)  # value plane: pure byte gather
     return new_time, new_value, moved
+
+
+def compressed_sort(
+    time_data: ByteAlignedData,
+    value_data: ByteAlignedData,
+    inversion_threshold: float = ROTATION_INVERSION_THRESHOLD,
+) -> tuple[ByteAlignedData, ByteAlignedData, dict]:
+    """Compressed-domain sort of a nearly-sorted series.
+
+    One decode of the time column yields the stable sort permutation. Its
+    runs of consecutive elements move as byte slices of both columns, with
+    the canonical re-encode of the seam deltas spliced in (`delta_splice`,
+    `move_runs`). Falls back to a wholesale re-encode when descents exceed
+    ``inversion_threshold`` of the points (BackwardSort-style regime
+    switch). The inputs are never modified; a sorted series is returned as
+    is, any other as new objects.
+
+    Returns (time, value, lineage), the per-partition sort lineage:
+
+    - ``path``: ``noop``, ``rotate`` (run moves) or ``reencode``;
+    - ``rotations``: on the rotate path, descents in the input, positions
+      i with ``ts[i] < ts[i-1]`` (one per out-of-order run);
+    - ``patched_codes``: on the rotate path, delta codes re-encoded, i.e.
+      seams (the re-encode path rewrites every code);
+    - ``moved_elements``: elements whose position changed.
+    """
+    ts = delta_decode(time_data)
+    n = len(ts)
+    lineage = {"path": "noop", "rotations": 0, "patched_codes": 0, "moved_elements": 0}
+    descents = int(np.count_nonzero(ts[1:] < ts[:-1])) if n > 1 else 0
+    if descents == 0:
+        return time_data, value_data, lineage
+
+    order = stable_sort_order(ts)
+    runs, lineage["moved_elements"] = _runs(order)
+    if descents > max(1, n * inversion_threshold):
+        lineage["path"] = "reencode"
+        return delta_encode(ts[order]), permute(value_data, order), lineage
+
+    seams = len(runs) - int(order[0] == 0)  # run heads whose predecessor changed
+    lineage.update(path="rotate", rotations=descents, patched_codes=seams)
+    return (
+        delta_splice(time_data, ts, runs, order),
+        move_runs(value_data, runs, order),
+        lineage,
+    )
 
 
 def _reencode_delta_at(data: ByteAlignedData, ts: np.ndarray, idx: int) -> None:
@@ -79,7 +155,7 @@ def _reencode_delta_at(data: ByteAlignedData, ts: np.ndarray, idx: int) -> None:
         zz = np.asarray(ts[0:1]).view(np.uint64)
         code = np.uint8(0)
     else:
-        zz = zigzag(np.array([ts[idx] - ts[idx - 1]], dtype=np.int64))
+        zz = zigzag(ts[idx : idx + 1] - ts[idx - 1 : idx])  # wraps like the encoder
         code = _classify(zz)[0]
     new_bytes = _emit_payload(zz, np.array([code], dtype=np.uint8))
     w = CLASS_WIDTH[data.codes]
@@ -106,41 +182,6 @@ def _rotate_ranges(
     )
     # length plane rotation
     data.codes[p:end] = np.concatenate([data.codes[mid:end], data.codes[p:mid]])
-
-
-def compressed_sort(
-    time_data: ByteAlignedData,
-    value_data: ByteAlignedData,
-    inversion_threshold: float = ROTATION_INVERSION_THRESHOLD,
-) -> tuple[ByteAlignedData, ByteAlignedData, dict]:
-    """In-place compressed-domain sort of a nearly-sorted series.
-
-    Loop (reference blockSort, CompressedDataSorter.java:24-59): find the
-    first inversion; the moved block M is the maximal non-decreasing run
-    starting there whose elements all sort before the displaced block D;
-    rotate M before D in both planes; patch the three boundary deltas.
-    Falls back to `sort_reencode` when the inversion ratio exceeds
-    `ROTATION_INVERSION_THRESHOLD` (BackwardSort-style regime switch).
-
-    Returns (time, value, lineage) where lineage records rotations,
-    patched codes and the path taken — the per-partition sort lineage the
-    north rule requires.
-    """
-    ts = delta_decode(time_data)
-    n = len(ts)
-    lineage = {"path": "noop", "rotations": 0, "patched_codes": 0, "moved_elements": 0}
-    if n < 2 or is_sorted(ts):
-        return time_data, value_data, lineage
-
-    inversions = int((ts[1:] < ts[:-1]).sum())
-    if inversions > max(1, n * inversion_threshold):
-        t, v, moved = sort_reencode(time_data, value_data)
-        lineage.update(path="reencode", moved_elements=moved)
-        return t, v, lineage
-
-    lineage["path"] = "rotate"
-    _rotation_sort_range(time_data, value_data, ts, 0, n, lineage)
-    return time_data, value_data, lineage
 
 
 def _rotation_sort_range(
@@ -279,7 +320,7 @@ def ts_delta_sort_dc(
 
     Returns (time, value, lineage) with the same byte-identity contract as
     ``compressed_sort``: the result equals a fresh canonical encode of the
-    stable-sorted series."""
+    stable-sorted series. The rotations work on copies of the inputs."""
     ts = delta_decode(time_data)
     n = len(ts)
     lineage = {
@@ -289,6 +330,8 @@ def ts_delta_sort_dc(
     if n < 2 or is_sorted(ts):
         lineage["path"] = "noop"
         return time_data, value_data, lineage
+    time_data = ByteAlignedData(time_data.vals.copy(), time_data.codes.copy(), n)
+    value_data = ByteAlignedData(value_data.vals.copy(), value_data.codes.copy(), n)
 
     def rec(lo: int, hi: int) -> None:
         if hi - lo <= block_threshold:

@@ -4,16 +4,22 @@ Re-expresses the reference's compaction-time compressed merge
 (PersistUncompressingSorter, reference db/iotdb-core/tsfile/.../encoding/
 sorter/PersistUncompressingSorter.java:42-206 — semantics only, no code):
 
+The pages' planes are stacked back to back and decoded in one pass: one
+payload gather over the stacked plane, then a cumulative sum segmented at
+the page starts (each page's first element is a raw value, not a delta).
+
 - **Non-overlapping pages** (the common case once series are sorted): the
-  merged stream is the concatenation of the pages' payload planes with ONE
-  patched delta per page boundary — the first element of each later page
-  stops being a raw value and becomes a delta against the previous page's
-  last timestamp (reference sortPage fast path, :96-102). No decode of page
-  interiors.
+  merged stream is the stacked planes with ONE patched delta per page
+  boundary — the first element of each later page stops being a raw value
+  and becomes a delta against the previous page's last timestamp
+  (reference sortPage fast path, :96-102). All seams are re-encoded in
+  one `delta_splice` call, the seam splice `compressed_sort` uses; page
+  interiors are copied as stored.
 - **Overlapping pages**: k-way stable merge. The reference splices byte
-  ranges across page boundaries; we decode, merge-order with a stable
-  argsort keyed (ts, page_order), and re-encode — identical output (the
-  canonical encode of the merged sequence), which the oracle asserts.
+  ranges across page boundaries; we merge-order with a stable argsort
+  keyed (ts, page_order), re-encode the time column and gather the value
+  column's bytes in that order — identical output (the canonical encode of
+  the merged sequence), which the oracle asserts.
 
 In the Spark pipeline this kernel runs per series inside `applyInPandas`
 during tier compaction; page order = flush order, so stability gives
@@ -26,21 +32,31 @@ import numpy as np
 
 from ..codecs.bytealigned import (
     ByteAlignedData,
-    CLASS_WIDTH,
-    _classify,
-    _emit_payload,
-    delta_decode,
+    _gather_payload,
     delta_encode,
-    varint_decode,
-    varint_encode,
-    zigzag,
+    delta_splice,
+    permute,
+    unzigzag,
 )
 
 
-def _concat_bytealigned(parts: list[ByteAlignedData]) -> ByteAlignedData:
-    vals = np.concatenate([p.vals for p in parts]) if parts else np.empty(0, np.uint8)
-    codes = np.concatenate([p.codes for p in parts]) if parts else np.empty(0, np.uint8)
-    return ByteAlignedData(vals, codes, sum(p.count for p in parts))
+def _stack(parts: list[ByteAlignedData]) -> ByteAlignedData:
+    vals = np.concatenate([p.vals for p in parts])
+    codes = np.concatenate([p.codes for p in parts])
+    return ByteAlignedData(vals, codes, len(codes))
+
+
+def _decode_pages(stacked: ByteAlignedData, starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Decode delta pages stored back to back: one payload gather, then a
+    cumulative sum restarted at every page start (int64 math wraps, as in
+    `delta_decode`)."""
+    zz = _gather_payload(stacked)
+    firsts = zz[starts].view(np.int64)
+    d = unzigzag(zz)
+    d[starts] = firsts
+    c = np.cumsum(d)
+    c -= np.repeat(c[starts] - firsts, counts)
+    return c
 
 
 def merge_pages(
@@ -61,37 +77,16 @@ def merge_pages(
         lineage["path"] = "single"
         return pages[0], vpages[0], lineage
 
-    # decode only the boundary info first: last/first element of each page.
-    decoded = [delta_decode(p) for p in pages]
-    no_overlap = all(
-        decoded[k][-1] <= decoded[k + 1][0] for k in range(len(decoded) - 1)
-    )
-    if no_overlap:
-        # compressed-domain concat: splice planes, patch one delta per seam
-        lineage["path"] = "splice"
-        out_t = _concat_bytealigned(pages)
-        out_v = _concat_bytealigned(vpages)
-        # seam element index of page k+1 = cumulative count
-        seam = 0
-        for k in range(len(pages) - 1):
-            seam += pages[k].count
-            delta = decoded[k + 1][0] - decoded[k][-1]
-            zz = zigzag(np.array([delta], dtype=np.int64))
-            code = _classify(zz)[0]
-            new_bytes = _emit_payload(zz, np.array([code], dtype=np.uint8))
-            w = CLASS_WIDTH[out_t.codes]
-            start = int(w[:seam].sum())
-            old_w = int(w[seam])
-            out_t.vals = np.concatenate(
-                [out_t.vals[:start], new_bytes, out_t.vals[start + old_w:]]
-            )
-            out_t.codes[seam] = code
-            lineage["spliced_boundaries"] += 1
-        return out_t, out_v, lineage
+    counts = np.array([p.count for p in pages], dtype=np.intp)
+    starts = np.cumsum(counts) - counts
+    t = _stack(pages)
+    ts = _decode_pages(t, starts, counts)
+    if np.all(ts[starts[1:] - 1] <= ts[starts[1:]]):
+        # compressed-domain concat: one re-encoded delta per page boundary
+        lineage.update(path="splice", spliced_boundaries=len(pages) - 1)
+        return delta_splice(t, ts, starts), _stack(vpages), lineage
 
     # overlap: stable k-way merge (page order breaks ties = flush order)
     lineage["path"] = "kmerge"
-    all_ts = np.concatenate(decoded)
-    all_vs = np.concatenate([varint_decode(v) for v in vpages])
-    order = np.argsort(all_ts, kind="stable")
-    return delta_encode(all_ts[order]), varint_encode(all_vs[order]), lineage
+    order = np.argsort(ts, kind="stable")
+    return delta_encode(ts[order]), permute(_stack(vpages), order), lineage

@@ -277,7 +277,7 @@ def roundtrip_bitpacked(spark, sf_dir):
 def compressed_sort_q(spark, sf_dir):
     """The signature operator on real data: series arrive NEARLY sorted
     (every 37th event displaced 2h backwards), are encoded in arrival
-    order, sorted in the compressed domain (rotation path), decoded.
+    order, sorted in the compressed domain (`compressed_sort`), decoded.
     Output order is checked via seq (reference CompressedDataSorter
     correctness oracle, MemtableSortTest.testSortCorrect)."""
     ev = (
@@ -304,7 +304,7 @@ def compressed_sort_q(spark, sf_dir):
             all_ts = flat.field("real_ts").to_numpy(zero_copy_only=False).astype(np.int64)
             all_ids = flat.field("event_id").to_numpy(zero_copy_only=False).astype(np.int64)
             out_ts, out_ids, counts = [], [], np.empty(b.num_rows, np.int64)
-            for i in range(b.num_rows):  # rotation sorter is per-series by design
+            for i in range(b.num_rows):  # compressed_sort is per-series by design
                 td = delta_encode(all_ts[splits[i] : splits[i + 1]])
                 vd = varint_encode(all_ids[splits[i] : splits[i + 1]])
                 td, vd, _ = compressed_sort(td, vd)

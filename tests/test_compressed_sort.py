@@ -18,6 +18,7 @@ from sorting_compressed_time_series_spark.codecs.bytealigned import (
     varint_encode,
 )
 from sorting_compressed_time_series_spark.operators.compressed_sort import (
+    ROTATION_INVERSION_THRESHOLD,
     compressed_sort,
     sort_reencode,
     stable_sort_order,
@@ -79,16 +80,45 @@ def test_duplicate_timestamps_stability():
     _run(ts, vs)
 
 
-@pytest.mark.parametrize("p", [0.001, 0.004, 0.02])
-def test_nearly_sorted_sweep(p):
+@pytest.mark.parametrize(
+    "p, n",
+    [(0.001, 20_000), (0.004, 20_000), (0.02, 20_000), (0.002, 100_000)],
+    ids=["0.001", "0.004", "0.02", "100k-0.002"],
+)
+def test_nearly_sorted_sweep(p, n):
     rng = np.random.default_rng(int(p * 10000))
-    n = 20_000
     ts = np.cumsum(rng.integers(1, 3000, size=n)).astype(np.int64)
     k = max(1, int(n * p))
     idx = rng.integers(1, n, size=k)
     ts[idx] -= rng.integers(1, 100_000, size=k)
     vs = rng.integers(-(10**4), 10**4, size=n).astype(np.int64)
-    _run(ts, vs)
+    lineage = _run(ts, vs)
+    descents = int((ts[1:] < ts[:-1]).sum())
+    rotate = descents <= n * ROTATION_INVERSION_THRESHOLD
+    assert lineage["path"] == ("rotate" if rotate else "reencode")
+    if lineage["path"] == "rotate":
+        assert lineage["rotations"] == descents
+        assert 0 < lineage["patched_codes"] <= 3 * descents
+        assert descents <= lineage["moved_elements"] < n
+
+
+def _planes(data):
+    return data.vals.tobytes(), data.codes.tobytes(), data.count
+
+
+@pytest.mark.parametrize("threshold, path", [(1.0, "rotate"), (0.0, "reencode")])
+def test_inputs_unchanged_and_outputs_fresh(threshold, path):
+    ts = np.arange(300, dtype=np.int64) * 1000
+    ts[[0, 40, 41, 200]] = [150_000, 3, 7_000, -(2**40)]
+    td, vd = delta_encode(ts), varint_encode(np.arange(300, dtype=np.int64) - 150)
+    before = _planes(td), _planes(vd)
+    t2, v2, lineage = compressed_sort(td, vd, inversion_threshold=threshold)
+    assert lineage["path"] == path
+    assert (_planes(td), _planes(vd)) == before
+    for out, inp in ((t2, td), (v2, vd)):
+        assert out is not inp
+        assert not np.shares_memory(out.vals, inp.vals)
+        assert not np.shares_memory(out.codes, inp.codes)
 
 
 def test_heavily_shuffled_falls_back():

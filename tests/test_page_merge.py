@@ -57,6 +57,17 @@ def test_disjoint_pages_splice():
     assert lineage["spliced_boundaries"] == 2
 
 
+def test_disjoint_pages_splice_many_seams():
+    # five seams: duplicate boundary timestamps, a 1 -> 8 byte delta at a
+    # seam, and one-element pages whose every element is a seam
+    lineage = _check(
+        [[0, 1, 2], [2, 3], [3 + 2**40], [2**41, 2**41 + 1], [2**41 + 1], [2**62, 2**62 + 7]],
+        [[1, 2, 3], [4, 5], [6], [7, 8], [9], [10, 11]],
+        "splice",
+    )
+    assert lineage["spliced_boundaries"] == 5
+
+
 def test_touching_pages_equal_boundary():
     # max of page k == min of page k+1: still no inversion, splice path
     _check([[0, 10], [10, 20]], [[1, 2], [3, 4]], "splice")

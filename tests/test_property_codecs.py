@@ -4,7 +4,7 @@ end byte-identical to a canonical encode of the stable-sorted series.
 Deterministic profile (no deadline flakes on a steal-noisy host)."""
 
 import numpy as np
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from sorting_compressed_time_series_spark.codecs.batched import (
     decode_chunk_rows,
@@ -74,8 +74,31 @@ ts_arrays = st.lists(
     st.integers(min_value=-(2**40), max_value=2**40), min_size=0, max_size=400
 )
 
+# timestamps for nearly sorted series: small values (1-byte deltas and
+# duplicates), int64 extremes (deltas that wrap) and anything in between
+# (deltas of every width class, 1 <-> 8 bytes across one seam)
+_ts_values = st.one_of(
+    st.integers(min_value=-300, max_value=300),
+    st.sampled_from([-(2**63), -(2**63) + 1, -1, 255, 256, 2**40, 2**63 - 2, 2**63 - 1]),
+    st.integers(min_value=-(2**63), max_value=2**63 - 1),
+)
 
-@given(ts=ts_arrays, l=st.sampled_from([1, 3, 50, 10**6]))
+
+@st.composite
+def nearly_sorted_arrays(draw):
+    """A sorted series with a few elements moved, element 0 included."""
+    ts = sorted(draw(st.lists(_ts_values, min_size=1, max_size=300)))
+    positions = st.integers(min_value=0, max_value=len(ts) - 1)
+    for src, dst in draw(st.lists(st.tuples(positions, positions), max_size=5)):
+        ts.insert(dst, ts.pop(src))
+    return ts
+
+
+@given(ts=st.one_of(ts_arrays, nearly_sorted_arrays()), l=st.sampled_from([1, 3, 50, 10**6]))
+@example(ts=[40, 10, 20, 30], l=3)  # element 0 displaced
+@example(ts=[10, 20, 20, 30, 20, 20, 40], l=3)  # duplicates straddling seams
+@example(ts=[0, 1, 2**40, 2, 2**40 + 1], l=3)  # seam deltas switch 1 <-> 8 bytes
+@example(ts=[-(2**63), 2**63 - 1, 0, -(2**63) + 5, -1], l=3)  # deltas wrap
 @SETTINGS
 def test_sorters_agree_on_canonical_bytes(ts, l):
     ts = np.asarray(ts, np.int64)
@@ -83,6 +106,7 @@ def test_sorters_agree_on_canonical_bytes(ts, l):
     want = delta_encode(ts[np.argsort(ts, kind="stable")])
     outs = [
         compressed_sort(delta_encode(ts), varint_encode(vs)),
+        compressed_sort(delta_encode(ts), varint_encode(vs), inversion_threshold=1.0),
         ts_delta_sort_dc(delta_encode(ts), varint_encode(vs), block_threshold=37),
         bounded_ooo_sort(delta_encode(ts), varint_encode(vs), l=l),
     ]
