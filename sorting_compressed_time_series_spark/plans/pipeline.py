@@ -27,7 +27,6 @@ from ..operators.rollup import (
     promote,
     rollup_tier1,
     rollup_tiers,
-    tier1_from_flush,
 )
 from ..sources.warehouse import Warehouse, with_p_day
 
@@ -54,25 +53,22 @@ class Pipeline:
     spark: SparkSession
     warehouse: Warehouse
     tiers: list[TierSpec] = field(default_factory=lambda: list(DEFAULT_TIERS))
-    # co-emit tier-1 partial rows (tier = -1) at flush so promotion never
-    # decodes a blob. OFF by default: the partials are a tier1-sized side
-    # table riding every chunk write (~5× the blob bytes at a 1s tier), and
-    # the decode-based tier1 (`rollup_tier1`) is vectorized CPU that scales
-    # with cores while the extra write IO does not.
-    emit_partials: bool = False
-    # hash-bucket count for the chunk table (Iceberg ``bucket(doc_id, N)``
-    # stand-in): snapshots are written hash-clustered by doc_id so that
-    # same-session compaction / per-doc merges read the clustering from the
-    # scan and need no exchange. Sized to local cores; a real cluster sizes
-    # it to (table bytes / target task bytes).
-    n_buckets: int = 32
+
+    def _bucket_by(self) -> tuple[str, int]:
+        """Hash-bucket spec of the chunk table (Iceberg ``bucket(doc_id, N)``
+        stand-in): snapshots are written hash-clustered by doc_id so that
+        same-session compaction / per-doc merges read the clustering from
+        the scan and need no exchange. One bucket per core of the writing
+        session, so each Python stage over the table (fused rollup,
+        compaction merge) runs one wave of tasks: a reused Python worker
+        pays ~0.2 s per task (pyspark 4.1.2, 4-core host), more than a
+        sub-core bucket's share of the work."""
+        return ("doc_id", self.spark.sparkContext.defaultParallelism)
 
     # --- stage 1: ingest+flush ------------------------------------------
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
                partitions: int | None = None, append: bool = False) -> DataFrame:
-        chunks = flush(tokens_df, seed, partitions,
-                       partial_window_us=self.tiers[0].window_us
-                       if self.emit_partials else None)
+        chunks = flush(tokens_df, seed, partitions)
         chunks = with_p_day(chunks, "window_start")
         if append and self.warehouse.exists("chunks_tier0"):
             # manifest-add only: the existing snapshot is untouched and the
@@ -82,7 +78,7 @@ class Pipeline:
         else:
             self.warehouse.write(chunks, "chunks_tier0", partition_by=("p_day",),
                                  watermark_us=None, op="ingest",
-                                 bucket_by=("doc_id", self.n_buckets))
+                                 bucket_by=self._bucket_by())
         return self.warehouse.read(self.spark, "chunks_tier0")
 
     # --- stage 2: promotion with checkpoint ------------------------------
@@ -114,16 +110,8 @@ class Pipeline:
             for s in pending[1:]:
                 seg = seg.unionByName(wh.read_segment(self.spark, "chunks_tier0", s))
             dirty = seg.filter(F.col("tier") == 0).select("doc_id").distinct()
-        has_partials = chunks.filter(F.col("tier") == -1).limit(1).count() > 0
-        if has_partials and pending:
-            # the decode path is always correct; the partials fast path is
-            # only safe if the appended segments carried partials too
-            seg_partials = seg.filter(F.col("tier") == -1).limit(1).count() > 0
-            has_partials = has_partials and seg_partials
 
         def tier1_fresh(src):
-            if has_partials:
-                return tier1_from_flush(src)
             return rollup_tier1(src.filter(F.col("tier") == 0), self.tiers[0].window_us)
 
         # Fused full-mode fast path: no tier has a watermark yet and no
@@ -178,9 +166,7 @@ class Pipeline:
                 # that can contribute all carry window_start/min-ts ≥ lo
                 if i == 0:
                     tail_src = chunks.filter(
-                        F.col("window_start") >= F.lit(lo)
-                        if has_partials
-                        else (F.col("tier") == 0) & (F.col("max_ts") >= F.lit(lo))
+                        (F.col("tier") == 0) & (F.col("max_ts") >= F.lit(lo))
                     )
                 else:
                     tail_src = prev_df.filter(win >= F.lit(lo))
@@ -297,7 +283,7 @@ class Pipeline:
         # appends broke the previous clustering
         wh.write(with_p_day(out), "chunks_tier0", partition_by=("p_day",),
                  watermark_us=None, op=f"compact:{n_multi}",
-                 bucket_by=("doc_id", self.n_buckets))
+                 bucket_by=self._bucket_by())
         return {"compacted_docs": int(n_multi)}
 
     # --- stage 3: retention ----------------------------------------------

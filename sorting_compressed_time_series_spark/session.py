@@ -17,7 +17,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

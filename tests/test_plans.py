@@ -169,9 +169,13 @@ def test_ivf_candidate_join_broadcasts_probes_not_corpus(spark):
 def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path):
     """Warehouse bucketed snapshots (bucket(doc_id, N) stand-in): the
     per-doc compaction groupBy must read the clustering from the scan —
-    zero Exchange operators in the whole compaction plan."""
+    zero Exchange operators in the whole compaction plan. Two writers: an
+    explicit ``bucket_by``, and ``Pipeline.ingest`` / ``compact``, which
+    bucket by the session's parallelism (one bucket per core)."""
     from sorting_compressed_time_series_spark.operators.compaction import compact_chunks
     from sorting_compressed_time_series_spark.operators.ingest import flush
+    from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1H_US
+    from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
     from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
 
@@ -179,11 +183,23 @@ def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path):
     chunks = with_p_day(flush(generate_tokens_df(spark, 80)), "window_start")
     wh.write(chunks, "chunks_tier0", partition_by=("p_day",),
              bucket_by=("doc_id", 4))
-    back = wh.read(spark, "chunks_tier0")
-    plan = plan_of(compact_chunks(back.filter("tier = 0")))
-    assert "Exchange" not in plan, plan
+
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh_pipeline")),
+                 [TierSpec("tier1_1h", WINDOW_1H_US)])
+    per_core = ["doc_id", spark.sparkContext.defaultParallelism]
+    p.ingest(generate_tokens_df(spark, 80))
+    assert p.warehouse.manifest("chunks_tier0")["bucket_spec"] == per_core
+    # re-deliver 20 docs so compact has multi-chunk docs and rewrites the table
+    p.ingest(generate_tokens_df(spark, 20), append=True)
+    p.promote_all()
+    assert p.compact()["compacted_docs"] >= 20
+    assert p.warehouse.manifest("chunks_tier0")["bucket_spec"] == per_core
+
+    for table_wh in (wh, p.warehouse):
+        plan = plan_of(compact_chunks(table_wh.read(spark, "chunks_tier0").filter("tier = 0")))
+        assert "Exchange" not in plan, plan
     # and the bucket-aware read is exact: same rows as a plain path read
-    assert back.count() == chunks.count()
+    assert wh.read(spark, "chunks_tier0").count() == chunks.count()
 
 
 def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
