@@ -9,14 +9,15 @@ Stages measured:
   value = input tokens / (flush+rollup wall).
 - gorilla: distributed Gorilla-XOR + delta-of-delta encode pass over the
   same corpus; reports GB/s of raw value bytes through the kernel.
-- scaling: the same headline at local[N/4] vs local[N] (default 8 vs 32)
+- scaling: the same headline at local[N/4] vs local[N] (N = SPARK_GRAFT_CPUS)
   on identical input; efficiency = (thr_N / thr_N/4) / 4 — the sandbox
   proxy for the north rule's N->4N executor criterion, plus a tier-table
   equality check between the two runs.
 - queries: every registry query timed at the given sf.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), BENCH_SKIP_SCALING, BENCH_SKIP_QUERIES.
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+     BENCH_SKIP_SCALING, BENCH_SKIP_QUERIES.
 """
 
 from __future__ import annotations
@@ -336,7 +337,7 @@ _T0 = time.time()
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = 0.1
     import re
 

@@ -7,7 +7,7 @@ Usage:
   python bench_extra.py [--noop] [--reps N] [query ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on).
 
 Prints one JSON line: {"queries": {name: best_sec}, "reps": N, "mode": ...}.
 """
@@ -33,7 +33,7 @@ def main() -> None:
     only = {a for a in args if not a.startswith("--")}
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from sorting_compressed_time_series_spark.queries import SPARK_QUERIES
     from sorting_compressed_time_series_spark.session import get_spark

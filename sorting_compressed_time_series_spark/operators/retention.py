@@ -26,7 +26,6 @@ def ingest_ttl_filter(df: DataFrame, now_us: int, ttl_us: int, ts_col: str = "ma
 
 def apply_retention(
     wh: Warehouse,
-    spark,
     table: str,
     now_us: int,
     ttl_us: int,
@@ -36,15 +35,13 @@ def apply_retention(
 
     Metadata-only: whole ``p_day=N`` partition directories below the cutoff
     are removed from the live snapshot (``Warehouse.drop_partitions``) — no
-    data rewrite, no full-table scan. Rows are counted only when something
-    was actually dropped, and only over the surviving table (one pruned
-    scan), to report lineage."""
+    data rewrite, no full-table scan. When something was dropped, the
+    surviving rows are reported from the parquet footers (no Spark job)."""
     cutoff_day = (now_us - ttl_us) // US_PER_DAY
     dropped = wh.drop_partitions(table, partition_col, int(cutoff_day),
                                  op=f"retention<{cutoff_day}")
     out = {"table": table, "cutoff_day": int(cutoff_day),
            "partitions_dropped": dropped}
     if dropped:
-        remaining = wh.partition_values(table, partition_col)
-        out["rows_after"] = wh.read(spark, table).count() if remaining else 0
+        out["rows_after"] = wh.footer_stats(table)[0]
     return out

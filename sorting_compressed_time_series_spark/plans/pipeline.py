@@ -102,7 +102,13 @@ class Pipeline:
         recomputed/kept row counts (extra count jobs — tests only)."""
         wh = self.warehouse
         chunks = wh.read(self.spark, "chunks_tier0")
-        data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
+        # the parquet footers answer max(max_ts) when every row is a tier-0
+        # chunk; a Spark job only when a file lacks the statistics
+        _, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
+        if stats["tier"] == (0, 0) and stats["max_ts"] is not None:
+            data_max = stats["max_ts"][1]
+        else:
+            data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
         pending = wh.pending_appends("chunks_tier0")
         dirty = None
         if pending:
@@ -241,7 +247,7 @@ class Pipeline:
             entry = {"tier": spec.name, "mode": "full",
                      "watermark_us": int(completes[t])}
             if collect_stats:
-                entry["recomputed"] = wh.read(self.spark, spec.name).count()
+                entry["recomputed"] = wh.manifest(spec.name)["lineage"][-1]["rows"]
             summary.append(entry)
         return summary
 
@@ -292,7 +298,7 @@ class Pipeline:
         for spec in self.tiers:
             if spec.ttl_us is not None and self.warehouse.exists(spec.name):
                 out.append(
-                    apply_retention(self.warehouse, self.spark, spec.name, now_us, spec.ttl_us)
+                    apply_retention(self.warehouse, spec.name, now_us, spec.ttl_us)
                 )
         return out
 

@@ -478,25 +478,6 @@ def _gapfill_frame(spark, sf_dir):
     )
 
 
-def gapfill_previous(spark, sf_dir):
-    """FILL(PREVIOUS) on an hourly spine (reference FillOperator /
-    identity fill)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "previous")
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
-
-
-def gapfill_linear(spark, sf_dir):
-    """FILL(LINEAR) (reference LinearFillOperator)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "linear")
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
-
-
-def gapfill_constant(spark, sf_dir):
-    """FILL(constant 0)."""
-    out = gapfill(_gapfill_frame(spark, sf_dir), US_1H, "avg_q", "constant", constant=0.0)
-    return out.select(F.col("doc_id").alias("user_id"), "window_start", "filled")
-
-
 @q(
     "gapfill_fill_modes",
     _GAPFILL_BASE
@@ -810,39 +791,6 @@ def _minutely(spark, sf_dir, etype, alias):
     return ev.groupBy(
         "user_id", F.expr(f"(ts_us div {US_1D}) * {US_1D}").alias("m")
     ).agg(F.count("*").alias(alias))
-
-
-def time_join_inner(spark, sf_dir):
-    """InnerTimeJoinOperator: align two series on the time axis (minute
-    buckets)."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    return c.join(v, ["user_id", "m"], "inner").select(
-        "user_id", F.col("m").alias("ts_m"), "n_click", "n_view"
-    )
-
-
-def time_join_full(spark, sf_dir):
-    """FullOuterTimeJoinOperator: align-and-pad (NULL → 0 marker)."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    j = c.join(v, ["user_id", "m"], "full_outer")
-    return j.select(
-        "user_id",
-        F.col("m").alias("ts_m"),
-        F.coalesce("n_click", F.lit(0)).alias("n_click"),
-        F.coalesce("n_view", F.lit(0)).alias("n_view"),
-    )
-
-
-def time_join_left(spark, sf_dir):
-    """LeftOuterTimeJoinOperator."""
-    c = _minutely(spark, sf_dir, "click", "n_click")
-    v = _minutely(spark, sf_dir, "view", "n_view")
-    return c.join(v, ["user_id", "m"], "left").select(
-        "user_id", F.col("m").alias("ts_m"), "n_click",
-        F.coalesce("n_view", F.lit(0)).alias("n_view"),
-    )
 
 
 @q("time_joins", _JOIN_BASE + """

@@ -6,7 +6,9 @@ change: same table names, same partition columns, same snapshot semantics).
 Commit protocol (atomic, resumable):
 - writers land parquet under ``<table>/snap-<n>/`` (Spark writes + _SUCCESS)
 - ``_manifest.json`` names the ONE live snapshot dir plus watermark and
-  lineage entries; readers only ever read the snapshot the manifest names
+  lineage entries (each with the commit's rows, bytes, data files and
+  write wall time, read from parquet footers); readers only ever read the
+  snapshot the manifest names
 - a commit = write new snapshot dir, then atomically replace the manifest
   (os.replace). A crash before the manifest swap leaves the old snapshot
   live; re-running the (deterministic) job re-creates the same new
@@ -55,11 +57,21 @@ class Warehouse:
             json.dump(m, f, indent=1)
         os.replace(tmp, self._manifest_path(table))  # the atomic commit point
 
+    def _log(self, table: str, m: dict, entry: dict) -> None:
+        """Append a lineage entry to ``m`` (the last 50 are kept), with the
+        rows, bytes and data files of the live set ``m`` names — read from
+        the parquet footers, no Spark job."""
+        files = self._data_files(table, m)
+        rows, _ = self._footer_stats(files, ())
+        entry = dict(entry, rows=rows, bytes=sum(os.path.getsize(f) for f in files),
+                     files=len(files), ts=time.time(), version=m["version"])
+        m["lineage"] = (m["lineage"] + [entry])[-50:]
+
     def _commit(self, table: str, snapshot_dir: str, watermark_us: int | None,
                 lineage_entry: dict, schema_json: str | None = None,
                 bucket_spec: list | None = None) -> None:
         m = self.manifest(table)
-        old_dirs = ([m["snapshot"]] if m["snapshot"] else []) + m.get("segments", [])
+        old_dirs = self._live_dirs(table, m)
         m["snapshot"] = snapshot_dir
         m["segments"] = []
         m["pending_appends"] = []
@@ -72,8 +84,7 @@ class Warehouse:
             # that can hollow out every live dir)
             m["schema"] = schema_json
         m["bucket_spec"] = bucket_spec  # [col, n_buckets] or None
-        m["lineage"] = (m["lineage"] + [dict(lineage_entry, ts=time.time(),
-                                             version=m["version"])])[-50:]
+        self._log(table, m, lineage_entry)
         self._swap_manifest(table, m)
         for d in old_dirs:
             if d != snapshot_dir:
@@ -96,6 +107,7 @@ class Warehouse:
         and per-key MERGE promotion become shuffle-free, see
         operators/compaction.py). Cross-session reads fall back to plain
         parquet — still correct, just re-shuffling."""
+        t0 = time.perf_counter()
         m = self.manifest(table)
         snap = f"snap-{m['version'] + 1}"
         path = os.path.join(self.root, table, snap)
@@ -124,7 +136,8 @@ class Warehouse:
             bucket_spec = None
         self._commit(table, snap, watermark_us,
                      {"op": op, "partition_by": partition_by,
-                      "bucket_by": bucket_spec},
+                      "bucket_by": bucket_spec,
+                      "wall_s": time.perf_counter() - t0},
                      schema_json=df.schema.json(), bucket_spec=bucket_spec)
 
     def write_slices(self, df: DataFrame, slice_col: str,
@@ -152,9 +165,11 @@ class Warehouse:
                 for tbl in tables.values()),
         )
         shutil.rmtree(staging, ignore_errors=True)
+        t0 = time.perf_counter()
         w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
         w = w.partitionBy(slice_col, *partition_by)
         w.parquet(staging)
+        wall_s = time.perf_counter() - t0  # the one write all tables share
         slice_schema = df.drop(slice_col).schema.json()
         for val, tbl in tables.items():
             src = os.path.join(staging, f"{slice_col}={val}")
@@ -169,7 +184,7 @@ class Warehouse:
             wm = (watermarks or {}).get(val)
             self._commit(tbl, snap, wm,
                          {"op": op, "partition_by": tuple(partition_by),
-                          "bucket_by": None},
+                          "bucket_by": None, "wall_s": wall_s},
                          schema_json=slice_schema, bucket_spec=None)
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -182,6 +197,7 @@ class Warehouse:
         promotion can MERGE just the affected keys instead of recomputing
         every tier. A crash before the manifest swap leaves an orphan dir
         the manifest never names; the rerun overwrites it."""
+        t0 = time.perf_counter()
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no base snapshot to append to")
@@ -194,14 +210,51 @@ class Warehouse:
         m["segments"] = m.get("segments", []) + [seg]
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
-        m["lineage"] = (m["lineage"] + [{"op": op, "segment": seg, "ts": time.time(),
-                                         "version": m["version"]}])[-50:]
+        self._log(table, m, {"op": op, "segment": seg, "wall_s": time.perf_counter() - t0})
         self._swap_manifest(table, m)
         return seg
 
-    def _live_dirs(self, table: str) -> list[str]:
-        m = self.manifest(table)
+    def _live_dirs(self, table: str, m: dict | None = None) -> list[str]:
+        m = m or self.manifest(table)
         return ([m["snapshot"]] if m["snapshot"] else []) + m.get("segments", [])
+
+    def _data_files(self, table: str, m: dict | None = None) -> list[str]:
+        """Parquet files of the live snapshot and segments. Like Spark's
+        file listing, skips every file or directory named ``_*`` or ``.*``
+        (_SUCCESS, checksums, _temporary)."""
+        files = []
+        for d in self._live_dirs(table, m):
+            for dp, dirs, fs in os.walk(os.path.join(self.root, table, d)):
+                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+                files += [os.path.join(dp, f) for f in fs if not f.startswith(("_", "."))]
+        return files
+
+    @staticmethod
+    def _footer_stats(files: list[str], columns) -> tuple[int, dict]:
+        import pyarrow.parquet as pq
+
+        rows, lo, hi, missing = 0, {}, {}, set()
+        for path in files:
+            md = pq.read_metadata(path)
+            rows += md.num_rows
+            idx = {md.schema.column(j).path: j for j in range(md.num_columns)}
+            for col in columns:
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(idx[col]).statistics if col in idx else None
+                    if st is None or not st.has_min_max:
+                        missing.add(col)
+                    elif col not in missing:
+                        lo[col] = min(lo.get(col, st.min), st.min)
+                        hi[col] = max(hi.get(col, st.max), st.max)
+        return rows, {c: (lo[c], hi[c]) if c in lo and c not in missing else None
+                      for c in columns}
+
+    def footer_stats(self, table: str, columns=()) -> tuple[int, dict]:
+        """``(rows, {col: (min, max) | None})`` of the live table, read from
+        the parquet footers with pyarrow — no Spark job. A column is None
+        when any row group lacks min/max statistics for it (or it is not
+        stored in the files, e.g. a partition column)."""
+        return self._footer_stats(self._data_files(table), columns)
 
     def _empty_frame(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Empty DataFrame with the persisted schema (None for pre-schema
@@ -293,6 +346,7 @@ class Warehouse:
         analogue is a metadata-only ``DELETE WHERE p_day < cutoff`` that
         drops data files wholesale; reference file-level expiry
         DataRegion.java:1623-1637). Returns the dropped partition values."""
+        t0 = time.perf_counter()
         m = self.manifest(table)
         if m["snapshot"] is None:
             return []
@@ -312,14 +366,9 @@ class Warehouse:
             # bucketed rewrite re-registers the table).
             m["bucket_spec"] = None
             m["version"] += 1
-            m["lineage"] = (m["lineage"] + [
-                {"op": op, "dropped": dropped, "ts": time.time(),
-                 "version": m["version"]}
-            ])[-50:]
-            tmp = self._manifest_path(table) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(m, f, indent=1)
-            os.replace(tmp, self._manifest_path(table))
+            self._log(table, m, {"op": op, "dropped": dropped,
+                                 "wall_s": time.perf_counter() - t0})
+            self._swap_manifest(table, m)
         return dropped
 
     def reset_watermark(self, table: str) -> None:
@@ -330,10 +379,7 @@ class Warehouse:
             return
         m = self.manifest(table)
         m["watermark_us"] = None
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path(table))
+        self._swap_manifest(table, m)
 
     def watermark(self, table: str) -> int | None:
         return self.manifest(table)["watermark_us"]

@@ -1,0 +1,112 @@
+"""Planner metadata from parquet footers instead of Spark jobs.
+
+Oracles: the manifest's commit metrics equal the tables' ``count()``;
+``promote_all`` runs no probe job beyond its one fused write (and ``retain``
+none at all); its watermarks equal ``(max(max_ts) // w + 1) * w`` computed
+by Spark; a chunk file without statistics falls back to the Spark job and
+commits the same watermarks."""
+
+import glob
+import os
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1H_US, WINDOW_1M_US
+from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
+from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
+from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
+
+N_DOCS = 120
+SEED = 42
+TIERS = [
+    TierSpec("tier1_1m", WINDOW_1M_US, ttl_us=12 * 3_600_000_000),
+    TierSpec("tier2_1h", WINDOW_1H_US, ttl_us=None),
+]
+
+
+def _jobs_of(spark, group, fn, *args):
+    """(result, Spark job ids) of ``fn(*args)`` run under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the tracker is fed asynchronously
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _spark_watermarks(spark, wh):
+    data_max = (wh.read(spark, "chunks_tier0").filter(F.col("tier") == 0)
+                .agg(F.max("max_ts")).collect()[0][0])
+    return {s.name: (data_max // s.window_us + 1) * s.window_us for s in TIERS}
+
+
+@pytest.fixture(scope="module")
+def loaded(spark, tmp_path_factory):
+    """Fresh ingest, then promote_all and retain, each under its own job
+    group: (warehouse, {call: job ids}, retain summary of tier 1)."""
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_footers")))
+    p = Pipeline(spark, wh, TIERS)
+    p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
+    _, promote_jobs = _jobs_of(spark, "footers.promote", p.promote_all)
+    # the clock at the last window: tier 1's 12 h TTL drops its earlier days
+    now_us = wh.footer_stats("tier1_1m", ("window_start",))[1]["window_start"][1]
+    retained, retain_jobs = _jobs_of(spark, "footers.retain", p.retain, now_us)
+    return wh, {"promote": promote_jobs, "retain": retain_jobs}, retained[0]
+
+
+def test_promote_and_retain_launch_no_probe_jobs(loaded):
+    _, jobs, retained = loaded
+    assert 1 <= len(jobs["promote"]) <= 2, jobs
+    assert retained["partitions_dropped"], retained
+    assert jobs["retain"] == [], jobs
+
+
+def test_footer_watermarks_equal_spark_max(spark, loaded):
+    wh, _, _ = loaded
+    want = _spark_watermarks(spark, wh)
+    assert {s.name: wh.watermark(s.name) for s in TIERS} == want
+
+
+def test_lineage_rows_equal_table_counts(spark, loaded):
+    wh, _, retained = loaded
+    for table in ["chunks_tier0"] + [s.name for s in TIERS]:
+        last = wh.manifest(table)["lineage"][-1]
+        assert last["rows"] == wh.read(spark, table).count(), (table, last)
+        assert last["files"] > 0 and last["bytes"] > 0 and last["wall_s"] >= 0, last
+    assert wh.manifest("chunks_tier0")["lineage"][-1]["rows"] == N_DOCS
+    assert retained["rows_after"] == wh.manifest("tier1_1m")["lineage"][-1]["rows"]
+
+
+def test_lineage_metrics_follow_append_and_drop(spark, tmp_path_factory):
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_lineage")))
+    df = spark.range(100).select(F.col("id").alias("doc_id"), (F.col("id") % 5).alias("p_day"))
+    wh.write(df, "t", partition_by=("p_day",))
+    wh.append_segment(df.limit(10), "t", partition_by=("p_day",))
+    wh.drop_partitions("t", "p_day", 2)
+    ops = [(e["op"], e["rows"]) for e in wh.manifest("t")["lineage"]]
+    assert ops == [("overwrite", 100), ("append", 110), ("retention", 66)]
+    assert wh.read(spark, "t").count() == 66
+    assert all(e["files"] > 0 and e["wall_s"] >= 0 for e in wh.manifest("t")["lineage"])
+
+
+def test_chunk_file_without_statistics_falls_back(spark, tmp_path_factory, loaded):
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_nostats")))
+    p = Pipeline(spark, wh, TIERS)
+    p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
+    snap = os.path.join(wh.root, "chunks_tier0", wh.manifest("chunks_tier0")["snapshot"])
+    victim = sorted(glob.glob(os.path.join(snap, "p_day=*", "part-*")))[0]
+    pq.write_table(pq.read_table(victim), victim, compression="zstd", write_statistics=False)
+    os.remove(os.path.join(os.path.dirname(victim), f".{os.path.basename(victim)}.crc"))
+    spark.catalog.refreshTable(wh._catalog_name("chunks_tier0"))
+
+    rows, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
+    assert rows == N_DOCS
+    assert stats == {"tier": None, "max_ts": None}
+    _, jobs = _jobs_of(spark, "footers.fallback", p.promote_all)
+    assert len(jobs) > len(loaded[1]["promote"])  # the max(max_ts) job ran
+    want = {s.name: loaded[0].watermark(s.name) for s in TIERS}
+    assert {s.name: wh.watermark(s.name) for s in TIERS} == want == _spark_watermarks(spark, wh)
