@@ -27,6 +27,22 @@ Two codecs share the container:
   ``zigzag(v)``; elements are order-independent, so the sorter can permute
   them by pure byte rotation with no re-encoding.
 
+Payload bytes move by one of two whole-array paths, picked by column
+length alone (`_SMALL`), with byte-identical results:
+
+- **lanes** (at most `_SMALL` elements): each zigzag code is viewed as its
+  8 little-endian bytes, one row of an ``n x 8`` lane matrix, and the mask
+  ``lane < width`` selects the payload bytes. Emit is one masked read of
+  the lanes, gather one masked write into a zeroed matrix. That is a fixed
+  handful of numpy calls whatever the mix of widths, but it touches 8
+  bytes per element.
+- **width classes** (longer columns): one gather or scatter per width
+  class present, each through a byte-offset window of the plane, so only
+  payload bytes move. Four passes of five calls each cost more than the
+  lane copy on short columns (compaction pages of tens of points) and less
+  on long ones. `_SMALL` is the crossover measured by
+  ``tools/sort_microbench.py`` (its ``codec`` section).
+
 All kernels are whole-array numpy; no per-element Python in any hot path.
 """
 
@@ -44,6 +60,12 @@ _CLASS_DTYPES = tuple((c, np.dtype(f"<u{w}")) for c, w in enumerate(CLASS_WIDTH.
 # elements per bucket pass: bounds the index temporaries of the gathers
 _BLOCK = 1 << 16
 _U8_MAX, _U16_MAX, _U32_MAX = (np.uint64(2**b - 1) for b in (8, 16, 32))
+# longest column whose payload moves through the n x 8 lane matrix instead
+# of the width-class passes: the lane/width-class crossover measured by
+# tools/sort_microbench.py (codec section, tools/sort_microbench.json)
+_SMALL = 1500
+# class code -> which of the 8 little-endian byte lanes hold its payload
+_LANE_MASK = np.arange(8) < CLASS_WIDTH[:, None]
 
 
 def zigzag(v: np.ndarray) -> np.ndarray:
@@ -140,9 +162,22 @@ def _buckets(codes: np.ndarray):
                 yield idx, dt
 
 
-def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Little-endian payload plane of all elements, one scatter per width
-    class."""
+def _emit_lanes(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Payload plane by one masked copy of the ``n x 8`` lane view."""
+    lanes = np.ascontiguousarray(zz, dtype="<u8").view(np.uint8).reshape(-1, 8)
+    return lanes[_LANE_MASK[codes]]
+
+
+def _gather_lanes(vals: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Zigzag codes by one masked write into a zeroed ``n x 8`` lane matrix.
+    ``vals`` must hold exactly the payload bytes of ``codes``."""
+    lanes = np.zeros((len(codes), 8), dtype=np.uint8)
+    lanes[_LANE_MASK[codes]] = vals
+    return lanes.view("<u8").reshape(-1).astype(np.uint64, copy=False)
+
+
+def _emit_classes(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Payload plane by one scatter per width class."""
     off = _offsets(codes)
     out = np.empty(int(off[-1]), dtype=np.uint8)
     for idx, dt in _buckets(codes):
@@ -150,14 +185,30 @@ def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return out
 
 
-def _gather_payload(data: ByteAlignedData) -> np.ndarray:
-    """Inverse of `_emit_payload`: vals + codes -> zigzag codes, one gather
-    per width class."""
-    off = _offsets(data.codes)
-    zz = np.empty(data.count, dtype=np.uint64)
-    for idx, dt in _buckets(data.codes):
-        zz[idx] = _window(data.vals, dt)[off[idx].astype(np.intp)]
+def _gather_classes(vals: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Zigzag codes by one gather per width class."""
+    off = _offsets(codes)
+    zz = np.empty(len(codes), dtype=np.uint64)
+    for idx, dt in _buckets(codes):
+        zz[idx] = _window(vals, dt)[off[idx].astype(np.intp)]
     return zz
+
+
+def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
+    """Little-endian payload plane of all elements: one masked lane copy
+    up to `_SMALL` elements, one scatter per width class above."""
+    if len(codes) <= _SMALL:
+        return _emit_lanes(zz, codes)
+    return _emit_classes(zz, codes)
+
+
+def _gather_payload(data: ByteAlignedData) -> np.ndarray:
+    """Inverse of `_emit_payload`: vals + codes -> zigzag codes, by the
+    same length switch (lanes up to `_SMALL` elements, width classes
+    above)."""
+    if data.count <= _SMALL:
+        return _gather_lanes(data.vals, data.codes)
+    return _gather_classes(data.vals, data.codes)
 
 
 def delta_encode(values: np.ndarray) -> ByteAlignedData:
@@ -236,9 +287,13 @@ def permute(data: ByteAlignedData, order: np.ndarray) -> ByteAlignedData:
     This is the generalized form of the value-plane rotation the reference
     sorter performs (CompressedDataSorter.dataMove — byte-range rotation);
     a gather expresses any permutation, rotation included, with one pass
-    per width class.
+    per width class. Up to `_SMALL` elements the column instead goes
+    through its lanes: gather, reorder the codes, emit.
     """
     codes = data.codes[order]
+    if len(codes) <= _SMALL:
+        zz = _gather_lanes(data.vals, data.codes).take(order)
+        return ByteAlignedData(_emit_lanes(zz, codes), codes, len(codes))
     off = _offsets(codes)
     src_off = _offsets(data.codes)
     out = np.empty(int(off[-1]), dtype=np.uint8)

@@ -14,7 +14,11 @@ the page starts (each page's first element is a raw value, not a delta).
   and becomes a delta against the previous page's last timestamp
   (reference sortPage fast path, :96-102). All seams are re-encoded in
   one `delta_splice` call, the seam splice `compressed_sort` uses; page
-  interiors are copied as stored.
+  interiors are copied as stored. A stack of at most `_SMALL` points (the
+  reference's compaction pages hold 10) skips the run slicing: the seam
+  deltas are written into the zigzag codes and classes the decode already
+  holds, and the column is emitted once through the lane codec. Interior
+  codes keep their stored class, so the bytes equal `delta_splice`'s.
 - **Overlapping pages**: k-way stable merge. The reference splices byte
   ranges across page boundaries; we merge-order with a stable argsort
   keyed (ts, page_order), re-encode the time column and gather the value
@@ -31,12 +35,16 @@ from __future__ import annotations
 import numpy as np
 
 from ..codecs.bytealigned import (
+    _SMALL,
     ByteAlignedData,
+    _classify,
+    _emit_payload,
     _gather_payload,
     delta_encode,
     delta_splice,
     permute,
     unzigzag,
+    zigzag,
 )
 
 
@@ -46,17 +54,32 @@ def _stack(parts: list[ByteAlignedData]) -> ByteAlignedData:
     return ByteAlignedData(vals, codes, len(codes))
 
 
-def _decode_pages(stacked: ByteAlignedData, starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+def _decode_pages(
+    stacked: ByteAlignedData, starts: np.ndarray, counts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
     """Decode delta pages stored back to back: one payload gather, then a
     cumulative sum restarted at every page start (int64 math wraps, as in
-    `delta_decode`)."""
+    `delta_decode`). Returns (zigzag codes as stored, timestamps)."""
     zz = _gather_payload(stacked)
     firsts = zz[starts].view(np.int64)
     d = unzigzag(zz)
     d[starts] = firsts
     c = np.cumsum(d)
     c -= np.repeat(c[starts] - firsts, counts)
-    return c
+    return zz, c
+
+
+def _splice_small(t: ByteAlignedData, zz: np.ndarray, ts: np.ndarray,
+                  starts: np.ndarray) -> ByteAlignedData:
+    """`delta_splice(t, ts, starts)` for a short stack: patch the seam
+    deltas into the decoded codes ``zz`` and the classes ``t.codes`` (both
+    owned by this merge) and emit the column once."""
+    seams = starts[1:]
+    d = zigzag(ts[seams] - ts[seams - 1])
+    zz[seams] = d
+    t.codes[seams] = _classify(d)
+    t.codes[0] = 0  # element 0 keeps the raw first value
+    return ByteAlignedData(_emit_payload(zz, t.codes), t.codes, t.count)
 
 
 def merge_pages(
@@ -80,10 +103,12 @@ def merge_pages(
     counts = np.array([p.count for p in pages], dtype=np.intp)
     starts = np.cumsum(counts) - counts
     t = _stack(pages)
-    ts = _decode_pages(t, starts, counts)
+    zz, ts = _decode_pages(t, starts, counts)
     if np.all(ts[starts[1:] - 1] <= ts[starts[1:]]):
         # compressed-domain concat: one re-encoded delta per page boundary
         lineage.update(path="splice", spliced_boundaries=len(pages) - 1)
+        if t.count <= _SMALL:
+            return _splice_small(t, zz, ts, starts), _stack(vpages), lineage
         return delta_splice(t, ts, starts), _stack(vpages), lineage
 
     # overlap: stable k-way merge (page order breaks ties = flush order)

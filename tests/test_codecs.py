@@ -34,6 +34,12 @@ from sorting_compressed_time_series_spark.codecs.bitpacked import (
     unpack_bits,
 )
 from sorting_compressed_time_series_spark.codecs.bytealigned import (
+    _SMALL,
+    _classify,
+    _emit_classes,
+    _emit_lanes,
+    _gather_classes,
+    _gather_lanes,
     delta_decode,
     delta_encode,
     permute,
@@ -127,6 +133,43 @@ def test_varint_permute_byte_domain():
     d = varint_encode(v)
     order = rng.permutation(len(v))
     assert np.array_equal(varint_decode(permute(d, order)), v[order])
+
+
+# every width class, both int64 extremes and their neighbours
+WIDTH_MIX = np.array(
+    [0, 5, -1, 127, 128, 2**15, -(2**15) - 1, 2**31, -(2**31), 2**40,
+     np.iinfo(np.int64).min, np.iinfo(np.int64).max, np.iinfo(np.int64).min + 1, 2**62, 3],
+    dtype=np.int64,
+)
+
+
+@pytest.mark.parametrize("n", [0, 1, _SMALL - 1, _SMALL, _SMALL + 1])
+def test_lane_and_width_class_paths_agree(n):
+    # the lane path (up to _SMALL elements) and the width-class path give
+    # the same payload plane and the same decode on either side of the
+    # switch; the last element is 1 byte wide and its plane is followed by
+    # 0xFF bytes, so a read past the plane end would change the decode
+    v = np.resize(WIDTH_MIX, n)
+    if n:
+        v[-1] = 5
+    zz = zigzag(v)
+    codes = _classify(zz)
+    assert n == 0 or codes[-1] == 1
+    assert n < len(WIDTH_MIX) or set(codes.tolist()) == {0, 1, 2, 3}
+    vals = _emit_classes(zz, codes)
+    assert _emit_lanes(zz, codes).tobytes() == vals.tobytes()
+    buf = np.full(len(vals) + 8, 0xFF, dtype=np.uint8)
+    buf[: len(vals)] = vals
+    for gather in (_gather_lanes, _gather_classes):
+        assert np.array_equal(unzigzag(gather(buf[: len(vals)], codes)), v)
+    # the public codecs dispatch on the same switch
+    d = varint_encode(v)
+    assert np.array_equal(varint_decode(d), v)
+    assert np.array_equal(delta_decode(delta_encode(v)), v)
+    order = np.random.default_rng(n).permutation(n)
+    p, want = permute(d, order), varint_encode(v[order])
+    assert p.vals.tobytes() == want.vals.tobytes()
+    assert np.array_equal(p.codes, want.codes)
 
 
 def test_pack_unpack_bits():

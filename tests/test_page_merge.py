@@ -5,8 +5,10 @@ of all pages with time/value lockstep; non-overlapping pairs take the
 splice fast path and must be byte-identical to a canonical re-encode."""
 
 import numpy as np
+import pytest
 
 from sorting_compressed_time_series_spark.codecs.bytealigned import (
+    _SMALL,
     delta_decode,
     delta_encode,
     varint_decode,
@@ -109,3 +111,46 @@ def test_many_pages_mixed():
         ts_pages.append(ts)
         vs_pages.append(rng.integers(-(10**4), 10**4, size=n).astype(np.int64))
     _check(ts_pages, vs_pages)
+
+
+def _series(n_pages, page, overlap, seed):
+    """``n_pages`` sorted pages of ``page`` points: consecutive slices of
+    one series, or every ``n_pages``-th point of a jittered one."""
+    rng = np.random.default_rng(seed)
+    base = np.arange(n_pages * page, dtype=np.int64) * 1000
+    if overlap:
+        base = np.sort(base + rng.integers(-3000, 3000, base.size))
+        ts = [base[k::n_pages] for k in range(n_pages)]
+    else:
+        ts = [base[page * k : page * (k + 1)] for k in range(n_pages)]
+    return ts, [rng.integers(-(2**40), 2**40, page) for _ in ts]
+
+
+@pytest.mark.parametrize("overlap, path", [(False, "splice"), (True, "kmerge")])
+def test_stack_above_small_keeps_width_class_path(overlap, path):
+    # stacks longer than _SMALL splice with delta_splice and permute by
+    # width class; the bytes still equal the canonical encode
+    ts, vs = _series(3, _SMALL // 3 + 1, overlap, seed=5)
+    assert sum(map(len, ts)) > _SMALL
+    _check(ts, vs, path)
+
+
+def _planes(data):
+    return data.vals.tobytes(), data.codes.tobytes(), data.count
+
+
+@pytest.mark.parametrize("page", [10, _SMALL // 2])
+@pytest.mark.parametrize("overlap, path", [(False, "splice"), (True, "kmerge")])
+def test_inputs_unchanged_and_outputs_fresh(overlap, path, page):
+    # the small splice patches the decoded codes and classes in place: the
+    # caller's page planes must not change, and no output may alias them
+    tp, vp = _mk_pages(*_series(4, page, overlap, seed=page))
+    before = [_planes(d) for d in tp + vp]
+    mt, mv, lineage = merge_pages(tp, vp)
+    assert lineage["path"] == path
+    assert [_planes(d) for d in tp + vp] == before
+    for out in (mt, mv):
+        for inp in tp + vp:
+            assert out is not inp
+            assert not np.shares_memory(out.vals, inp.vals)
+            assert not np.shares_memory(out.codes, inp.codes)

@@ -28,6 +28,7 @@ from sorting_compressed_time_series_spark.operators.compressed_sort import (
     compressed_sort,
     ts_delta_sort_dc,
 )
+from sorting_compressed_time_series_spark.operators.page_merge import merge_pages
 
 SETTINGS = settings(
     max_examples=40, deadline=None,
@@ -117,3 +118,44 @@ def test_sorters_agree_on_canonical_bytes(ts, l):
         assert np.array_equal(
             varint_decode(vd), vs[np.argsort(ts, kind="stable")]
         )
+
+
+@st.composite
+def tiny_page_sets(draw):
+    """1-20 sorted pages of 0-12 points, empty pages included. Disjoint
+    sets cut one sorted series into consecutive pages (splice path, seams
+    may repeat a timestamp or change width class); the others sort each
+    page on its own, so pages overlap (k-way merge path)."""
+    sizes = draw(st.lists(st.integers(min_value=0, max_value=12), min_size=1, max_size=20))
+    if draw(st.booleans()):
+        ts = sorted(draw(st.lists(_ts_values, min_size=sum(sizes), max_size=sum(sizes))))
+        cuts = np.cumsum(sizes)[:-1]
+        return [list(p) for p in np.split(np.asarray(ts, np.int64), cuts)]
+    return [sorted(draw(st.lists(_ts_values, min_size=k, max_size=k))) for k in sizes]
+
+
+@given(pages=tiny_page_sets())
+@example(pages=[[0, 1, 2], [2, 2**40], [], [2**40, 2**40 + 1]])  # splice: dup seams, 1 <-> 8 bytes
+@example(pages=[[-(2**63), 0], [2**63 - 1]])  # splice: a seam delta that wraps
+@example(pages=[[5, 2**63 - 1], [], [-(2**63), 5, 5], [0]])  # kmerge: extremes, duplicates
+@SETTINGS
+def test_tiny_merges_equal_canonical_encode(pages):
+    ts_pages = [np.asarray(p, np.int64) for p in pages]
+    vs_pages, start = [], 0
+    for p in ts_pages:
+        vs_pages.append(np.arange(start, start + len(p), dtype=np.int64) * 7 - 50)
+        start += len(p)
+    mt, mv, lineage = merge_pages(
+        [delta_encode(t) for t in ts_pages], [varint_encode(v) for v in vs_pages]
+    )
+    full = [t for t in ts_pages if len(t)]
+    disjoint = all(a[-1] <= b[0] for a, b in zip(full, full[1:]))
+    if len(full) > 1:
+        assert lineage["path"] == ("splice" if disjoint else "kmerge")
+    all_ts = np.concatenate(ts_pages)
+    order = np.argsort(all_ts, kind="stable")
+    for got, want in ((mt, delta_encode(all_ts[order])),
+                      (mv, varint_encode(np.concatenate(vs_pages)[order]))):
+        assert got.count == want.count
+        assert got.vals.tobytes() == want.vals.tobytes()
+        assert np.array_equal(got.codes, want.codes)
