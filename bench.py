@@ -154,14 +154,14 @@ def headline(spark, n_docs: int, seed: int = 42, keep_tables: str | None = None)
     chunks = spark.read.parquet(chunks_path)
     t0 = time.perf_counter()
     tiers_path = os.path.join(tmp, "tiers")
-    # FUSED multi-tier rollup: one decode pass emits 1s/1m/1h partials
-    # together; one flush → one chunk per doc → partials are final
-    # (unique_doc_chunks; the 8-vs-32-core tier-hash equality check below
-    # would catch any violation), so the whole promotion cascade is ONE
+    # FUSED multi-tier rollup: one decode pass emits 1s/1m/1h rows
+    # together; one flush → one chunk per doc, so every doc's chunks reach
+    # one task (whole_docs; the 8-vs-32-core tier-hash equality check below
+    # would catch any violation) and the whole promotion cascade is ONE
     # map-only job with zero exchanges — the per-tier write+read-back jobs
     # (a fixed ~0.5 s/job wall that does NOT shrink with cores) are gone.
     rollup_tiers(
-        chunks, [1_000_000, WINDOW_1M_US, WINDOW_1H_US], unique_doc_chunks=True
+        chunks, [1_000_000, WINDOW_1M_US, WINDOW_1H_US], whole_docs=True
     ).write.mode("overwrite").parquet(tiers_path)
     t_rollup = time.perf_counter() - t0
     for k, v in saved.items():

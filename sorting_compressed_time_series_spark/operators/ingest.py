@@ -67,9 +67,19 @@ CHUNK_ARROW = pa.schema(
 )
 
 WINDOW_1H_US = 3_600_000_000
+# Arrow ``binary`` offsets are int32: one array addresses at most this many bytes
+BINARY_MAX_BYTES = 2**31 - 1
 
 
 def _binary_from_buffers(buf: np.ndarray, splits: np.ndarray) -> pa.Array:
+    """Arrow ``binary`` array over ``buf`` cut at ``splits``, without copying
+    the bytes. Refuses a plane past the int32 offset range: the cast below
+    would wrap silently."""
+    if len(splits) and splits[-1] > BINARY_MAX_BYTES:
+        raise OverflowError(
+            f"binary column of {len(splits) - 1} rows holds {int(splits[-1])} bytes, "
+            f"past the {BINARY_MAX_BYTES}-byte limit of int32 Arrow offsets; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch so each batch fits")
     return pa.Array.from_buffers(
         pa.binary(),
         len(splits) - 1,

@@ -14,6 +14,8 @@ Catalyst then runs partial/final aggregation on top for chunks that split
 a window. Tiers ≥ 2 never touch points or Python: they are pure
 DataFrame ``groupBy`` over the next-finer tier, and every aggregate
 composes (sum of sums, min of mins, first by earliest first_ts, ...).
+The fused ``rollup_tiers`` does the same merges inside its kernel when
+every chunk of a doc reaches one task, and then needs no shuffle at all.
 
 Windows fully covered by a chunk can be answered from chunk statistics
 alone (`rollup_from_stats`) without decoding any blob.
@@ -25,6 +27,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -81,49 +84,6 @@ def decode_points(chunks_df: DataFrame) -> DataFrame:
     )
 
 
-def _window_partials_kernel(window_us: int):
-    def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbuf, tsp = _blob_np(batch.column("time_blob"))
-            vbuf, vsp = _blob_np(batch.column("value_blob"))
-            ts, splits = decode_rows(tbuf, tsp)
-            vals, _ = decode_rows(vbuf, vsp)
-            counts = np.diff(splits)
-            if len(ts) == 0:
-                continue
-            win = ts // window_us * window_us
-            row_of = np.repeat(np.arange(batch.num_rows, dtype=np.int64), counts)
-            change = np.empty(len(win), dtype=bool)
-            change[0] = True
-            np.logical_or(win[1:] != win[:-1], row_of[1:] != row_of[:-1], out=change[1:])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(win))
-            grp_idx = pa.array(row_of[starts])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id").take(grp_idx),
-                    batch.column("source").take(grp_idx),
-                    pa.array(win[starts]),
-                    pa.array(ends - starts),
-                    pa.array(np.add.reduceat(vals, starts)),
-                    pa.array(np.minimum.reduceat(vals, starts)),
-                    pa.array(np.maximum.reduceat(vals, starts)),
-                    pa.array(ts[starts]),
-                    pa.array(vals[starts]),
-                    pa.array(ts[ends - 1]),
-                    pa.array(vals[ends - 1]),
-                ],
-                names=[
-                    "doc_id", "source", "window_start", "cnt", "sum_v",
-                    "min_v", "max_v", "first_ts", "first_v", "last_ts", "last_v",
-                ],
-            )
-
-    return kern
-
-
 def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
     """Merge partials across chunks of the same (doc, window) — Catalyst
     plans this as partial+final HashAggregate, map-side combined."""
@@ -139,20 +99,10 @@ def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
     )
 
 
-def rollup_tier1(chunks_df: DataFrame, window_us: int = WINDOW_1M_US,
-                 unique_doc_chunks: bool = False) -> DataFrame:
-    """tier0 chunks → tier1 windowed aggregates (decode happens here, once).
-
-    ``unique_doc_chunks=True`` asserts every doc has exactly ONE chunk row
-    (true for the output of a single flush, before any append/compaction):
-    the kernel's per-(chunk, window) partials are then already final — the
-    cross-chunk merge exchange is provably redundant and is skipped, so the
-    tier-1 write runs at decode parallelism with no shuffle at all."""
-    src = chunks_df.select("doc_id", "source", "time_blob", "value_blob")
-    partials = src.mapInArrow(_window_partials_kernel(window_us), schema=TIER_PARTIAL_SCHEMA)
-    if unique_doc_chunks:
-        return partials
-    return _finalize(partials)
+def rollup_tier1(chunks_df: DataFrame, window_us: int = WINDOW_1M_US) -> DataFrame:
+    """tier0 chunks → tier1 windowed aggregates (decode happens here, once):
+    the one-tier case of ``rollup_tiers``."""
+    return rollup_tiers(chunks_df, [window_us]).drop("tier")
 
 
 def tier1_from_flush(flush_df: DataFrame) -> DataFrame:
@@ -211,123 +161,177 @@ def rollup_from_stats(chunks_df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 TIERS_PARTIAL_SCHEMA = "tier int, " + TIER_PARTIAL_SCHEMA
+# a partial: its doc run (index into the batch's run keys), window start,
+# then the aggregates in TIER_PARTIAL_SCHEMA order
+_PARTIAL_KEYS = ("run", "win", "cnt", "sum", "min", "max", "fts", "fv", "lts", "lv")
+
+
+def _groups(run: np.ndarray, win: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the stretches of equal ``(run, win)``."""
+    change = np.empty(len(win), dtype=bool)
+    change[0] = True
+    np.logical_or(win[1:] != win[:-1], run[1:] != run[:-1], out=change[1:])
+    starts = np.flatnonzero(change)
+    return starts, np.append(starts[1:], len(win))
+
+
+def _reduce(p: dict, win, s, e, first, last) -> dict:
+    """One partial per group ``[s, e)`` of ``p``; first_*/last_* come from
+    the rows ``first``/``last``."""
+    return {
+        "run": p["run"][s], "win": win[s],
+        "cnt": np.add.reduceat(p["cnt"], s), "sum": np.add.reduceat(p["sum"], s),
+        "min": np.minimum.reduceat(p["min"], s), "max": np.maximum.reduceat(p["max"], s),
+        "fts": p["fts"][first], "fv": p["fv"][first],
+        "lts": p["lts"][last], "lv": p["lv"][last],
+    }
+
+
+def _point_partials(ts, vals, row_of, run_of_row, window_us: int) -> dict:
+    """Per-(chunk row, window) partials of time-sorted points, keyed by the
+    row's doc run."""
+    if len(ts) == 0:
+        return {k: np.empty(0, np.int64) for k in _PARTIAL_KEYS}
+    win = ts // window_us * window_us
+    s, e = _groups(row_of, win)
+    return {
+        "run": run_of_row[row_of[s]], "win": win[s], "cnt": e - s,
+        "sum": np.add.reduceat(vals, s), "min": np.minimum.reduceat(vals, s),
+        "max": np.maximum.reduceat(vals, s),
+        "fts": ts[s], "fv": vals[s], "lts": ts[e - 1], "lv": vals[e - 1],
+    }
+
+
+def _merge_chunks(p: dict) -> dict:
+    """Merge the partials of one (run, window) that came from different
+    chunks: cnt/sum/min/max by ``reduceat``, first_* from the earliest
+    first_ts and last_* from the latest last_ts (the earlier, resp. later,
+    chunk on a tie — arrival order, as the flush sort)."""
+    run, win = p["run"], p["win"]
+    if not np.any((run[1:] == run[:-1]) & (win[1:] <= win[:-1])):
+        return p  # one chunk per (run, window) already, in order
+    order = np.lexsort((win, run))  # stable: chunk order within a window
+    p = {k: v[order] for k, v in p.items()}
+    s, e = _groups(p["run"], p["win"])
+    seg = np.repeat(np.arange(len(s)), e - s)
+    hit = np.flatnonzero(p["fts"] == np.minimum.reduceat(p["fts"], s)[seg])
+    first = hit[np.searchsorted(hit, s)]
+    hit = np.flatnonzero(p["lts"] == np.maximum.reduceat(p["lts"], s)[seg])
+    last = hit[np.searchsorted(hit, e) - 1]
+    return _reduce(p, p["win"], s, e, first, last)
+
+
+def _cascade(p: dict, window_us: int) -> dict:
+    """Partials at a window that is a multiple of ``p``'s: ``p`` holds one
+    row per (run, finer window) in window order, so a coarse window's first
+    point is in its first row and its last point in its last."""
+    win = p["win"] // window_us * window_us
+    s, e = _groups(p["run"], win)
+    return _reduce(p, win, s, e, s, e - 1)
+
+
+def _run_starts(doc: pa.Array, src: pa.Array) -> np.ndarray:
+    """True at each row whose (doc_id, source) differs from the row before
+    (nulls equal nulls, as in a groupBy)."""
+    n = len(doc)
+    starts = np.ones(n, dtype=bool)
+    if n > 1:
+        same = np.ones(n - 1, dtype=bool)
+        for col in (doc, src):
+            a, b = col.slice(1), col.slice(0, n - 1)
+            eq = pc.coalesce(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b)))
+            same &= eq.to_numpy(zero_copy_only=False)
+        starts[1:] = ~same
+    return starts
 
 
 def _multi_window_partials_kernel(windows_us: list[int]):
-    """Decode each chunk ONCE, then emit per-(chunk, window) partials for
-    EVERY tier granularity from the same decoded arrays — the per-tier
-    boundary scan + ``np.*.reduceat`` is a tiny fraction of the decode cost,
-    so the marginal price of a coarser tier is ~zero.  With one chunk per
-    doc the partials are final and the fused rollup is a single map-only
-    write (no exchange, no per-tier job): the promote() cascade's two extra
-    write+read-back jobs — the main NON-scaling wall component at high
-    parallelism — disappear."""
+    """Decode each chunk ONCE and emit every tier's window rows from the
+    same decoded arrays: the finest tier by ``np.*.reduceat`` over the
+    points, each coarser (nested) tier by cascading the finer tier's group
+    arrays, so the marginal price of a coarser tier is ~zero.
+
+    Rows of one ``(doc_id, source)`` that arrive next to each other — a
+    *doc run*, possibly straddling Arrow batches — are merged into ONE row
+    per window: the kernel holds the last run of a batch open and merges
+    its finest-tier partials with the next batch's. When every chunk of a
+    doc is adjacent in the task's input (a local sort by doc over whole
+    buckets) the rows are final; memory holds one doc's partials. Otherwise
+    they are partials for ``_finalize``."""
+
+    def emit(p: dict, doc: pa.Array, src: pa.Array) -> Iterator[pa.RecordBatch]:
+        if len(p["run"]) == 0:
+            return
+        for t, window_us in enumerate(windows_us):
+            if t:
+                p = _cascade(p, window_us)
+            idx = pa.array(p["run"])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.full(len(idx), t, dtype=np.int32)),
+                 doc.take(idx), src.take(idx)]
+                + [pa.array(p[k]) for k in _PARTIAL_KEYS[1:]],
+                names=["tier", "doc_id", "source", "window_start", "cnt", "sum_v",
+                       "min_v", "max_v", "first_ts", "first_v", "last_ts", "last_v"],
+            )
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        open_p = open_doc = open_src = None  # the last doc run seen, still open
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
+            doc, src = batch.column("doc_id"), batch.column("source")
+            if open_doc is not None:
+                # the open run goes first, as run 0; the batch's first row
+                # joins it when it carries the same key
+                doc = pa.concat_arrays([open_doc, doc])
+                src = pa.concat_arrays([open_src, src])
+            starts = _run_starts(doc, src)
+            run_of = np.cumsum(starts) - 1
+            first_rows = pa.array(np.flatnonzero(starts))
+            run_doc, run_src = doc.take(first_rows), src.take(first_rows)
+            if open_doc is not None:
+                run_of = run_of[1:]
             tbuf, tsp = _blob_np(batch.column("time_blob"))
             vbuf, vsp = _blob_np(batch.column("value_blob"))
             ts, splits = decode_rows(tbuf, tsp)
             vals, _ = decode_rows(vbuf, vsp)
-            counts = np.diff(splits)
-            if len(ts) == 0:
-                continue
-            row_of = np.repeat(np.arange(batch.num_rows, dtype=np.int64), counts)
-            prev: dict | None = None
-            for t, window_us in enumerate(windows_us):
-                if prev is not None and window_us % prev["window_us"] == 0:
-                    # nested windows: CASCADE from the previous tier's group
-                    # arrays (≈ points/window_size elements) instead of
-                    # re-scanning the full point arrays — the per-point
-                    # passes (window quotient + boundary compare + 3×
-                    # reduceat over n) happen once, for the finest tier;
-                    # every coarser tier costs only group-array traffic.
-                    # Correct because points are time-sorted within a row
-                    # (flush order), so fine groups within a row are too:
-                    # the first fine group of a coarse window carries its
-                    # earliest point, the last its latest.
-                    src_row, src_win = prev["row"], prev["win"]
-                    win = src_win // window_us * window_us
-                    m = len(win)
-                    change = np.empty(m, dtype=bool)
-                    change[0] = True
-                    np.logical_or(win[1:] != win[:-1],
-                                  src_row[1:] != src_row[:-1], out=change[1:])
-                    s = np.flatnonzero(change)
-                    e = np.append(s[1:], m)
-                    cur = {
-                        "window_us": window_us,
-                        "row": src_row[s],
-                        "win": win[s],
-                        "cnt": np.add.reduceat(prev["cnt"], s),
-                        "sum": np.add.reduceat(prev["sum"], s),
-                        "min": np.minimum.reduceat(prev["min"], s),
-                        "max": np.maximum.reduceat(prev["max"], s),
-                        "fts": prev["fts"][s],
-                        "fv": prev["fv"][s],
-                        "lts": prev["lts"][e - 1],
-                        "lv": prev["lv"][e - 1],
-                    }
-                else:
-                    win = ts // window_us * window_us
-                    change = np.empty(len(win), dtype=bool)
-                    change[0] = True
-                    np.logical_or(
-                        win[1:] != win[:-1], row_of[1:] != row_of[:-1], out=change[1:]
-                    )
-                    starts = np.flatnonzero(change)
-                    ends = np.append(starts[1:], len(win))
-                    cur = {
-                        "window_us": window_us,
-                        "row": row_of[starts],
-                        "win": win[starts],
-                        "cnt": ends - starts,
-                        "sum": np.add.reduceat(vals, starts),
-                        "min": np.minimum.reduceat(vals, starts),
-                        "max": np.maximum.reduceat(vals, starts),
-                        "fts": ts[starts],
-                        "fv": vals[starts],
-                        "lts": ts[ends - 1],
-                        "lv": vals[ends - 1],
-                    }
-                grp_idx = pa.array(cur["row"])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.full(len(cur["row"]), t, dtype=np.int32)),
-                        batch.column("doc_id").take(grp_idx),
-                        batch.column("source").take(grp_idx),
-                        pa.array(cur["win"]),
-                        pa.array(cur["cnt"]),
-                        pa.array(cur["sum"]),
-                        pa.array(cur["min"]),
-                        pa.array(cur["max"]),
-                        pa.array(cur["fts"]),
-                        pa.array(cur["fv"]),
-                        pa.array(cur["lts"]),
-                        pa.array(cur["lv"]),
-                    ],
-                    names=[
-                        "tier", "doc_id", "source", "window_start", "cnt", "sum_v",
-                        "min_v", "max_v", "first_ts", "first_v", "last_ts", "last_v",
-                    ],
-                )
-                prev = cur
+            row_of = np.repeat(np.arange(n, dtype=np.int64), np.diff(splits))
+            p = _point_partials(ts, vals, row_of, run_of, windows_us[0])
+            if open_p is not None:
+                p = {k: np.concatenate([open_p[k], p[k]]) for k in _PARTIAL_KEYS}
+            p = _merge_chunks(p)
+            last = len(first_rows) - 1
+            closed = p["run"] < last
+            yield from emit({k: v[closed] for k, v in p.items()}, run_doc, run_src)
+            open_p = {k: v[~closed] for k, v in p.items()}
+            open_p["run"][:] = 0
+            open_doc, open_src = run_doc.slice(last, 1), run_src.slice(last, 1)
+        if open_p is not None:
+            yield from emit(open_p, open_doc, open_src)
 
     return kern
 
 
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
-                 unique_doc_chunks: bool = False) -> DataFrame:
-    """All retention tiers in ONE pass/job: rows carry ``tier`` = index into
-    ``windows_us``.  Equivalent to ``rollup_tier1`` + a ``promote()``
-    cascade (pytest-asserted), but with one decode, one (or zero) exchange
-    and one write instead of a write+read-back per tier."""
+                 whole_docs: bool = False) -> DataFrame:
+    """All retention tiers in ONE pass: rows carry ``tier`` = index into
+    ``windows_us``, each window a multiple of the one before. Equivalent to
+    ``rollup_tier1`` + a ``promote()`` cascade (pytest-asserted), with one
+    decode and one write instead of a write+read-back per tier.
+
+    ``whole_docs=True`` promises that every chunk of a doc reaches one task
+    (a bucketed scan by ``doc_id`` that reads whole buckets, or one chunk
+    per doc): each task sorts its rows by doc, the kernel merges every
+    doc's chunks itself, and the plan has no exchange. Otherwise a doc's
+    chunks may sit in several tasks and ``_finalize`` merges the partials
+    through a shuffle."""
+    for finer, coarser in zip(windows_us, windows_us[1:]):
+        if coarser % finer:
+            raise ValueError(f"tier windows must nest: {coarser} is not a multiple of {finer}")
     src = chunks_df.select("doc_id", "source", "time_blob", "value_blob")
-    partials = src.mapInArrow(
-        _multi_window_partials_kernel(windows_us), schema=TIERS_PARTIAL_SCHEMA
-    )
-    if unique_doc_chunks:
-        return partials
-    return _finalize(partials, extra_keys=("tier",))
+    kern = _multi_window_partials_kernel(list(windows_us))
+    if whole_docs:
+        return src.sortWithinPartitions("doc_id", "source").mapInArrow(
+            kern, schema=TIERS_PARTIAL_SCHEMA)
+    return _finalize(src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA), extra_keys=("tier",))

@@ -14,7 +14,9 @@ checkpoint-resume oracle in tests/test_warehouse_promotion.py).
 
 from __future__ import annotations
 
+import functools
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -48,6 +50,57 @@ DEFAULT_TIERS = [
 ]
 
 
+# SQL confs of the one-job fused promote. A bucketed scan reads each bucket
+# in ONE task only while both bucketing switches hold: by default Spark
+# plans a plain file-split scan when no operator above the scan needs the
+# bucket distribution, and a local sort does not. The write then streams
+# the kernel's rows into one open file per (tier, p_day) instead of
+# sorting them first, so it overlaps the kernel; a task that meets more
+# than 16 partitions sorts the rest (memory: one parquet row group per open
+# file).
+ONE_JOB_PROMOTE = {
+    "spark.sql.sources.bucketing.enabled": "true",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
+    "spark.sql.optimizer.plannedWrite.enabled": "false",
+    "spark.sql.maxConcurrentOutputFileWriters": "16",
+}
+
+
+@contextmanager
+def _session_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set SQL confs for the actions inside the block, then restore the
+    caller's values (unset ones stay unset)."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _described(method):
+    """Run a pipeline stage under its own Spark job description
+    (``tsrollup <stage>``, printed per job by ``tools/run_report.py``) and
+    restore the caller's description afterwards."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"tsrollup {method.__name__}")
+        try:
+            return method(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    return run
+
+
 @dataclass
 class Pipeline:
     spark: SparkSession
@@ -56,16 +109,17 @@ class Pipeline:
 
     def _bucket_by(self) -> tuple[str, int]:
         """Hash-bucket spec of the chunk table (Iceberg ``bucket(doc_id, N)``
-        stand-in): snapshots are written hash-clustered by doc_id so that
-        same-session compaction / per-doc merges read the clustering from
-        the scan and need no exchange. One bucket per core of the writing
-        session, so each Python stage over the table (fused rollup,
-        compaction merge) runs one wave of tasks: a reused Python worker
-        pays ~0.2 s per task (pyspark 4.1.2, 4-core host), more than a
-        sub-core bucket's share of the work."""
+        stand-in): snapshots are written hash-clustered by doc_id, so every
+        chunk of a doc sits in one bucket, and compaction, per-doc merges
+        and the fused promote read the clustering from the scan and need no
+        exchange. One bucket per core of the writing session, so each
+        Python stage over the table runs one wave of whole-bucket tasks: a
+        reused Python worker pays ~0.2 s per task (pyspark 4.1.2, 4-core
+        host), more than a sub-core bucket's share of the work."""
         return ("doc_id", self.spark.sparkContext.defaultParallelism)
 
     # --- stage 1: ingest+flush ------------------------------------------
+    @_described
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
                partitions: int | None = None, append: bool = False) -> DataFrame:
         chunks = flush(tokens_df, seed, partitions)
@@ -82,6 +136,7 @@ class Pipeline:
         return self.warehouse.read(self.spark, "chunks_tier0")
 
     # --- stage 2: promotion with checkpoint ------------------------------
+    @_described
     def promote_all(self, up_to_us: int | None = None,
                     collect_stats: bool = False) -> list[dict]:
         """Promote each tier up to its source's complete windows.
@@ -136,7 +191,9 @@ class Pipeline:
             and not os.environ.get("SPARK_GRAFT_NO_FUSED_PROMOTE")
             and all(wh.watermark(spec.name) is None for spec in self.tiers)
         ):
-            return self._promote_all_fused(chunks, data_max, up_to_us, collect_stats)
+            whole_docs = wh.bucket_column(self.spark, "chunks_tier0") == "doc_id"
+            return self._promote_all_fused(chunks, data_max, up_to_us, collect_stats,
+                                           whole_docs)
 
         summary: list[dict] = []
         prev_df = None
@@ -205,19 +262,24 @@ class Pipeline:
         return summary
 
     def _promote_all_fused(self, chunks: DataFrame, data_max: int,
-                           up_to_us: int | None,
-                           collect_stats: bool) -> list[dict]:
-        """All-tiers-fresh promotion as ONE decode job and ONE write job.
+                           up_to_us: int | None, collect_stats: bool,
+                           whole_docs: bool) -> list[dict]:
+        """All-tiers-fresh promotion from ONE decode pass and ONE write.
 
         The per-tier cascade costs a write + read-back per tier (a fixed
         ~0.5 s/job wall that does NOT shrink with cores — the dominant
         non-scaling component measured in BENCH.md). Here the fused
         ``rollup_tiers`` kernel decodes every chunk once and emits every
-        tier's partials together; one write lands them partitioned by
+        tier's rows together; one write lands them partitioned by
         ``(tier, p_day)`` and ``Warehouse.write_slices`` renames each
         tier's partition dir into that tier table's snapshot (filesystem
-        moves + per-table manifest swaps, no extra jobs). Same shape the
-        bench headline uses; pytest asserts fused ≡ cascade outputs."""
+        moves + per-table manifest swaps, no extra jobs).
+
+        ``whole_docs``: the chunk table reads as one snapshot bucketed by
+        doc_id, so with whole-bucket tasks every chunk of a doc reaches one
+        task and the kernel merges a doc's chunks itself — scan, local sort,
+        kernel and write in ONE job, no exchange. Otherwise the partials
+        go through ``_finalize``'s shuffle (a second job)."""
         wh = self.warehouse
         completes: list[int] = []
         for spec in self.tiers:
@@ -234,14 +296,16 @@ class Pipeline:
         fused = rollup_tiers(
             chunks.filter(F.col("tier") == 0),
             [spec.window_us for spec in self.tiers],
+            whole_docs=whole_docs,
         ).filter(F.col("window_start") < horizon)
-        wh.write_slices(
-            with_p_day(fused), "tier",
-            {t: spec.name for t, spec in enumerate(self.tiers)},
-            partition_by=("p_day",),
-            watermarks={t: int(c) for t, c in enumerate(completes)},
-            op="promote:full-fused",
-        )
+        with _session_confs(self.spark, ONE_JOB_PROMOTE if whole_docs else {}):
+            wh.write_slices(
+                with_p_day(fused), "tier",
+                {t: spec.name for t, spec in enumerate(self.tiers)},
+                partition_by=("p_day",),
+                watermarks={t: int(c) for t, c in enumerate(completes)},
+                op="promote:full-fused",
+            )
         summary = []
         for t, spec in enumerate(self.tiers):
             entry = {"tier": spec.name, "mode": "full",
@@ -252,6 +316,7 @@ class Pipeline:
         return summary
 
     # --- maintenance: compaction ------------------------------------------
+    @_described
     def compact(self, min_chunks: int = 2) -> dict:
         """Merge every series with ≥ ``min_chunks`` tier-0 chunks into one
         chunk (the reference's compaction stage; page-merge kernel: splice
@@ -293,6 +358,7 @@ class Pipeline:
         return {"compacted_docs": int(n_multi)}
 
     # --- stage 3: retention ----------------------------------------------
+    @_described
     def retain(self, now_us: int) -> list[dict]:
         out = []
         for spec in self.tiers:

@@ -263,3 +263,26 @@ def test_gorilla_rows_constant_and_extreme():
     vals, _ = decode_chunk_rows(buf, bsp)
     # -0.0 == 0.0 under ==; require bit-exactness instead
     assert np.array_equal(vals.view(np.uint64), flat.view(np.uint64))
+
+
+def test_blob_plane_past_int32_offsets_is_refused(monkeypatch):
+    """Arrow binary offsets are int32, so a flush batch whose blob plane
+    passes the limit must raise (naming rows and bytes) instead of wrapping
+    its offsets. The limit is lowered here; at the real 2 GiB a batch of
+    ~20 000 docs of ~32k tokens reaches it."""
+    from sorting_compressed_time_series_spark.operators import ingest
+    from sorting_compressed_time_series_spark.sources.synth import _gen_batch
+
+    batch = _gen_batch(np.arange(40, dtype=np.uint64), 42)
+    out = next(ingest.flush_kernel_batches(iter([batch])))
+    largest = max(int(np.frombuffer(out.column(c).buffers()[1], np.int32)[40])
+                  for c in ("time_blob", "value_blob"))
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest - 1)
+    with pytest.raises(OverflowError, match=rf"40 rows holds {largest} bytes"):
+        next(ingest.flush_kernel_batches(iter([batch])))
+    # at the limit the batch still flushes, byte for byte as before (all
+    # but the encode wall time)
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest)
+    again = next(ingest.flush_kernel_batches(iter([batch])))
+    cols = [c for c in out.schema.names if c != "encode_ns"]
+    assert again.select(cols).equals(out.select(cols))

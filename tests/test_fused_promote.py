@@ -1,0 +1,328 @@
+"""The one-job fused promote: the rollup kernel merges each doc's chunks
+itself on the doc-bucketed chunk scan, so promotion plans no exchange.
+
+- kernel: docs with many chunks, split across Arrow batches at every
+  offset, equal a pandas recomputation from the points;
+- plan audit: the fused promote plans zero Exchange over a bucketed scan,
+  and its tier tables equal the pandas recomputation from
+  ``decode_points`` (perfbench's oracle);
+- fresh session: a snapshot whose catalog entry is gone is registered
+  again on read, or the promote falls back to the shuffle merge — the tier
+  tables are the same either way;
+- crash between tier commits: a rerun finishes the job;
+- job descriptions: the engine labels its own actions.
+"""
+
+import contextlib
+import io
+from functools import partial
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+
+from pyspark.sql import functions as F
+
+from sorting_compressed_time_series_spark.codecs.batched import encode_rows
+from sorting_compressed_time_series_spark.codecs.chunk import CODEC_DELTA, CODEC_VARINT
+from sorting_compressed_time_series_spark.operators.ingest import _binary_from_buffers, flush
+from sorting_compressed_time_series_spark.operators.rollup import (
+    _multi_window_partials_kernel,
+    decode_points,
+    rollup_tiers,
+)
+from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
+from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
+from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
+
+from perfbench.oracle import TIER_COLS, TIER_WINDOWS, check_tiers, expected_tiers, read_table
+
+WINDOWS = list(TIER_WINDOWS.values())
+AUTO_BUCKETED = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+
+
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+def _expected(points: pd.DataFrame) -> dict[str, pd.DataFrame]:
+    """perfbench's tier recompute over decoded points: ties on ts keep the
+    points' order, and only equal values ever tie here."""
+    return expected_tiers(points.rename(columns={"value": "token"}).assign(pos=0))
+
+
+# ---------------------------------------------------------------------------
+# kernel
+# ---------------------------------------------------------------------------
+
+def _chunk_rows(rng, n_docs: int) -> tuple[pa.Table, pd.DataFrame]:
+    """Chunk rows sorted by doc, 1-4 chunks per doc (some empty), whose
+    points interleave in time; every timestamp of a doc is distinct, so
+    first/last are unambiguous."""
+    docs, srcs, ts_parts, v_parts, points = [], [], [], [], []
+    for d in range(n_docs):
+        n_chunks = int(rng.integers(1, 5))
+        sizes = rng.integers(0, 40, n_chunks)
+        pool = rng.choice(20_000_000, int(sizes.sum()), replace=False) + 1_700_000_000_000_000
+        for part in np.split(pool, np.cumsum(sizes)[:-1]):
+            ts = np.sort(part).astype(np.int64)
+            vals = rng.integers(-10_000, 10_000, len(ts)).astype(np.int64)
+            docs.append(f"doc{d:04d}")
+            srcs.append("web" if d % 3 else "code")
+            ts_parts.append(ts)
+            v_parts.append(vals)
+            points.append(pd.DataFrame({"doc_id": docs[-1], "source": srcs[-1],
+                                        "ts": ts, "value": vals}))
+    splits = np.concatenate([[0], np.cumsum([len(t) for t in ts_parts])]).astype(np.int64)
+    t_buf, t_sp = encode_rows(np.concatenate(ts_parts), splits, CODEC_DELTA)
+    v_buf, v_sp = encode_rows(np.concatenate(v_parts), splits, CODEC_VARINT)
+    table = pa.table({"doc_id": docs, "source": srcs,
+                      "time_blob": _binary_from_buffers(t_buf, t_sp),
+                      "value_blob": _binary_from_buffers(v_buf, v_sp)})
+    return table, pd.concat(points, ignore_index=True)
+
+
+def _finalize_pandas(rows: pd.DataFrame) -> pd.DataFrame:
+    """What ``_finalize`` does with partial rows, in pandas."""
+    key = ["tier", "doc_id", "source", "window_start"]
+    g = rows.groupby(key)
+    out = g.agg(cnt=("cnt", "sum"), sum_v=("sum_v", "sum"), min_v=("min_v", "min"),
+                max_v=("max_v", "max"), first_ts=("first_ts", "min"), last_ts=("last_ts", "max"))
+    out["first_v"] = rows.loc[g["first_ts"].idxmin(), "first_v"].to_numpy()
+    out["last_v"] = rows.loc[g["last_ts"].idxmax(), "last_v"].to_numpy()
+    return out.reset_index()
+
+
+@pytest.mark.parametrize("batch_rows", [1, 2, 3, 7, 1000])
+@pytest.mark.parametrize("adjacent", [True, False])
+def test_kernel_merges_doc_chunks_across_batches(batch_rows, adjacent):
+    """With a doc's chunks adjacent the kernel's rows are final, one per
+    (doc, window); interleaved, they are partials that ``_finalize``'s
+    merge completes."""
+    rng = np.random.default_rng(batch_rows)
+    table, points = _chunk_rows(rng, 40)
+    if not adjacent:
+        table = table.take(np.argsort(np.arange(len(table)) % 2, kind="stable"))
+    kern = _multi_window_partials_kernel(WINDOWS)
+    out = pa.Table.from_batches(list(kern(iter(table.to_batches(batch_rows))))).to_pandas()
+    key = ["tier", "doc_id", "window_start"]
+    if adjacent:
+        assert not out.duplicated(key).any()
+    else:
+        assert out.duplicated(key).any()
+        out = _finalize_pandas(out)
+    want = _expected(points)
+    for t, name in enumerate(TIER_WINDOWS):
+        got = out[out.tier == t][TIER_COLS].sort_values(key[1:]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(
+            got, want[name].sort_values(key[1:]).reset_index(drop=True), check_dtype=False)
+
+
+def test_rollup_tiers_refuses_windows_that_do_not_nest():
+    """Coarser tiers cascade from the finer tier's rows, which needs each
+    window to be a multiple of the one before."""
+    with pytest.raises(ValueError, match="must nest"):
+        rollup_tiers(None, [1_000_000, 1_500_000])
+
+
+# ---------------------------------------------------------------------------
+# pipeline
+# ---------------------------------------------------------------------------
+
+N_DOCS = 60
+MOVED = 20  # docs N_DOCS-MOVED.. have their chunks relabelled as docs 0..
+
+
+@pytest.fixture(scope="module")
+def multi_chunk(spark):
+    """Chunk rows of one flush in which docs have several chunks: docs
+    0-19 are delivered twice in the same ingest (equal points), and the
+    chunks of docs 40-59 are relabelled as docs 0-19 (other points, some
+    on other days). Returns (chunks, tier recompute)."""
+    tokens = generate_tokens_df(spark, N_DOCS).unionByName(generate_tokens_df(spark, MOVED))
+    chunks = flush(tokens)
+    idx = F.substring("doc_id", 4, 10).cast("int")
+    target = F.when(idx >= N_DOCS - MOVED, F.format_string("doc%010d", idx - (N_DOCS - MOVED)))
+    sources = chunks.select(F.col("doc_id").alias("target"),
+                            F.col("source").alias("target_source")).distinct()
+    chunks = (chunks.withColumn("target", F.coalesce(target, F.col("doc_id")))
+              .join(sources, "target")
+              .withColumn("doc_id", F.col("target")).withColumn("source", F.col("target_source"))
+              .drop("target", "target_source"))
+    chunks = with_p_day(chunks, "window_start").cache()
+    days = chunks.groupBy("doc_id").agg(F.countDistinct("p_day").alias("d"), F.count("*").alias("n"))
+    stats = days.agg(F.max("d"), F.min("n"), F.max("n")).collect()[0]
+    assert stats[0] >= 2, "no doc has chunks in two p_day partitions"
+    assert stats[2] >= 3 and stats[1] == 1
+    return chunks, _expected(decode_points(chunks).toPandas())
+
+
+def _warehouse(spark, root, chunks) -> Pipeline:
+    """A pipeline whose chunk table is ``chunks``, written the way
+    ``Pipeline.ingest`` writes it (bucketed by doc_id, one bucket per
+    core)."""
+    p = Pipeline(spark, Warehouse(str(root)))
+    p.warehouse.write(chunks, "chunks_tier0", partition_by=("p_day",), op="ingest",
+                      bucket_by=p._bucket_by())
+    return p
+
+
+@pytest.fixture
+def small_batches(spark):
+    """Arrow batches of 2 rows, so a doc's chunks straddle batches."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    yield
+    spark.conf.set(key, prev)
+
+
+def _promote_plan(spark, p: Pipeline, monkeypatch) -> tuple[str, int]:
+    """promote_all(), returning the plan of the frame its write lands and
+    the number of Spark jobs it ran."""
+    plans = []
+    orig = Warehouse.write_slices
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write_slices", spy)
+    sc = spark.sparkContext
+    group = f"promote-{id(p)}"
+    sc.setJobGroup(group, group)
+    try:
+        p.promote_all()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.setattr(Warehouse, "write_slices", orig)
+    assert len(plans) == 1
+    return plans[0], len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
+                                                small_batches, monkeypatch):
+    chunks, want = multi_chunk
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    assert "Exchange" not in plan, plan
+    assert "Bucketed: true" in plan, plan
+    assert jobs == 1
+    assert spark.conf.get(AUTO_BUCKETED, None) is None  # the switch was scoped
+    assert check_tiers(p.warehouse.root, want) == []
+
+
+def test_fresh_session_reregisters_bucketed_snapshot(spark, tmp_path, multi_chunk,
+                                                     small_batches, monkeypatch):
+    """The catalog entry of the chunk snapshot is gone (a new session):
+    the read registers it again and the promote stays one job."""
+    chunks, want = multi_chunk
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    wh = p.warehouse
+    spark.sql(f"DROP TABLE {wh._catalog_name('chunks_tier0')}")
+    plan, _ = _promote_plan(spark, p, monkeypatch)
+    assert "Exchange" not in plan and "Bucketed: true" in plan, plan
+    assert check_tiers(wh.root, want) == []
+
+
+def test_fresh_session_falls_back_to_shuffle_merge(spark, tmp_path, multi_chunk,
+                                                   small_batches, monkeypatch):
+    """When the snapshot cannot be registered, the read is plain parquet
+    and the partials merge through the shuffle: same tier tables."""
+    from pyspark.errors import AnalysisException
+
+    chunks, want = multi_chunk
+    ref = _warehouse(spark, tmp_path / "ref", chunks)
+    ref.promote_all()
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    wh = p.warehouse
+    spark.sql(f"DROP TABLE {wh._catalog_name('chunks_tier0')}")
+    sql = type(spark).sql
+
+    def refusing(self, query, *args, **kwargs):
+        if query.startswith("CREATE TABLE"):
+            raise AnalysisException("catalog refuses the table")
+        return sql(self, query, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark), "sql", refusing)
+    assert wh.bucket_column(spark, "chunks_tier0") is None
+    plan, _ = _promote_plan(spark, p, monkeypatch)
+    assert "hashpartitioning" in plan and "Bucketed: true" not in plan, plan
+    monkeypatch.setattr(type(spark), "sql", sql)
+    assert check_tiers(wh.root, want) == []
+    for name in TIER_WINDOWS:
+        key = ["doc_id", "window_start"]
+        pd.testing.assert_frame_equal(
+            read_table(wh.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True),
+            read_table(ref.warehouse.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True))
+
+
+def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk, monkeypatch):
+    """write_slices fails after the first tier table's manifest swap; a
+    promote_all rerun (the mixed-watermark cascade) then yields the tier
+    tables and watermarks of an uninterrupted promotion."""
+    chunks, want = multi_chunk
+    ref = _warehouse(spark, tmp_path / "ref", chunks)
+    ref.promote_all()
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    wh = p.warehouse
+    commit = Warehouse._commit
+    done = []
+
+    def crash_after_first(self, table, *args, **kwargs):
+        if done:
+            raise RuntimeError("crash between tier commits")
+        commit(self, table, *args, **kwargs)
+        done.append(table)
+
+    monkeypatch.setattr(Warehouse, "_commit", crash_after_first)
+    with pytest.raises(RuntimeError, match="between tier commits"):
+        p.promote_all()
+    monkeypatch.setattr(Warehouse, "_commit", commit)
+    assert done == ["tier1_1s"] and not wh.exists("tier2_1m")
+    assert [e["mode"] for e in p.promote_all()] == ["noop", "full", "full"]
+    assert check_tiers(wh.root, want) == []
+    for name in TIER_WINDOWS:
+        key = ["doc_id", "window_start"]
+        pd.testing.assert_frame_equal(
+            read_table(wh.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True),
+            read_table(ref.warehouse.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True))
+        assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+def test_pipeline_stages_describe_their_jobs(spark, tmp_path, monkeypatch):
+    """ingest, promote_all, compact and retain run their Spark actions
+    under their own job description and hand the caller's back."""
+    seen = []
+    for method in ("write", "write_slices", "append_segment"):
+        orig = getattr(Warehouse, method)
+
+        def spy(self, *args, _orig=orig, **kwargs):
+            seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+            return _orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(Warehouse, method, spy)
+    sc = spark.sparkContext
+    try:
+        for i, caller in enumerate(("caller's label", None)):
+            p = Pipeline(spark, Warehouse(str(tmp_path / f"wh{i}")))
+            for stage, fn, args in [
+                    ("ingest", p.ingest, (generate_tokens_df(spark, 20),)),
+                    ("promote_all", p.promote_all, ()),
+                    ("ingest", partial(p.ingest, append=True), (generate_tokens_df(spark, 5),)),
+                    ("promote_all", p.promote_all, ()),
+                    ("compact", p.compact, ()),
+                    ("retain", p.retain, (1_800_000_000_000_000,))]:
+                sc.setJobDescription(caller)
+                del seen[:]
+                fn(*args)
+                assert set(seen) <= {f"tsrollup {stage}"}, (stage, seen)
+                assert seen or stage == "retain", stage
+                assert sc.getLocalProperty("spark.job.description") == caller, stage
+    finally:
+        sc.setLocalProperty("spark.job.description", None)

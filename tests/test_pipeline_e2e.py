@@ -173,7 +173,9 @@ def test_fused_partials_equal_decode_rollup(spark, tokens):
 
 def test_rollup_tiers_fused_equals_cascade(spark, chunks):
     """The fused one-pass multi-tier rollup must equal the tier1 +
-    promote() cascade at every granularity, in both modes."""
+    promote() cascade at every granularity, in both modes: merged in the
+    kernel (one chunk per doc, so every doc's chunks reach one task) and
+    merged by the shuffle."""
     from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
 
     windows = [1_000_000, WINDOW_1M_US, WINDOW_1H_US]
@@ -182,9 +184,9 @@ def test_rollup_tiers_fused_equals_cascade(spark, chunks):
     def canon(pdf):
         return pdf.sort_values(key).reset_index(drop=True)
 
-    for unique in (True, False):
-        fused = rollup_tiers(chunks, windows, unique_doc_chunks=unique).toPandas()
-        ref1 = rollup_tier1(chunks, windows[0], unique_doc_chunks=unique)
+    for whole in (True, False):
+        fused = rollup_tiers(chunks, windows, whole_docs=whole).toPandas()
+        ref1 = rollup_tier1(chunks, windows[0])
         refs = {0: ref1.toPandas()}
         prev = ref1
         for t, w in enumerate(windows[1:], start=1):

@@ -125,20 +125,22 @@ def test_exact_dedup_shuffles_hashes_not_text(spark):
 
 
 def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
-    """With one chunk per doc (single flush), rollup_tier1(unique_doc_chunks
-    =True) must plan NO exchange at all: decode partials are final and the
-    tier-1 write runs at scan parallelism."""
+    """With one chunk per doc (single flush) every chunk of a doc reaches
+    one task, so the tier-1 rollup with ``whole_docs=True`` must plan NO
+    exchange at all: the kernel's rows are final and the tier-1 write runs
+    at scan parallelism with no shuffle."""
     from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tier1
+    from sorting_compressed_time_series_spark.operators.rollup import rollup_tier1, rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 50)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    plan = plan_of(rollup_tier1(chunks, 1_000_000, unique_doc_chunks=True), mode="simple")
+    whole = rollup_tiers(chunks, [1_000_000], whole_docs=True).drop("tier")
+    plan = plan_of(whole, mode="simple")
     assert "Exchange" not in plan, plan
     # and it must equal the general (shuffled) path on this input
-    a = rollup_tier1(chunks, 1_000_000, unique_doc_chunks=True).toPandas()
+    a = whole.toPandas()
     b = rollup_tier1(chunks, 1_000_000).toPandas()
     key = ["doc_id", "window_start"]
     a = a.sort_values(key).reset_index(drop=True)
@@ -203,10 +205,10 @@ def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path):
 
 
 def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
-    """The fused multi-tier rollup in one-chunk-per-doc mode must be a pure
-    map-only plan: no Exchange anywhere between the chunk scan and the
-    per-tier partial rows (this is what lets the whole promotion cascade
-    ride a single write job in bench)."""
+    """The fused multi-tier rollup over one chunk per doc with
+    ``whole_docs=True`` must be a map-only plan: no Exchange anywhere
+    between the chunk scan and the per-tier rows (this is what lets the
+    whole promotion cascade ride a single write job)."""
     from sorting_compressed_time_series_spark.operators.ingest import flush
     from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
@@ -215,7 +217,7 @@ def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
     flush(generate_tokens_df(spark, 60)).write.parquet(path)
     chunks = spark.read.parquet(path)
     plan = plan_of(
-        rollup_tiers(chunks, [1_000_000, 60_000_000], unique_doc_chunks=True)
+        rollup_tiers(chunks, [1_000_000, 60_000_000], whole_docs=True)
     )
     assert "Exchange" not in plan, plan
 
