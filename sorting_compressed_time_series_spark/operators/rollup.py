@@ -42,6 +42,10 @@ TIER_PARTIAL_SCHEMA = (
     "sum_v bigint, min_v bigint, max_v bigint, "
     "first_ts bigint, first_v bigint, last_ts bigint, last_v bigint"
 )
+TIER_PARTIAL_ARROW = pa.schema(
+    [("doc_id", pa.string()), ("source", pa.string())]
+    + [(c, pa.int64()) for c in ("window_start", "cnt", "sum_v", "min_v", "max_v",
+                                 "first_ts", "first_v", "last_ts", "last_v")])
 
 
 def _blob_np(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -313,6 +317,26 @@ def _multi_window_partials_kernel(windows_us: list[int]):
     return kern
 
 
+_ROLLUP_INPUT = ("doc_id", "source", "time_blob", "value_blob")
+
+
+def _tiers_kernel(windows_us: list[int]):
+    for finer, coarser in zip(windows_us, windows_us[1:]):
+        if coarser % finer:
+            raise ValueError(f"tier windows must nest: {coarser} is not a multiple of {finer}")
+    return _multi_window_partials_kernel(list(windows_us))
+
+
+def whole_doc_rollup(chunks_df: DataFrame, windows_us: list[int]):
+    """``(input, kernel)`` of the fused rollup over a frame in which every
+    chunk of a doc lies in one partition: the input is sorted by doc
+    within each partition, and the kernel emits one final row per (tier,
+    doc, window) — ``rollup_tiers(whole_docs=True)`` is
+    ``input.mapInArrow(kernel)``."""
+    kern = _tiers_kernel(windows_us)
+    return chunks_df.select(*_ROLLUP_INPUT).sortWithinPartitions("doc_id", "source"), kern
+
+
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
                  whole_docs: bool = False) -> DataFrame:
     """All retention tiers in ONE pass: rows carry ``tier`` = index into
@@ -326,12 +350,9 @@ def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
     doc's chunks itself, and the plan has no exchange. Otherwise a doc's
     chunks may sit in several tasks and ``_finalize`` merges the partials
     through a shuffle."""
-    for finer, coarser in zip(windows_us, windows_us[1:]):
-        if coarser % finer:
-            raise ValueError(f"tier windows must nest: {coarser} is not a multiple of {finer}")
-    src = chunks_df.select("doc_id", "source", "time_blob", "value_blob")
-    kern = _multi_window_partials_kernel(list(windows_us))
     if whole_docs:
-        return src.sortWithinPartitions("doc_id", "source").mapInArrow(
-            kern, schema=TIERS_PARTIAL_SCHEMA)
-    return _finalize(src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA), extra_keys=("tier",))
+        src, kern = whole_doc_rollup(chunks_df, windows_us)
+        return src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
+    kern = _tiers_kernel(windows_us)
+    partials = chunks_df.select(*_ROLLUP_INPUT).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
+    return _finalize(partials, extra_keys=("tier",))

@@ -19,16 +19,20 @@ import os
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.ingest import flush
+from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches
 from ..operators.retention import apply_retention
 from ..operators.rollup import (
+    TIER_PARTIAL_ARROW,
     WINDOW_1H_US,
     WINDOW_1M_US,
     promote,
     rollup_tier1,
-    rollup_tiers,
+    whole_doc_rollup,
 )
 from ..sources.warehouse import Warehouse, with_p_day
 
@@ -53,17 +57,25 @@ DEFAULT_TIERS = [
 # SQL confs of the one-job fused promote. A bucketed scan reads each bucket
 # in ONE task only while both bucketing switches hold: by default Spark
 # plans a plain file-split scan when no operator above the scan needs the
-# bucket distribution, and a local sort does not. The write then streams
-# the kernel's rows into one open file per (tier, p_day) instead of
-# sorting them first, so it overlaps the kernel; a task that meets more
-# than 16 partitions sorts the rest (memory: one parquet row group per open
-# file).
+# bucket distribution, and a local sort does not.
 ONE_JOB_PROMOTE = {
     "spark.sql.sources.bucketing.enabled": "true",
     "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
-    "spark.sql.optimizer.plannedWrite.enabled": "false",
-    "spark.sql.maxConcurrentOutputFileWriters": "16",
 }
+
+
+def _below_horizons(kern, horizons: list[int]):
+    """``kern`` keeping only the rows whose ``window_start`` lies below
+    their tier's horizon (``horizons[tier]``): the complete windows."""
+    limit = np.asarray(horizons, dtype=np.int64)
+
+    def run(batches):
+        for batch in kern(batches):
+            keep = (batch.column("window_start").to_numpy()
+                    < limit[batch.column("tier").to_numpy()])
+            yield batch if keep.all() else batch.filter(pa.array(keep))
+
+    return run
 
 
 @contextmanager
@@ -113,27 +125,33 @@ class Pipeline:
         chunk of a doc sits in one bucket, and compaction, per-doc merges
         and the fused promote read the clustering from the scan and need no
         exchange. One bucket per core of the writing session, so each
-        Python stage over the table runs one wave of whole-bucket tasks: a
-        reused Python worker pays ~0.2 s per task (pyspark 4.1.2, 4-core
-        host), more than a sub-core bucket's share of the work."""
+        Python stage over the table runs one wave of whole-bucket tasks:
+        every Python task has a fixed start-up cost (README "Scale design
+        notes"), which a sub-core bucket's share of the work would not
+        repay."""
         return ("doc_id", self.spark.sparkContext.defaultParallelism)
 
     # --- stage 1: ingest+flush ------------------------------------------
     @_described
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
                partitions: int | None = None, append: bool = False) -> DataFrame:
-        chunks = flush(tokens_df, seed, partitions)
-        chunks = with_p_day(chunks, "window_start")
-        if append and self.warehouse.exists("chunks_tier0"):
+        """Flush ``tokens_df`` into the chunk table: the flush tasks write
+        their chunks to parquet themselves (``Warehouse.kernel_writer``),
+        as a new doc-bucketed snapshot, or with ``append`` as a segment."""
+        wh = self.warehouse
+        src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
+        kern = functools.partial(flush_kernel_batches, seed=seed)
+        if append and wh.exists("chunks_tier0"):
             # manifest-add only: the existing snapshot is untouched and the
             # next promotion MERGEs just the appended docs' windows
-            self.warehouse.append_segment(chunks, "chunks_tier0",
-                                          partition_by=("p_day",), op="append")
+            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW)
+            wh.append_segment(files.frame(src, kern), "chunks_tier0",
+                              partition_by=("p_day",), op="append", files=files)
         else:
-            self.warehouse.write(chunks, "chunks_tier0", partition_by=("p_day",),
-                                 watermark_us=None, op="ingest",
-                                 bucket_by=self._bucket_by())
-        return self.warehouse.read(self.spark, "chunks_tier0")
+            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by())
+            wh.write(files.frame(src, kern), "chunks_tier0", partition_by=("p_day",),
+                     watermark_us=None, op="ingest", bucket_by=files.bucket_by, files=files)
+        return wh.read(self.spark, "chunks_tier0")
 
     # --- stage 2: promotion with checkpoint ------------------------------
     @_described
@@ -191,9 +209,9 @@ class Pipeline:
             and not os.environ.get("SPARK_GRAFT_NO_FUSED_PROMOTE")
             and all(wh.watermark(spec.name) is None for spec in self.tiers)
         ):
-            whole_docs = wh.bucket_column(self.spark, "chunks_tier0") == "doc_id"
+            bucketed = wh.bucket_column(self.spark, "chunks_tier0") == "doc_id"
             return self._promote_all_fused(chunks, data_max, up_to_us, collect_stats,
-                                           whole_docs)
+                                           bucketed)
 
         summary: list[dict] = []
         prev_df = None
@@ -263,23 +281,23 @@ class Pipeline:
 
     def _promote_all_fused(self, chunks: DataFrame, data_max: int,
                            up_to_us: int | None, collect_stats: bool,
-                           whole_docs: bool) -> list[dict]:
-        """All-tiers-fresh promotion from ONE decode pass and ONE write.
+                           bucketed: bool) -> list[dict]:
+        """All-tiers-fresh promotion from ONE decode pass, in ONE job.
 
         The per-tier cascade costs a write + read-back per tier (a fixed
         ~0.5 s/job wall that does NOT shrink with cores — the dominant
-        non-scaling component measured in BENCH.md). Here the fused
-        ``rollup_tiers`` kernel decodes every chunk once and emits every
-        tier's rows together; one write lands them partitioned by
-        ``(tier, p_day)`` and ``Warehouse.write_slices`` renames each
-        tier's partition dir into that tier table's snapshot (filesystem
-        moves + per-table manifest swaps, no extra jobs).
+        non-scaling component measured in BENCH.md). Here every chunk of a
+        doc reaches one task, sorted by doc, and the fused rollup kernel
+        decodes every chunk once, merges each doc's chunks itself and emits
+        every tier's final rows together; its tasks write them to parquet
+        per ``(tier, p_day)`` and ``Warehouse.write_slices`` moves each
+        tier's files into that tier table's snapshot (filesystem moves +
+        per-table manifest swaps, no extra jobs).
 
-        ``whole_docs``: the chunk table reads as one snapshot bucketed by
-        doc_id, so with whole-bucket tasks every chunk of a doc reaches one
-        task and the kernel merges a doc's chunks itself — scan, local sort,
-        kernel and write in ONE job, no exchange. Otherwise the partials
-        go through ``_finalize``'s shuffle (a second job)."""
+        ``bucketed``: the chunk table reads as one snapshot bucketed by
+        doc_id, so whole-bucket tasks already hold whole docs — scan, local
+        sort, kernel and write with no exchange. Otherwise the chunks are
+        first hash-partitioned by doc_id (one shuffle, same plan above)."""
         wh = self.warehouse
         completes: list[int] = []
         for spec in self.tiers:
@@ -289,22 +307,18 @@ class Pipeline:
                 completes.append(
                     (min(up_to_us, data_max) // spec.window_us) * spec.window_us
                 )
-        # per-tier horizon applied inside the one fused frame
-        horizon = F.when(F.col("tier") == 0, F.lit(int(completes[0])))
-        for t in range(1, len(self.tiers)):
-            horizon = horizon.when(F.col("tier") == t, F.lit(int(completes[t])))
-        fused = rollup_tiers(
-            chunks.filter(F.col("tier") == 0),
-            [spec.window_us for spec in self.tiers],
-            whole_docs=whole_docs,
-        ).filter(F.col("window_start") < horizon)
-        with _session_confs(self.spark, ONE_JOB_PROMOTE if whole_docs else {}):
+        src = chunks.filter(F.col("tier") == 0)
+        if not bucketed:
+            src = src.repartition("doc_id")
+        src, kern = whole_doc_rollup(src, [spec.window_us for spec in self.tiers])
+        tables = {t: spec.name for t, spec in enumerate(self.tiers)}
+        files = wh.kernel_writer(list(tables.values()), TIER_PARTIAL_ARROW, slice_col="tier")
+        with _session_confs(self.spark, ONE_JOB_PROMOTE if bucketed else {}):
             wh.write_slices(
-                with_p_day(fused), "tier",
-                {t: spec.name for t, spec in enumerate(self.tiers)},
+                files.frame(src, _below_horizons(kern, completes)), "tier", tables,
                 partition_by=("p_day",),
                 watermarks={t: int(c) for t, c in enumerate(completes)},
-                op="promote:full-fused",
+                op="promote:full-fused", files=files,
             )
         summary = []
         for t, spec in enumerate(self.tiers):

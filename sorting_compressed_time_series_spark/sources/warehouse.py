@@ -4,7 +4,10 @@ are designed so swapping `Warehouse` for an Iceberg catalog is a one-file
 change: same table names, same partition columns, same snapshot semantics).
 
 Commit protocol (atomic, resumable):
-- writers land parquet under ``<table>/snap-<n>/`` (Spark writes + _SUCCESS)
+- writers land parquet under ``<table>/snap-<n>/``: a Python kernel's tasks
+  write their own files (``KernelWriter``) under ``_staging/`` and the
+  driver moves the files the finished tasks reported; a relational frame
+  goes through Spark's writer
 - ``_manifest.json`` names the ONE live snapshot dir plus watermark and
   lineage entries (each with the commit's rows, bytes, data files and
   write wall time, read from parquet footers); readers only ever read the
@@ -28,10 +31,201 @@ import json
 import os
 import shutil
 import time
+import uuid
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field
+
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 US_PER_DAY = 86_400_000_000
+# parquet row groups of ~4 MB keep blob-bearing snapshots SPLITTABLE: with
+# the 128 MB default, a table written from k tasks caps every later scan at
+# k tasks (one row group per file) — at high parallelism that is one
+# unbalanced task wave. Small row groups cost ~nothing on stat/partial
+# tables (they are smaller than one group anyway) and let decode scans
+# split chunk files.
+ROW_GROUP_BYTES = 4 << 20
+# what a kernel's tasks return instead of its rows: one row per file written
+FILES_SCHEMA = "slice int, p_day bigint, bucket int, path string, rows bigint"
+_BUCKET = "_bucket"  # the input column carrying Spark's bucket id
+
+
+def p_day_of(window_start: np.ndarray) -> np.ndarray:
+    """``with_p_day`` in numpy: the same double division and truncating
+    cast, so a kernel's files land in the partitions Spark would pick."""
+    return (window_start.astype(np.float64) / US_PER_DAY).astype(np.int64)
+
+
+Kernel = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+
+@dataclass(frozen=True)
+class KernelWriter:
+    """The one parquet writer of kernel output: wraps a ``mapInArrow``
+    kernel so that each task writes the kernel's rows itself, with pyarrow,
+    and returns one ``FILES_SCHEMA`` row per file instead of the rows.
+
+    Files land in ``<staging>/attempt-<taskAttemptId>/[<slice_col>=<v>/]
+    p_day=<d>/part-<partition>-<uuid>[_<bucket>].c000.zstd.parquet``, where
+    ``p_day`` comes from the rows' ``window_start`` and ``<v>`` from their
+    ``slice_col`` column (dropped from the file). With ``bucket_by=(col,
+    n)`` the kernel's input carries Spark's bucket id of ``col`` and each
+    file gets Spark's ``_<bucket:05d>`` suffix, so a catalog table
+    ``CLUSTERED BY (col) INTO n BUCKETS`` reads the files as buckets. The
+    file schema is ``schema``: zstd level 3, row groups of ~4 MB, min/max
+    statistics on every non-binary column, dictionary pages on none of the
+    binary columns (and on no column of a sliced write)."""
+
+    staging: str
+    schema: pa.Schema
+    slice_col: str | None = None
+    bucket_by: tuple[str, int] | None = None
+
+    def frame(self, src: DataFrame, kern: Kernel) -> DataFrame:
+        """``src`` → ``kern`` → files: the frame ``Warehouse.write``,
+        ``write_slices`` and ``append_segment`` commit. A bucketed write
+        runs the kernel once per input batch and needs one output row per
+        input row, in order (the flush kernel's shape)."""
+        if self.bucket_by is not None:
+            col, n = self.bucket_by
+            # Spark's bucketed write assigns pmod(murmur3(col), n): the same
+            # expression, so the files' suffixes agree with Spark's own
+            src = src.withColumn(_BUCKET, F.pmod(F.hash(col), F.lit(n)))
+        return src.mapInArrow(self.task(kern), FILES_SCHEMA)
+
+    def spark_schema(self):
+        """The table schema for the manifest: the file columns, then
+        ``p_day``, as Spark reads them back."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        return StructType(from_arrow_schema(self.schema).fields
+                          + [StructField("p_day", LongType(), True)])
+
+    def task(self, kern: Kernel) -> Kernel:
+        """What each task runs: ``kern`` over the task's batches, its rows
+        written to parquet; yields one ``FILES_SCHEMA`` row per file."""
+
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            attempt, part = ((ctx.taskAttemptId(), ctx.partitionId()) if ctx
+                             else (uuid.uuid4().hex, 0))
+            files = _TaskFiles(self, os.path.join(self.staging, f"attempt-{attempt}"), part)
+            if self.bucket_by is None:
+                for out in kern(batches):
+                    files.add(out, None)
+            else:
+                for batch in batches:
+                    if batch.num_rows == 0:
+                        continue
+                    bucket = batch.column(_BUCKET).to_numpy(zero_copy_only=False)
+                    for out in kern(iter([batch.drop_columns([_BUCKET])])):
+                        if out.num_rows != len(bucket):
+                            raise ValueError("a bucketed kernel write needs one output "
+                                             "row per input row")
+                        files.add(out, bucket)
+            yield from files.close()
+
+        return run
+
+
+@dataclass
+class _OpenFile:
+    path: str
+    writer: object = None  # pq.ParquetWriter, opened at the first row group
+    buffered: list[pa.RecordBatch] = field(default_factory=list)
+    nbytes: int = 0  # of the buffered batches
+    rows: int = 0  # written and buffered
+
+
+class _TaskFiles:
+    """The files of one task, one per (slice, p_day, bucket): batches are
+    buffered per file and written as ~4 MB row groups."""
+
+    def __init__(self, spec: KernelWriter, attempt_dir: str, part: int):
+        self.spec, self.dir = spec, attempt_dir
+        self.prefix = f"part-{part:05d}-{uuid.uuid4()}"
+        self.files: dict[tuple[int, int, int], _OpenFile] = {}
+        plain = [f.name for f in spec.schema if not pa.types.is_binary(f.type)]
+        self.dictionary = plain if spec.slice_col is None else False
+        self.statistics = plain
+
+    def add(self, batch: pa.RecordBatch, bucket: np.ndarray | None) -> None:
+        n = batch.num_rows
+        if n == 0:
+            return
+        spec = self.spec
+        keys = np.zeros((3, n), dtype=np.int64)  # slice, p_day, bucket
+        if spec.slice_col is not None:
+            keys[0] = batch.column(spec.slice_col).to_numpy(zero_copy_only=False)
+        keys[1] = p_day_of(batch.column("window_start").to_numpy(zero_copy_only=False))
+        if bucket is not None:
+            keys[2] = bucket
+        rows = batch.select(spec.schema.names)
+        if not rows.schema.equals(spec.schema):
+            rows = rows.cast(spec.schema)
+        if (keys == keys[:, :1]).all():
+            self._buffer(tuple(keys[:, 0]), rows)
+            return
+        order = np.lexsort(keys[::-1])
+        keys, rows = keys[:, order], rows.take(pa.array(order))
+        starts = np.concatenate(
+            [[0], np.flatnonzero((keys[:, 1:] != keys[:, :-1]).any(axis=0)) + 1, [n]])
+        for s, e in zip(starts[:-1], starts[1:]):
+            self._buffer(tuple(keys[:, s]), rows.slice(s, e - s))
+
+    def _buffer(self, key: tuple[int, int, int], rows: pa.RecordBatch) -> None:
+        f = self.files.get(key)
+        if f is None:
+            f = self.files[key] = _OpenFile(self._path(*key))
+        f.buffered.append(rows)
+        f.nbytes += rows.nbytes
+        f.rows += rows.num_rows
+        if f.nbytes >= ROW_GROUP_BYTES:
+            self._write(f)
+
+    def _path(self, slice_v: int, p_day: int, bucket: int) -> str:
+        d = self.dir
+        if self.spec.slice_col is not None:
+            d = os.path.join(d, f"{self.spec.slice_col}={slice_v}")
+        name = self.prefix + (f"_{bucket:05d}" if self.spec.bucket_by is not None else "")
+        return os.path.join(d, f"p_day={p_day}", name + ".c000.zstd.parquet")
+
+    def _write(self, f: _OpenFile) -> None:
+        import pyarrow.parquet as pq
+
+        if not f.buffered:
+            return
+        if f.writer is None:
+            os.makedirs(os.path.dirname(f.path), exist_ok=True)
+            f.writer = pq.ParquetWriter(
+                f.path, self.spec.schema, compression="zstd", compression_level=3,
+                use_dictionary=self.dictionary, write_statistics=self.statistics)
+        table = pa.Table.from_batches(f.buffered)
+        f.writer.write_table(table, row_group_size=max(
+            1, table.num_rows * ROW_GROUP_BYTES // max(f.nbytes, 1)))
+        f.buffered, f.nbytes = [], 0
+
+    def close(self) -> Iterator[pa.RecordBatch]:
+        """Write what is buffered, close every file, and describe them."""
+        spec, out = self.spec, []
+        for (slice_v, p_day, bucket), f in self.files.items():
+            self._write(f)
+            f.writer.close()
+            out.append((slice_v if spec.slice_col is not None else None, p_day,
+                        bucket if spec.bucket_by is not None else None, f.path, f.rows))
+        if out:
+            cols = list(zip(*out))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
+                 pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
+                 pa.array(cols[4], pa.int64())],
+                names=["slice", "p_day", "bucket", "path", "rows"])
 
 
 class Warehouse:
@@ -98,125 +292,140 @@ class Warehouse:
         return "wh_" + "".join(c if c.isalnum() else "_" for c in
                                os.path.abspath(os.path.join(self.root, table, snapshot)))
 
+    def kernel_writer(self, tables: str | list[str], schema: pa.Schema, *,
+                      slice_col: str | None = None,
+                      bucket_by: tuple[str, int] | None = None) -> KernelWriter:
+        """The writer whose tasks stage the next commit of ``tables`` (one
+        table; for ``write_slices`` one per slice) as files of ``schema``,
+        under ``_staging/<table>.v<next version>[-…]``."""
+        names = [tables] if isinstance(tables, str) else list(tables)
+        commit = "-".join(f"{t}.v{self.manifest(t)['version'] + 1}" for t in names)
+        return KernelWriter(os.path.join(os.path.abspath(self.root), "_staging", commit),
+                            schema, slice_col, bucket_by)
+
+    @staticmethod
+    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> None:
+        """Run a kernel's write job and move the files its finished tasks
+        reported into ``dirs[slice]`` (the key is None without slices).
+        A failed or speculative attempt's files are never reported, so they
+        are never committed. Each dir is cleared first: a crash before the
+        manifest swap leaves an orphan dir that the rerun replaces."""
+        shutil.rmtree(files.staging, ignore_errors=True)  # a crashed run's attempts
+        rows = df.collect()
+        for d in dirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+            os.makedirs(d)
+        for r in rows:
+            part = os.path.join(dirs[r.slice], f"p_day={r.p_day}")
+            os.makedirs(part, exist_ok=True)
+            os.replace(r.path, os.path.join(part, os.path.basename(r.path)))
+        shutil.rmtree(files.staging, ignore_errors=True)  # what no finished task reported
+
     def write(self, df: DataFrame, table: str, *, partition_by: tuple[str, ...] = (),
               watermark_us: int | None = None, op: str = "overwrite",
-              bucket_by: tuple[str, int] | None = None) -> None:
-        """Commit a new snapshot. With ``bucket_by=(col, n)`` the snapshot is
-        written as a Spark BUCKETED table (hash-clustered + sorted by ``col``
-        within each of ``n`` buckets — the stand-in for Iceberg
-        ``bucket(col, n)``): any groupBy/join on ``col`` then reads the
-        clustering from the scan and needs NO exchange (compaction and the
-        fused promote become shuffle-free, see operators/compaction.py and
-        plans/pipeline.py). ``read`` registers the snapshot in the catalog
-        of any later session too."""
+              bucket_by: tuple[str, int] | None = None,
+              files: KernelWriter | None = None) -> None:
+        """Commit a new snapshot. ``df`` is either a relational frame that
+        Spark's writer lands, or, with ``files``, the frame of a kernel
+        that writes its own rows (``KernelWriter.frame``). With
+        ``bucket_by=(col, n)`` the snapshot is a BUCKETED table
+        (hash-clustered by ``col`` into ``n`` buckets — the stand-in for
+        Iceberg ``bucket(col, n)``): any groupBy/join on ``col`` then reads
+        the clustering from the scan and needs NO exchange (compaction and
+        the fused promote become shuffle-free, see operators/compaction.py
+        and plans/pipeline.py). ``read`` registers the snapshot in the
+        catalog of any session."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         snap = f"snap-{m['version'] + 1}"
         path = os.path.join(self.root, table, snap)
-        # 4 MB parquet row groups keep blob-bearing snapshots SPLITTABLE:
-        # with the 128 MB default, a table written from k tasks caps every
-        # later scan at k tasks (one row group per file) — at high
-        # parallelism that is one unbalanced task wave. Small row groups
-        # cost ~nothing on stat/partial tables (they are smaller than one
-        # group anyway) and let decode scans split chunk files.
-        if bucket_by is not None:
-            col, n = bucket_by
-            name = self._catalog_name(table, snap)
-            spark = df.sparkSession
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            if m["snapshot"]:  # the entry of the snapshot this one replaces
-                spark.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table, m['snapshot'])}")
-            w = df.write.mode("overwrite").option("path", path)
-            w = w.option("parquet.block.size", 4 << 20)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.bucketBy(n, col).sortBy(col).format("parquet").saveAsTable(name)
-            bucket_spec = [col, n]
+        if bucket_by is not None:  # a crashed attempt's entry
+            df.sparkSession.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table, snap)}")
+        if files is not None:
+            assert files.bucket_by == bucket_by and tuple(partition_by) == ("p_day",)
+            self._land(df, files, {None: path})
+            schema = files.spark_schema()
         else:
-            w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
+            w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
             if partition_by:
                 w = w.partitionBy(*partition_by)
-            w.parquet(path)
-            bucket_spec = None
+            if bucket_by is not None:
+                col, n = bucket_by
+                w.option("path", path).bucketBy(n, col).format("parquet").saveAsTable(
+                    self._catalog_name(table, snap))
+            else:
+                w.parquet(path)
+            schema = df.schema
+        bucket_spec = list(bucket_by) if bucket_by is not None else None
         self._commit(table, snap, watermark_us,
                      {"op": op, "partition_by": partition_by,
                       "bucket_by": bucket_spec,
                       "wall_s": time.perf_counter() - t0},
-                     schema_json=df.schema.json(), bucket_spec=bucket_spec)
+                     schema_json=schema.json(), bucket_spec=bucket_spec)
+        if bucket_by is not None and m["snapshot"]:
+            # the entry of the replaced snapshot, dropped only now: ``df``
+            # may read through it (a partitioned catalog table lists its
+            # partitions from the catalog while the job runs)
+            df.sparkSession.sql(
+                f"DROP TABLE IF EXISTS {self._catalog_name(table, m['snapshot'])}")
 
     def write_slices(self, df: DataFrame, slice_col: str,
                      tables: dict[int, str], *,
                      partition_by: tuple[str, ...] = (),
                      watermarks: dict[int, int] | None = None,
-                     op: str = "promote") -> None:
-        """ONE Spark write job commits MANY tables.
+                     op: str = "promote", files: KernelWriter) -> None:
+        """ONE Spark job commits MANY tables.
 
-        ``df`` is written once, partitioned by ``(slice_col, *partition_by)``,
-        into a staging dir; each ``slice_col=<v>`` partition directory is
-        then RENAMED into table ``tables[v]``'s next snapshot and committed
-        with that table's own manifest + watermark. Pure filesystem moves
-        plus per-table atomic manifest swaps — no extra jobs, no read-backs
-        (the Iceberg analogue: one data write, N table commits). A crash
-        between the per-table commits leaves earlier tables live and later
-        ones unpromoted; the deterministic per-tier promotion path finishes
-        them on rerun. A slice with zero rows commits a hollow snapshot
-        that reads back as an empty frame via the persisted schema."""
-        assert slice_col not in partition_by
-        staging = os.path.join(
-            self.root, "_staging",
-            "slices-" + "-".join(
-                f"{tbl}.v{self.manifest(tbl)['version'] + 1}"
-                for tbl in tables.values()),
-        )
-        shutil.rmtree(staging, ignore_errors=True)
+        ``df`` is the frame of a kernel that writes its own rows
+        (``files.frame``, sliced by ``slice_col``): each task writes one
+        file per ``(slice_col, p_day)`` it meets, and the files of slice
+        ``v`` are then moved into table ``tables[v]``'s next snapshot and
+        committed with that table's own manifest + watermark. Filesystem
+        moves plus per-table atomic manifest swaps — no extra jobs, no
+        read-backs (the Iceberg analogue: one data write, N table commits).
+        A crash between the per-table commits leaves earlier tables live
+        and later ones unpromoted; the deterministic per-tier promotion
+        path finishes them on rerun. A slice with zero rows commits a
+        hollow snapshot that reads back as an empty frame via the
+        persisted schema."""
+        assert files.slice_col == slice_col and tuple(partition_by) == ("p_day",)
         t0 = time.perf_counter()
-        w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
-        # no dictionary pages: the slices are rollup rows, mostly distinct
-        # numbers, for which parquet-mr builds a dictionary per column chunk
-        # only to fall back to plain pages. Skipping it cut the fused
-        # promote's write ~0.1 s of ~1 s for +1.2% bytes (zstd still
-        # compresses the repeated doc ids; 4-core host, bulk_load shape).
-        w = w.option("parquet.enable.dictionary", "false")
-        w = w.partitionBy(slice_col, *partition_by)
-        w.parquet(staging)
+        snaps = {val: f"snap-{self.manifest(tbl)['version'] + 1}" for val, tbl in tables.items()}
+        self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
+                               for val, snap in snaps.items()})
         wall_s = time.perf_counter() - t0  # the one write all tables share
-        slice_schema = df.drop(slice_col).schema.json()
+        schema_json = files.spark_schema().json()
         for val, tbl in tables.items():
-            src = os.path.join(staging, f"{slice_col}={val}")
-            snap = f"snap-{self.manifest(tbl)['version'] + 1}"
-            dst = os.path.join(self.root, tbl, snap)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.isdir(src):
-                os.rename(src, dst)
-            else:
-                os.makedirs(dst, exist_ok=True)
-            wm = (watermarks or {}).get(val)
-            self._commit(tbl, snap, wm,
+            self._commit(tbl, snaps[val], (watermarks or {}).get(val),
                          {"op": op, "partition_by": tuple(partition_by),
                           "bucket_by": None, "wall_s": wall_s},
-                         schema_json=slice_schema, bucket_spec=None)
-        shutil.rmtree(staging, ignore_errors=True)
+                         schema_json=schema_json, bucket_spec=None)
 
     def append_segment(self, df: DataFrame, table: str, *,
-                       partition_by: tuple[str, ...] = (), op: str = "append") -> str:
+                       partition_by: tuple[str, ...] = (), op: str = "append",
+                       files: KernelWriter | None = None) -> str:
         """Append-only commit: land the new rows as an extra SEGMENT dir and
         add it to the manifest — the existing snapshot is untouched (no
         table rewrite; Iceberg's append = manifest-add is exactly this).
-        The segment is also recorded under ``pending_appends`` so the next
-        promotion can MERGE just the affected keys instead of recomputing
-        every tier. A crash before the manifest swap leaves an orphan dir
-        the manifest never names; the rerun overwrites it."""
+        ``df`` and ``files`` as in ``write``. The segment is also recorded
+        under ``pending_appends`` so the next promotion can MERGE just the
+        affected keys instead of recomputing every tier. A crash before the
+        manifest swap leaves an orphan dir the manifest never names; the
+        rerun overwrites it."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no base snapshot to append to")
         seg = f"seg-{m['version'] + 1}"
         path = os.path.join(self.root, table, seg)
-        w = df.write.mode("overwrite").option("parquet.block.size", 4 << 20)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+        if files is not None:
+            assert files.bucket_by is None and tuple(partition_by) == ("p_day",)
+            self._land(df, files, {None: path})
+        else:
+            w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(path)
         m["segments"] = m.get("segments", []) + [seg]
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
@@ -306,7 +515,7 @@ class Warehouse:
         location = os.path.abspath(os.path.join(self.root, table, m["snapshot"]))
         ddl = (f"CREATE TABLE {name} ({cols}) USING parquet"
                + (f" PARTITIONED BY ({', '.join(parts)})" if parts else "")
-               + f" CLUSTERED BY ({col}) SORTED BY ({col}) INTO {n} BUCKETS"
+               + f" CLUSTERED BY ({col}) INTO {n} BUCKETS"
                + " LOCATION '" + location.replace("\\", "\\\\").replace("'", "\\'") + "'")
         try:
             spark.sql(ddl)

@@ -1,0 +1,345 @@
+"""Kernel-written parquet: the flush and the fused rollup tasks write their
+own files (``Warehouse.kernel_writer``) and return one row per file.
+
+- parquet parity: file schema = manifest schema without ``p_day``, zstd,
+  ~4 MB row groups, no dictionary pages on blobs or tier slices, min/max
+  statistics where ``footer_stats`` reads them;
+- ingest is one Spark job with no Exchange and no Sort before the writer;
+- bucket semantics: every file's ``_<bucket>`` suffix is the bucket Spark's
+  own ``bucketBy`` write assigns, and the snapshot reads as buckets
+  (groupBy and compaction plan no Exchange, same rows as a plain read);
+- a crash between the data write and the manifest swap keeps the previous
+  snapshot live, and a rerun yields the tables of an uninterrupted run;
+- a stray file under a staging attempt dir is never committed.
+"""
+
+import contextlib
+import io
+import os
+import re
+import uuid
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from pyspark.sql import functions as F
+
+from sorting_compressed_time_series_spark.operators.compaction import compact_chunks
+from sorting_compressed_time_series_spark.operators.ingest import (
+    CHUNK_ARROW,
+    flush,
+    flush_kernel_batches,
+)
+from sorting_compressed_time_series_spark.operators.rollup import TIER_PARTIAL_ARROW
+from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
+from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
+from sorting_compressed_time_series_spark.sources.warehouse import (
+    ROW_GROUP_BYTES,
+    US_PER_DAY,
+    KernelWriter,
+    Warehouse,
+    with_p_day,
+)
+
+from perfbench.oracle import TIER_COLS, TIER_WINDOWS, read_table
+
+BUCKET_SUFFIX = re.compile(r"_(\d{5})\.c000\.zstd\.parquet$")
+
+
+def plan_of(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+def _files(root: str) -> list[str]:
+    return sorted(os.path.join(dp, f) for dp, _, fs in os.walk(root)
+                  for f in fs if f.endswith(".parquet"))
+
+
+def _jobs_of(spark, group: str, fn, *args):
+    """(result, number of Spark jobs) of ``fn(*args)`` run under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the tracker is fed asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _chunks_of(root: str, table: str = "chunks_tier0") -> pd.DataFrame:
+    """The table's chunk rows, without the per-batch timing column."""
+    t = read_table(root, table).drop(columns=["encode_ns"])
+    return t.sort_values(["doc_id", "min_ts", "count"]).reset_index(drop=True)
+
+
+def _tiers_of(root: str) -> dict[str, pd.DataFrame]:
+    key = ["doc_id", "window_start"]
+    return {name: read_table(root, name)[TIER_COLS].sort_values(key).reset_index(drop=True)
+            for name in TIER_WINDOWS}
+
+
+# ---------------------------------------------------------------------------
+# the writer, without Spark
+# ---------------------------------------------------------------------------
+
+def _chunk_batch(rng, n: int, blob_bytes: int, days: int) -> pa.RecordBatch:
+    cols = {}
+    for f in CHUNK_ARROW:
+        if pa.types.is_binary(f.type):
+            cols[f.name] = pa.array([rng.bytes(blob_bytes) for _ in range(n)], pa.binary())
+        elif pa.types.is_string(f.type):
+            cols[f.name] = pa.array([f"doc{i:010d}" if f.name == "doc_id"
+                                     else ("web", "code")[i % 2] for i in range(n)])
+        elif pa.types.is_boolean(f.type):
+            cols[f.name] = pa.array(np.arange(n) % 3 == 0)
+        else:
+            cols[f.name] = pa.array(rng.integers(0, 1000, n), f.type)
+    cols["tier"] = pa.array(np.zeros(n, np.int32))
+    cols["window_start"] = pa.array(
+        1_700_000_000_000_000 + (np.arange(n) % days) * US_PER_DAY + 3_600_000_000)
+    return pa.RecordBatch.from_pydict(cols, schema=CHUNK_ARROW)
+
+
+def test_writer_parquet_parity(tmp_path):
+    """Chunk files: the kernel's schema, zstd, row groups of ~4 MB, no
+    dictionary pages on the blob columns, min/max statistics on the rest;
+    every row lands in the p_day partition of its window_start."""
+    rng = np.random.default_rng(7)
+    batches = [_chunk_batch(rng, 1500, 2048, days=2) for _ in range(2)]  # ~12 MB of blobs
+    writer = KernelWriter(str(tmp_path / "staging"), CHUNK_ARROW)
+    out = pa.Table.from_batches(list(writer.task(lambda it: it)(iter(batches)))).to_pylist()
+    assert sum(r["rows"] for r in out) == 3000
+    assert sorted(r["p_day"] for r in out) == sorted(
+        {int(w) // US_PER_DAY for b in batches for w in b.column("window_start").to_numpy()})
+    for r in out:
+        assert r["slice"] is None and r["bucket"] is None
+        assert f"{os.sep}p_day={r['p_day']}{os.sep}" in r["path"]
+        assert r["path"].endswith(".c000.zstd.parquet") and not BUCKET_SUFFIX.search(r["path"])
+        assert pq.read_schema(r["path"]).remove_metadata().equals(CHUNK_ARROW)
+        md = pq.read_metadata(r["path"])
+        assert md.num_rows == r["rows"] and md.num_row_groups >= 2
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            assert rg.total_byte_size <= ROW_GROUP_BYTES * 1.1
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                binary = pa.types.is_binary(CHUNK_ARROW.field(col.path_in_schema).type)
+                assert col.compression == "ZSTD"
+                if binary or col.path_in_schema in ("doc_id", "source"):
+                    assert col.has_dictionary_page != binary, col.path_in_schema
+                st = col.statistics
+                assert (st is not None and st.has_min_max) != binary, col.path_in_schema
+        table = pq.read_table(r["path"])
+        assert set(table.column("window_start").to_numpy() // US_PER_DAY) == {r["p_day"]}
+
+
+def test_sliced_writer_has_no_dictionary_pages(tmp_path):
+    """Tier slices: one file per (slice, p_day) under ``tier=<v>``, the
+    slice column only in the directory name, no dictionary pages."""
+    n = 400
+    rows = {c: pa.array(np.arange(n, dtype=np.int64)) for c in TIER_PARTIAL_ARROW.names}
+    rows["doc_id"] = pa.array([f"doc{i % 7}" for i in range(n)])
+    rows["source"] = pa.array(["web"] * n)
+    rows["window_start"] = pa.array(1_700_000_000_000_000 + (np.arange(n) % 2) * US_PER_DAY)
+    batch = pa.RecordBatch.from_pydict(
+        {"tier": pa.array(np.arange(n, dtype=np.int32) % 3), **rows})
+    writer = KernelWriter(str(tmp_path / "staging"), TIER_PARTIAL_ARROW, slice_col="tier")
+    out = pa.Table.from_batches(list(writer.task(lambda it: it)(iter([batch])))).to_pylist()
+    assert sorted((r["slice"], r["p_day"]) for r in out) == [
+        (t, d) for t in range(3) for d in (19675, 19676)]
+    for r in out:
+        assert f"{os.sep}tier={r['slice']}{os.sep}p_day={r['p_day']}{os.sep}" in r["path"]
+        assert pq.read_schema(r["path"]).remove_metadata().equals(TIER_PARTIAL_ARROW)
+        md = pq.read_metadata(r["path"])
+        assert not any(md.row_group(0).column(j).has_dictionary_page for j in range(md.num_columns))
+        assert set(pq.read_table(r["path"]).column("cnt").to_numpy() % 3) == {r["slice"]}
+
+
+# ---------------------------------------------------------------------------
+# ingest and bucket semantics
+# ---------------------------------------------------------------------------
+
+def _doc_buckets(files: list[str]) -> dict[str, int]:
+    """doc_id -> bucket of the files holding it (each doc in one bucket)."""
+    out: dict[str, int] = {}
+    for path in files:
+        bucket = int(BUCKET_SUFFIX.search(path).group(1))
+        for doc in set(pq.read_table(path, columns=["doc_id"]).column("doc_id").to_pylist()):
+            assert out.setdefault(doc, bucket) == bucket, doc
+    return out
+
+
+def test_ingest_is_one_exchange_free_job_with_spark_buckets(spark, tmp_path, monkeypatch):
+    """Ingest runs ONE job whose plan has no Exchange and no Sort before
+    the writing kernel; its files carry Spark's own bucket ids, and the
+    manifest schema is the one Spark's writer recorded for the same flush."""
+    tokens = generate_tokens_df(spark, 60)
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    plans = []
+    orig = Warehouse.write
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write", spy)
+    _, jobs = _jobs_of(spark, f"ingest-{id(p)}", p.ingest, tokens)
+    monkeypatch.setattr(Warehouse, "write", orig)
+    assert jobs == 1
+    assert len(plans) == 1
+    assert "Exchange" not in plans[0] and "Sort" not in plans[0], plans[0]
+    assert "MapInArrow" in plans[0], plans[0]
+
+    wh = p.warehouse
+    m = wh.manifest("chunks_tier0")
+    chunks = with_p_day(flush(tokens), "window_start")
+    assert m["schema"] == chunks.schema.json()
+    snap = os.path.join(wh.root, "chunks_tier0", m["snapshot"])
+    ours = _files(snap)
+    assert all(pq.read_schema(f).remove_metadata().equals(CHUNK_ARROW) for f in ours)
+
+    col, n = p._bucket_by()
+    assert m["bucket_spec"] == [col, n]
+    name = f"spark_bucketed_{uuid.uuid4().hex}"
+    (chunks.write.option("path", str(tmp_path / "spark")).partitionBy("p_day")
+     .bucketBy(n, col).format("parquet").saveAsTable(name))
+    spark.sql(f"DROP TABLE {name}")
+    theirs = _doc_buckets(_files(str(tmp_path / "spark")))
+    assert _doc_buckets(ours) == theirs
+    assert len(set(theirs.values())) == n
+
+
+@pytest.fixture(scope="module")
+def redelivered(spark, tmp_path_factory):
+    """A kernel-written chunk snapshot in which docs 0-19 have two chunks
+    (delivered twice in one ingest)."""
+    tokens = generate_tokens_df(spark, 60).unionByName(generate_tokens_df(spark, 20))
+    p = Pipeline(spark, Warehouse(str(tmp_path_factory.mktemp("wh_redelivered"))))
+    p.ingest(tokens)
+    return p
+
+
+def test_kernel_written_snapshot_reads_as_buckets(spark, redelivered):
+    """A groupBy on doc_id and the compaction over ``Warehouse.read`` plan
+    no Exchange, and give the rows of a plain parquet read."""
+    wh = redelivered.warehouse
+    m = wh.manifest("chunks_tier0")
+    bucketed = wh.read(spark, "chunks_tier0")
+    plain = spark.read.parquet(os.path.join(wh.root, "chunks_tier0", m["snapshot"]))
+
+    def per_doc(df):
+        return df.groupBy("doc_id").agg(F.count("*").alias("chunks"),
+                                        F.sum("count").alias("points"))
+
+    def compacted(df):
+        return compact_chunks(df.filter("tier = 0")).drop("encode_ns")
+
+    for query in (per_doc, compacted):
+        assert "Exchange" not in plan_of(query(bucketed))
+        got, want = (query(df).toPandas().sort_values("doc_id").reset_index(drop=True)
+                     for df in (bucketed, plain))
+        pd.testing.assert_frame_equal(got, want)
+    assert per_doc(bucketed).filter("chunks = 2").count() == 20
+
+
+def test_compact_rewrites_kernel_written_snapshot(spark, tmp_path):
+    """``compact()`` over a kernel-written snapshot merges the re-delivered
+    docs and keeps the table bucketed."""
+    tokens = generate_tokens_df(spark, 60).unionByName(generate_tokens_df(spark, 20))
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(tokens)
+    points = _chunks_of(p.warehouse.root).groupby("doc_id")["count"].sum()
+    assert p.compact()["compacted_docs"] == 20
+    after = _chunks_of(p.warehouse.root)
+    assert not after.doc_id.duplicated().any()
+    pd.testing.assert_series_equal(after.groupby("doc_id")["count"].sum(), points)
+    assert p.warehouse.bucket_column(spark, "chunks_tier0") == "doc_id"
+
+
+# ---------------------------------------------------------------------------
+# a crash between the data write and the manifest swap; stray files
+# ---------------------------------------------------------------------------
+
+def test_crash_before_manifest_swap_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+    """The tasks' files are staged and moved, then ``_commit`` fails: the
+    previous chunk snapshot stays live (and no tier table appears); the
+    reruns equal an uninterrupted run."""
+    first, second = generate_tokens_df(spark, 30), generate_tokens_df(spark, 40, start=100)
+    ref = Pipeline(spark, Warehouse(str(tmp_path / "ref")))
+    ref.ingest(first)
+    ref.ingest(second)
+    ref.promote_all()
+
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    wh = p.warehouse
+    p.ingest(first)
+    live = wh.manifest("chunks_tier0")
+    before = _chunks_of(wh.root)
+    commit = Warehouse._commit
+
+    def crash(self, *args, **kwargs):
+        raise RuntimeError("crash before the manifest swap")
+
+    monkeypatch.setattr(Warehouse, "_commit", crash)
+    with pytest.raises(RuntimeError, match="manifest swap"):
+        p.ingest(second)
+    staged = os.path.join(wh.root, "chunks_tier0", f"snap-{live['version'] + 1}")
+    assert _files(staged)  # the data write happened
+    assert wh.manifest("chunks_tier0") == live
+    pd.testing.assert_frame_equal(_chunks_of(wh.root), before)
+    assert wh.read(spark, "chunks_tier0").count() == len(before)
+
+    monkeypatch.setattr(Warehouse, "_commit", commit)
+    p.ingest(second)
+    pd.testing.assert_frame_equal(_chunks_of(wh.root), _chunks_of(ref.warehouse.root))
+
+    monkeypatch.setattr(Warehouse, "_commit", crash)
+    with pytest.raises(RuntimeError, match="manifest swap"):
+        p.promote_all()
+    assert not any(wh.exists(name) for name in TIER_WINDOWS)
+    monkeypatch.setattr(Warehouse, "_commit", commit)
+    assert [e["mode"] for e in p.promote_all()] == ["full"] * 3
+    got, want = _tiers_of(wh.root), _tiers_of(ref.warehouse.root)
+    for name in TIER_WINDOWS:
+        pd.testing.assert_frame_equal(got[name], want[name])
+        assert wh.watermark(name) == ref.warehouse.watermark(name)
+    assert not os.listdir(os.path.join(wh.root, "_staging"))
+
+
+def test_stray_staged_file_is_never_committed(spark, tmp_path):
+    """Each task also leaves an unreported parquet file of valid chunk rows
+    in its attempt dir (what a failed or speculative attempt leaves): the
+    commit takes only the reported files and removes the staging dir."""
+    tokens = generate_tokens_df(spark, 40)
+    ref = Pipeline(spark, Warehouse(str(tmp_path / "ref")))
+    ref.ingest(tokens)
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    wh = p.warehouse
+    files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=p._bucket_by())
+    staging = files.staging
+
+    def flush_and_stray(batches):
+        from pyspark import TaskContext
+
+        attempt = os.path.join(staging, f"attempt-{TaskContext.get().taskAttemptId()}")
+        for out in flush_kernel_batches(batches):
+            part = os.path.join(attempt, "p_day=19675")
+            os.makedirs(part, exist_ok=True)
+            pq.write_table(pa.Table.from_batches([out]),
+                           os.path.join(part, f"part-stray-{uuid.uuid4()}_00000.c000.zstd.parquet"))
+            yield out
+
+    wh.write(files.frame(tokens, flush_and_stray), "chunks_tier0", partition_by=("p_day",),
+             op="ingest", bucket_by=files.bucket_by, files=files)
+    assert not any("stray" in os.path.basename(f) for f in _files(wh.root))
+    assert not os.path.exists(staging)
+    pd.testing.assert_frame_equal(_chunks_of(wh.root), _chunks_of(ref.warehouse.root))
+    assert wh.read(spark, "chunks_tier0").count() == 40
