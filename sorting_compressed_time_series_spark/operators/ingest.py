@@ -24,13 +24,12 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 
 from ..codecs.batched import encode_rows
 from ..codecs.chunk import CODEC_DELTA, CODEC_VARINT
-from ..sources.seriesize import doc_t0, synth_timestamps
+from ..sources.seriesize import doc_index_from_id, doc_t0, synth_timestamps
 
 CHUNK_SCHEMA = (
     "doc_id string, source string, tier int, window_start bigint, "
@@ -122,7 +121,7 @@ def flush_kernel_batches(
             continue
         doc_id = batch.column("doc_id")
         source = batch.column("source")
-        doc_index = pc.cast(pc.utf8_slice_codeunits(doc_id, 3, 99), pa.int64()).to_numpy()
+        doc_index = doc_index_from_id(doc_id)
         tok = batch.column("tokens")
         if isinstance(tok, pa.ChunkedArray):
             tok = tok.combine_chunks()
@@ -138,8 +137,8 @@ def flush_kernel_batches(
 
         # --- seriesize ------------------------------------------------
         positions = np.arange(len(flat), dtype=np.int64) - np.repeat(row_starts, counts)
-        flat_doc = np.repeat(doc_index, counts).astype(np.uint64)
-        t0 = np.repeat(doc_t0(doc_index.astype(np.uint64), seed), counts)
+        flat_doc = np.repeat(doc_index, counts)
+        t0 = np.repeat(doc_t0(doc_index, seed), counts)
         ts = synth_timestamps(flat_doc, positions, seed, t0=t0)
 
         # --- lineage: inversions in arrival order ----------------------

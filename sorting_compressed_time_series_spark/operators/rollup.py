@@ -317,10 +317,15 @@ def _multi_window_partials_kernel(windows_us: list[int]):
     return kern
 
 
-_ROLLUP_INPUT = ("doc_id", "source", "time_blob", "value_blob")
+ROLLUP_INPUT = ("doc_id", "source", "time_blob", "value_blob")
+# the order in which whole docs reach the kernel: each doc run adjacent
+DOC_ORDER = ("doc_id", "source")
 
 
-def _tiers_kernel(windows_us: list[int]):
+def tiers_kernel(windows_us: list[int]):
+    """The fused rollup kernel over ``ROLLUP_INPUT`` rows: with every chunk
+    of a doc adjacent (``DOC_ORDER``) it emits one final row per (tier,
+    doc, window)."""
     for finer, coarser in zip(windows_us, windows_us[1:]):
         if coarser % finer:
             raise ValueError(f"tier windows must nest: {coarser} is not a multiple of {finer}")
@@ -333,8 +338,8 @@ def whole_doc_rollup(chunks_df: DataFrame, windows_us: list[int]):
     within each partition, and the kernel emits one final row per (tier,
     doc, window) — ``rollup_tiers(whole_docs=True)`` is
     ``input.mapInArrow(kernel)``."""
-    kern = _tiers_kernel(windows_us)
-    return chunks_df.select(*_ROLLUP_INPUT).sortWithinPartitions("doc_id", "source"), kern
+    kern = tiers_kernel(windows_us)
+    return chunks_df.select(*ROLLUP_INPUT).sortWithinPartitions(*DOC_ORDER), kern
 
 
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
@@ -353,6 +358,6 @@ def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
     if whole_docs:
         src, kern = whole_doc_rollup(chunks_df, windows_us)
         return src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
-    kern = _tiers_kernel(windows_us)
-    partials = chunks_df.select(*_ROLLUP_INPUT).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
+    kern = tiers_kernel(windows_us)
+    partials = chunks_df.select(*ROLLUP_INPUT).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
     return _finalize(partials, extra_keys=("tier",))

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import functools
 import os
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -27,14 +26,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches
 from ..operators.retention import apply_retention
 from ..operators.rollup import (
+    DOC_ORDER,
+    ROLLUP_INPUT,
     TIER_PARTIAL_ARROW,
     WINDOW_1H_US,
     WINDOW_1M_US,
     promote,
     rollup_tier1,
+    tiers_kernel,
     whole_doc_rollup,
 )
-from ..sources.warehouse import Warehouse, with_p_day
+from ..sources.warehouse import Warehouse, bucket_reader, with_p_day
 
 
 @dataclass
@@ -54,16 +56,6 @@ DEFAULT_TIERS = [
 ]
 
 
-# SQL confs of the one-job fused promote. A bucketed scan reads each bucket
-# in ONE task only while both bucketing switches hold: by default Spark
-# plans a plain file-split scan when no operator above the scan needs the
-# bucket distribution, and a local sort does not.
-ONE_JOB_PROMOTE = {
-    "spark.sql.sources.bucketing.enabled": "true",
-    "spark.sql.sources.bucketing.autoBucketedScan.enabled": "false",
-}
-
-
 def _below_horizons(kern, horizons: list[int]):
     """``kern`` keeping only the rows whose ``window_start`` lies below
     their tier's horizon (``horizons[tier]``): the complete windows."""
@@ -78,21 +70,13 @@ def _below_horizons(kern, horizons: list[int]):
     return run
 
 
-@contextmanager
-def _session_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set SQL confs for the actions inside the block, then restore the
-    caller's values (unset ones stay unset)."""
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+def _python_worker_memory(spark: SparkSession) -> int:
+    """Bytes a Python worker may hold before Spark's own Python aggregation
+    spills (``spark.python.worker.memory``, default 512m)."""
+    from pyspark.rdd import _parse_memory
+
+    return _parse_memory(spark.sparkContext.getConf().get(
+        "spark.python.worker.memory", "512m")) << 20
 
 
 def _described(method):
@@ -122,22 +106,39 @@ class Pipeline:
     def _bucket_by(self) -> tuple[str, int]:
         """Hash-bucket spec of the chunk table (Iceberg ``bucket(doc_id, N)``
         stand-in): snapshots are written hash-clustered by doc_id, so every
-        chunk of a doc sits in one bucket, and compaction, per-doc merges
-        and the fused promote read the clustering from the scan and need no
-        exchange. One bucket per core of the writing session, so each
-        Python stage over the table runs one wave of whole-bucket tasks:
-        every Python task has a fixed start-up cost (README "Scale design
-        notes"), which a sub-core bucket's share of the work would not
-        repay."""
+        chunk of a doc sits in one bucket: compaction and per-doc merges
+        read the clustering from the bucketed scan and need no exchange,
+        and each fused-promote task reads one bucket's files itself. One
+        bucket per core of the writing session, so each Python stage over
+        the table runs one wave of whole-bucket tasks: every Python task
+        has a fixed start-up cost (README "Scale design notes"), which a
+        sub-core bucket's share of the work would not repay."""
         return ("doc_id", self.spark.sparkContext.defaultParallelism)
+
+    def _doc_buckets(self) -> dict[int, list[str]] | None:
+        """The chunk snapshot's files by doc_id bucket (``_bucket_by``), for
+        the promote's tasks to read one bucket each: ``Warehouse.
+        bucket_files``, or None when a bucket's uncompressed bytes pass
+        ``spark.python.worker.memory``."""
+        wh = self.warehouse
+        buckets = wh.bucket_files("chunks_tier0")
+        budget = _python_worker_memory(self.spark)
+        if buckets is None or any(wh.uncompressed_bytes(fs) > budget
+                                  for fs in buckets.values()):
+            return None
+        return buckets
 
     # --- stage 1: ingest+flush ------------------------------------------
     @_described
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
-               partitions: int | None = None, append: bool = False) -> DataFrame:
+               partitions: int | None = None, append: bool = False) -> dict:
         """Flush ``tokens_df`` into the chunk table: the flush tasks write
         their chunks to parquet themselves (``Warehouse.kernel_writer``),
-        as a new doc-bucketed snapshot, or with ``append`` as a segment."""
+        as a new doc-bucketed snapshot, or with ``append`` as a segment.
+        Returns the commit's lineage entry (rows, bytes, files, wall time
+        and the tasks' input/kernel/write seconds); the table is not read
+        back (``Warehouse.read`` does that, and registers a bucketed
+        snapshot in the session catalog)."""
         wh = self.warehouse
         src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
         kern = functools.partial(flush_kernel_batches, seed=seed)
@@ -151,7 +152,7 @@ class Pipeline:
             files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by())
             wh.write(files.frame(src, kern), "chunks_tier0", partition_by=("p_day",),
                      watermark_us=None, op="ingest", bucket_by=files.bucket_by, files=files)
-        return wh.read(self.spark, "chunks_tier0")
+        return wh.manifest("chunks_tier0")["lineage"][-1]
 
     # --- stage 2: promotion with checkpoint ------------------------------
     @_described
@@ -171,16 +172,24 @@ class Pipeline:
           full recompute (the reference's compaction-then-requery shape;
           per-key MERGE INTO on Iceberg).
 
+        With no watermark on any tier, no pending append and nested
+        windows, every tier is computed in ONE job (``_promote_all_fused``),
+        which reads the chunk files itself when the table is one bucketed
+        snapshot. The chunk table is read through ``Warehouse.read`` only
+        where a frame is needed: the per-tier cascade, and ``max(max_ts)``
+        when a file lacks footer statistics.
+
         Returns a per-tier summary; with ``collect_stats`` it includes
         recomputed/kept row counts (extra count jobs — tests only)."""
         wh = self.warehouse
-        chunks = wh.read(self.spark, "chunks_tier0")
+        chunks = None
         # the parquet footers answer max(max_ts) when every row is a tier-0
         # chunk; a Spark job only when a file lacks the statistics
         _, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
         if stats["tier"] == (0, 0) and stats["max_ts"] is not None:
             data_max = stats["max_ts"][1]
         else:
+            chunks = wh.read(self.spark, "chunks_tier0")
             data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
         pending = wh.pending_appends("chunks_tier0")
         dirty = None
@@ -209,10 +218,10 @@ class Pipeline:
             and not os.environ.get("SPARK_GRAFT_NO_FUSED_PROMOTE")
             and all(wh.watermark(spec.name) is None for spec in self.tiers)
         ):
-            bucketed = wh.bucket_column(self.spark, "chunks_tier0") == "doc_id"
-            return self._promote_all_fused(chunks, data_max, up_to_us, collect_stats,
-                                           bucketed)
+            return self._promote_all_fused(data_max, up_to_us, collect_stats)
 
+        if chunks is None:
+            chunks = wh.read(self.spark, "chunks_tier0")
         summary: list[dict] = []
         prev_df = None
         for i, spec in enumerate(self.tiers):
@@ -279,9 +288,8 @@ class Pipeline:
             wh.clear_pending("chunks_tier0")
         return summary
 
-    def _promote_all_fused(self, chunks: DataFrame, data_max: int,
-                           up_to_us: int | None, collect_stats: bool,
-                           bucketed: bool) -> list[dict]:
+    def _promote_all_fused(self, data_max: int, up_to_us: int | None,
+                           collect_stats: bool) -> list[dict]:
         """All-tiers-fresh promotion from ONE decode pass, in ONE job.
 
         The per-tier cascade costs a write + read-back per tier (a fixed
@@ -294,10 +302,16 @@ class Pipeline:
         tier's files into that tier table's snapshot (filesystem moves +
         per-table manifest swaps, no extra jobs).
 
-        ``bucketed``: the chunk table reads as one snapshot bucketed by
-        doc_id, so whole-bucket tasks already hold whole docs — scan, local
-        sort, kernel and write with no exchange. Otherwise the chunks are
-        first hash-partitioned by doc_id (one shuffle, same plan above)."""
+        When the chunk table is one snapshot bucketed by doc_id
+        (``Warehouse.bucket_files``), the job runs over ``spark.range`` of
+        the bucket ids and task ``b`` reads bucket ``b``'s files itself
+        with pyarrow (``bucket_reader``: the rollup's columns, tier-0 rows,
+        sorted by doc in Arrow) — no scan, sort or Arrow transfer in the
+        JVM, no catalog. A bucket whose uncompressed bytes pass
+        ``spark.python.worker.memory`` would sit whole in the task without
+        spilling, so then, as for any other chunk table, the chunks are
+        read as a frame and hash-partitioned by doc_id first (one shuffle,
+        Spark's sort, same kernel and writer)."""
         wh = self.warehouse
         completes: list[int] = []
         for spec in self.tiers:
@@ -307,19 +321,27 @@ class Pipeline:
                 completes.append(
                     (min(up_to_us, data_max) // spec.window_us) * spec.window_us
                 )
-        src = chunks.filter(F.col("tier") == 0)
-        if not bucketed:
-            src = src.repartition("doc_id")
-        src, kern = whole_doc_rollup(src, [spec.window_us for spec in self.tiers])
+        windows = [spec.window_us for spec in self.tiers]
+        buckets = self._doc_buckets()
+        read = None
+        if buckets is not None:
+            src = self.spark.range(len(buckets), numPartitions=len(buckets))
+            kern = tiers_kernel(windows)
+            batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+            read = bucket_reader(buckets, ROLLUP_INPUT, filters=[("tier", "=", 0)],
+                                 sort_by=DOC_ORDER, batch_rows=batch_rows)
+        else:
+            chunks = wh.read(self.spark, "chunks_tier0", bucketed=False)
+            chunks = chunks.filter(F.col("tier") == 0)
+            src, kern = whole_doc_rollup(chunks.repartition("doc_id"), windows)
         tables = {t: spec.name for t, spec in enumerate(self.tiers)}
         files = wh.kernel_writer(list(tables.values()), TIER_PARTIAL_ARROW, slice_col="tier")
-        with _session_confs(self.spark, ONE_JOB_PROMOTE if bucketed else {}):
-            wh.write_slices(
-                files.frame(src, _below_horizons(kern, completes)), "tier", tables,
-                partition_by=("p_day",),
-                watermarks={t: int(c) for t, c in enumerate(completes)},
-                op="promote:full-fused", files=files,
-            )
+        wh.write_slices(
+            files.frame(src, _below_horizons(kern, completes), read), "tier", tables,
+            partition_by=("p_day",),
+            watermarks={t: int(c) for t, c in enumerate(completes)},
+            op="promote:full-fused", files=files,
+        )
         summary = []
         for t, spec in enumerate(self.tiers):
             entry = {"tier": spec.name, "mode": "full",

@@ -15,6 +15,8 @@ parallelism. All vectorized over the flat token stream of a batch.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from ..functions.hashing import hash2
 
@@ -62,6 +64,44 @@ def synth_timestamps(
     return ts
 
 
-def doc_index_from_id(doc_id_bytes_prefixstripped: np.ndarray) -> np.ndarray:
-    """doc 'doc0000000123' -> 123 (vectorized string → int)."""
-    return doc_id_bytes_prefixstripped.astype(np.int64)
+# the ids whose digits are their series key (the synthetic corpus'
+# ``doc0000000123`` -> 123, which the ``tokens_*`` oracles regenerate)
+SYNTHETIC_ID = "^doc[0-9]{1,18}$"
+
+
+def doc_index_from_id(doc_id: pa.Array) -> np.ndarray:
+    """The series key (uint64) of each doc id: the digits of a synthetic
+    id (``SYNTHETIC_ID``), else a 64-bit hash of the id's UTF-8 bytes, so
+    any string keys a series (null and empty ids share one key)."""
+    if isinstance(doc_id, pa.ChunkedArray):
+        doc_id = doc_id.combine_chunks()
+    doc_id = doc_id.cast(pa.string())
+    synthetic = pc.fill_null(pc.match_substring_regex(doc_id, SYNTHETIC_ID), False)
+    synthetic = synthetic.to_numpy(zero_copy_only=False)
+    out = np.empty(len(doc_id), dtype=np.uint64)
+    if synthetic.any():
+        digits = pc.utf8_slice_codeunits(doc_id.filter(pa.array(synthetic)), 3, 99)
+        out[synthetic] = pc.cast(digits, pa.int64()).to_numpy().astype(np.uint64)
+    if not synthetic.all():
+        out[~synthetic] = _bytes_hash(doc_id.filter(pa.array(~synthetic)))
+    return out
+
+
+def _bytes_hash(strings: pa.Array) -> np.ndarray:
+    """64-bit hash of each string's UTF-8 bytes, over the whole Arrow data
+    buffer at once: the wrapping sum of one ``hash2(position, byte)`` per
+    byte, mixed with the length."""
+    bufs = strings.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=np.int32)[
+        strings.offset: strings.offset + len(strings) + 1].astype(np.int64)
+    data = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+            else np.empty(0, np.uint8))[offsets[0]:offsets[-1]]
+    lengths = np.diff(offsets)
+    starts = offsets[:-1] - offsets[0]
+    pos = np.arange(len(data), dtype=np.int64) - np.repeat(starts, lengths)
+    per_byte = hash2(pos.astype(np.uint64), data.astype(np.uint64), 11)
+    sums = np.zeros(len(strings), dtype=np.uint64)
+    nz = lengths > 0
+    if nz.any():
+        sums[nz] = np.add.reduceat(per_byte, starts[nz])
+    return hash2(sums, lengths.astype(np.uint64), 13)

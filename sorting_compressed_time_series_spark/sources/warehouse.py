@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -48,9 +49,15 @@ US_PER_DAY = 86_400_000_000
 # tables (they are smaller than one group anyway) and let decode scans
 # split chunk files.
 ROW_GROUP_BYTES = 4 << 20
-# what a kernel's tasks return instead of its rows: one row per file written
-FILES_SCHEMA = "slice int, p_day bigint, bucket int, path string, rows bigint"
+# what a kernel's tasks return instead of its rows: one row per file written,
+# plus each task's seconds blocked on input, in the kernel and writing
+TASK_TIMERS = ("input_wait_s", "kernel_s", "write_s")
+FILES_SCHEMA = ("slice int, p_day bigint, bucket int, path string, rows bigint, "
+                + ", ".join(f"{t} double" for t in TASK_TIMERS))
 _BUCKET = "_bucket"  # the input column carrying Spark's bucket id
+# Spark's rule for the bucket id of a data file (``BucketingUtils.getBucketId``):
+# the digits after the last ``_`` of the name, before its extension
+_BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?")
 
 
 def p_day_of(window_start: np.ndarray) -> np.ndarray:
@@ -74,7 +81,8 @@ class KernelWriter:
     ``slice_col`` column (dropped from the file). With ``bucket_by=(col,
     n)`` the kernel's input carries Spark's bucket id of ``col`` and each
     file gets Spark's ``_<bucket:05d>`` suffix, so a catalog table
-    ``CLUSTERED BY (col) INTO n BUCKETS`` reads the files as buckets. The
+    ``CLUSTERED BY (col) INTO n BUCKETS`` reads the files as buckets, and
+    so does ``Warehouse.bucket_files`` (for ``bucket_reader``). The
     file schema is ``schema``: zstd level 3, row groups of ~4 MB, min/max
     statistics on every non-binary column, dictionary pages on none of the
     binary columns (and on no column of a sliced write)."""
@@ -84,17 +92,17 @@ class KernelWriter:
     slice_col: str | None = None
     bucket_by: tuple[str, int] | None = None
 
-    def frame(self, src: DataFrame, kern: Kernel) -> DataFrame:
-        """``src`` → ``kern`` → files: the frame ``Warehouse.write``,
-        ``write_slices`` and ``append_segment`` commit. A bucketed write
-        runs the kernel once per input batch and needs one output row per
-        input row, in order (the flush kernel's shape)."""
+    def frame(self, src: DataFrame, kern: Kernel, read: Kernel | None = None) -> DataFrame:
+        """``src`` → [``read`` →] ``kern`` → files: the frame
+        ``Warehouse.write``, ``write_slices`` and ``append_segment`` commit.
+        A bucketed write runs the kernel once per input batch and needs one
+        output row per input row, in order (the flush kernel's shape)."""
         if self.bucket_by is not None:
             col, n = self.bucket_by
             # Spark's bucketed write assigns pmod(murmur3(col), n): the same
             # expression, so the files' suffixes agree with Spark's own
             src = src.withColumn(_BUCKET, F.pmod(F.hash(col), F.lit(n)))
-        return src.mapInArrow(self.task(kern), FILES_SCHEMA)
+        return src.mapInArrow(self.task(kern, read), FILES_SCHEMA)
 
     def spark_schema(self):
         """The table schema for the manifest: the file columns, then
@@ -105,9 +113,13 @@ class KernelWriter:
         return StructType(from_arrow_schema(self.schema).fields
                           + [StructField("p_day", LongType(), True)])
 
-    def task(self, kern: Kernel) -> Kernel:
-        """What each task runs: ``kern`` over the task's batches, its rows
-        written to parquet; yields one ``FILES_SCHEMA`` row per file."""
+    def task(self, kern: Kernel, read: Kernel | None = None) -> Kernel:
+        """What each task runs: ``kern`` over the task's batches (turned
+        into the kernel's input by ``read`` first, if given), its rows
+        written to parquet; yields one ``FILES_SCHEMA`` row per file. The
+        first row also carries the task's seconds blocked on input, in the
+        kernel and writing (``close()`` included); a task that wrote no
+        file yields one row with a null path to carry them."""
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             from pyspark import TaskContext
@@ -116,11 +128,15 @@ class KernelWriter:
             attempt, part = ((ctx.taskAttemptId(), ctx.partitionId()) if ctx
                              else (uuid.uuid4().hex, 0))
             files = _TaskFiles(self, os.path.join(self.staging, f"attempt-{attempt}"), part)
-            if self.bucket_by is None:
-                for out in kern(batches):
-                    files.add(out, None)
-            else:
-                for batch in batches:
+            clock = np.zeros(3)  # input wait, kernel + input wait, write
+            rows = _timed(read(batches) if read is not None else batches, clock, 0)
+
+            def outputs():
+                if self.bucket_by is None:
+                    for out in kern(rows):
+                        yield out, None
+                    return
+                for batch in rows:
                     if batch.num_rows == 0:
                         continue
                     bucket = batch.column(_BUCKET).to_numpy(zero_copy_only=False)
@@ -128,10 +144,74 @@ class KernelWriter:
                         if out.num_rows != len(bucket):
                             raise ValueError("a bucketed kernel write needs one output "
                                              "row per input row")
-                        files.add(out, bucket)
-            yield from files.close()
+                        yield out, bucket
+
+            for out, bucket in _timed(outputs(), clock, 1):
+                t0 = time.perf_counter()
+                files.add(out, bucket)
+                clock[2] += time.perf_counter() - t0
+            t0 = time.perf_counter()
+            written = files.close()
+            clock[2] += time.perf_counter() - t0
+            clock[1] -= clock[0]
+            yield _files_batch(written, clock)
 
         return run
+
+
+def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
+                  filters: list[tuple], sort_by: tuple[str, ...], batch_rows: int) -> Kernel:
+    """The input of a task that reads its own buckets (``Warehouse.
+    bucket_files``): for each ``id`` in the task's input (``spark.range``
+    over the bucket ids), the bucket's files read with pyarrow — only
+    ``columns``, only the rows matching ``filters`` — sorted by ``sort_by``
+    and cut into batches of ``batch_rows`` (none if ≤ 0, as Spark's
+    ``maxRecordsPerBatch``). One bucket is in memory at a time."""
+
+    def read(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
+
+        for batch in ids:
+            for b in batch.column("id").to_numpy():
+                paths = buckets[int(b)]
+                if not paths:
+                    continue
+                # one thread: the job's tasks already keep every core busy
+                # (pyarrow's own pool measured slower at 4 tasks on 4 cores)
+                table = pq.read_table(paths, columns=list(columns), filters=filters,
+                                      use_threads=False)
+                table = table.sort_by([(c, "ascending") for c in sort_by])
+                yield from table.to_batches(batch_rows if batch_rows > 0 else None)
+
+    return read
+
+
+def _timed(it: Iterator, clock: np.ndarray, slot: int) -> Iterator:
+    """``it``, adding the seconds spent producing each item to ``clock[slot]``."""
+    it = iter(it)
+    while True:
+        t0 = time.perf_counter()
+        try:
+            item = next(it)
+        except StopIteration:
+            clock[slot] += time.perf_counter() - t0
+            return
+        clock[slot] += time.perf_counter() - t0
+        yield item
+
+
+def _files_batch(written: list[tuple], clock: np.ndarray) -> pa.RecordBatch:
+    """The ``FILES_SCHEMA`` rows of one task: its files, then its timers on
+    the first row (on a null-path row when it wrote none)."""
+    written = written or [(None, None, None, None, 0)]
+    cols = list(zip(*written))
+    timers = np.zeros((3, len(written)))
+    timers[:, 0] = clock
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
+         pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
+         pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers],
+        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS])
 
 
 @dataclass
@@ -211,21 +291,16 @@ class _TaskFiles:
             1, table.num_rows * ROW_GROUP_BYTES // max(f.nbytes, 1)))
         f.buffered, f.nbytes = [], 0
 
-    def close(self) -> Iterator[pa.RecordBatch]:
-        """Write what is buffered, close every file, and describe them."""
+    def close(self) -> list[tuple]:
+        """Write what is buffered, close every file, and describe them:
+        ``(slice, p_day, bucket, path, rows)`` each."""
         spec, out = self.spec, []
         for (slice_v, p_day, bucket), f in self.files.items():
             self._write(f)
             f.writer.close()
             out.append((slice_v if spec.slice_col is not None else None, p_day,
                         bucket if spec.bucket_by is not None else None, f.path, f.rows))
-        if out:
-            cols = list(zip(*out))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
-                 pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
-                 pa.array(cols[4], pa.int64())],
-                names=["slice", "p_day", "bucket", "path", "rows"])
+        return out
 
 
 class Warehouse:
@@ -304,22 +379,26 @@ class Warehouse:
                             schema, slice_col, bucket_by)
 
     @staticmethod
-    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> None:
+    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> dict[str, float]:
         """Run a kernel's write job and move the files its finished tasks
         reported into ``dirs[slice]`` (the key is None without slices).
         A failed or speculative attempt's files are never reported, so they
         are never committed. Each dir is cleared first: a crash before the
-        manifest swap leaves an orphan dir that the rerun replaces."""
+        manifest swap leaves an orphan dir that the rerun replaces. Returns
+        the tasks' ``TASK_TIMERS``, summed."""
         shutil.rmtree(files.staging, ignore_errors=True)  # a crashed run's attempts
         rows = df.collect()
         for d in dirs.values():
             shutil.rmtree(d, ignore_errors=True)
             os.makedirs(d)
         for r in rows:
+            if r.path is None:  # a task that wrote no file: timers only
+                continue
             part = os.path.join(dirs[r.slice], f"p_day={r.p_day}")
             os.makedirs(part, exist_ok=True)
             os.replace(r.path, os.path.join(part, os.path.basename(r.path)))
         shutil.rmtree(files.staging, ignore_errors=True)  # what no finished task reported
+        return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}
 
     def write(self, df: DataFrame, table: str, *, partition_by: tuple[str, ...] = (),
               watermark_us: int | None = None, op: str = "overwrite",
@@ -341,9 +420,10 @@ class Warehouse:
         path = os.path.join(self.root, table, snap)
         if bucket_by is not None:  # a crashed attempt's entry
             df.sparkSession.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table, snap)}")
+        timers = {}
         if files is not None:
             assert files.bucket_by == bucket_by and tuple(partition_by) == ("p_day",)
-            self._land(df, files, {None: path})
+            timers = self._land(df, files, {None: path})
             schema = files.spark_schema()
         else:
             w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
@@ -360,7 +440,7 @@ class Warehouse:
         self._commit(table, snap, watermark_us,
                      {"op": op, "partition_by": partition_by,
                       "bucket_by": bucket_spec,
-                      "wall_s": time.perf_counter() - t0},
+                      "wall_s": time.perf_counter() - t0, **timers},
                      schema_json=schema.json(), bucket_spec=bucket_spec)
         if bucket_by is not None and m["snapshot"]:
             # the entry of the replaced snapshot, dropped only now: ``df``
@@ -391,14 +471,14 @@ class Warehouse:
         assert files.slice_col == slice_col and tuple(partition_by) == ("p_day",)
         t0 = time.perf_counter()
         snaps = {val: f"snap-{self.manifest(tbl)['version'] + 1}" for val, tbl in tables.items()}
-        self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
-                               for val, snap in snaps.items()})
+        timers = self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
+                                        for val, snap in snaps.items()})
         wall_s = time.perf_counter() - t0  # the one write all tables share
         schema_json = files.spark_schema().json()
         for val, tbl in tables.items():
             self._commit(tbl, snaps[val], (watermarks or {}).get(val),
                          {"op": op, "partition_by": tuple(partition_by),
-                          "bucket_by": None, "wall_s": wall_s},
+                          "bucket_by": None, "wall_s": wall_s, **timers},
                          schema_json=schema_json, bucket_spec=None)
 
     def append_segment(self, df: DataFrame, table: str, *,
@@ -418,9 +498,10 @@ class Warehouse:
             raise FileNotFoundError(f"table {table} has no base snapshot to append to")
         seg = f"seg-{m['version'] + 1}"
         path = os.path.join(self.root, table, seg)
+        timers = {}
         if files is not None:
             assert files.bucket_by is None and tuple(partition_by) == ("p_day",)
-            self._land(df, files, {None: path})
+            timers = self._land(df, files, {None: path})
         else:
             w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
             if partition_by:
@@ -429,7 +510,8 @@ class Warehouse:
         m["segments"] = m.get("segments", []) + [seg]
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
-        self._log(table, m, {"op": op, "segment": seg, "wall_s": time.perf_counter() - t0})
+        self._log(table, m, {"op": op, "segment": seg, "wall_s": time.perf_counter() - t0,
+                             **timers})
         self._swap_manifest(table, m)
         return seg
 
@@ -495,19 +577,19 @@ class Warehouse:
     def _bucketed_table(self, spark: SparkSession, table: str) -> str | None:
         """Catalog name of the live snapshot as a bucketed table, registered
         in this session's catalog on first use (a new session, or a dropped
-        entry); None when the table is not one bucketed snapshot or the
-        registration fails."""
+        entry); None when the table is not one bucketed snapshot whose
+        files all name their bucket (``bucket_files``), or the registration
+        fails."""
         m = self.manifest(table)
-        spec = m.get("bucket_spec")
-        if not spec or m.get("segments") or not m.get("schema"):
+        if not m.get("schema") or self.bucket_files(table) is None:
             return None
+        col, n = m["bucket_spec"]
         name = self._catalog_name(table, m["snapshot"])
         if spark.catalog.tableExists(name):
             return name
         from pyspark.errors import PySparkException
         from pyspark.sql.types import StructType
 
-        col, n = spec
         parts = next((e["partition_by"] for e in reversed(m["lineage"])
                       if "partition_by" in e), ())
         fields = StructType.fromJson(json.loads(m["schema"])).fields
@@ -526,21 +608,48 @@ class Warehouse:
             return None
         return name
 
-    def bucket_column(self, spark: SparkSession, table: str) -> str | None:
-        """The column ``read`` buckets the table by in this session: every
-        row with one value of it lies in one bucket, which a bucketed scan
-        reads in one task. None for a plain read."""
-        name = self._bucketed_table(spark, table)
-        return self.manifest(table)["bucket_spec"][0] if name else None
+    def bucket_files(self, table: str) -> dict[int, list[str]] | None:
+        """``{bucket: [absolute file path]}`` of the live snapshot, every
+        bucket id of its spec present: all rows with one value of the
+        bucket column lie in one bucket's files. None unless the table is
+        ONE bucketed snapshot (no segments) whose every data file names its
+        bucket by Spark's rule (``_BUCKET_ID``), as the kernel writer's
+        ``_<bucket:05d>`` suffix and Spark's own bucketed writes do."""
+        m = self.manifest(table)
+        spec = m.get("bucket_spec")
+        if not spec or m.get("segments") or m["snapshot"] is None:
+            return None
+        n = spec[1]
+        out: dict[int, list[str]] = {b: [] for b in range(n)}
+        for path in self._data_files(table, m):
+            hit = _BUCKET_ID.fullmatch(os.path.basename(path))
+            if hit is None or int(hit.group(1)) >= n:
+                return None
+            out[int(hit.group(1))].append(os.path.abspath(path))
+        return out
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
+    @staticmethod
+    def uncompressed_bytes(files: list[str]) -> int:
+        """Uncompressed bytes of ``files``' row groups, from their footers."""
+        import pyarrow.parquet as pq
+
+        total = 0
+        for path in files:
+            md = pq.read_metadata(path)
+            total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
+        return total
+
+    def read(self, spark: SparkSession, table: str, bucketed: bool = True) -> DataFrame:
+        """The live table. A single bucketed snapshot reads through the
+        catalog, so a groupBy/join on the bucket column needs no exchange;
+        ``bucketed=False`` reads it as plain parquet, for a plan that
+        repartitions by that column itself: Spark drops such a shuffle over
+        a bucketed scan of equal partitioning, and then the bucketed scan
+        too (no operator above needs it), which splits the buckets."""
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        # bucket-aware path: a single bucketed snapshot reads through the
-        # catalog, so downstream groupBy/join on the bucket column needs no
-        # exchange
-        name = self._bucketed_table(spark, table)
+        name = self._bucketed_table(spark, table) if bucketed else None
         if name is not None:
             return spark.table(name)
         paths = [os.path.join(self.root, table, d) for d in self._live_dirs(table)]

@@ -1,20 +1,27 @@
-"""The one-job fused promote: the rollup kernel merges each doc's chunks
-itself on the doc-bucketed chunk scan, so promotion plans no exchange.
+"""The one-job fused promote: each task reads one doc bucket's chunk files
+itself and the rollup kernel merges each doc's chunks, so promotion plans
+no scan and no exchange.
 
 - kernel: docs with many chunks, split across Arrow batches at every
   offset, equal a pandas recomputation from the points;
-- plan audit: the fused promote plans zero Exchange over a bucketed scan,
-  and its tier tables equal the pandas recomputation from
-  ``decode_points`` (perfbench's oracle);
-- fresh session: a snapshot whose catalog entry is gone is registered
-  again on read, or the promote falls back to the shuffle merge — the tier
-  tables are the same either way;
+- plan audit: the fused promote over a snapshot in Spark's own bucketed
+  layout plans neither an Exchange nor a file scan (a ``Range`` of bucket
+  ids under the kernel), runs one job, and its tier tables equal the
+  pandas recomputation from ``decode_points`` (perfbench's oracle);
+- the catalog: with the snapshot's catalog entry dropped, or its
+  registration refused, the promote reads the same buckets — same plan,
+  same tables;
+- the other plan: a file without a bucket id, or a bucket past
+  ``spark.python.worker.memory``, sends the chunks through
+  ``repartition("doc_id")`` into the same kernel — same tables;
 - crash between tier commits: a rerun finishes the job;
 - job descriptions: the engine labels its own actions.
 """
 
 import contextlib
 import io
+import os
+import re
 from functools import partial
 
 import numpy as np
@@ -32,6 +39,7 @@ from sorting_compressed_time_series_spark.operators.rollup import (
     decode_points,
     rollup_tiers,
 )
+from sorting_compressed_time_series_spark.plans import pipeline
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
@@ -39,7 +47,6 @@ from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, wi
 from perfbench.oracle import TIER_COLS, TIER_WINDOWS, check_tiers, expected_tiers, read_table
 
 WINDOWS = list(TIER_WINDOWS.values())
-AUTO_BUCKETED = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
 
 
 def plan_of(df) -> str:
@@ -205,35 +212,67 @@ def _promote_plan(spark, p: Pipeline, monkeypatch) -> tuple[str, int]:
     return plans[0], len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _assert_bucket_read(plan: str) -> None:
+    """The promote's plan reads the buckets in its tasks: a Range of bucket
+    ids under the kernel, no scan of the chunk table and no Exchange."""
+    assert "Range" in plan and "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Scan" not in plan, plan
+
+
+def _assert_same_tiers(root: str, ref_root: str) -> None:
+    key = ["doc_id", "window_start"]
+    for name in TIER_WINDOWS:
+        pd.testing.assert_frame_equal(
+            read_table(root, name)[TIER_COLS].sort_values(key).reset_index(drop=True),
+            read_table(ref_root, name)[TIER_COLS].sort_values(key).reset_index(drop=True))
+
+
 def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
                                                 small_batches, monkeypatch):
+    """The chunk snapshot is written by Spark's own ``bucketBy`` (as
+    ``compact()`` writes it): every file names its bucket, each task reads
+    one bucket, and the tier tables equal the recompute and the
+    ``repartition("doc_id")`` plan's."""
     chunks, want = multi_chunk
     p = _warehouse(spark, tmp_path / "wh", chunks)
+    buckets = p.warehouse.bucket_files("chunks_tier0")
+    assert sorted(buckets) == list(range(p._bucket_by()[1]))
+    assert sorted(f for fs in buckets.values() for f in fs) == sorted(
+        os.path.abspath(f) for f in p.warehouse._data_files("chunks_tier0"))
     plan, jobs = _promote_plan(spark, p, monkeypatch)
-    assert "Exchange" not in plan, plan
-    assert "Bucketed: true" in plan, plan
+    _assert_bucket_read(plan)
     assert jobs == 1
-    assert spark.conf.get(AUTO_BUCKETED, None) is None  # the switch was scoped
     assert check_tiers(p.warehouse.root, want) == []
 
+    ref = _warehouse(spark, tmp_path / "ref", chunks)
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: 0)
+    plan, _ = _promote_plan(spark, ref, monkeypatch)
+    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
 
-def test_fresh_session_reregisters_bucketed_snapshot(spark, tmp_path, multi_chunk,
+
+def test_promote_reads_buckets_without_catalog_entry(spark, tmp_path, multi_chunk,
                                                      small_batches, monkeypatch):
-    """The catalog entry of the chunk snapshot is gone (a new session):
-    the read registers it again and the promote stays one job."""
+    """The catalog entry of the chunk snapshot is gone (a new session): the
+    promote does not use the catalog, so its plan and tables are the
+    same, and it registers nothing."""
     chunks, want = multi_chunk
     p = _warehouse(spark, tmp_path / "wh", chunks)
     wh = p.warehouse
-    spark.sql(f"DROP TABLE {wh._catalog_name('chunks_tier0')}")
-    plan, _ = _promote_plan(spark, p, monkeypatch)
-    assert "Exchange" not in plan and "Bucketed: true" in plan, plan
+    name = wh._catalog_name("chunks_tier0")
+    spark.sql(f"DROP TABLE {name}")
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    _assert_bucket_read(plan)
+    assert jobs == 1
+    assert not spark.catalog.tableExists(name)
     assert check_tiers(wh.root, want) == []
 
 
-def test_fresh_session_falls_back_to_shuffle_merge(spark, tmp_path, multi_chunk,
-                                                   small_batches, monkeypatch):
-    """When the snapshot cannot be registered, the read is plain parquet
-    and the partials merge through the shuffle: same tier tables."""
+def test_promote_reads_buckets_when_catalog_refuses(spark, tmp_path, multi_chunk,
+                                                    small_batches, monkeypatch):
+    """When the snapshot cannot be registered, ``Warehouse.read`` is plain
+    parquet, but the promote reads the same buckets: same plan, and the
+    tables of a promote with the catalog."""
     from pyspark.errors import AnalysisException
 
     chunks, want = multi_chunk
@@ -250,16 +289,48 @@ def test_fresh_session_falls_back_to_shuffle_merge(spark, tmp_path, multi_chunk,
         return sql(self, query, *args, **kwargs)
 
     monkeypatch.setattr(type(spark), "sql", refusing)
-    assert wh.bucket_column(spark, "chunks_tier0") is None
-    plan, _ = _promote_plan(spark, p, monkeypatch)
-    assert "hashpartitioning" in plan and "Bucketed: true" not in plan, plan
+    assert "Bucketed: true" not in plan_of(wh.read(spark, "chunks_tier0"))
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    _assert_bucket_read(plan)
+    assert jobs == 1
     monkeypatch.setattr(type(spark), "sql", sql)
     assert check_tiers(wh.root, want) == []
-    for name in TIER_WINDOWS:
-        key = ["doc_id", "window_start"]
-        pd.testing.assert_frame_equal(
-            read_table(wh.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True),
-            read_table(ref.warehouse.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True))
+    _assert_same_tiers(wh.root, ref.warehouse.root)
+
+
+def test_file_without_bucket_id_takes_repartition_plan(spark, tmp_path, multi_chunk,
+                                                       small_batches, monkeypatch):
+    """One data file renamed without its ``_<bucket>`` suffix: the
+    snapshot no longer maps to buckets, so the chunks go through
+    ``repartition("doc_id")`` into the same kernel — same tables."""
+    chunks, want = multi_chunk
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    wh = p.warehouse
+    path = wh._data_files("chunks_tier0")[0]
+    os.replace(path, re.sub(r"_\d+(\.[^_]*)$", r"\1", path))
+    assert wh.bucket_files("chunks_tier0") is None
+    plan, _ = _promote_plan(spark, p, monkeypatch)
+    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    assert check_tiers(wh.root, want) == []
+
+
+def test_bucket_over_worker_memory_takes_repartition_plan(spark, tmp_path, multi_chunk,
+                                                          monkeypatch):
+    """A bucket whose uncompressed bytes pass ``spark.python.worker.memory``
+    is not read whole into a task: the promote takes the
+    ``repartition("doc_id")`` plan, with the bucket read's tables."""
+    chunks, want = multi_chunk
+    ref = _warehouse(spark, tmp_path / "ref", chunks)
+    ref.promote_all()
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    sizes = [p.warehouse.uncompressed_bytes(fs)
+             for fs in p.warehouse.bucket_files("chunks_tier0").values()]
+    assert 0 < max(sizes) < pipeline._python_worker_memory(spark)
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: max(sizes) - 1)
+    plan, _ = _promote_plan(spark, p, monkeypatch)
+    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    assert check_tiers(p.warehouse.root, want) == []
+    _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
 
 
 def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk, monkeypatch):
@@ -287,11 +358,8 @@ def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk,
     assert done == ["tier1_1s"] and not wh.exists("tier2_1m")
     assert [e["mode"] for e in p.promote_all()] == ["noop", "full", "full"]
     assert check_tiers(wh.root, want) == []
+    _assert_same_tiers(wh.root, ref.warehouse.root)
     for name in TIER_WINDOWS:
-        key = ["doc_id", "window_start"]
-        pd.testing.assert_frame_equal(
-            read_table(wh.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True),
-            read_table(ref.warehouse.root, name)[TIER_COLS].sort_values(key).reset_index(drop=True))
         assert wh.watermark(name) == ref.warehouse.watermark(name)
 
 

@@ -10,7 +10,11 @@ own files (``Warehouse.kernel_writer``) and return one row per file.
   (groupBy and compaction plan no Exchange, same rows as a plain read);
 - a crash between the data write and the manifest swap keeps the previous
   snapshot live, and a rerun yields the tables of an uninterrupted run;
-- a stray file under a staging attempt dir is never committed.
+- a stray file under a staging attempt dir is never committed;
+- ingest and promote register nothing in the session catalog, and their
+  lineage entries record where the task time went;
+- doc ids of any shape key a series: the flush and the promote give the
+  input's points and their recomputed tiers.
 """
 
 import contextlib
@@ -33,18 +37,26 @@ from sorting_compressed_time_series_spark.operators.ingest import (
     flush,
     flush_kernel_batches,
 )
-from sorting_compressed_time_series_spark.operators.rollup import TIER_PARTIAL_ARROW
+from sorting_compressed_time_series_spark.operators.rollup import (
+    TIER_PARTIAL_ARROW,
+    decode_points,
+)
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
+from sorting_compressed_time_series_spark.sources.seriesize import (
+    doc_index_from_id,
+    synth_timestamps,
+)
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 from sorting_compressed_time_series_spark.sources.warehouse import (
     ROW_GROUP_BYTES,
+    TASK_TIMERS,
     US_PER_DAY,
     KernelWriter,
     Warehouse,
     with_p_day,
 )
 
-from perfbench.oracle import TIER_COLS, TIER_WINDOWS, read_table
+from perfbench.oracle import TIER_COLS, TIER_WINDOWS, check_tiers, expected_tiers, read_table
 
 BUCKET_SUFFIX = re.compile(r"_(\d{5})\.c000\.zstd\.parquet$")
 
@@ -261,7 +273,10 @@ def test_compact_rewrites_kernel_written_snapshot(spark, tmp_path):
     after = _chunks_of(p.warehouse.root)
     assert not after.doc_id.duplicated().any()
     pd.testing.assert_series_equal(after.groupby("doc_id")["count"].sum(), points)
-    assert p.warehouse.bucket_column(spark, "chunks_tier0") == "doc_id"
+    assert p.warehouse.manifest("chunks_tier0")["bucket_spec"] == list(p._bucket_by())
+    buckets = p.warehouse.bucket_files("chunks_tier0")
+    assert buckets is not None and sum(map(len, buckets.values())) == len(
+        p.warehouse._data_files("chunks_tier0"))
 
 
 # ---------------------------------------------------------------------------
@@ -343,3 +358,73 @@ def test_stray_staged_file_is_never_committed(spark, tmp_path):
     assert not os.path.exists(staging)
     pd.testing.assert_frame_equal(_chunks_of(wh.root), _chunks_of(ref.warehouse.root))
     assert wh.read(spark, "chunks_tier0").count() == 40
+
+
+# ---------------------------------------------------------------------------
+# the catalog, task timers, doc ids
+# ---------------------------------------------------------------------------
+
+def _tables(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables()}
+
+
+def test_ingest_and_promote_register_no_catalog_table(spark, tmp_path):
+    """Neither stage reads through the session catalog: the list of tables
+    is the same before and after, and ingest returns its lineage entry."""
+    before = _tables(spark)
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    entry = p.ingest(generate_tokens_df(spark, 40))
+    assert entry == p.warehouse.manifest("chunks_tier0")["lineage"][-1]
+    assert entry["op"] == "ingest" and entry["rows"] == 40
+    p.promote_all()
+    assert _tables(spark) == before
+
+
+def test_lineage_records_task_timers(spark, tmp_path):
+    """The kernel commits of ingest, an append and the fused promote carry
+    the tasks' summed seconds blocked on input, in the kernel and writing."""
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(generate_tokens_df(spark, 40))
+    p.promote_all()
+    p.ingest(generate_tokens_df(spark, 5, start=40), append=True)
+    wh = p.warehouse
+    entries = wh.manifest("chunks_tier0")["lineage"] + [
+        wh.manifest(name)["lineage"][-1] for name in TIER_WINDOWS]
+    assert [e["op"] for e in entries] == ["ingest", "append"] + ["promote:full-fused"] * 3
+    for e in entries:
+        assert all(e[t] >= 0 for t in TASK_TIMERS), e
+        assert e["kernel_s"] > 0, e
+
+
+ODD_IDS = ["user-α/7", "doc", "doc12x", "", "doc0000000003", "DOC5", "doc 9", "séries/ü"]
+
+
+def test_arbitrary_doc_ids_ingest_and_promote(spark, tmp_path):
+    """Ids not shaped ``doc<digits>`` key their series by a hash of their
+    bytes: the decoded points equal the input (event times from that key),
+    and the tier tables equal a pandas recompute."""
+    rng = np.random.default_rng(11)
+    lengths = rng.integers(1, 400, len(ODD_IDS))
+    tokens = [rng.integers(-10_000, 10_000, n).astype(np.int32) for n in lengths]
+    source = ["web" if i % 2 else "code" for i in range(len(ODD_IDS))]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": ODD_IDS, "tokens": [t.tolist() for t in tokens],
+                      "n_tok": lengths.astype(np.int32), "source": source}),
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(df)
+    p.promote_all()
+
+    key = np.repeat(doc_index_from_id(pa.array(ODD_IDS)), lengths)
+    pos = np.concatenate([np.arange(n) for n in lengths])
+    points = pd.DataFrame({"doc_id": np.repeat(ODD_IDS, lengths),
+                           "source": np.repeat(source, lengths), "pos": pos,
+                           "token": np.concatenate(tokens).astype(np.int64),
+                           "ts": synth_timestamps(key, pos, 42)})
+    got = decode_points(p.warehouse.read(spark, "chunks_tier0")).toPandas()
+    cols = ["doc_id", "source", "ts", "value"]
+    pd.testing.assert_frame_equal(
+        got[cols].sort_values(cols).reset_index(drop=True),
+        points.rename(columns={"token": "value"})[cols].sort_values(cols).reset_index(drop=True),
+        check_dtype=False)
+    assert check_tiers(p.warehouse.root, expected_tiers(points)) == []

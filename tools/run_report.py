@@ -1,6 +1,8 @@
-"""Per-stage report of a Spark event log, grouped by job group.
+"""Per-stage report of a Spark event log, grouped by job group; or the
+commit log of a warehouse.
 
     python tools/run_report.py <eventlog-dir>
+    python tools/run_report.py --warehouse <root>
 
 For each job group (jobs without one are listed under ``(none)``), in the
 order the groups first ran, prints each job with its wall and description,
@@ -11,10 +13,16 @@ the stage ran in more than one task wave.
 
 Enable the log with ``spark.eventLog.enabled=true`` and
 ``spark.eventLog.dir=<eventlog-dir>`` (``perfbench/run.py --trace 1`` does).
+
+With ``--warehouse``, prints every table's lineage entries from its
+``_manifest.json`` (no Spark, no event log): op, rows, bytes, files, wall
+time, and for a commit whose tasks wrote their own files the seconds they
+spent blocked on input, in the kernel and writing, summed over tasks.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 from collections import defaultdict
@@ -83,8 +91,35 @@ def report(groups: dict[str, list[dict]]) -> str:
     return "\n".join(lines)
 
 
+TASK_TIMERS = (("input_wait_s", "input"), ("kernel_s", "kernel"), ("write_s", "write"))
+
+
+def warehouse_report(root: str) -> str:
+    """Every table's lineage entries, tables in name order."""
+    lines = []
+    for table in sorted(os.listdir(root)):
+        path = os.path.join(root, table, "_manifest.json")
+        if not os.path.isfile(path):
+            continue
+        with open(path) as f:
+            m = json.load(f)
+        lines.append(f"== {table}: version {m['version']}, snapshot {m['snapshot']}, "
+                     f"watermark {m['watermark_us']}")
+        for e in m["lineage"]:
+            line = (f"  v{e.get('version', '?')} {e.get('op', '?')}: {e.get('rows', 0)} rows  "
+                    f"{_mb(e.get('bytes', 0))}  {e.get('files', 0)} files  "
+                    f"wall {e.get('wall_s', float('nan')):.3f} s")
+            if all(k in e for k, _ in TASK_TIMERS):
+                line += "  tasks " + "  ".join(f"{name} {e[k]:.3f} s" for k, name in TASK_TIMERS)
+            lines.append(line)
+    return "\n".join(lines)
+
+
 def main(argv: list[str]) -> int:
-    if len(argv) != 1:
+    if len(argv) == 2 and argv[0] == "--warehouse":
+        print(warehouse_report(argv[1]))
+        return 0
+    if len(argv) != 1 or argv[0].startswith("-"):
         print(__doc__.strip(), file=sys.stderr)
         return 2
     print(report(fold(read_events(argv[0]))))
