@@ -124,11 +124,9 @@ def headline(spark, n_docs: int, seed: int = 42, keep_tables: str | None = None)
 
     t0 = time.perf_counter()
     chunks_path = os.path.join(tmp, "chunks")
-    # chunk-only flush: tier-1 comes from the vectorized blob decode below.
-    # (Co-emitting 1s-window partial rows — flush(partial_window_us=...) —
-    # triples the write volume with a tier1-sized side table that the
-    # rollup stage would re-write anyway; decode CPU scales with cores,
-    # the extra write does not.)
+    # the flush writes chunks only: every tier comes from the vectorized
+    # blob decode below (decode CPU scales with cores; a tier-sized side
+    # table written at flush would not).
     # 1 MB parquet row groups make the chunk files SPLITTABLE: flush emits
     # one file per input split (~64 at bench scale), and with the default
     # 128 MB row groups the rollup scan bottoms out at one task per file —

@@ -87,9 +87,7 @@ def main() -> None:
                 "rows": df.count(),
                 "watermark_us": p.warehouse.watermark(spec.name),
             }
-    # tier == 0 only: ingest co-emits tier=-1 partial rows covering the same
-    # points; summing over all rows would double-count tokens (bench.py
-    # applies the same filter).
+    # tier-0 chunk rows: the points as flushed
     chunks = p.warehouse.read(spark, "chunks_tier0").filter(F.col("tier") == 0)
     agg = chunks.agg(
         F.sum("count"), F.sum("bytes_raw"),

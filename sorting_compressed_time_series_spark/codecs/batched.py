@@ -239,7 +239,7 @@ def decode_rows(
     starts = bs[:-1]
     if n_rows == 0:
         return np.empty(0, np.int64), np.zeros(1, np.int64)
-    # rows with no/short blob (e.g. co-emitted partial rows) decode to empty
+    # rows with no/short blob decode to empty
     valid = np.diff(bs) >= _HDR
     if not valid.any():
         return np.empty(0, np.int64), np.zeros(n_rows + 1, np.int64)

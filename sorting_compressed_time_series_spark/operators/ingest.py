@@ -105,15 +105,10 @@ def _segmented_stable_sort(flat_ts, splits, counts):
 
 
 def flush_kernel_batches(
-    batches: Iterator[pa.RecordBatch],
-    seed: int = 42,
-    partial_window_us: int | None = None,
+    batches: Iterator[pa.RecordBatch], seed: int = 42
 ) -> Iterator[pa.RecordBatch]:
-    """One pass per batch. With ``partial_window_us`` set, ALSO emits tier-1
-    window partials as extra rows (``tier = -1``, empty blobs) — the decoded
-    arrays are already in registers here, so the rollup's decode pass
-    disappears (IoTDB computes page statistics at flush for the same
-    reason). Partial rows are ~points/window_size and ride the same write."""
+    """One pass per batch: each input row becomes one sorted, encoded
+    tier-0 chunk row (``CHUNK_ARROW``)."""
     for batch in batches:
         t_start = time.perf_counter_ns()
         n = batch.num_rows
@@ -206,51 +201,8 @@ def flush_kernel_batches(
         ]
         yield pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW)
 
-        if partial_window_us is not None and len(ts):
-            win = ts // partial_window_us * partial_window_us
-            row_of = np.repeat(np.arange(n, dtype=np.int64), counts)
-            change = np.empty(len(win), dtype=bool)
-            change[0] = True
-            np.logical_or(win[1:] != win[:-1], row_of[1:] != row_of[:-1], out=change[1:])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(win))
-            g = len(starts)
-            grp_idx = pa.array(row_of[starts])
-            empty_blob = pa.Array.from_buffers(
-                pa.binary(), g,
-                [None, pa.py_buffer(np.zeros(g + 1, dtype=np.int32)),
-                 pa.py_buffer(np.empty(0, dtype=np.uint8))],
-            )
-            zeros32 = pa.array(np.zeros(g, dtype=np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_id.take(grp_idx),
-                    source.take(grp_idx),
-                    pa.array(np.full(g, -1, dtype=np.int32)),
-                    pa.array(win[starts]),
-                    pa.array((ends - starts).astype(np.int32)),
-                    pa.array(ts[starts]),
-                    pa.array(ts[ends - 1]),
-                    pa.array(np.minimum.reduceat(vals, starts).astype(np.int64)),
-                    pa.array(np.maximum.reduceat(vals, starts).astype(np.int64)),
-                    pa.array(vals[starts].astype(np.int64)),
-                    pa.array(vals[ends - 1].astype(np.int64)),
-                    pa.array(np.add.reduceat(vals, starts, dtype=np.int64)),
-                    zeros32,
-                    pa.array(np.ones(g, dtype=bool)),
-                    pa.array(np.zeros(g, dtype=np.int64)),
-                    zeros32,
-                    zeros32,
-                    empty_blob,
-                    empty_blob,
-                    pa.array(np.zeros(g, dtype=np.int64)),
-                ],
-                schema=CHUNK_ARROW,
-            )
 
-
-def flush(tokens_df: DataFrame, seed: int = 42, partitions: int | None = None,
-          partial_window_us: int | None = None) -> DataFrame:
+def flush(tokens_df: DataFrame, seed: int = 42, partitions: int | None = None) -> DataFrame:
     """tokens → tier-0 chunks. Repartition by doc hash for even spread
     (the source column is skewed; doc_id is not — hashing on it avoids the
     hot-source problem without salting at this stage; salted paths are used
@@ -260,6 +212,6 @@ def flush(tokens_df: DataFrame, seed: int = 42, partitions: int | None = None,
         df = df.repartition(partitions, "doc_id")
 
     def kern(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return flush_kernel_batches(it, seed, partial_window_us)
+        return flush_kernel_batches(it, seed)
 
     return df.mapInArrow(kern, schema=CHUNK_SCHEMA)

@@ -7,15 +7,16 @@ AggrWindowIterator.java:30-33) — with the accumulator set
 count/sum/min/max/avg/first/last (reference execution/aggregation/*).
 
 Physical design (the SeriesAggregationScanOperator idea made structural,
-SURVEY.md §2.5): tier-1 partials are computed INSIDE the decode kernel —
-per (chunk, window) via ``np.*.reduceat`` on the decoded arrays — so the
-shuffle that follows carries one row per (doc, window), not one per point.
-Catalyst then runs partial/final aggregation on top for chunks that split
-a window. Tiers ≥ 2 never touch points or Python: they are pure
-DataFrame ``groupBy`` over the next-finer tier, and every aggregate
-composes (sum of sums, min of mins, first by earliest first_ts, ...).
-The fused ``rollup_tiers`` does the same merges inside its kernel when
-every chunk of a doc reaches one task, and then needs no shuffle at all.
+SURVEY.md §2.5): ``rollup_tiers`` computes every tier in ONE decode pass.
+The finest tier's partials are computed INSIDE the decode kernel — per
+(chunk, window) via ``np.*.reduceat`` on the decoded arrays — and each
+coarser (nested) tier is cascaded from the finer tier's rows in the same
+kernel: every aggregate composes (sum of sums, min of mins, first by
+earliest first_ts, ...), so coarser tiers never touch points again. When
+every chunk of a doc reaches one task the kernel merges the doc's chunks
+itself and needs no shuffle at all; otherwise its partials carry one row
+per (chunk, window), not one per point, and ``_finalize`` merges them
+through one shuffle.
 
 Windows fully covered by a chunk can be answered from chunk statistics
 alone (`rollup_from_stats`) without decoding any blob.
@@ -88,10 +89,10 @@ def decode_points(chunks_df: DataFrame) -> DataFrame:
     )
 
 
-def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFrame:
-    """Merge partials across chunks of the same (doc, window) — Catalyst
-    plans this as partial+final HashAggregate, map-side combined."""
-    return partials.groupBy(*extra_keys, "doc_id", "source", "window_start").agg(
+def _finalize(partials: DataFrame) -> DataFrame:
+    """Merge partials across chunks of the same (tier, doc, window) —
+    Catalyst plans this as partial+final HashAggregate, map-side combined."""
+    return partials.groupBy("tier", "doc_id", "source", "window_start").agg(
         F.sum("cnt").alias("cnt"),
         F.sum("sum_v").alias("sum_v"),
         F.min("min_v").alias("min_v"),
@@ -101,44 +102,6 @@ def _finalize(partials: DataFrame, extra_keys: tuple[str, ...] = ()) -> DataFram
         F.max("last_ts").alias("last_ts"),
         F.max_by("last_v", "last_ts").alias("last_v"),
     )
-
-
-def rollup_tier1(chunks_df: DataFrame, window_us: int = WINDOW_1M_US) -> DataFrame:
-    """tier0 chunks → tier1 windowed aggregates (decode happens here, once):
-    the one-tier case of ``rollup_tiers``."""
-    return rollup_tiers(chunks_df, [window_us]).drop("tier")
-
-
-def tier1_from_flush(flush_df: DataFrame) -> DataFrame:
-    """Tier-1 from the partial rows the flush kernel co-emitted (tier = -1):
-    no decode, no Python — one groupBy over pre-reduced rows. This is the
-    fast path when ingest ran with ``partial_window_us``."""
-    partials = flush_df.filter(F.col("tier") == -1).select(
-        "doc_id",
-        "source",
-        "window_start",
-        F.col("count").cast("bigint").alias("cnt"),
-        "sum_v",
-        "min_v",
-        "max_v",
-        F.col("min_ts").alias("first_ts"),
-        "first_v",
-        F.col("max_ts").alias("last_ts"),
-        "last_v",
-    )
-    return _finalize(partials)
-
-
-def promote(tier_df: DataFrame, coarser_window_us: int) -> DataFrame:
-    """tier k → tier k+1: pure DataFrame over pre-aggregated rows.
-    No Python, no decode — this is the cheap cascade that makes multi-tier
-    downsampling nearly free at 100 TB (each tier is ~window-ratio smaller)."""
-    # exact integer bucketing (epoch-µs exceeds 2^53; see windows.tumbling)
-    regrouped = tier_df.withColumn(
-        "window_start",
-        F.expr(f"(window_start div {coarser_window_us}) * {coarser_window_us}"),
-    )
-    return _finalize(regrouped)
 
 
 def with_avg(tier_df: DataFrame) -> DataFrame:
@@ -345,9 +308,8 @@ def whole_doc_rollup(chunks_df: DataFrame, windows_us: list[int]):
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
                  whole_docs: bool = False) -> DataFrame:
     """All retention tiers in ONE pass: rows carry ``tier`` = index into
-    ``windows_us``, each window a multiple of the one before. Equivalent to
-    ``rollup_tier1`` + a ``promote()`` cascade (pytest-asserted), with one
-    decode and one write instead of a write+read-back per tier.
+    ``windows_us``, each window a multiple of the one before. Every tier
+    equals a pandas recompute from the decoded points (pytest-asserted).
 
     ``whole_docs=True`` promises that every chunk of a doc reaches one task
     (a bucketed scan by ``doc_id`` that reads whole buckets, or one chunk
@@ -360,4 +322,4 @@ def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
         return src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
     kern = tiers_kernel(windows_us)
     partials = chunks_df.select(*ROLLUP_INPUT).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
-    return _finalize(partials, extra_keys=("tier",))
+    return _finalize(partials)

@@ -15,11 +15,11 @@ checkpoint-resume oracle in tests/test_warehouse_promotion.py).
 from __future__ import annotations
 
 import functools
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -31,8 +31,6 @@ from ..operators.rollup import (
     TIER_PARTIAL_ARROW,
     WINDOW_1H_US,
     WINDOW_1M_US,
-    promote,
-    rollup_tier1,
     tiers_kernel,
     whole_doc_rollup,
 )
@@ -56,15 +54,23 @@ DEFAULT_TIERS = [
 ]
 
 
-def _below_horizons(kern, horizons: list[int]):
-    """``kern`` keeping only the rows whose ``window_start`` lies below
-    their tier's horizon (``horizons[tier]``): the complete windows."""
-    limit = np.asarray(horizons, dtype=np.int64)
+def _promoted_rows(kern, lo: list[int], hi: list[int], dirty: list[str]):
+    """``kern`` keeping the rows the promotion commits: those of tier ``t``
+    whose window lies below ``hi[t]`` and starts at or after ``lo[t]`` or
+    belongs to a doc in ``dirty``."""
+    lo, hi = np.asarray(lo, dtype=np.int64), np.asarray(hi, dtype=np.int64)
+    dirty = pa.array(dirty, pa.string())
 
     def run(batches):
         for batch in kern(batches):
-            keep = (batch.column("window_start").to_numpy()
-                    < limit[batch.column("tier").to_numpy()])
+            tier = batch.column("tier").to_numpy()
+            win = batch.column("window_start").to_numpy()
+            below = win < hi[tier]
+            keep = below & (win >= lo[tier])
+            if len(dirty):
+                doc = batch.column("doc_id")
+                keep |= below & pc.is_in(doc, value_set=dirty.cast(doc.type)).to_numpy(
+                    zero_copy_only=False)
             yield batch if keep.all() else batch.filter(pa.array(keep))
 
     return run
@@ -102,6 +108,10 @@ class Pipeline:
     spark: SparkSession
     warehouse: Warehouse
     tiers: list[TierSpec] = field(default_factory=lambda: list(DEFAULT_TIERS))
+
+    def __post_init__(self):
+        # each tier is cascaded from the finer one in the rollup kernel
+        tiers_kernel([spec.window_us for spec in self.tiers])  # raises unless they nest
 
     def _bucket_by(self) -> tuple[str, int]:
         """Hash-bucket spec of the chunk table (Iceberg ``bucket(doc_id, N)``
@@ -158,31 +168,48 @@ class Pipeline:
     @_described
     def promote_all(self, up_to_us: int | None = None,
                     collect_stats: bool = False) -> list[dict]:
-        """Promote each tier up to its source's complete windows.
+        """Promote each tier up to its complete windows, in ONE plan.
 
-        Three regimes per tier, all deterministic and idempotent:
+        Per tier ``t`` the driver finds ``hi_t``, the end of the complete
+        windows (all of them when ``up_to_us`` is None: the data is closed),
+        and ``lo_t``, the tier's watermark, and picks a mode, all
+        deterministic and idempotent:
         - **full** (no watermark yet): compute every window;
-        - **incremental** (watermark advance): keep rows below the
-          watermark, compute only [watermark, complete) from the finer
-          source filtered to that range (exact — a window's inputs all
-          carry window_start ≥ watermark);
-        - **merge** (pending appended segments): additionally recompute the
-          windows of JUST the appended docs below the watermark and splice
-          them over the kept rows (anti-join) — appends never trigger a
-          full recompute (the reference's compaction-then-requery shape;
-          per-key MERGE INTO on Iceberg).
+        - **incremental** (watermark advance): keep the rows below ``lo_t``
+          and compute the windows in ``[lo_t, hi_t)``;
+        - **merge** (pending appended segments): also recompute the windows
+          of JUST the appended docs ``D`` below ``lo_t`` over the kept rows
+          — an append never triggers a full recompute (the reference's
+          compaction-then-requery shape; per-key MERGE INTO on Iceberg);
+        - **noop**: ``lo_t ≥ hi_t`` and nothing pending. When every tier is
+          a noop the call returns without a Spark job.
 
-        With no watermark on any tier, no pending append and nested
-        windows, every tier is computed in ONE job (``_promote_all_fused``),
-        which reads the chunk files itself when the table is one bucketed
-        snapshot. The chunk table is read through ``Warehouse.read`` only
-        where a frame is needed: the per-tier cascade, and ``max(max_ts)``
-        when a file lacks footer statistics.
+        The tier's new watermark is ``W_t = max(hi_t, lo_t)``: an append of
+        old data can leave ``hi_t < lo_t``, and the checkpoint never
+        regresses. Every tier with work comes from one kernel job: the
+        fused rollup decodes the tier-0 chunks with ``max_ts ≥ min(lo_t)``
+        (every chunk for a full tier) and every chunk of a doc in ``D``, and
+        keeps tier ``t``'s rows with ``win < W_t`` and ``win ≥ lo_t`` or the
+        doc in ``D``. That is exact: a window at or after ``lo_t`` takes
+        points only from chunks with ``max_ts ≥ lo_t``, and a doc in ``D``
+        has all of its chunks decoded; the windows nest, so each tier
+        computed from the points equals the finer tier cascaded. The kept
+        rows — the old table below ``lo_t`` without ``D``'s docs — never
+        share a (doc, window) with the computed ones, so they need no
+        co-location with the chunks: they pass through the same writer, in
+        the same job, and one ``Warehouse.write_slices`` commits every tier
+        with its own watermark.
 
-        Returns a per-tier summary; with ``collect_stats`` it includes
-        recomputed/kept row counts (extra count jobs — tests only)."""
+        The kernel's tasks read the chunk files themselves when the table
+        is one bucketed snapshot (``_doc_buckets``: task ``b`` reads bucket
+        ``b``'s files with pyarrow, no scan or exchange in the JVM);
+        otherwise the chunks are read as a frame and hash-partitioned by
+        doc_id first (one shuffle, Spark's sort, same kernel and writer).
+        ``D`` is read on the driver from the pending segments' files.
+
+        Returns a per-tier summary; with ``collect_stats`` it includes the
+        kept and recomputed row counts (an extra count job — tests only)."""
         wh = self.warehouse
-        chunks = None
         # the parquet footers answer max(max_ts) when every row is a tier-0
         # chunk; a Spark job only when a file lacks the statistics
         _, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
@@ -192,162 +219,79 @@ class Pipeline:
             chunks = wh.read(self.spark, "chunks_tier0")
             data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
         pending = wh.pending_appends("chunks_tier0")
-        dirty = None
-        if pending:
-            seg = wh.read_segment(self.spark, "chunks_tier0", pending[0])
-            for s in pending[1:]:
-                seg = seg.unionByName(wh.read_segment(self.spark, "chunks_tier0", s))
-            dirty = seg.filter(F.col("tier") == 0).select("doc_id").distinct()
-
-        def tier1_fresh(src):
-            return rollup_tier1(src.filter(F.col("tier") == 0), self.tiers[0].window_us)
-
-        # Fused full-mode fast path: no tier has a watermark yet and no
-        # appends are pending → every tier is a fresh computation over the
-        # same points, so one rollup_tiers() decode job can feed all of
-        # them. Requires nested windows (each coarser tier an integer
-        # multiple of the finer) for direct-from-points ≡ cascade equality.
-        nested = all(
-            self.tiers[j + 1].window_us % self.tiers[j].window_us == 0
-            for j in range(len(self.tiers) - 1)
-        )
-        if (
-            not pending
-            and nested
-            and len(self.tiers) > 1
-            and not os.environ.get("SPARK_GRAFT_NO_FUSED_PROMOTE")
-            and all(wh.watermark(spec.name) is None for spec in self.tiers)
-        ):
-            return self._promote_all_fused(data_max, up_to_us, collect_stats)
-
-        if chunks is None:
-            chunks = wh.read(self.spark, "chunks_tier0")
-        summary: list[dict] = []
-        prev_df = None
-        for i, spec in enumerate(self.tiers):
-            if up_to_us is None:
-                # final batch run: every window is complete (data is closed)
-                complete = (data_max // spec.window_us + 1) * spec.window_us
-            else:
-                # incremental run: only windows fully below the horizon
-                complete = (min(up_to_us, data_max) // spec.window_us) * spec.window_us
-            already = wh.watermark(spec.name)
-            if already is not None and already >= complete and not pending:
-                prev_df = wh.read(self.spark, spec.name)
-                summary.append({"tier": spec.name, "mode": "noop"})
-                continue
-            source = chunks if i == 0 else prev_df
-            fresh_of = tier1_fresh if i == 0 else (
-                lambda src, w=spec.window_us: promote(src, w)
-            )
-            win = F.col("window_start")
-            new_wm = int(complete)
-            if already is None:
-                out = fresh_of(source).filter(win < F.lit(complete))
-                mode = "full"
-                stats_dfs = {"recomputed": out}
-            else:
-                lo = int(already)
-                # an append of old-only data can leave complete < watermark;
-                # never regress the checkpoint
-                new_wm = max(new_wm, lo)
-                old = wh.read(self.spark, spec.name).drop("p_day").filter(win < F.lit(lo))
-                # tail: windows in [lo, complete) — the finer source rows
-                # that can contribute all carry window_start/min-ts ≥ lo
-                if i == 0:
-                    tail_src = chunks.filter(
-                        (F.col("tier") == 0) & (F.col("max_ts") >= F.lit(lo))
-                    )
-                else:
-                    tail_src = prev_df.filter(win >= F.lit(lo))
-                fresh_tail = fresh_of(tail_src).filter(
-                    (win >= F.lit(lo)) & (win < F.lit(complete))
-                )
-                if dirty is not None:
-                    kept = old.join(F.broadcast(dirty), "doc_id", "left_anti")
-                    dirty_src = source.join(F.broadcast(dirty), "doc_id", "left_semi")
-                    fresh_dirty = fresh_of(dirty_src).filter(win < F.lit(lo))
-                    out = kept.unionByName(fresh_dirty).unionByName(fresh_tail)
-                    mode = "merge"
-                    stats_dfs = {"kept": kept, "recomputed_dirty": fresh_dirty,
-                                 "recomputed_tail": fresh_tail}
-                else:
-                    out = old.unionByName(fresh_tail)
-                    mode = "incremental"
-                    stats_dfs = {"kept": old, "recomputed": fresh_tail}
-            entry = {"tier": spec.name, "mode": mode, "watermark_us": int(complete)}
-            if collect_stats:
-                # count BEFORE the write: the commit retires the old
-                # snapshot these frames still read from
-                entry.update({k: df.count() for k, df in stats_dfs.items()})
-            wh.write(with_p_day(out), spec.name, partition_by=("p_day",),
-                     watermark_us=new_wm, op=f"promote@{new_wm}:{mode}")
-            prev_df = wh.read(self.spark, spec.name)
-            summary.append(entry)
-        if pending:
-            wh.clear_pending("chunks_tier0")
-        return summary
-
-    def _promote_all_fused(self, data_max: int, up_to_us: int | None,
-                           collect_stats: bool) -> list[dict]:
-        """All-tiers-fresh promotion from ONE decode pass, in ONE job.
-
-        The per-tier cascade costs a write + read-back per tier (a fixed
-        ~0.5 s/job wall that does NOT shrink with cores — the dominant
-        non-scaling component measured in BENCH.md). Here every chunk of a
-        doc reaches one task, sorted by doc, and the fused rollup kernel
-        decodes every chunk once, merges each doc's chunks itself and emits
-        every tier's final rows together; its tasks write them to parquet
-        per ``(tier, p_day)`` and ``Warehouse.write_slices`` moves each
-        tier's files into that tier table's snapshot (filesystem moves +
-        per-table manifest swaps, no extra jobs).
-
-        When the chunk table is one snapshot bucketed by doc_id
-        (``Warehouse.bucket_files``), the job runs over ``spark.range`` of
-        the bucket ids and task ``b`` reads bucket ``b``'s files itself
-        with pyarrow (``bucket_reader``: the rollup's columns, tier-0 rows,
-        sorted by doc in Arrow) — no scan, sort or Arrow transfer in the
-        JVM, no catalog. A bucket whose uncompressed bytes pass
-        ``spark.python.worker.memory`` would sit whole in the task without
-        spilling, so then, as for any other chunk table, the chunks are
-        read as a frame and hash-partitioned by doc_id first (one shuffle,
-        Spark's sort, same kernel and writer)."""
-        wh = self.warehouse
-        completes: list[int] = []
+        lo, wm, modes = [], [], []  # per tier: watermark, new watermark, mode
         for spec in self.tiers:
-            if up_to_us is None:
-                completes.append((data_max // spec.window_us + 1) * spec.window_us)
-            else:
-                completes.append(
-                    (min(up_to_us, data_max) // spec.window_us) * spec.window_us
-                )
+            w = spec.window_us
+            complete = ((data_max // w + 1) * w if up_to_us is None
+                        else min(up_to_us, data_max) // w * w)
+            mark = wh.watermark(spec.name)
+            lo.append(mark)
+            wm.append(int(complete) if mark is None else max(int(complete), mark))
+            modes.append("full" if mark is None else "merge" if pending
+                         else "noop" if mark >= complete else "incremental")
+        work = {t: spec.name for t, spec in enumerate(self.tiers) if modes[t] != "noop"}
+        if not work:
+            return [{"tier": spec.name, "mode": "noop"} for spec in self.tiers]
+
+        dirty = wh.pending_keys("chunks_tier0", "doc_id")
+        marks = [lo[t] for t in work]
+        lo_min = None if None in marks else min(marks)
         windows = [spec.window_us for spec in self.tiers]
+        # no pending segment here: a snapshot maps to buckets only alone
         buckets = self._doc_buckets()
         read = None
         if buckets is not None:
             src = self.spark.range(len(buckets), numPartitions=len(buckets))
             kern = tiers_kernel(windows)
             batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-            read = bucket_reader(buckets, ROLLUP_INPUT, filters=[("tier", "=", 0)],
+            filters = [("tier", "=", 0)] + ([] if lo_min is None else [("max_ts", ">=", lo_min)])
+            read = bucket_reader(buckets, ROLLUP_INPUT, filters=filters,
                                  sort_by=DOC_ORDER, batch_rows=batch_rows)
         else:
-            chunks = wh.read(self.spark, "chunks_tier0", bucketed=False)
-            chunks = chunks.filter(F.col("tier") == 0)
+            keep = F.col("tier") == 0
+            if lo_min is not None:
+                recent = F.col("max_ts") >= lo_min
+                if dirty:
+                    recent |= F.col("doc_id").isin(dirty)
+                keep &= recent
+            chunks = wh.read(self.spark, "chunks_tier0", bucketed=False).filter(keep)
             src, kern = whole_doc_rollup(chunks.repartition("doc_id"), windows)
-        tables = {t: spec.name for t, spec in enumerate(self.tiers)}
-        files = wh.kernel_writer(list(tables.values()), TIER_PARTIAL_ARROW, slice_col="tier")
-        wh.write_slices(
-            files.frame(src, _below_horizons(kern, completes), read), "tier", tables,
-            partition_by=("p_day",),
-            watermarks={t: int(c) for t, c in enumerate(completes)},
-            op="promote:full-fused", files=files,
-        )
+
+        files = wh.kernel_writer(list(work.values()), TIER_PARTIAL_ARROW, slice_col="tier")
+        never = np.iinfo(np.int64).min  # a full tier's lo; a noop tier's hi
+        out = files.frame(src, _promoted_rows(
+            kern, [never if m is None else m for m in lo],
+            [wm[t] if t in work else never for t in range(len(self.tiers))], dirty), read)
+        kept = None
+        for t, name in work.items():
+            if lo[t] is None:
+                continue
+            old = (wh.read(self.spark, name).drop("p_day")
+                   .filter(F.col("window_start") < lo[t]).withColumn("tier", F.lit(t)))
+            if dirty:
+                old = old.filter(~F.coalesce(F.col("doc_id").isin(dirty), F.lit(False)))
+            kept = old if kept is None else kept.unionByName(old)
+        n_kept = dict.fromkeys(work, 0)
+        if kept is not None:
+            if collect_stats:
+                # count BEFORE the write: the commit retires the old
+                # snapshots these rows are read from
+                n_kept.update(kept.groupBy("tier").count().collect())
+            out = out.unionByName(files.frame(kept, iter))  # the rows as they are
+        wh.write_slices(out, "tier", work, partition_by=("p_day",),
+                        watermarks={t: wm[t] for t in work},
+                        op="promote:" + "+".join(dict.fromkeys(modes[t] for t in work)),
+                        files=files)
+        if pending:
+            wh.clear_pending("chunks_tier0")
         summary = []
         for t, spec in enumerate(self.tiers):
-            entry = {"tier": spec.name, "mode": "full",
-                     "watermark_us": int(completes[t])}
-            if collect_stats:
-                entry["recomputed"] = wh.manifest(spec.name)["lineage"][-1]["rows"]
+            entry = {"tier": spec.name, "mode": modes[t]}
+            if t in work:
+                entry["watermark_us"] = wm[t]
+                if collect_stats:
+                    rows = wh.manifest(spec.name)["lineage"][-1]["rows"]
+                    entry.update(kept=n_kept[t], recomputed=rows - n_kept[t])
             summary.append(entry)
         return summary
 
@@ -361,8 +305,6 @@ class Pipeline:
         so promoted tiers stay valid and are untouched. Refuses to run
         over un-promoted appends: the consolidating write would retire the
         pending-segment bookkeeping the next MERGE promotion needs."""
-        from pyspark.sql import functions as F  # local: keep module header lean
-
         from ..operators.compaction import compact_chunks
 
         wh = self.warehouse
@@ -379,12 +321,9 @@ class Pipeline:
         if n_multi == 0:
             return {"compacted_docs": 0}
         merged = compact_chunks(t0.join(F.broadcast(multi), "doc_id", "left_semi"))
-        # keep: single-chunk docs' tier-0 rows untouched, and ALL tier=-1
-        # partial rows (they are per (doc, window) aggregates of the same
-        # points — still valid after the merge)
+        # single-chunk docs' rows stay as they are
         singles = t0.drop("p_day").join(F.broadcast(multi), "doc_id", "left_anti")
-        partials = chunks.drop("p_day").filter(F.col("tier") == -1)
-        out = singles.unionByName(merged).unionByName(partials)
+        out = singles.unionByName(merged)
         # re-cluster on write: the consolidated snapshot is bucketed again,
         # so the NEXT compaction/merge over it is exchange-free even after
         # appends broke the previous clustering

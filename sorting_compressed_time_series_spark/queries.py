@@ -45,9 +45,8 @@ from .operators.rollup import (
     WINDOW_1H_US,
     WINDOW_1M_US,
     decode_points,
-    promote,
     rollup_from_stats,
-    rollup_tier1,
+    rollup_tiers,
     with_avg,
 )
 
@@ -371,7 +370,7 @@ def rollup_1m(spark, sf_dir):
     encode per-user chunks, window partials inside the decode kernel,
     Catalyst final-aggregates (IoTDB GROUP BY ([t1,t2), 1m) semantics,
     left-closed right-open, epoch aligned)."""
-    return _tier_out(rollup_tier1(_chunks_for_rollup(spark, sf_dir), US_1M))
+    return _tier_out(rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M]))
 
 
 @q("rollup_1h_from_1m", _rollup_oracle(US_1H))
@@ -380,8 +379,8 @@ def rollup_1h_from_1m(spark, sf_dir):
     (sum of sums, min of mins, first by earliest first_ts...) — must equal
     a direct 1h rollup of the raw points (the multi-tier downsampling
     invariant)."""
-    t1 = rollup_tier1(_chunks_for_rollup(spark, sf_dir), US_1M)
-    return _tier_out(promote(t1, US_1H))
+    tiers = rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M, US_1H])
+    return _tier_out(tiers.filter(F.col("tier") == 1))
 
 
 @q(
@@ -2083,9 +2082,9 @@ def _tokens_points_cte() -> str:
 
 def _tokens_pipeline_oracle() -> str:
     """Exact tier-2 oracle: regenerate the point stream in SQL, aggregate
-    straight to 1-minute windows (tier1(1s)→promote(1m) composes to the
-    same result: sums of sums, mins of mins, first by earliest first_ts —
-    1s windows are disjoint ts ranges so the promote tie-break is vacuous).
+    straight to 1-minute windows (the engine's 1s→1m cascade composes to
+    the same result: sums of sums, mins of mins, first by earliest first_ts
+    — 1s windows are disjoint ts ranges so the cascade tie-break is vacuous).
     Within-window first/last tie-break on equal ts mirrors the flush
     kernel's STABLE per-row sort: arrival (pos) order."""
     return f"""
@@ -2114,8 +2113,8 @@ def tokens_pipeline_tiers(spark, sf_dir):
     directly, so encode→sort→decode→rollup must be value-exact end-to-end."""
     toks = _gen_tokens(spark, _tokens_docs(sf_dir))
     chunks = _flush(toks)
-    t1 = rollup_tier1(chunks, WINDOW_1S_US)
-    return with_avg(promote(t1, US_1M))
+    tiers = rollup_tiers(chunks, [WINDOW_1S_US, US_1M])
+    return with_avg(tiers.filter(F.col("tier") == 1).drop("tier"))
 
 
 @q(

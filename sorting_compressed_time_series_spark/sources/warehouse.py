@@ -27,6 +27,7 @@ enough to prove pruning.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -464,8 +465,9 @@ class Warehouse:
         moves plus per-table atomic manifest swaps — no extra jobs, no
         read-backs (the Iceberg analogue: one data write, N table commits).
         A crash between the per-table commits leaves earlier tables live
-        and later ones unpromoted; the deterministic per-tier promotion
-        path finishes them on rerun. A slice with zero rows commits a
+        and later ones unpromoted; a rerun of the promotion goes through
+        the same plan, with the committed tables as ``noop`` tiers, and
+        finishes the others. A slice with zero rows commits a
         hollow snapshot that reads back as an empty frame via the
         persisted schema."""
         assert files.slice_col == slice_col and tuple(partition_by) == ("p_day",)
@@ -523,11 +525,14 @@ class Warehouse:
         """Parquet files of the live snapshot and segments. Like Spark's
         file listing, skips every file or directory named ``_*`` or ``.*``
         (_SUCCESS, checksums, _temporary)."""
+        return [f for d in self._live_dirs(table, m) for f in self._dir_files(table, d)]
+
+    def _dir_files(self, table: str, d: str) -> list[str]:
+        """Parquet files under one snapshot or segment dir ``d``."""
         files = []
-        for d in self._live_dirs(table, m):
-            for dp, dirs, fs in os.walk(os.path.join(self.root, table, d)):
-                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-                files += [os.path.join(dp, f) for f in fs if not f.startswith(("_", "."))]
+        for dp, dirs, fs in os.walk(os.path.join(self.root, table, d)):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            files += [os.path.join(dp, f) for f in fs if not f.startswith(("_", "."))]
         return files
 
     @staticmethod
@@ -556,16 +561,6 @@ class Warehouse:
         when any row group lacks min/max statistics for it (or it is not
         stored in the files, e.g. a partition column)."""
         return self._footer_stats(self._data_files(table), columns)
-
-    def _empty_frame(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Empty DataFrame with the persisted schema (None for pre-schema
-        manifests)."""
-        m = self.manifest(table)
-        if not m.get("schema"):
-            return None
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
 
     @staticmethod
     def _is_hollow(path: str) -> bool:
@@ -645,34 +640,44 @@ class Warehouse:
         ``bucketed=False`` reads it as plain parquet, for a plan that
         repartitions by that column itself: Spark drops such a shuffle over
         a bucketed scan of equal partitioning, and then the bucketed scan
-        too (no operator above needs it), which splits the buckets."""
+        too (no operator above needs it), which splits the buckets. A plain
+        read takes its schema from the manifest, so it runs no Spark job
+        (only a manifest written before schemas were stored is inferred)."""
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
         name = self._bucketed_table(spark, table) if bucketed else None
         if name is not None:
             return spark.table(name)
-        paths = [os.path.join(self.root, table, d) for d in self._live_dirs(table)]
+        paths = [os.path.join(self.root, table, d) for d in self._live_dirs(table, m)]
+        # retention can hollow out every live dir: then the persisted schema
+        # still reads as an EMPTY frame
         live = [p for p in paths if not self._is_hollow(p)]
-        if not live:
-            empty = self._empty_frame(spark, table)
-            if empty is not None:
-                return empty
-            live = paths[:1]  # pre-schema manifest: legacy behavior
-        dfs = [spark.read.parquet(p) for p in live]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
+        if not m.get("schema"):
+            reader = spark.read
+            live = live or paths[:1]
+        else:
+            from pyspark.sql.types import StructType
 
-    def read_segment(self, spark: SparkSession, table: str, segment: str) -> DataFrame:
-        path = os.path.join(self.root, table, segment)
-        if self._is_hollow(path):
-            # retention can hollow out a pending segment; treat it as empty
-            empty = self._empty_frame(spark, table)
-            if empty is not None:
-                return empty
-        return spark.read.parquet(path)
+            schema = StructType.fromJson(json.loads(m["schema"]))
+            if not live:
+                return spark.createDataFrame([], schema)
+            reader = spark.read.schema(schema)
+        # one read per dir: each is a partitioned root of its own
+        return functools.reduce(DataFrame.unionByName, [reader.parquet(p) for p in live])
+
+    def pending_keys(self, table: str, column: str) -> list:
+        """The distinct non-null values of ``column`` in the pending appended
+        segments, read on the driver with pyarrow (that column only, from
+        the segments' files): no Spark job."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        files = [f for seg in self.pending_appends(table) for f in self._dir_files(table, seg)]
+        if not files:
+            return []
+        col = pq.read_table(files, columns=[column], use_threads=False).column(column)
+        return pc.unique(col.drop_null()).to_pylist()
 
     def pending_appends(self, table: str) -> list[str]:
         return self.manifest(table).get("pending_appends", [])

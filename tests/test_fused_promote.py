@@ -15,6 +15,11 @@ no scan and no exchange.
   ``spark.python.worker.memory``, sends the chunks through
   ``repartition("doc_id")`` into the same kernel — same tables;
 - crash between tier commits: a rerun finishes the job;
+- one plan for every regime: a no-op promote runs no job, a merge over
+  snapshot + segments runs one shuffle stage and one write and equals a
+  one-shot load, a resume over the bucketed snapshot reads the buckets,
+  a one-tier pipeline takes the same plan, and tier windows that do not
+  nest are refused when the pipeline is made;
 - job descriptions: the engine labels its own actions.
 """
 
@@ -22,6 +27,7 @@ import contextlib
 import io
 import os
 import re
+import uuid
 from functools import partial
 
 import numpy as np
@@ -40,7 +46,7 @@ from sorting_compressed_time_series_spark.operators.rollup import (
     rollup_tiers,
 )
 from sorting_compressed_time_series_spark.plans import pipeline
-from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
+from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
 
@@ -188,9 +194,23 @@ def small_batches(spark):
     spark.conf.set(key, prev)
 
 
-def _promote_plan(spark, p: Pipeline, monkeypatch) -> tuple[str, int]:
-    """promote_all(), returning the plan of the frame its write lands and
-    the number of Spark jobs it ran."""
+def _jobs(spark, fn, *args, **kwargs):
+    """``(fn(*args, **kwargs), the number of Spark jobs it ran)``."""
+    sc = spark.sparkContext
+    group = f"promote-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the tracker is fed asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _promote_plan(spark, p: Pipeline, monkeypatch, **kwargs) -> tuple[str, int]:
+    """promote_all(**kwargs), returning the plan of the frame its write
+    lands and the number of Spark jobs it ran."""
     plans = []
     orig = Warehouse.write_slices
 
@@ -199,17 +219,10 @@ def _promote_plan(spark, p: Pipeline, monkeypatch) -> tuple[str, int]:
         return orig(self, df, *args, **kwargs)
 
     monkeypatch.setattr(Warehouse, "write_slices", spy)
-    sc = spark.sparkContext
-    group = f"promote-{id(p)}"
-    sc.setJobGroup(group, group)
-    try:
-        p.promote_all()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    _, jobs = _jobs(spark, p.promote_all, **kwargs)
     monkeypatch.setattr(Warehouse, "write_slices", orig)
     assert len(plans) == 1
-    return plans[0], len(sc.statusTracker().getJobIdsForGroup(group))
+    return plans[0], jobs
 
 
 def _assert_bucket_read(plan: str) -> None:
@@ -335,8 +348,8 @@ def test_bucket_over_worker_memory_takes_repartition_plan(spark, tmp_path, multi
 
 def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk, monkeypatch):
     """write_slices fails after the first tier table's manifest swap; a
-    promote_all rerun (the mixed-watermark cascade) then yields the tier
-    tables and watermarks of an uninterrupted promotion."""
+    promote_all rerun (the same plan, the committed tier a noop) then
+    yields the tier tables and watermarks of an uninterrupted promotion."""
     chunks, want = multi_chunk
     ref = _warehouse(spark, tmp_path / "ref", chunks)
     ref.promote_all()
@@ -361,6 +374,102 @@ def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk,
     _assert_same_tiers(wh.root, ref.warehouse.root)
     for name in TIER_WINDOWS:
         assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+# ---------------------------------------------------------------------------
+# one plan for every regime
+# ---------------------------------------------------------------------------
+
+def test_noop_promote_runs_no_job(spark, tmp_path, multi_chunk, monkeypatch):
+    """Every tier up to date and nothing pending: promote_all reads no
+    table and starts no Spark job."""
+    chunks, _ = multi_chunk
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    p.promote_all()
+    reads = []
+    read = Warehouse.read
+    monkeypatch.setattr(Warehouse, "read",
+                        lambda self, *args, **kwargs: reads.append(args) or read(self, *args, **kwargs))
+    summary, jobs = _jobs(spark, p.promote_all)
+    assert [e["mode"] for e in summary] == ["noop"] * len(TIER_WINDOWS)
+    assert jobs == 0 and reads == []
+
+
+def test_merge_promote_is_one_plan_equal_to_oneshot(spark, tmp_path, monkeypatch):
+    """An append of new and re-delivered docs over a promoted snapshot: the
+    merge promote runs one shuffle stage and one write job over one doc_id
+    exchange, and its tier tables and watermarks equal a one-shot load of
+    the same deliveries."""
+    base = generate_tokens_df(spark, 60)
+    batch = generate_tokens_df(spark, 15, start=60).unionByName(
+        generate_tokens_df(spark, 8, start=20))
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(base)
+    p.promote_all()
+    p.ingest(batch, append=True)
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    assert plan.count("hashpartitioning(") == 1, plan
+    assert jobs <= 2
+    wh = p.warehouse
+    assert {wh.manifest(name)["lineage"][-1]["op"] for name in TIER_WINDOWS} == {"promote:merge"}
+    assert wh.pending_appends("chunks_tier0") == []
+
+    ref = Pipeline(spark, Warehouse(str(tmp_path / "ref")))
+    ref.ingest(base.unionByName(batch))
+    ref.promote_all()
+    _assert_same_tiers(wh.root, ref.warehouse.root)
+    for name in TIER_WINDOWS:
+        assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+def test_resume_over_bucketed_snapshot_reads_buckets(spark, tmp_path, multi_chunk,
+                                                     small_batches, monkeypatch):
+    """A promote stopped at ``up_to_us`` and then resumed: the resume reads
+    the chunk buckets in its tasks (a Range, no Exchange, no scan of the
+    chunk table), runs one job, and its tables and watermarks equal a
+    one-shot promote."""
+    chunks, want = multi_chunk
+    ref = _warehouse(spark, tmp_path / "ref", chunks)
+    ref.promote_all()
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    wh = p.warehouse
+    _, stats = wh.footer_stats("chunks_tier0", ("min_ts", "max_ts"))
+    p.promote_all(up_to_us=(stats["min_ts"][0] + stats["max_ts"][1]) // 2)
+    assert 0 < wh.manifest("tier1_1s")["lineage"][-1]["rows"] < len(want["tier1_1s"])
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    assert "Range" in plan and "Exchange" not in plan and "chunks_tier0" not in plan, plan
+    assert jobs == 1
+    assert {wh.manifest(name)["lineage"][-1]["op"] for name in TIER_WINDOWS} == {
+        "promote:incremental"}
+    assert check_tiers(wh.root, want) == []
+    _assert_same_tiers(wh.root, ref.warehouse.root)
+    for name in TIER_WINDOWS:
+        assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+def test_one_tier_pipeline_takes_the_same_plan(spark, tmp_path, multi_chunk, monkeypatch):
+    """A pipeline of one tier promotes through the same plan: the fresh
+    promote reads the buckets in one job, and a merge after an append of
+    re-delivered docs gives the recompute of every chunk's points."""
+    chunks, want = multi_chunk
+    wh = _warehouse(spark, tmp_path / "wh", chunks).warehouse
+    p = Pipeline(spark, wh, [TierSpec("tier1_1s", TIER_WINDOWS["tier1_1s"])])
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    _assert_bucket_read(plan)
+    assert jobs == 1
+    assert check_tiers(wh.root, {"tier1_1s": want["tier1_1s"]}) == []
+    p.ingest(generate_tokens_df(spark, 5), append=True)
+    assert [e["mode"] for e in p.promote_all()] == ["merge"]
+    points = decode_points(wh.read(spark, "chunks_tier0")).toPandas()
+    assert check_tiers(wh.root, {"tier1_1s": _expected(points)["tier1_1s"]}) == []
+
+
+def test_pipeline_refuses_windows_that_do_not_nest(tmp_path):
+    """Tiers whose windows do not nest are refused when the pipeline is
+    made, not at its first promote."""
+    with pytest.raises(ValueError, match="must nest"):
+        Pipeline(None, Warehouse(str(tmp_path)),
+                 [TierSpec("a", 1_000_000), TierSpec("b", 1_500_000)])
 
 
 def test_pipeline_stages_describe_their_jobs(spark, tmp_path, monkeypatch):

@@ -390,7 +390,7 @@ def test_lineage_records_task_timers(spark, tmp_path):
     wh = p.warehouse
     entries = wh.manifest("chunks_tier0")["lineage"] + [
         wh.manifest(name)["lineage"][-1] for name in TIER_WINDOWS]
-    assert [e["op"] for e in entries] == ["ingest", "append"] + ["promote:full-fused"] * 3
+    assert [e["op"] for e in entries] == ["ingest", "append"] + ["promote:full"] * 3
     for e in entries:
         assert all(e[t] >= 0 for t in TASK_TIMERS), e
         assert e["kernel_s"] > 0, e

@@ -13,9 +13,8 @@ from sorting_compressed_time_series_spark.operators.rollup import (
     WINDOW_1H_US,
     WINDOW_1M_US,
     decode_points,
-    promote,
     rollup_from_stats,
-    rollup_tier1,
+    rollup_tiers,
 )
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
@@ -108,7 +107,7 @@ def test_points_sorted_within_doc(chunks):
 
 
 def test_tier1_rollup_matches_pandas(spark, chunks):
-    tier1 = rollup_tier1(chunks, WINDOW_1M_US).toPandas()
+    tier1 = rollup_tiers(chunks, [WINDOW_1M_US]).drop("tier").toPandas()
     raw = decode_points(chunks).toPandas()
     raw["window_start"] = raw.ts // WINDOW_1M_US * WINDOW_1M_US
     raw = raw.sort_values(["doc_id", "ts"], kind="stable")
@@ -128,9 +127,11 @@ def test_tier1_rollup_matches_pandas(spark, chunks):
 
 
 def test_tier2_promotion_composes(spark, chunks):
-    tier1 = rollup_tier1(chunks, WINDOW_1M_US)
-    tier2 = promote(tier1, WINDOW_1H_US).toPandas()
-    direct = rollup_tier1(chunks, WINDOW_1H_US).toPandas()
+    """The 1 h tier cascaded from the 1 m tier's rows equals a direct 1 h
+    rollup of the points."""
+    tiers = rollup_tiers(chunks, [WINDOW_1M_US, WINDOW_1H_US])
+    tier2 = tiers.filter(F.col("tier") == 1).toPandas()
+    direct = rollup_tiers(chunks, [WINDOW_1H_US]).toPandas()
     a = tier2.set_index(["doc_id", "window_start"]).sort_index()
     b = direct.set_index(["doc_id", "window_start"]).sort_index()
     assert len(a) == len(b)
@@ -154,44 +155,27 @@ def test_stats_rollup_no_decode(spark, tokens, chunks):
     assert np.array_equal(got["sum_v"].to_numpy(), want["sum_v"].to_numpy())
 
 
-def test_fused_partials_equal_decode_rollup(spark, tokens):
-    from sorting_compressed_time_series_spark.operators.rollup import tier1_from_flush
-
-    fused = flush(tokens, SEED, partial_window_us=WINDOW_1M_US)
-    got = tier1_from_flush(fused).toPandas().set_index(["doc_id", "window_start"]).sort_index()
-    chunks_only = fused.filter(F.col("tier") == 0)
-    want = (
-        rollup_tier1(chunks_only, WINDOW_1M_US)
-        .toPandas()
-        .set_index(["doc_id", "window_start"])
-        .sort_index()
-    )
-    assert len(got) == len(want)
-    for col in ["cnt", "sum_v", "min_v", "max_v", "first_v", "last_v", "first_ts", "last_ts"]:
-        assert np.array_equal(got[col].to_numpy(), want[col].to_numpy()), col
-
-
 def test_rollup_tiers_fused_equals_cascade(spark, chunks):
-    """The fused one-pass multi-tier rollup must equal the tier1 +
-    promote() cascade at every granularity, in both modes: merged in the
-    kernel (one chunk per doc, so every doc's chunks reach one task) and
-    merged by the shuffle."""
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
-
+    """The fused one-pass multi-tier rollup equals an independent pandas
+    recompute from the decoded points at every granularity, in both modes:
+    merged in the kernel (one chunk per doc, so every doc's chunks reach
+    one task) and merged by the shuffle."""
     windows = [1_000_000, WINDOW_1M_US, WINDOW_1H_US]
     key = ["doc_id", "source", "window_start"]
 
     def canon(pdf):
         return pdf.sort_values(key).reset_index(drop=True)
 
+    points = decode_points(chunks).toPandas().sort_values(["doc_id", "ts"], kind="stable")
+    refs = {}
+    for t, w in enumerate(windows):
+        g = points.assign(window_start=points.ts // w * w).groupby(key, sort=True)
+        refs[t] = g.agg(cnt=("value", "size"), sum_v=("value", "sum"), min_v=("value", "min"),
+                        max_v=("value", "max"), first_ts=("ts", "first"),
+                        first_v=("value", "first"), last_ts=("ts", "last"),
+                        last_v=("value", "last")).reset_index()
     for whole in (True, False):
         fused = rollup_tiers(chunks, windows, whole_docs=whole).toPandas()
-        ref1 = rollup_tier1(chunks, windows[0])
-        refs = {0: ref1.toPandas()}
-        prev = ref1
-        for t, w in enumerate(windows[1:], start=1):
-            prev = promote(prev, w)
-            refs[t] = prev.toPandas()
         for t in range(len(windows)):
             got = canon(fused[fused.tier == t].drop(columns=["tier"]))
             want = canon(refs[t][got.columns])

@@ -62,24 +62,21 @@ def test_ttl_scalar_join_is_broadcast(spark):
 
 def test_rollup_cascade_has_single_shuffle_per_tier(spark, tmp_path):
     from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import (
-        WINDOW_1M_US,
-        promote,
-        rollup_tier1,
-    )
+    from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1M_US, rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 50)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    t1 = rollup_tier1(chunks, 1_000_000)
+    t1 = rollup_tiers(chunks, [1_000_000])
     plan = plan_of(t1, mode="simple")
     # partial+final HashAggregate around exactly one exchange
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "HashAggregate" in plan
-    t2 = promote(t1, WINDOW_1M_US)
+    # the coarser tier is cascaded inside the kernel: still one exchange
+    t2 = rollup_tiers(chunks, [1_000_000, WINDOW_1M_US])
     plan2 = plan_of(t2, mode="simple")
-    assert plan2.count("Exchange hashpartitioning") == 2, plan2  # t1's + t2's
+    assert plan2.count("Exchange hashpartitioning") == 1, plan2
 
 
 def test_pure_sql_operators_are_codegened(spark):
@@ -130,7 +127,7 @@ def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
     exchange at all: the kernel's rows are final and the tier-1 write runs
     at scan parallelism with no shuffle."""
     from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tier1, rollup_tiers
+    from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
 
     path = str(tmp_path / "chunks")
@@ -141,7 +138,7 @@ def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
     assert "Exchange" not in plan, plan
     # and it must equal the general (shuffled) path on this input
     a = whole.toPandas()
-    b = rollup_tier1(chunks, 1_000_000).toPandas()
+    b = rollup_tiers(chunks, [1_000_000], whole_docs=False).drop("tier").toPandas()
     key = ["doc_id", "window_start"]
     a = a.sort_values(key).reset_index(drop=True)
     b = b.sort_values(key).reset_index(drop=True)[a.columns]

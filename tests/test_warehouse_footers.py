@@ -9,6 +9,7 @@ commits the same watermarks."""
 import glob
 import os
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -113,3 +114,27 @@ def test_chunk_file_without_statistics_falls_back(spark, tmp_path_factory, loade
     assert len(jobs) > len(loaded[1]["promote"])  # the max(max_ts) job ran
     want = {s.name: loaded[0].watermark(s.name) for s in TIERS}
     assert {s.name: wh.watermark(s.name) for s in TIERS} == want == _spark_watermarks(spark, wh)
+
+
+def test_read_takes_the_manifest_schema(spark, tmp_path_factory):
+    """A table of a snapshot and two segments reads with the schema its
+    manifest stores: no Spark job before an action (a parquet schema
+    inference is one job per dir), and the rows of a read that infers it."""
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_schema")))
+    df = spark.range(60).select(F.col("id").alias("doc_id"), (F.col("id") % 3).alias("p_day"),
+                                (F.col("id") * 7).alias("v"))
+    wh.write(df, "t", partition_by=("p_day",))
+    wh.append_segment(df.limit(10), "t", partition_by=("p_day",))
+    wh.append_segment(df.filter("id > 50"), "t", partition_by=("p_day",))
+    read, jobs = _jobs_of(spark, "footers.read", wh.read, spark, "t")
+    assert jobs == []
+    inferred = [spark.read.parquet(os.path.join(wh.root, "t", d))
+                for d in wh._live_dirs("t")]
+    want = inferred[0].unionByName(inferred[1]).unionByName(inferred[2])
+    key = ["doc_id", "p_day", "v"]
+    got = read.toPandas()
+    assert list(got.columns) == list(want.columns)
+    pd.testing.assert_frame_equal(got.sort_values(key).reset_index(drop=True),
+                                  want.toPandas().sort_values(key).reset_index(drop=True),
+                                  check_dtype=False)
+    assert len(got) == 60 + 10 + 9

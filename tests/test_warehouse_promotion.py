@@ -14,6 +14,7 @@ from sorting_compressed_time_series_spark.operators.gapfill import gapfill
 from sorting_compressed_time_series_spark.operators.rollup import (
     WINDOW_1H_US,
     WINDOW_1M_US,
+    decode_points,
     with_avg,
 )
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
@@ -154,8 +155,7 @@ def test_incremental_append_equals_oneshot(spark, tmp_path_factory):
         assert entry["kept"] > 0, entry
         # 30 docs appended onto 50: recomputed windows stay well below the
         # untouched majority (a full recompute would have kept == 0)
-        recomputed = entry["recomputed_dirty"] + entry["recomputed_tail"]
-        assert recomputed < entry["kept"], entry
+        assert entry["recomputed"] < entry["kept"], entry
 
     for s in _tiers():
         a = _collect(one.read(spark, s.name))
@@ -166,22 +166,34 @@ def test_incremental_append_equals_oneshot(spark, tmp_path_factory):
     assert [e["mode"] for e in p2.promote_all()] == ["noop", "noop"]
 
 
-def test_fused_promote_equals_cascade(spark, tmp_path_factory, uninterrupted, monkeypatch):
-    """promote_all()'s fused full-mode fast path (ONE decode job + ONE
-    write via Warehouse.write_slices) must produce the same tier tables
-    and the same watermarks as the per-tier cascade."""
-    want, wh_fused = uninterrupted  # fixture ran the fused path (fresh wh)
-    monkeypatch.setenv("SPARK_GRAFT_NO_FUSED_PROMOTE", "1")
-    wh = Warehouse(str(tmp_path_factory.mktemp("wh_cascade")))
+def test_fused_promote_equals_cascade(spark, tmp_path_factory, uninterrupted):
+    """promote_all()'s one plan (ONE decode job + ONE write via
+    Warehouse.write_slices) writes tier tables equal to an independent
+    pandas recompute from the decoded points, with every tier's watermark
+    just past its last complete window."""
+    from perfbench.oracle import TIER_COLS
+
+    want, wh_first = uninterrupted
+    wh = Warehouse(str(tmp_path_factory.mktemp("wh_recompute")))
     p = Pipeline(spark, wh, _tiers())
     p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
     summary = p.promote_all()
     assert all(e["mode"] == "full" for e in summary)
+    points = decode_points(wh.read(spark, "chunks_tier0")).toPandas()
+    points = points.sort_values(["doc_id", "ts"], kind="stable")
+    data_max = int(points.ts.max())
     for s in _tiers():
+        w = s.window_us
+        pts = points.assign(window_start=points.ts // w * w)
+        g = pts.groupby(["doc_id", "source", "window_start"], sort=True)
+        exp = g.agg(cnt=("value", "size"), sum_v=("value", "sum"), min_v=("value", "min"),
+                    max_v=("value", "max"), first_ts=("ts", "first"), first_v=("value", "first"),
+                    last_ts=("ts", "last"), last_v=("value", "last")).reset_index()
+        exp = exp.sort_values(["doc_id", "window_start"]).reset_index(drop=True)
         got = _collect(wh.read(spark, s.name))
-        pd.testing.assert_frame_equal(got[want[s.name].columns], want[s.name],
-                                      check_dtype=False)
-        assert wh.watermark(s.name) == wh_fused.watermark(s.name)
+        pd.testing.assert_frame_equal(got[TIER_COLS], exp[TIER_COLS], check_dtype=False)
+        pd.testing.assert_frame_equal(want[s.name][TIER_COLS], exp[TIER_COLS], check_dtype=False)
+        assert wh.watermark(s.name) == (data_max // w + 1) * w == wh_first.watermark(s.name)
 
 
 def test_pipeline_compact_after_append(spark, tmp_path_factory):
