@@ -1,27 +1,27 @@
 """Compaction: merge a series' accumulated chunks into one sorted chunk.
 
 The Spark expression of the reference's compaction stage (SURVEY.md §3.4,
-PersistUncompressingSorter): multiple flushes leave multiple (possibly
-time-overlapping) chunks per series; compaction merges them per series
-with the page-merge kernel — splice fast path when chunk time ranges do
-not overlap (one patched boundary delta per seam, interiors untouched),
-stable k-way merge otherwise.
+ReadChunkCompactionPerformer / PersistUncompressingSorter): multiple
+flushes leave multiple (possibly time-overlapping) chunks per series;
+compaction merges them per series with the page-merge kernel — splice
+fast path when chunk time ranges do not overlap (one patched boundary
+delta per seam, interiors untouched), stable k-way merge otherwise.
 
-Physical shape: ``groupBy(doc_id).applyInPandas`` — chunk rows are tiny
-(blobs of a few KB), so a shuffle (when one happens) moves compressed
-bytes, never points.  When the chunk table was committed with
-``bucket_by=("doc_id", N)`` (Warehouse bucketed snapshots — the Iceberg
-``bucket(doc_id, N)`` stand-in) and is read through the session catalog,
-the scan reports ``HashPartitioning(doc_id, N)``, the groupBy's required
-distribution is already satisfied, and compaction runs with NO exchange
-at all (plan-audited in tests/test_plans.py).
+Physical shape: one whole-bucket kernel job (``Pipeline.compact``). The
+chunk table is bucketed by doc_id in its file names, so task ``b`` reads
+bucket ``b``'s chunk files itself, sorted by ``COMPACT_ORDER`` — every
+chunk of a doc adjacent, in time order, ties in commit order — and
+``compact_kernel`` passes single-chunk docs' rows through and merges the
+rest; the task writes bucket ``b``'s files of the new snapshot. No scan,
+no exchange, no per-group Python call.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+from collections.abc import Generator, Iterator
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
 
 from ..codecs.bytealigned import varint_decode
 from ..codecs.chunk import (
@@ -31,47 +31,93 @@ from ..codecs.chunk import (
     serialize_bytealigned,
     _body,
 )
-from .ingest import CHUNK_SCHEMA
+from .ingest import CHUNK_ARROW, WINDOW_1H_US
 from .page_merge import merge_pages
+from .rollup import _run_starts
 
-WINDOW_1H_US = 3_600_000_000
+# the order in which a task's chunks reach the kernel: a doc's chunks
+# adjacent, earliest first (the flush order of a series)
+COMPACT_ORDER = ("doc_id", "min_ts", "max_ts")
 
 
-def compact_chunks(chunks_df: DataFrame) -> DataFrame:
-    """Merge every series' tier-0 chunks into one chunk (order = flush
-    order by min_ts, stability gives last-writer-wins on ties)."""
+def compact_kernel(batches: Iterator[pa.RecordBatch]) -> Generator[pa.RecordBatch, None, int]:
+    """Over ``CHUNK_ARROW`` rows in ``COMPACT_ORDER``: the rows of a doc
+    with one chunk as they are, and ONE merged chunk per doc with two or
+    more. A doc whose chunks straddle batches is carried into the next
+    batch. Returns the number of docs merged."""
+    merged, carry = 0, None  # carry: the last doc of the batch before
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        if carry is not None:
+            batch = pa.Table.from_batches([carry, batch]).combine_chunks().to_batches()[0]
+        last = int(np.flatnonzero(_run_starts(batch.column("doc_id")))[-1])
+        carry = batch.slice(last)
+        if last:
+            merged += yield from _compact(batch.slice(0, last))
+    if carry is not None:
+        merged += yield from _compact(carry)
+    return merged
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["min_ts", "max_ts"], kind="stable")
-        tpages = [deserialize_bytealigned(_body(b)[1]) for b in pdf["time_blob"]]
-        vpages = [deserialize_bytealigned(_body(b)[1]) for b in pdf["value_blob"]]
-        mt, mv, lineage = merge_pages(tpages, vpages)
-        t_blob = serialize_bytealigned(mt, CODEC_DELTA)
-        v_blob = serialize_bytealigned(mv, CODEC_VARINT)
-        merged_vals = varint_decode(mv)
-        out = {
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "source": [pdf["source"].iloc[0]],
-            "tier": [0],
-            "window_start": [int(pdf["min_ts"].min()) // WINDOW_1H_US * WINDOW_1H_US],
-            "count": [int(pdf["count"].sum())],
-            "min_ts": [int(pdf["min_ts"].min())],
-            "max_ts": [int(pdf["max_ts"].max())],
-            "min_v": [int(pdf["min_v"].min())],
-            "max_v": [int(pdf["max_v"].max())],
-            "first_v": [int(merged_vals[0]) if len(merged_vals) else 0],
-            "last_v": [int(merged_vals[-1]) if len(merged_vals) else 0],
-            "sum_v": [int(pdf["sum_v"].sum())],
-            "n_inversions": [int(pdf["n_inversions"].sum())],
-            "sorted_input": [bool(pdf["sorted_input"].all())],
-            "bytes_raw": [int(pdf["bytes_raw"].sum())],
-            "bytes_time": [len(t_blob)],
-            "bytes_value": [len(v_blob)],
-            "time_blob": [t_blob],
-            "value_blob": [v_blob],
-            "encode_ns": [int(pdf["encode_ns"].sum())],
-        }
-        return pd.DataFrame(out)
 
-    src = chunks_df.filter("tier = 0")
-    return src.groupBy("doc_id").applyInPandas(kern, schema=CHUNK_SCHEMA)
+def _compact(rows: pa.RecordBatch) -> Generator[pa.RecordBatch, None, int]:
+    """``compact_kernel`` over rows that hold whole docs."""
+    starts = np.flatnonzero(_run_starts(rows.column("doc_id")))
+    sizes = np.diff(np.append(starts, rows.num_rows))
+    multi = sizes > 1
+    if not multi.any():
+        yield rows
+        return 0
+    in_multi = np.repeat(multi, sizes)
+    yield rows.filter(pa.array(~in_multi))
+    yield _merge_docs(rows.filter(pa.array(in_multi)), np.cumsum(sizes[multi]) - sizes[multi])
+    return int(multi.sum())
+
+
+def _merge_docs(rows: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
+    """One chunk per doc run ``rows[starts[i]:starts[i + 1]]`` (each of two
+    or more rows): the pages merged by ``merge_pages`` in the run's order,
+    and the stats folded from the run's rows."""
+    ends = np.append(starts[1:], rows.num_rows)
+
+    def fold(ufunc, col):
+        return ufunc.reduceat(rows.column(col).to_numpy(zero_copy_only=False), starts)
+
+    t_blobs, v_blobs, firsts, lasts = [], [], [], []
+    tcol, vcol = rows.column("time_blob"), rows.column("value_blob")
+    for s, e in zip(starts, ends):
+        tpages = [deserialize_bytealigned(_body(tcol[i].as_py())[1]) for i in range(s, e)]
+        vpages = [deserialize_bytealigned(_body(vcol[i].as_py())[1]) for i in range(s, e)]
+        mt, mv, _ = merge_pages(tpages, vpages)
+        t_blobs.append(serialize_bytealigned(mt, CODEC_DELTA))
+        v_blobs.append(serialize_bytealigned(mv, CODEC_VARINT))
+        vals = varint_decode(mv)
+        firsts.append(int(vals[0]) if len(vals) else 0)
+        lasts.append(int(vals[-1]) if len(vals) else 0)
+    first = pa.array(starts)
+    min_ts = fold(np.minimum, "min_ts")
+    cols = {
+        "doc_id": rows.column("doc_id").take(first),
+        "source": rows.column("source").take(first),
+        "tier": np.zeros(len(starts), np.int32),
+        "window_start": min_ts // WINDOW_1H_US * WINDOW_1H_US,
+        "count": fold(np.add, "count"),
+        "min_ts": min_ts,
+        "max_ts": fold(np.maximum, "max_ts"),
+        "min_v": fold(np.minimum, "min_v"),
+        "max_v": fold(np.maximum, "max_v"),
+        "first_v": firsts,
+        "last_v": lasts,
+        "sum_v": fold(np.add, "sum_v"),
+        "n_inversions": fold(np.add, "n_inversions"),
+        "sorted_input": fold(np.logical_and, "sorted_input"),
+        "bytes_raw": fold(np.add, "bytes_raw"),
+        "bytes_time": [len(b) for b in t_blobs],
+        "bytes_value": [len(b) for b in v_blobs],
+        "time_blob": t_blobs,
+        "value_blob": v_blobs,
+        "encode_ns": fold(np.add, "encode_ns"),
+    }
+    return pa.RecordBatch.from_arrays(
+        [c.cast(f.type) if isinstance(c := cols[f.name], pa.Array) else pa.array(c, f.type)
+         for f in CHUNK_ARROW], schema=CHUNK_ARROW)

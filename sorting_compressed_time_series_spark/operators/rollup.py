@@ -197,14 +197,14 @@ def _cascade(p: dict, window_us: int) -> dict:
     return _reduce(p, win, s, e, s, e - 1)
 
 
-def _run_starts(doc: pa.Array, src: pa.Array) -> np.ndarray:
-    """True at each row whose (doc_id, source) differs from the row before
-    (nulls equal nulls, as in a groupBy)."""
-    n = len(doc)
+def _run_starts(*cols: pa.Array) -> np.ndarray:
+    """True at each row whose key (e.g. doc_id, source) differs from the
+    row before (nulls equal nulls, as in a groupBy)."""
+    n = len(cols[0])
     starts = np.ones(n, dtype=bool)
     if n > 1:
         same = np.ones(n - 1, dtype=bool)
-        for col in (doc, src):
+        for col in cols:
             a, b = col.slice(1), col.slice(0, n - 1)
             eq = pc.coalesce(pc.equal(a, b), pc.and_(pc.is_null(a), pc.is_null(b)))
             same &= eq.to_numpy(zero_copy_only=False)
@@ -295,16 +295,6 @@ def tiers_kernel(windows_us: list[int]):
     return _multi_window_partials_kernel(list(windows_us))
 
 
-def whole_doc_rollup(chunks_df: DataFrame, windows_us: list[int]):
-    """``(input, kernel)`` of the fused rollup over a frame in which every
-    chunk of a doc lies in one partition: the input is sorted by doc
-    within each partition, and the kernel emits one final row per (tier,
-    doc, window) — ``rollup_tiers(whole_docs=True)`` is
-    ``input.mapInArrow(kernel)``."""
-    kern = tiers_kernel(windows_us)
-    return chunks_df.select(*ROLLUP_INPUT).sortWithinPartitions(*DOC_ORDER), kern
-
-
 def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
                  whole_docs: bool = False) -> DataFrame:
     """All retention tiers in ONE pass: rows carry ``tier`` = index into
@@ -312,14 +302,13 @@ def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
     equals a pandas recompute from the decoded points (pytest-asserted).
 
     ``whole_docs=True`` promises that every chunk of a doc reaches one task
-    (a bucketed scan by ``doc_id`` that reads whole buckets, or one chunk
-    per doc): each task sorts its rows by doc, the kernel merges every
+    (a frame hash-partitioned by ``doc_id``, or one chunk per doc): each
+    task sorts its rows by doc, the kernel merges every
     doc's chunks itself, and the plan has no exchange. Otherwise a doc's
     chunks may sit in several tasks and ``_finalize`` merges the partials
     through a shuffle."""
-    if whole_docs:
-        src, kern = whole_doc_rollup(chunks_df, windows_us)
-        return src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
     kern = tiers_kernel(windows_us)
-    partials = chunks_df.select(*ROLLUP_INPUT).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
-    return _finalize(partials)
+    src = chunks_df.select(*ROLLUP_INPUT)
+    if whole_docs:
+        return src.sortWithinPartitions(*DOC_ORDER).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
+    return _finalize(src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA))

@@ -21,8 +21,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..operators.compaction import COMPACT_ORDER, compact_kernel
 from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches
 from ..operators.retention import apply_retention
 from ..operators.rollup import (
@@ -32,9 +33,8 @@ from ..operators.rollup import (
     WINDOW_1H_US,
     WINDOW_1M_US,
     tiers_kernel,
-    whole_doc_rollup,
 )
-from ..sources.warehouse import Warehouse, bucket_reader, with_p_day
+from ..sources.warehouse import Kernel, Warehouse, bucket_ids, bucket_reader
 
 
 @dataclass
@@ -114,22 +114,28 @@ class Pipeline:
         tiers_kernel([spec.window_us for spec in self.tiers])  # raises unless they nest
 
     def _bucket_by(self) -> tuple[str, int]:
-        """Hash-bucket spec of the chunk table (Iceberg ``bucket(doc_id, N)``
-        stand-in): snapshots are written hash-clustered by doc_id, so every
-        chunk of a doc sits in one bucket: compaction and per-doc merges
-        read the clustering from the bucketed scan and need no exchange,
-        and each fused-promote task reads one bucket's files itself. One
-        bucket per core of the writing session, so each Python stage over
-        the table runs one wave of whole-bucket tasks: every Python task
-        has a fixed start-up cost (README "Scale design notes"), which a
-        sub-core bucket's share of the work would not repay."""
+        """Hash-bucket spec of a new chunk snapshot (Iceberg ``bucket(doc_id,
+        N)`` stand-in): every chunk of a doc sits in one bucket's files,
+        so each task of a whole-bucket stage (``_bucket_stage``) reads whole
+        docs itself, with no exchange. One bucket per core of the writing
+        session, so each such stage runs one wave of whole-bucket tasks:
+        every Python task has a fixed start-up cost (README "Scale design
+        notes"), which a sub-core bucket's share of the work would not
+        repay. Appends and compaction keep the count the snapshot was
+        written with (``_table_buckets``)."""
         return ("doc_id", self.spark.sparkContext.defaultParallelism)
 
+    def _table_buckets(self) -> tuple[str, int] | None:
+        """The chunk table's bucket spec, fixed by the write that created
+        its snapshot; None for a table written without one."""
+        spec = self.warehouse.manifest("chunks_tier0").get("bucket_spec")
+        return tuple(spec) if spec else None
+
     def _doc_buckets(self) -> dict[int, list[str]] | None:
-        """The chunk snapshot's files by doc_id bucket (``_bucket_by``), for
-        the promote's tasks to read one bucket each: ``Warehouse.
-        bucket_files``, or None when a bucket's uncompressed bytes pass
-        ``spark.python.worker.memory``."""
+        """The chunk table's files by doc_id bucket (snapshot and segments),
+        for a whole-bucket stage's tasks to read one bucket each:
+        ``Warehouse.bucket_files``, or None when a bucket's uncompressed
+        bytes pass ``spark.python.worker.memory``."""
         wh = self.warehouse
         buckets = wh.bucket_files("chunks_tier0")
         budget = _python_worker_memory(self.spark)
@@ -138,30 +144,51 @@ class Pipeline:
             return None
         return buckets
 
+    def _bucket_stage(self, columns: tuple[str, ...], filters: list[list[tuple]],
+                      sort_by: tuple[str, ...]) -> tuple[DataFrame, Kernel | None]:
+        """``(src, read)`` of a stage in which every task holds whole docs
+        of the chunk table — ``columns`` of the rows matching ``filters``
+        (pyarrow's OR of ANDs), sorted by ``sort_by`` — for
+        ``KernelWriter.frame(src, kern, read)``. Task ``b`` reads bucket
+        ``b``'s files itself (``bucket_ids`` → ``bucket_reader``: no scan,
+        no exchange in the JVM). When the table does not map to buckets
+        (``_doc_buckets``), the rows are read as a frame and
+        ``repartition(n, "doc_id")``: Spark's hash partitioning is the
+        bucket rule, so task ``p`` then holds exactly bucket ``p``."""
+        buckets = self._doc_buckets()
+        if buckets is not None:
+            batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+            return bucket_ids(self.spark, len(buckets)), bucket_reader(
+                buckets, columns, filters=filters, sort_by=sort_by, batch_rows=batch_rows)
+        ops = {"=": Column.__eq__, ">=": Column.__ge__, "in": Column.isin}
+        keep = functools.reduce(Column.__or__, [
+            functools.reduce(Column.__and__, [ops[op](F.col(c), v) for c, op, v in conj])
+            for conj in filters])
+        n = (self._table_buckets() or self._bucket_by())[1]
+        chunks = self.warehouse.read(self.spark, "chunks_tier0").filter(keep).select(*columns)
+        return chunks.repartition(n, "doc_id").sortWithinPartitions(*sort_by), None
+
     # --- stage 1: ingest+flush ------------------------------------------
     @_described
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
                partitions: int | None = None, append: bool = False) -> dict:
         """Flush ``tokens_df`` into the chunk table: the flush tasks write
         their chunks to parquet themselves (``Warehouse.kernel_writer``),
-        as a new doc-bucketed snapshot, or with ``append`` as a segment.
-        Returns the commit's lineage entry (rows, bytes, files, wall time
-        and the tasks' input/kernel/write seconds); the table is not read
-        back (``Warehouse.read`` does that, and registers a bucketed
-        snapshot in the session catalog)."""
+        as a new doc-bucketed snapshot (``_bucket_by``), or with
+        ``append`` as a segment in the table's own buckets. Returns the
+        commit's lineage entry (rows, bytes, files, wall time and the
+        tasks' input/kernel/write seconds); the table is not read back."""
         wh = self.warehouse
         src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
         kern = functools.partial(flush_kernel_batches, seed=seed)
         if append and wh.exists("chunks_tier0"):
             # manifest-add only: the existing snapshot is untouched and the
             # next promotion MERGEs just the appended docs' windows
-            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW)
-            wh.append_segment(files.frame(src, kern), "chunks_tier0",
-                              partition_by=("p_day",), op="append", files=files)
+            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._table_buckets())
+            wh.append_segment(files.frame(src, kern), "chunks_tier0", op="append", files=files)
         else:
             files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by())
-            wh.write(files.frame(src, kern), "chunks_tier0", partition_by=("p_day",),
-                     watermark_us=None, op="ingest", bucket_by=files.bucket_by, files=files)
+            wh.write(files.frame(src, kern), "chunks_tier0", op="ingest", files=files)
         return wh.manifest("chunks_tier0")["lineage"][-1]
 
     # --- stage 2: promotion with checkpoint ------------------------------
@@ -200,11 +227,9 @@ class Pipeline:
         the same job, and one ``Warehouse.write_slices`` commits every tier
         with its own watermark.
 
-        The kernel's tasks read the chunk files themselves when the table
-        is one bucketed snapshot (``_doc_buckets``: task ``b`` reads bucket
-        ``b``'s files with pyarrow, no scan or exchange in the JVM);
-        otherwise the chunks are read as a frame and hash-partitioned by
-        doc_id first (one shuffle, Spark's sort, same kernel and writer).
+        The kernel's tasks read the chunk files themselves, one bucket each
+        (``_bucket_stage``: snapshot and segments alike, no scan or
+        exchange in the JVM), unless the table does not map to buckets.
         ``D`` is read on the driver from the pending segments' files.
 
         Returns a per-tier summary; with ``collect_stats`` it includes the
@@ -236,27 +261,12 @@ class Pipeline:
         dirty = wh.pending_keys("chunks_tier0", "doc_id")
         marks = [lo[t] for t in work]
         lo_min = None if None in marks else min(marks)
-        windows = [spec.window_us for spec in self.tiers]
-        # no pending segment here: a snapshot maps to buckets only alone
-        buckets = self._doc_buckets()
-        read = None
-        if buckets is not None:
-            src = self.spark.range(len(buckets), numPartitions=len(buckets))
-            kern = tiers_kernel(windows)
-            batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-            filters = [("tier", "=", 0)] + ([] if lo_min is None else [("max_ts", ">=", lo_min)])
-            read = bucket_reader(buckets, ROLLUP_INPUT, filters=filters,
-                                 sort_by=DOC_ORDER, batch_rows=batch_rows)
-        else:
-            keep = F.col("tier") == 0
-            if lo_min is not None:
-                recent = F.col("max_ts") >= lo_min
-                if dirty:
-                    recent |= F.col("doc_id").isin(dirty)
-                keep &= recent
-            chunks = wh.read(self.spark, "chunks_tier0", bucketed=False).filter(keep)
-            src, kern = whole_doc_rollup(chunks.repartition("doc_id"), windows)
-
+        tier0 = ("tier", "=", 0)
+        filters = ([[tier0]] if lo_min is None
+                   else [[tier0, ("max_ts", ">=", lo_min)]]
+                   + ([[tier0, ("doc_id", "in", dirty)]] if dirty else []))
+        src, read = self._bucket_stage(ROLLUP_INPUT, filters, DOC_ORDER)
+        kern = tiers_kernel([spec.window_us for spec in self.tiers])
         files = wh.kernel_writer(list(work.values()), TIER_PARTIAL_ARROW, slice_col="tier")
         never = np.iinfo(np.int64).min  # a full tier's lo; a noop tier's hi
         out = files.frame(src, _promoted_rows(
@@ -278,8 +288,7 @@ class Pipeline:
                 # snapshots these rows are read from
                 n_kept.update(kept.groupBy("tier").count().collect())
             out = out.unionByName(files.frame(kept, iter))  # the rows as they are
-        wh.write_slices(out, "tier", work, partition_by=("p_day",),
-                        watermarks={t: wm[t] for t in work},
+        wh.write_slices(out, "tier", work, watermarks={t: wm[t] for t in work},
                         op="promote:" + "+".join(dict.fromkeys(modes[t] for t in work)),
                         files=files)
         if pending:
@@ -297,40 +306,27 @@ class Pipeline:
 
     # --- maintenance: compaction ------------------------------------------
     @_described
-    def compact(self, min_chunks: int = 2) -> dict:
-        """Merge every series with ≥ ``min_chunks`` tier-0 chunks into one
-        chunk (the reference's compaction stage; page-merge kernel: splice
-        fast path for disjoint chunks, stable k-merge for overlap) and
-        commit a consolidated snapshot. The point set is preserved exactly,
-        so promoted tiers stay valid and are untouched. Refuses to run
-        over un-promoted appends: the consolidating write would retire the
+    def compact(self) -> dict:
+        """Merge every series with two or more tier-0 chunks into one chunk
+        (the reference's compaction stage; page-merge kernel: splice fast
+        path for disjoint chunks, stable k-merge for overlap) and commit a
+        consolidated snapshot in the table's buckets, in ONE whole-bucket
+        job (``_bucket_stage`` → ``compact_kernel``): single-chunk docs'
+        rows pass through as they are. A compaction that merges no doc
+        commits nothing. The point set is preserved exactly, so promoted
+        tiers stay valid and are untouched. Refuses to run over
+        un-promoted appends: the consolidating write would retire the
         pending-segment bookkeeping the next MERGE promotion needs."""
-        from ..operators.compaction import compact_chunks
-
         wh = self.warehouse
         if wh.pending_appends("chunks_tier0"):
             raise ValueError("promote_all() before compact(): pending appends")
-        chunks = wh.read(self.spark, "chunks_tier0")
-        t0 = chunks.filter(F.col("tier") == 0)
-        multi = (
-            t0.groupBy("doc_id").count()
-            .filter(F.col("count") >= min_chunks)
-            .select("doc_id")
-        )
-        n_multi = multi.count()
-        if n_multi == 0:
-            return {"compacted_docs": 0}
-        merged = compact_chunks(t0.join(F.broadcast(multi), "doc_id", "left_semi"))
-        # single-chunk docs' rows stay as they are
-        singles = t0.drop("p_day").join(F.broadcast(multi), "doc_id", "left_anti")
-        out = singles.unionByName(merged)
-        # re-cluster on write: the consolidated snapshot is bucketed again,
-        # so the NEXT compaction/merge over it is exchange-free even after
-        # appends broke the previous clustering
-        wh.write(with_p_day(out), "chunks_tier0", partition_by=("p_day",),
-                 watermark_us=None, op=f"compact:{n_multi}",
-                 bucket_by=self._bucket_by())
-        return {"compacted_docs": int(n_multi)}
+        src, read = self._bucket_stage(tuple(CHUNK_ARROW.names), [[("tier", "=", 0)]],
+                                       COMPACT_ORDER)
+        files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW,
+                                 bucket_by=self._table_buckets() or self._bucket_by())
+        merged = wh.write(files.frame(src, compact_kernel, read), "chunks_tier0",
+                          op=lambda n: f"compact:{n}" if n else None, files=files)
+        return {"compacted_docs": merged}
 
     # --- stage 3: retention ----------------------------------------------
     @_described

@@ -4,14 +4,14 @@ are designed so swapping `Warehouse` for an Iceberg catalog is a one-file
 change: same table names, same partition columns, same snapshot semantics).
 
 Commit protocol (atomic, resumable):
-- writers land parquet under ``<table>/snap-<n>/``: a Python kernel's tasks
-  write their own files (``KernelWriter``) under ``_staging/`` and the
-  driver moves the files the finished tasks reported; a relational frame
-  goes through Spark's writer
-- ``_manifest.json`` names the ONE live snapshot dir plus watermark and
-  lineage entries (each with the commit's rows, bytes, data files and
-  write wall time, read from parquet footers); readers only ever read the
-  snapshot the manifest names
+- writers land parquet under ``<table>/snap-<n>/`` (or ``seg-<n>/`` for an
+  append): a Python kernel's tasks write their own files
+  (``KernelWriter``) under ``_staging/`` and the driver moves the files
+  the finished tasks reported
+- ``_manifest.json`` names the ONE live snapshot dir, the appended segment
+  dirs, watermark and lineage entries (each with the commit's rows, bytes,
+  data files and write wall time, read from parquet footers); readers only
+  ever read the dirs the manifest names
 - a commit = write new snapshot dir, then atomically replace the manifest
   (os.replace). A crash before the manifest swap leaves the old snapshot
   live; re-running the (deterministic) job re-creates the same new
@@ -20,9 +20,11 @@ Commit protocol (atomic, resumable):
 Partitioning: chunk/tier tables carry a ``p_day`` column (UTC day of
 window_start) used as the physical partition key — the analogue of
 Iceberg ``days(window_start)`` — so TTL retention is a partition drop and
-time-range queries prune at the directory level. At 100 TB you would add
-``bucket(doc_id, N)`` as a second partition level; locally one level is
-enough to prove pruning.
+time-range queries prune at the directory level. The chunk table adds
+``bucket(doc_id, N)`` in its file names (``_<bucket:05d>``, Spark's
+bucket-file rule): its snapshot and every segment name their bucket, so a
+task reads one bucket's files — all the chunks of its docs — with pyarrow
+(``bucket_files``, ``bucket_reader``), and no read goes through a catalog.
 """
 
 from __future__ import annotations
@@ -51,10 +53,11 @@ US_PER_DAY = 86_400_000_000
 # split chunk files.
 ROW_GROUP_BYTES = 4 << 20
 # what a kernel's tasks return instead of its rows: one row per file written,
-# plus each task's seconds blocked on input, in the kernel and writing
+# plus each task's seconds blocked on input, in the kernel and writing, and
+# the count its kernel returned (``KernelWriter.task``)
 TASK_TIMERS = ("input_wait_s", "kernel_s", "write_s")
 FILES_SCHEMA = ("slice int, p_day bigint, bucket int, path string, rows bigint, "
-                + ", ".join(f"{t} double" for t in TASK_TIMERS))
+                + ", ".join(f"{t} double" for t in TASK_TIMERS) + ", kernel_n bigint")
 _BUCKET = "_bucket"  # the input column carrying Spark's bucket id
 # Spark's rule for the bucket id of a data file (``BucketingUtils.getBucketId``):
 # the digits after the last ``_`` of the name, before its extension
@@ -80,13 +83,12 @@ class KernelWriter:
     p_day=<d>/part-<partition>-<uuid>[_<bucket>].c000.zstd.parquet``, where
     ``p_day`` comes from the rows' ``window_start`` and ``<v>`` from their
     ``slice_col`` column (dropped from the file). With ``bucket_by=(col,
-    n)`` the kernel's input carries Spark's bucket id of ``col`` and each
-    file gets Spark's ``_<bucket:05d>`` suffix, so a catalog table
-    ``CLUSTERED BY (col) INTO n BUCKETS`` reads the files as buckets, and
-    so does ``Warehouse.bucket_files`` (for ``bucket_reader``). The
-    file schema is ``schema``: zstd level 3, row groups of ~4 MB, min/max
-    statistics on every non-binary column, dictionary pages on none of the
-    binary columns (and on no column of a sliced write)."""
+    n)`` each file gets Spark's ``_<bucket:05d>`` suffix, so
+    ``Warehouse.bucket_files`` maps it to its bucket (for
+    ``bucket_reader``); ``_InputBuckets`` is the rule that picks a row's
+    bucket. The file schema is ``schema``: zstd level 3, row groups of
+    ~4 MB, min/max statistics on every non-binary column, dictionary pages
+    on none of the binary columns (and on no column of a sliced write)."""
 
     staging: str
     schema: pa.Schema
@@ -96,9 +98,10 @@ class KernelWriter:
     def frame(self, src: DataFrame, kern: Kernel, read: Kernel | None = None) -> DataFrame:
         """``src`` → [``read`` →] ``kern`` → files: the frame
         ``Warehouse.write``, ``write_slices`` and ``append_segment`` commit.
-        A bucketed write runs the kernel once per input batch and needs one
-        output row per input row, in order (the flush kernel's shape)."""
-        if self.bucket_by is not None:
+        A bucketed write's input carries each row's bucket id in
+        ``_BUCKET``: the bucket ids themselves for a whole-bucket stage
+        (``bucket_ids``), else Spark's bucket of ``col``."""
+        if self.bucket_by is not None and _BUCKET not in src.columns:
             col, n = self.bucket_by
             # Spark's bucketed write assigns pmod(murmur3(col), n): the same
             # expression, so the files' suffixes agree with Spark's own
@@ -119,8 +122,10 @@ class KernelWriter:
         into the kernel's input by ``read`` first, if given), its rows
         written to parquet; yields one ``FILES_SCHEMA`` row per file. The
         first row also carries the task's seconds blocked on input, in the
-        kernel and writing (``close()`` included); a task that wrote no
-        file yields one row with a null path to carry them."""
+        kernel and writing (``close()`` included), and ``kernel_n``: what
+        the kernel generator returned (compaction: the docs it merged), or
+        0; a task that wrote no file yields one row with a null path to
+        carry them."""
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             from pyspark import TaskContext
@@ -130,50 +135,84 @@ class KernelWriter:
                              else (uuid.uuid4().hex, 0))
             files = _TaskFiles(self, os.path.join(self.staging, f"attempt-{attempt}"), part)
             clock = np.zeros(3)  # input wait, kernel + input wait, write
-            rows = _timed(read(batches) if read is not None else batches, clock, 0)
+            buckets = _InputBuckets() if self.bucket_by is not None else None
+            rows = buckets.read(batches) if buckets is not None else batches
+            rows = _timed(read(rows) if read is not None else rows, clock, 0)
+            kernel_n = 0
 
             def outputs():
-                if self.bucket_by is None:
-                    for out in kern(rows):
-                        yield out, None
-                    return
-                for batch in rows:
-                    if batch.num_rows == 0:
-                        continue
-                    bucket = batch.column(_BUCKET).to_numpy(zero_copy_only=False)
-                    for out in kern(iter([batch.drop_columns([_BUCKET])])):
-                        if out.num_rows != len(bucket):
-                            raise ValueError("a bucketed kernel write needs one output "
-                                             "row per input row")
-                        yield out, bucket
+                nonlocal kernel_n
+                kernel_n = (yield from kern(rows)) or 0
 
-            for out, bucket in _timed(outputs(), clock, 1):
+            for out in _timed(outputs(), clock, 1):
+                if out.num_rows == 0:
+                    continue
                 t0 = time.perf_counter()
-                files.add(out, bucket)
+                files.add(out, buckets.of(out) if buckets is not None else None)
                 clock[2] += time.perf_counter() - t0
             t0 = time.perf_counter()
             written = files.close()
             clock[2] += time.perf_counter() - t0
             clock[1] -= clock[0]
-            yield _files_batch(written, clock)
+            yield _files_batch(written, clock, kernel_n)
 
         return run
 
 
+class _InputBuckets:
+    """The rule that puts a bucketed write's output rows in buckets, from
+    the ``_BUCKET`` ids of the task's input as the kernel reads it. While
+    every input row so far lies in one bucket (a whole-bucket stage's task
+    reads one bucket id; a ``repartition(n, col)`` task holds one bucket),
+    every output row is in that bucket, whatever the kernel emits.
+    Otherwise the kernel must emit one row per row of the input batch it
+    read last (the flush), and each row is in its input row's bucket."""
+
+    def __init__(self):
+        self.one, self.mixed, self.last = None, False, None
+
+    def read(self, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column(_BUCKET).to_numpy(zero_copy_only=False)
+            if self.one is None:
+                self.one = ids[0]
+            self.mixed = self.mixed or bool((ids != self.one).any())
+            self.last = ids
+            yield batch
+
+    def of(self, out: pa.RecordBatch) -> np.ndarray:
+        if self.one is not None and not self.mixed:
+            return np.full(out.num_rows, self.one)
+        if self.last is None or out.num_rows != len(self.last):
+            raise ValueError("a bucketed kernel write over rows of several buckets needs "
+                             "one output row per input row")
+        return self.last
+
+
+def bucket_ids(spark: SparkSession, n: int) -> DataFrame:
+    """The input of a whole-bucket stage: the bucket ids ``0..n-1`` in
+    ``_BUCKET``, task ``b`` holding id ``b`` alone."""
+    return spark.range(n, numPartitions=n).withColumnRenamed("id", _BUCKET)
+
+
 def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
-                  filters: list[tuple], sort_by: tuple[str, ...], batch_rows: int) -> Kernel:
+                  filters: list[list[tuple]], sort_by: tuple[str, ...],
+                  batch_rows: int) -> Kernel:
     """The input of a task that reads its own buckets (``Warehouse.
-    bucket_files``): for each ``id`` in the task's input (``spark.range``
-    over the bucket ids), the bucket's files read with pyarrow — only
-    ``columns``, only the rows matching ``filters`` — sorted by ``sort_by``
-    and cut into batches of ``batch_rows`` (none if ≤ 0, as Spark's
-    ``maxRecordsPerBatch``). One bucket is in memory at a time."""
+    bucket_files``): for each id in the task's input (``bucket_ids``), the
+    bucket's files read with pyarrow — only ``columns``, only the rows
+    matching ``filters`` (pyarrow's disjunctive normal form: OR of ANDs) —
+    sorted by ``sort_by`` and cut into batches of ``batch_rows`` (none if
+    ≤ 0, as Spark's ``maxRecordsPerBatch``). The sort is stable, so rows
+    that tie keep the files' order. One bucket is in memory at a time."""
 
     def read(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
         for batch in ids:
-            for b in batch.column("id").to_numpy():
+            for b in batch.column(_BUCKET).to_numpy():
                 paths = buckets[int(b)]
                 if not paths:
                     continue
@@ -201,18 +240,21 @@ def _timed(it: Iterator, clock: np.ndarray, slot: int) -> Iterator:
         yield item
 
 
-def _files_batch(written: list[tuple], clock: np.ndarray) -> pa.RecordBatch:
-    """The ``FILES_SCHEMA`` rows of one task: its files, then its timers on
-    the first row (on a null-path row when it wrote none)."""
+def _files_batch(written: list[tuple], clock: np.ndarray, kernel_n: int) -> pa.RecordBatch:
+    """The ``FILES_SCHEMA`` rows of one task: its files, then its timers
+    and ``kernel_n`` on the first row (on a null-path row when it wrote
+    none)."""
     written = written or [(None, None, None, None, 0)]
     cols = list(zip(*written))
     timers = np.zeros((3, len(written)))
     timers[:, 0] = clock
+    counts = np.zeros(len(written), dtype=np.int64)
+    counts[0] = kernel_n
     return pa.RecordBatch.from_arrays(
         [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
          pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
-         pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers],
-        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS])
+         pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers] + [pa.array(counts)],
+        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS, "kernel_n"])
 
 
 @dataclass
@@ -361,13 +403,6 @@ class Warehouse:
                 shutil.rmtree(os.path.join(self.root, table, d), ignore_errors=True)
 
     # -- io ----------------------------------------------------------------
-    def _catalog_name(self, table: str, snapshot: str | None = None) -> str:
-        # session-catalog identifier for bucket-aware reads of one snapshot
-        # (by default the live one)
-        snapshot = snapshot or self.manifest(table)["snapshot"]
-        return "wh_" + "".join(c if c.isalnum() else "_" for c in
-                               os.path.abspath(os.path.join(self.root, table, snapshot)))
-
     def kernel_writer(self, tables: str | list[str], schema: pa.Schema, *,
                       slice_col: str | None = None,
                       bucket_by: tuple[str, int] | None = None) -> KernelWriter:
@@ -380,13 +415,13 @@ class Warehouse:
                             schema, slice_col, bucket_by)
 
     @staticmethod
-    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> dict[str, float]:
+    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> tuple[dict[str, float], int]:
         """Run a kernel's write job and move the files its finished tasks
         reported into ``dirs[slice]`` (the key is None without slices).
         A failed or speculative attempt's files are never reported, so they
         are never committed. Each dir is cleared first: a crash before the
         manifest swap leaves an orphan dir that the rerun replaces. Returns
-        the tasks' ``TASK_TIMERS``, summed."""
+        the tasks' ``TASK_TIMERS`` and ``kernel_n``, summed."""
         shutil.rmtree(files.staging, ignore_errors=True)  # a crashed run's attempts
         rows = df.collect()
         for d in dirs.values():
@@ -399,60 +434,36 @@ class Warehouse:
             os.makedirs(part, exist_ok=True)
             os.replace(r.path, os.path.join(part, os.path.basename(r.path)))
         shutil.rmtree(files.staging, ignore_errors=True)  # what no finished task reported
-        return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}
+        return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}, sum(r.kernel_n for r in rows)
 
-    def write(self, df: DataFrame, table: str, *, partition_by: tuple[str, ...] = (),
-              watermark_us: int | None = None, op: str = "overwrite",
-              bucket_by: tuple[str, int] | None = None,
-              files: KernelWriter | None = None) -> None:
-        """Commit a new snapshot. ``df`` is either a relational frame that
-        Spark's writer lands, or, with ``files``, the frame of a kernel
-        that writes its own rows (``KernelWriter.frame``). With
-        ``bucket_by=(col, n)`` the snapshot is a BUCKETED table
-        (hash-clustered by ``col`` into ``n`` buckets — the stand-in for
-        Iceberg ``bucket(col, n)``): any groupBy/join on ``col`` then reads
-        the clustering from the scan and needs NO exchange (compaction and
-        the fused promote become shuffle-free, see operators/compaction.py
-        and plans/pipeline.py). ``read`` registers the snapshot in the
-        catalog of any session."""
+    def write(self, df: DataFrame, table: str, *, watermark_us: int | None = None,
+              op: str | Callable[[int], str | None] = "overwrite",
+              files: KernelWriter) -> int:
+        """Commit a new snapshot: ``df`` is the frame of a kernel that writes
+        its own rows (``files.frame``). With ``files.bucket_by=(col, n)``
+        the snapshot is hash-clustered by ``col`` into ``n`` buckets (the
+        stand-in for Iceberg ``bucket(col, n)``), which ``bucket_files``
+        maps. ``op`` names the commit in the lineage; as a function of the
+        tasks' summed ``kernel_n`` it may return None, and then nothing is
+        committed (a compaction that merged no doc). Returns that sum."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         snap = f"snap-{m['version'] + 1}"
         path = os.path.join(self.root, table, snap)
-        if bucket_by is not None:  # a crashed attempt's entry
-            df.sparkSession.sql(f"DROP TABLE IF EXISTS {self._catalog_name(table, snap)}")
-        timers = {}
-        if files is not None:
-            assert files.bucket_by == bucket_by and tuple(partition_by) == ("p_day",)
-            timers = self._land(df, files, {None: path})
-            schema = files.spark_schema()
-        else:
-            w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            if bucket_by is not None:
-                col, n = bucket_by
-                w.option("path", path).bucketBy(n, col).format("parquet").saveAsTable(
-                    self._catalog_name(table, snap))
-            else:
-                w.parquet(path)
-            schema = df.schema
-        bucket_spec = list(bucket_by) if bucket_by is not None else None
+        timers, kernel_n = self._land(df, files, {None: path})
+        if callable(op):
+            op = op(kernel_n)
+            if op is None:
+                shutil.rmtree(path, ignore_errors=True)
+                return kernel_n
+        bucket_spec = list(files.bucket_by) if files.bucket_by is not None else None
         self._commit(table, snap, watermark_us,
-                     {"op": op, "partition_by": partition_by,
-                      "bucket_by": bucket_spec,
-                      "wall_s": time.perf_counter() - t0, **timers},
-                     schema_json=schema.json(), bucket_spec=bucket_spec)
-        if bucket_by is not None and m["snapshot"]:
-            # the entry of the replaced snapshot, dropped only now: ``df``
-            # may read through it (a partitioned catalog table lists its
-            # partitions from the catalog while the job runs)
-            df.sparkSession.sql(
-                f"DROP TABLE IF EXISTS {self._catalog_name(table, m['snapshot'])}")
+                     {"op": op, "wall_s": time.perf_counter() - t0, **timers},
+                     schema_json=files.spark_schema().json(), bucket_spec=bucket_spec)
+        return kernel_n
 
     def write_slices(self, df: DataFrame, slice_col: str,
                      tables: dict[int, str], *,
-                     partition_by: tuple[str, ...] = (),
                      watermarks: dict[int, int] | None = None,
                      op: str = "promote", files: KernelWriter) -> None:
         """ONE Spark job commits MANY tables.
@@ -470,45 +481,38 @@ class Warehouse:
         finishes the others. A slice with zero rows commits a
         hollow snapshot that reads back as an empty frame via the
         persisted schema."""
-        assert files.slice_col == slice_col and tuple(partition_by) == ("p_day",)
+        assert files.slice_col == slice_col
         t0 = time.perf_counter()
         snaps = {val: f"snap-{self.manifest(tbl)['version'] + 1}" for val, tbl in tables.items()}
-        timers = self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
-                                        for val, snap in snaps.items()})
+        timers, _ = self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
+                                           for val, snap in snaps.items()})
         wall_s = time.perf_counter() - t0  # the one write all tables share
         schema_json = files.spark_schema().json()
         for val, tbl in tables.items():
             self._commit(tbl, snaps[val], (watermarks or {}).get(val),
-                         {"op": op, "partition_by": tuple(partition_by),
-                          "bucket_by": None, "wall_s": wall_s, **timers},
+                         {"op": op, "wall_s": wall_s, **timers},
                          schema_json=schema_json, bucket_spec=None)
 
-    def append_segment(self, df: DataFrame, table: str, *,
-                       partition_by: tuple[str, ...] = (), op: str = "append",
-                       files: KernelWriter | None = None) -> str:
+    def append_segment(self, df: DataFrame, table: str, *, op: str = "append",
+                       files: KernelWriter) -> str:
         """Append-only commit: land the new rows as an extra SEGMENT dir and
         add it to the manifest — the existing snapshot is untouched (no
         table rewrite; Iceberg's append = manifest-add is exactly this).
-        ``df`` and ``files`` as in ``write``. The segment is also recorded
-        under ``pending_appends`` so the next promotion can MERGE just the
-        affected keys instead of recomputing every tier. A crash before the
-        manifest swap leaves an orphan dir the manifest never names; the
-        rerun overwrites it."""
+        ``df`` and ``files`` as in ``write``; a bucketed segment takes the
+        table's buckets (``bucket_spec``), so ``bucket_files`` still maps
+        the table. The segment is also recorded under ``pending_appends``
+        so the next promotion can MERGE just the affected keys instead of
+        recomputing every tier. A crash before the manifest swap leaves an
+        orphan dir the manifest never names; the rerun overwrites it."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no base snapshot to append to")
+        if files.bucket_by is not None and list(files.bucket_by) != m.get("bucket_spec"):
+            raise ValueError(f"segment buckets {files.bucket_by} are not the table's "
+                             f"{m.get('bucket_spec')}")
         seg = f"seg-{m['version'] + 1}"
-        path = os.path.join(self.root, table, seg)
-        timers = {}
-        if files is not None:
-            assert files.bucket_by is None and tuple(partition_by) == ("p_day",)
-            timers = self._land(df, files, {None: path})
-        else:
-            w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
+        timers, _ = self._land(df, files, {None: os.path.join(self.root, table, seg)})
         m["segments"] = m.get("segments", []) + [seg]
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
@@ -528,12 +532,12 @@ class Warehouse:
         return [f for d in self._live_dirs(table, m) for f in self._dir_files(table, d)]
 
     def _dir_files(self, table: str, d: str) -> list[str]:
-        """Parquet files under one snapshot or segment dir ``d``."""
+        """Parquet files under one snapshot or segment dir ``d``, sorted."""
         files = []
         for dp, dirs, fs in os.walk(os.path.join(self.root, table, d)):
             dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
             files += [os.path.join(dp, f) for f in fs if not f.startswith(("_", "."))]
-        return files
+        return sorted(files)
 
     @staticmethod
     def _footer_stats(files: list[str], columns) -> tuple[int, dict]:
@@ -569,50 +573,17 @@ class Warehouse:
         return not (os.path.isdir(path)
                     and any(not e.startswith("_") for e in os.listdir(path)))
 
-    def _bucketed_table(self, spark: SparkSession, table: str) -> str | None:
-        """Catalog name of the live snapshot as a bucketed table, registered
-        in this session's catalog on first use (a new session, or a dropped
-        entry); None when the table is not one bucketed snapshot whose
-        files all name their bucket (``bucket_files``), or the registration
-        fails."""
-        m = self.manifest(table)
-        if not m.get("schema") or self.bucket_files(table) is None:
-            return None
-        col, n = m["bucket_spec"]
-        name = self._catalog_name(table, m["snapshot"])
-        if spark.catalog.tableExists(name):
-            return name
-        from pyspark.errors import PySparkException
-        from pyspark.sql.types import StructType
-
-        parts = next((e["partition_by"] for e in reversed(m["lineage"])
-                      if "partition_by" in e), ())
-        fields = StructType.fromJson(json.loads(m["schema"])).fields
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
-        location = os.path.abspath(os.path.join(self.root, table, m["snapshot"]))
-        ddl = (f"CREATE TABLE {name} ({cols}) USING parquet"
-               + (f" PARTITIONED BY ({', '.join(parts)})" if parts else "")
-               + f" CLUSTERED BY ({col}) INTO {n} BUCKETS"
-               + " LOCATION '" + location.replace("\\", "\\\\").replace("'", "\\'") + "'")
-        try:
-            spark.sql(ddl)
-            if parts:
-                spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
-        except PySparkException:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            return None
-        return name
-
     def bucket_files(self, table: str) -> dict[int, list[str]] | None:
-        """``{bucket: [absolute file path]}`` of the live snapshot, every
-        bucket id of its spec present: all rows with one value of the
-        bucket column lie in one bucket's files. None unless the table is
-        ONE bucketed snapshot (no segments) whose every data file names its
-        bucket by Spark's rule (``_BUCKET_ID``), as the kernel writer's
-        ``_<bucket:05d>`` suffix and Spark's own bucketed writes do."""
+        """``{bucket: [absolute file path]}`` of the live snapshot and
+        segments — snapshot files first, then each segment's in commit
+        order — every bucket id of the table's spec present: all rows with
+        one value of the bucket column lie in one bucket's files. None
+        unless the table has a ``bucket_spec`` and every data file names
+        its bucket by Spark's rule (``_BUCKET_ID``), as the kernel writer's
+        ``_<bucket:05d>`` suffix does."""
         m = self.manifest(table)
         spec = m.get("bucket_spec")
-        if not spec or m.get("segments") or m["snapshot"] is None:
+        if not spec or m["snapshot"] is None:
             return None
         n = spec[1]
         out: dict[int, list[str]] = {b: [] for b in range(n)}
@@ -634,21 +605,13 @@ class Warehouse:
             total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
         return total
 
-    def read(self, spark: SparkSession, table: str, bucketed: bool = True) -> DataFrame:
-        """The live table. A single bucketed snapshot reads through the
-        catalog, so a groupBy/join on the bucket column needs no exchange;
-        ``bucketed=False`` reads it as plain parquet, for a plan that
-        repartitions by that column itself: Spark drops such a shuffle over
-        a bucketed scan of equal partitioning, and then the bucketed scan
-        too (no operator above needs it), which splits the buckets. A plain
-        read takes its schema from the manifest, so it runs no Spark job
-        (only a manifest written before schemas were stored is inferred)."""
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The live table as plain parquet: the snapshot and segments, with
+        the schema the manifest stores, so it runs no Spark job (only a
+        manifest written before schemas were stored is inferred)."""
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        name = self._bucketed_table(spark, table) if bucketed else None
-        if name is not None:
-            return spark.table(name)
         paths = [os.path.join(self.root, table, d) for d in self._live_dirs(table, m)]
         # retention can hollow out every live dir: then the persisted schema
         # still reads as an EMPTY frame
@@ -730,13 +693,6 @@ class Warehouse:
                 shutil.rmtree(os.path.join(base, f"{partition_col}={v}"),
                               ignore_errors=True)
         if dropped:
-            # a bucketed snapshot's session-catalog registration caches the
-            # pre-drop file listing — reads through it would hit
-            # FileNotFoundException on the removed partition dirs. Clear the
-            # bucket spec so read() falls back to a fresh parquet listing of
-            # the surviving dirs (correct, just re-shuffling until the next
-            # bucketed rewrite re-registers the table).
-            m["bucket_spec"] = None
             m["version"] += 1
             self._log(table, m, {"op": op, "dropped": dropped,
                                  "wall_s": time.perf_counter() - t0})

