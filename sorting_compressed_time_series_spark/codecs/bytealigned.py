@@ -64,6 +64,8 @@ _U8_MAX, _U16_MAX, _U32_MAX = (np.uint64(2**b - 1) for b in (8, 16, 32))
 # of the width-class passes: the lane/width-class crossover measured by
 # tools/sort_microbench.py (codec section, tools/sort_microbench.json)
 _SMALL = 1500
+# class code -> mask of its payload bits in a little-endian uint64
+_WIDTH_MASK = np.array([2**64 - 1, 2**8 - 1, 2**16 - 1, 2**32 - 1], dtype=np.uint64)
 # class code -> which of the 8 little-endian byte lanes hold its payload
 _LANE_MASK = np.arange(8) < CLASS_WIDTH[:, None]
 
@@ -138,6 +140,22 @@ def _offsets(codes: np.ndarray) -> np.ndarray:
     return off
 
 
+def _offsets_at(codes: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """``_offsets(codes)[pos]`` (``pos`` in 0..n) without the full prefix
+    sum: one pass for the widths, then one sum per gap between the distinct
+    positions. A column moved by a few runs needs only their ends."""
+    n = len(codes)
+    idt = np.int32 if 8 * n < 2**31 else np.int64
+    w = codes + np.uint8(3)
+    w &= 3
+    np.left_shift(np.uint8(1), w, out=w)
+    edges = np.unique(np.concatenate(([0], pos)))
+    edges = edges[edges < n]
+    at = np.zeros(len(edges) + 1, dtype=idt)
+    np.add.reduceat(w, edges, dtype=idt).cumsum(out=at[1:])
+    return at[np.searchsorted(edges, pos)]
+
+
 def _window(plane: np.ndarray, dt: np.dtype) -> np.ndarray:
     """Zero-copy view of ``plane`` whose element j is the ``dt.itemsize``
     bytes starting at byte j, so one fancy index reads or writes a whole
@@ -209,6 +227,24 @@ def _gather_payload(data: ByteAlignedData) -> np.ndarray:
     if data.count <= _SMALL:
         return _gather_lanes(data.vals, data.codes)
     return _gather_classes(data.vals, data.codes)
+
+
+def _gather_at(data: ByteAlignedData, off: np.ndarray, idx: np.ndarray) -> np.ndarray:
+    """Zigzag codes of the elements ``idx`` alone, through the column's
+    `_offsets` ``off``: a partial decode whose cost follows ``len(idx)``,
+    not the column length. Each element's 8 bytes from its offset are read
+    at once and masked to its width; the plane's last 8 bytes stand in for
+    offsets closer to its end, shifted down. The plane must hold at least
+    8 bytes (any delta column does: element 0 is 8)."""
+    at = off[idx].astype(np.intp)
+    last = len(data.vals) - 8
+    back = at - last
+    np.maximum(back, 0, out=back)
+    np.minimum(at, last, out=at)
+    zz = _window(data.vals, np.dtype("<u8"))[at]
+    zz >>= (back << 3).astype(np.uint64)
+    zz &= _WIDTH_MASK[data.codes[idx]]
+    return zz
 
 
 def delta_encode(values: np.ndarray) -> ByteAlignedData:
@@ -306,63 +342,82 @@ def permute(data: ByteAlignedData, order: np.ndarray) -> ByteAlignedData:
 def move_runs(
     data: ByteAlignedData,
     runs: np.ndarray,
-    order: np.ndarray | None = None,
+    src: np.ndarray | None = None,
     heads: tuple[np.ndarray, np.ndarray] | None = None,
+    off: np.ndarray | None = None,
 ) -> ByteAlignedData:
-    """Permute a column by ``order`` (identity when None), moving whole runs.
+    """Reorder a column by whole runs of consecutive source elements.
 
-    ``runs`` lists, ascending and starting with 0, every output position i
-    where ``order[i] != order[i-1] + 1``. Between two run starts the source
-    elements are consecutive, so each run's payload moves as one byte slice
-    and the payload plane is assembled by one concatenation: O(n) bytes
-    copied plus O(runs) slicing, against one gather per element in
-    `permute`. Pays off while runs are few (a nearly sorted series).
+    ``runs`` lists the output positions where a run starts, ascending and
+    starting with 0; run k copies the source elements ``src[k]``,
+    ``src[k] + 1``, ... up to the next run start (``src=None``: the
+    identity, ``src = runs``). Each run's payload moves as one byte slice
+    and each plane is assembled by one concatenation: O(n) bytes copied
+    plus O(runs) slicing, against one gather per element in `permute`.
+    Pays off while runs are few (a nearly sorted series).
 
     ``heads=(zz, codes)`` replaces the first element of run k with payload
-    ``zz[k]`` in class ``codes[k]`` instead of copying it.
+    ``zz[k]`` in class ``codes[k]`` instead of copying it. ``off`` is the
+    column's `_offsets`, when the caller has them.
     """
     n = data.count
-    src = runs if order is None else order[runs]
-    stop = src + np.diff(runs, append=n)
+    src = runs if src is None else src
+    lens = np.diff(runs, append=n)
+    stop = src + lens
     first = src if heads is None else src + 1
-    off = _offsets(data.codes)
-    v = data.vals
-    pieces = [v[a:b] for a, b in zip(off[first].tolist(), off[stop].tolist())]
-    codes = data.codes.copy() if order is None else data.codes[order]
+    c = data.codes
+    codes = c.copy()
+    moved = (src != runs).nonzero()[0]
+    if len(moved):  # one gather for the elements of the runs that move
+        lm = lens[moved]
+        at = np.cumsum(lm) - lm
+        dst = np.arange(at[-1] + lm[-1]) + np.repeat(runs[moved] - at, lm)
+        codes[dst] = c[dst + np.repeat(src[moved] - runs[moved], lm)]
+    if off is None:
+        ends = _offsets_at(c, np.concatenate((first, stop))).tolist()
+        byte_first, byte_stop = ends[: len(runs)], ends[len(runs):]
+    else:
+        byte_first, byte_stop = off[first].tolist(), off[stop].tolist()
+    # memoryview slices joined into one bytearray: a fraction of the cost
+    # of ndarray slices and np.concatenate per piece, and still writable
+    mv = memoryview(np.ascontiguousarray(data.vals))
+    pieces = [mv[a:b] for a, b in zip(byte_first, byte_stop)]
     if heads is not None:
         zz, head_codes = heads
-        hv = _emit_payload(zz, head_codes)
+        hv = memoryview(_emit_payload(zz, head_codes))
         ho = _offsets(head_codes).tolist()
         body = pieces
         pieces = [None] * (2 * len(body))
         pieces[0::2] = [hv[a:b] for a, b in zip(ho[:-1], ho[1:])]
         pieces[1::2] = body
         codes[runs] = head_codes
-    return ByteAlignedData(np.concatenate(pieces), codes, n)
+    return ByteAlignedData(np.frombuffer(bytearray().join(pieces), dtype=np.uint8), codes, n)
 
 
 def delta_splice(
     data: ByteAlignedData,
-    ts: np.ndarray,
     runs: np.ndarray,
-    order: np.ndarray | None = None,
+    first: int,
+    deltas: np.ndarray,
+    src: np.ndarray | None = None,
+    off: np.ndarray | None = None,
 ) -> ByteAlignedData:
     """`move_runs` for the delta (time) column: re-encode only each run's
-    first delta, whose predecessor changed; ``ts`` is the decoded column.
+    first element, whose predecessor changed.
 
-    Run 0 starts with the raw first value (class 0); every later run with
-    the canonical delta against the previous run's last element. Interior
-    deltas are copied as stored, so with canonical input the result equals
-    ``delta_encode(ts[order])``. Source elements holding a raw value (page
-    starts of stacked pages) must each start a run.
+    Run 0 starts with the raw first value ``first`` (class 0); run k > 0
+    with ``deltas[k - 1]``, its first timestamp minus the one before it in
+    the output, in its canonical class. Interior deltas are copied as
+    stored, so with canonical input and exact seam deltas the result
+    equals a fresh `delta_encode` of the reordered series. Source elements
+    holding a raw value (page starts of stacked pages, a moved element 0)
+    must each start a run.
     """
-    src = runs if order is None else order[runs]
-    prev = runs[1:] - 1  # output position before each later run head
     d = np.empty(len(runs), dtype=np.int64)
     d[0] = 0
-    np.subtract(ts[src[1:]], ts[prev if order is None else order[prev]], out=d[1:])
+    d[1:] = deltas
     zz = zigzag(d)
     codes = _classify(zz)
-    zz[0] = ts[src[0]].view(np.uint64)
+    zz[0] = np.int64(first).view(np.uint64)
     codes[0] = 0
-    return move_runs(data, runs, order, (zz, codes))
+    return move_runs(data, runs, src, (zz, codes), off)

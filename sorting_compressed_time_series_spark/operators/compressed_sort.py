@@ -10,22 +10,27 @@ semantics re-derived, no code copied).
 
 Paths, byte-identical outputs:
 
-- `compressed_sort` — one decode of the time column, one stable
-  permutation (timsort, linear on nearly sorted input). The permutation
-  splits into runs of consecutive source elements; each run moves as one
-  byte slice of the payload plane, and each plane is assembled by one
-  concatenation (`move_runs`); the length planes move by one gather. Only
-  the *seams* are re-encoded: output positions whose source predecessor
-  changed (``order[i] != order[i-1] + 1``; position 0 takes the raw first
-  value). Their payloads are spliced in during the same concatenation;
-  every other delta code is copied as stored (`delta_splice`). The
-  reference applies the same moves as one block rotation per out-of-order
-  run; one permutation expresses all of them at once, so k runs cost
-  O(n + k), not O(n·k). Because our delta encoder is deterministic per
-  delta value, the result equals a fresh encode of the sorted arrays,
-  which the oracle tests assert byte for byte. Every run costs a few
-  Python-level slices, so above `ROTATION_INVERSION_THRESHOLD` descents
-  per point it re-encodes instead.
+- `compressed_sort` — reads only what it moves. Descents come from the
+  sign bit of each stored delta (a zigzag code is odd exactly when its
+  delta is negative): the time plane's offsets and one byte gather, no
+  decode; a sorted series returns there. Each descent opens a window that
+  grows until the elements on both sides bound it; only the windows are
+  decoded, relative to the element before each, and each is stable-sorted
+  on its own, which equals the global stable sort. The windows' sorted
+  order splits into runs of consecutive source elements; each run moves as
+  one byte slice of both planes, each plane assembled by one concatenation
+  (`move_runs`). Only the *seams* are re-encoded: output positions whose
+  source predecessor changed (position 0 takes the raw first value), with
+  deltas taken from the window values and spliced in during the same
+  concatenation; every other delta code is copied as stored
+  (`delta_splice`). The reference applies the same moves as one block
+  rotation per out-of-order run; one pass expresses all of them, so k runs
+  cost O(n + k), not O(n·k). Because our delta encoder is deterministic per
+  delta value, the result equals a fresh encode of the sorted arrays, which
+  the oracle tests assert byte for byte. A series whose running values
+  could leave int64 (the signs would lie) is decoded whole and sorted as
+  one window. Every run costs a few Python-level slices, so above
+  `ROTATION_INVERSION_THRESHOLD` descents per point it re-encodes instead.
 - `sort_reencode` — decode → stable argsort → encode. The fallback for
   heavily shuffled input and the semantic oracle (reference flush-sort
   `CompressedTVList.convertAndSort2`, CompressedTVList.java:616-716, is
@@ -45,15 +50,19 @@ from __future__ import annotations
 import numpy as np
 
 from ..codecs.bytealigned import (
+    _U32_MAX,
     ByteAlignedData,
     CLASS_WIDTH,
     _classify,
     _emit_payload,
+    _gather_at,
+    _offsets,
     delta_decode,
     delta_encode,
     delta_splice,
     move_runs,
     permute,
+    unzigzag,
     zigzag,
 )
 
@@ -63,8 +72,18 @@ from ..codecs.bytealigned import (
 # BackwardSort.java:28, INVERSION_RATIOS_THRESHOLD = 0.004). Set from
 # tools/sort_microbench.py (tools/sort_microbench.json): the run moves beat
 # the re-encode on 10k-1M point pages up to about 0.7% descents per point;
-# on 10k-point pages they break even at 0.7% and lose from 1%.
+# on 10k-point pages they break even at 0.7% and lose from 1%. Re-measured
+# once only the disorder windows were decoded: the crossover held.
 ROTATION_INVERSION_THRESHOLD = 0.007
+# descent i opens the window [i - WINDOW_RADIUS, i] of `compressed_sort`.
+# The corpus displaces points up to 40 steps back (seriesize.OOO_MAX_DISP),
+# so one decode round closes nearly every window; on tools/sort_microbench
+# pages 48 beat 32 (a second round for the far points) and 64 (more decode)
+WINDOW_RADIUS = 48
+# a window side its neighbour does not bound grows by WINDOW_GROWTH - 1
+# times the window's length, so a point displaced d positions takes
+# O(log d) rounds
+WINDOW_GROWTH = 4
 
 
 def is_sorted(ts: np.ndarray) -> bool:
@@ -82,6 +101,8 @@ def _runs(order: np.ndarray) -> tuple[np.ndarray, int]:
     source elements (0 first), and the number of elements that move: a
     run either keeps every element in place or moves them all."""
     n = len(order)
+    if n == 0:
+        return order, 0
     runs = np.concatenate(([0], 1 + (np.diff(order) != 1).nonzero()[0]))
     lens = np.diff(runs, append=n)
     return runs, n - int(lens[order[runs] == runs].sum())
@@ -101,6 +122,111 @@ def sort_reencode(
     return new_time, new_value, moved
 
 
+def _signs_give_order(time_data: ByteAlignedData, off: np.ndarray) -> tuple[bool, int]:
+    """Whether each stored delta's sign is the order of its two timestamps,
+    and how many 8-byte deltas were read to decide.
+
+    True while no running value can leave int64: |first value| plus, per
+    delta, the largest magnitude of its width class (2^7, 2^15, 2^31; the
+    8-byte deltas' exact magnitudes) stays below 2^63. Then every prefix
+    sum is exact and ``ts[i] - ts[i-1]`` is the stored delta itself. One
+    unit per element is kept spare: `compressed_sort` stacks its windows'
+    value ranges, one apart, into one sort key."""
+    codes = time_data.codes[1:]
+    bound = abs(int(time_data.vals[:8].view("<i8")[0]))
+    for code, cap in ((1, 2**7), (2, 2**15), (3, 2**31)):
+        bound += cap * int(np.count_nonzero(codes == code))
+    wide = 1 + (codes == 0).nonzero()[0]
+    if len(wide):
+        zz = _gather_at(time_data, off, wide)
+        mag = (zz >> np.uint64(1)) + (zz & np.uint64(1))  # |unzigzag(zz)|, exact
+        bound += (int((mag >> np.uint64(32)).sum()) << 32) + int((mag & _U32_MAX).sum())
+    return bound + time_data.count < 2**63, len(wide)
+
+
+def _window_values(
+    time_data: ByteAlignedData, off: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+    rel: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """Decode the elements ``lo_k .. hi_k`` of every window k (sorted,
+    disjoint) relative to element ``lo_k - 1``, or absolute when
+    ``lo_k == 0``, into ``rel`` at their positions. A window that ends the
+    series repeats its last element in the ``hi_k`` slot. Returns each
+    window's minimum and maximum, the value of its ``hi_k`` slot, and the
+    elements decoded."""
+    n = time_data.count
+    lens = hi - lo + 1
+    slot = np.cumsum(lens) - 1  # each window's element hi_k
+    starts = slot + 1 - lens
+    pos = np.arange(slot[-1] + 1) + np.repeat(lo - starts, lens)
+    pos[-1] = min(pos[-1], n - 1)
+    zz = _gather_at(time_data, off, pos)
+    d = unzigzag(zz)
+    if lo[0] == 0:  # element 0 carries the raw first value
+        d[0] = zz[0].view(np.int64)
+    if hi[-1] == n:  # the slot repeats element n - 1
+        d[-1] = 0
+    c = np.cumsum(d)  # int64 math wraps, as in `delta_decode`
+    c -= np.repeat(c[starts] - d[starts], lens)
+    rel[pos] = c
+    edges = np.empty(2 * len(lo), dtype=slot.dtype)
+    edges[0::2], edges[1::2] = starts, slot
+    return (np.minimum.reduceat(c, edges)[0::2], np.maximum.reduceat(c, edges)[0::2],
+            c[slot], len(c))
+
+
+def _merge_windows(
+    lo: np.ndarray, hi: np.ndarray, closed: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One window per run of windows ``[lo, hi)`` that overlap or touch,
+    sorted. A merged window is closed only if it is one closed window."""
+    o = np.argsort(lo, kind="stable")
+    lo, reach = lo[o], np.maximum.accumulate(hi[o])
+    head = np.ones(len(lo), dtype=bool)
+    np.greater(lo[1:], reach[:-1], out=head[1:])
+    first = head.nonzero()[0]
+    last = np.concatenate((first[1:], [len(lo)])) - 1
+    return lo[first], reach[last], closed[o[first]] & (first == last)
+
+
+def _close_windows(
+    time_data: ByteAlignedData, off: np.ndarray, descents: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """Closed windows covering every descent, from partial decodes only.
+
+    Descent i opens ``[i - WINDOW_RADIUS, i]``; windows that overlap or
+    touch merge. A window ``[lo, hi)`` is closed when the element before
+    it is <= its minimum and the element after it >= its maximum; each
+    round decodes the open windows with one element on each side
+    (`_window_values`) and grows every failing side by ``WINDOW_GROWTH -
+    1`` times the window's length, at worst to the whole series. Returns
+    (lo, hi, rel, decoded): ``rel[lo_k:hi_k + 1]`` holds window k's values
+    and then element hi_k's (when hi_k < n), relative to element
+    ``lo_k - 1`` (absolute when ``lo_k == 0``), and ``decoded`` counts the
+    elements decoded over all rounds. Element hi_k is in no window, so
+    no other window's decode overwrites it."""
+    n = time_data.count
+    lo, hi, closed = _merge_windows(
+        np.maximum(descents - WINDOW_RADIUS, 0), descents + 1,
+        np.zeros(len(descents), dtype=bool))
+    rel = np.empty(n, dtype=np.int64)
+    decoded = 0
+    while True:
+        op = (~closed).nonzero()[0]
+        olo, ohi = lo[op], hi[op]
+        low, high, after, k = _window_values(time_data, off, olo, ohi, rel)
+        decoded += k
+        left = (olo == 0) | (low >= 0)
+        right = (ohi == n) | (after >= high)
+        closed[op] = left & right
+        if closed.all():
+            return lo, hi, rel, decoded
+        grow = (ohi - olo) * (WINDOW_GROWTH - 1)
+        lo[op] = np.where(left, olo, np.maximum(olo - grow, 0))
+        hi[op] = np.where(right, ohi, np.minimum(ohi + grow, n))
+        lo, hi, closed = _merge_windows(lo, hi, closed)
+
+
 def compressed_sort(
     time_data: ByteAlignedData,
     value_data: ByteAlignedData,
@@ -108,13 +234,26 @@ def compressed_sort(
 ) -> tuple[ByteAlignedData, ByteAlignedData, dict]:
     """Compressed-domain sort of a nearly-sorted series.
 
-    One decode of the time column yields the stable sort permutation. Its
-    runs of consecutive elements move as byte slices of both columns, with
-    the canonical re-encode of the seam deltas spliced in (`delta_splice`,
-    `move_runs`). Falls back to a wholesale re-encode when descents exceed
-    ``inversion_threshold`` of the points (BackwardSort-style regime
-    switch). The inputs are never modified; a sorted series is returned as
-    is, any other as new objects.
+    Descents come from the sign bit of each stored delta: a zigzag code is
+    odd exactly when its delta is negative, so counting them takes the
+    time plane's offsets and one byte gather, no decode (`_signs_give_order`
+    says when the sign is the order). Each descent opens a window that
+    grows until the elements on both sides bound it (`_close_windows`);
+    only the windows are decoded, relative to the element before each.
+    With closed windows and no descent outside them, stable-sorting each
+    window on its own equals the global stable sort: every element left
+    of a window is <= the one just before it, which is <= the window's
+    minimum, symmetrically on the right, and ties never cross a window
+    edge out of arrival order. Every other element keeps its place.
+
+    The sorted windows become runs of consecutive source elements; each
+    run moves as one byte slice of both columns, with the canonical
+    re-encode of the seam deltas (computed from the window values) spliced
+    in (`delta_splice`, `move_runs`). When the signs cannot be trusted the
+    whole series is decoded once and sorted as one window. Falls back to a
+    wholesale re-encode when descents exceed ``inversion_threshold`` of the
+    points (BackwardSort-style regime switch). The inputs are never
+    modified; a sorted series is returned as is, any other as new objects.
 
     Returns (time, value, lineage), the per-partition sort lineage:
 
@@ -123,26 +262,78 @@ def compressed_sort(
       i with ``ts[i] < ts[i-1]`` (one per out-of-order run);
     - ``patched_codes``: on the rotate path, delta codes re-encoded, i.e.
       seams (the re-encode path rewrites every code);
-    - ``moved_elements``: elements whose position changed.
+    - ``moved_elements``: elements whose position changed;
+    - ``decoded_elements``: time elements decoded, over every window round
+      and the 8-byte deltas read by the sign check (the whole column on the
+      re-encode path or when the signs cannot be trusted).
     """
-    ts = delta_decode(time_data)
-    n = len(ts)
-    lineage = {"path": "noop", "rotations": 0, "patched_codes": 0, "moved_elements": 0}
-    descents = int(np.count_nonzero(ts[1:] < ts[:-1])) if n > 1 else 0
-    if descents == 0:
+    n = time_data.count
+    lineage = {"path": "noop", "rotations": 0, "patched_codes": 0,
+               "moved_elements": 0, "decoded_elements": 0}
+    if n < 2:
+        return time_data, value_data, lineage
+    off = _offsets(time_data.codes)
+    trusted, lineage["decoded_elements"] = _signs_give_order(time_data, off)
+    if trusted:
+        ts = None
+        odd = np.take(time_data.vals, off[1:n]) & 1  # zigzag code odd: delta < 0
+        descents = 1 + odd.view(bool).nonzero()[0]
+    else:
+        ts = delta_decode(time_data)
+        lineage["decoded_elements"] = n
+        descents = 1 + (ts[1:] < ts[:-1]).nonzero()[0]
+    if len(descents) == 0:
         return time_data, value_data, lineage
 
-    order = stable_sort_order(ts)
-    runs, lineage["moved_elements"] = _runs(order)
-    if descents > max(1, n * inversion_threshold):
-        lineage["path"] = "reencode"
+    if len(descents) > max(1, n * inversion_threshold):
+        if ts is None:
+            ts = delta_decode(time_data)
+        order = stable_sort_order(ts)
+        lineage.update(path="reencode", moved_elements=_runs(order)[1], decoded_elements=n)
         return delta_encode(ts[order]), permute(value_data, order), lineage
 
-    seams = len(runs) - int(order[0] == 0)  # run heads whose predecessor changed
-    lineage.update(path="rotate", rotations=descents, patched_codes=seams)
+    if ts is None:
+        lo, hi, rel, decoded = _close_windows(time_data, off, descents)
+        lineage["decoded_elements"] += decoded
+    else:  # one window: the whole series, decoded from element 0
+        lo, hi, rel = np.array([0]), np.array([n]), ts
+    # each window's elements and then its element hi (when hi < n), back
+    # to back; the stable sort keeps element hi last, as it is >= the window
+    lens = hi - lo + (hi < n)
+    starts = np.cumsum(lens) - lens
+    pos = np.arange(int(lens.sum())) + np.repeat(lo - starts, lens)
+    vals = rel[pos]
+    key = vals
+    if ts is None:  # stack the windows' value ranges so one sort keeps them apart
+        lo_v, hi_v = np.minimum.reduceat(vals, starts), np.maximum.reduceat(vals, starts)
+        span = hi_v - lo_v + 1
+        key = vals + np.repeat(np.cumsum(span) - span - lo_v, lens)
+    o = np.argsort(key, kind="stable")
+    src, vals = pos[o], vals[o]
+    # output position p starts a run when its source does not follow the
+    # source before it; a window's first position has an unmoved element
+    # before it (value 0 on the window's base)
+    head = np.empty(len(pos), dtype=bool)
+    np.not_equal(src[1:], src[:-1] + 1, out=head[1:])
+    head[starts] = src[starts] != lo
+    seam = np.empty(len(pos), dtype=np.int64)
+    np.subtract(vals[1:], vals[:-1], out=seam[1:])
+    seam[starts] = vals[starts]
+    if lo[0] == 0:  # position 0 heads run 0 and takes its absolute value
+        head[0] = True
+        runs, run_src, first, deltas = pos[head], src[head], vals[0], seam[head][1:]
+    else:
+        runs = np.concatenate(([0], pos[head]))
+        run_src = np.concatenate(([0], src[head]))
+        first, deltas = time_data.vals[:8].view("<i8")[0], seam[head]
+    lineage.update(
+        path="rotate", rotations=len(descents),
+        patched_codes=len(runs) - int(run_src[0] == 0),
+        moved_elements=int(np.count_nonzero(src != pos)),
+    )
     return (
-        delta_splice(time_data, ts, runs, order),
-        move_runs(value_data, runs, order),
+        delta_splice(time_data, runs, first, deltas, run_src, off),
+        move_runs(value_data, runs, run_src),
         lineage,
     )
 

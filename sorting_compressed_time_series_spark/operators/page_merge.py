@@ -71,7 +71,7 @@ def _decode_pages(
 
 def _splice_small(t: ByteAlignedData, zz: np.ndarray, ts: np.ndarray,
                   starts: np.ndarray) -> ByteAlignedData:
-    """`delta_splice(t, ts, starts)` for a short stack: patch the seam
+    """`delta_splice` of the page starts for a short stack: patch the seam
     deltas into the decoded codes ``zz`` and the classes ``t.codes`` (both
     owned by this merge) and emit the column once."""
     seams = starts[1:]
@@ -109,7 +109,9 @@ def merge_pages(
         lineage.update(path="splice", spliced_boundaries=len(pages) - 1)
         if t.count <= _SMALL:
             return _splice_small(t, zz, ts, starts), _stack(vpages), lineage
-        return delta_splice(t, ts, starts), _stack(vpages), lineage
+        seams = starts[1:]
+        return (delta_splice(t, starts, ts[0], ts[seams] - ts[seams - 1]),
+                _stack(vpages), lineage)
 
     # overlap: stable k-way merge (page order breaks ties = flush order)
     lineage["path"] = "kmerge"

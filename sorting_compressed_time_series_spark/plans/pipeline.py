@@ -78,11 +78,12 @@ def _promoted_rows(kern, lo: list[int], hi: list[int], dirty: list[str]):
 
 def _python_worker_memory(spark: SparkSession) -> int:
     """Bytes a Python worker may hold before Spark's own Python aggregation
-    spills (``spark.python.worker.memory``, default 512m)."""
+    spills (``spark.python.worker.memory``, default 512m). Reads the one
+    key from the session conf; ``sparkContext.getConf()`` would copy the
+    whole SparkConf over py4j first."""
     from pyspark.rdd import _parse_memory
 
-    return _parse_memory(spark.sparkContext.getConf().get(
-        "spark.python.worker.memory", "512m")) << 20
+    return _parse_memory(spark.conf.get("spark.python.worker.memory", "512m")) << 20
 
 
 def _described(method):

@@ -11,14 +11,17 @@ deterministic encoder makes possible.
 import numpy as np
 import pytest
 
+from sorting_compressed_time_series_spark.codecs import bytealigned
 from sorting_compressed_time_series_spark.codecs.bytealigned import (
     delta_decode,
     delta_encode,
     varint_decode,
     varint_encode,
 )
+from sorting_compressed_time_series_spark.operators import compressed_sort as cs
 from sorting_compressed_time_series_spark.operators.compressed_sort import (
     ROTATION_INVERSION_THRESHOLD,
+    WINDOW_RADIUS,
     compressed_sort,
     sort_reencode,
     stable_sort_order,
@@ -150,6 +153,109 @@ def test_sort_reencode_matches_rotation_output():
     td2, vd2, _ = sort_reencode(delta_encode(ts), varint_encode(vs))
     assert td1.vals.tobytes() == td2.vals.tobytes()
     assert vd1.vals.tobytes() == vd2.vals.tobytes()
+
+
+def _lineage_from_values(ts, threshold=ROTATION_INVERSION_THRESHOLD):
+    """The sort lineage worked out on the decoded series with one global
+    stable argsort: descents, run heads of the permutation (seams) and
+    elements out of place. The windowed sort must report exactly this."""
+    n = len(ts)
+    lineage = {"path": "noop", "rotations": 0, "patched_codes": 0, "moved_elements": 0}
+    descents = int(np.count_nonzero(ts[1:] < ts[:-1])) if n > 1 else 0
+    if descents == 0:
+        return lineage
+    order = np.argsort(ts, kind="stable")
+    moved = int(np.count_nonzero(order != np.arange(n)))
+    if descents > max(1, n * threshold):
+        return {**lineage, "path": "reencode", "moved_elements": moved}
+    runs = 1 + int(np.count_nonzero(np.diff(order) != 1))
+    return {"path": "rotate", "rotations": descents,
+            "patched_codes": runs - int(order[0] == 0), "moved_elements": moved}
+
+
+def _window_case(name):
+    """Series whose disorder windows hit one edge of `compressed_sort`."""
+    r = WINDOW_RADIUS
+    ts = np.arange(20_000, dtype=np.int64) * 10
+    if name == "displaced_1e4":  # several growth rounds to close
+        ts[15_000] = ts[5_000] - 5
+    elif name == "windows_touch":  # [i - r, i] and [i + 1, i + r + 1] merge
+        ts[300] = ts[299] - 1
+        ts[300 + r + 1] = ts[300 + r] - 1
+    elif name == "element_0_far":
+        ts[0] = ts[12_000] + 3
+    elif name == "element_0_near":
+        ts[0] = ts[2] + 1
+    elif name == "last_element":
+        ts[-1] = ts[-3] - 1
+    elif name == "duplicates_at_edges":  # runs of ties cut by window edges
+        ts = np.repeat(np.arange(2_000, dtype=np.int64), 10)
+        ts[500] = ts[500 - r - 1]  # ties the element before its window
+        ts[900], ts[901] = ts[800], ts[899]  # the element after ties the max
+    elif name == "wide_delta":  # an 8-byte delta, spans stay far below 2^63
+        ts[10_000:] += 2**40
+        ts[10_020] = ts[9_990]
+    elif name == "span_past_int64":  # signs untrusted: one whole-series window
+        ts = np.linspace(-(2**62) * 1.5, 2**62 * 1.5, 5_000).astype(np.int64)
+        ts[2_000] = ts[1_990]
+    return ts
+
+
+WINDOW_CASES = ["displaced_1e4", "windows_touch", "element_0_far", "element_0_near",
+                "last_element", "duplicates_at_edges", "wide_delta", "span_past_int64"]
+
+
+@pytest.mark.parametrize("name", WINDOW_CASES)
+def test_window_edge_cases_match_reencode_and_lineage(name):
+    ts = _window_case(name)
+    n = len(ts)
+    vs = np.arange(n, dtype=np.int64) * 7 - 1000
+    td, vd, lineage = compressed_sort(delta_encode(ts), varint_encode(vs), inversion_threshold=1.0)
+    rt, rv, _ = sort_reencode(delta_encode(ts), varint_encode(vs))
+    assert _planes(td) == _planes(rt) and _planes(vd) == _planes(rv)
+    decoded = lineage.pop("decoded_elements")
+    assert lineage == _lineage_from_values(ts, 1.0)
+    assert lineage["path"] == "rotate"
+    if name == "span_past_int64":
+        assert decoded == n
+    elif name not in ("displaced_1e4", "element_0_far"):  # those grow far
+        assert decoded < n // 10
+
+
+def test_sort_decodes_only_disorder_windows(monkeypatch):
+    """No whole-column decode on the rotate path: with `delta_decode` and
+    the whole-column payload gather raising, a sorted 100k page is a noop
+    and a 100k page at 0.1% disorder still equals `sort_reencode`."""
+    rng = np.random.default_rng(13)
+    n = 100_000
+    ts = np.arange(n, dtype=np.int64) * 100_000 + rng.integers(0, 50_000, n)
+    sorted_t = delta_encode(ts)
+    idx = rng.choice(np.arange(1, n), n // 1000, replace=False)
+    ts[idx] -= rng.integers(1, 4_000_000, len(idx))
+    vs = rng.integers(-10_000, 10_001, n).astype(np.int64)
+    t, v = delta_encode(ts), varint_encode(vs)
+    want = sort_reencode(t, v)
+
+    def whole_column(*args, **kwargs):
+        raise AssertionError("whole-column decode")
+
+    monkeypatch.setattr(cs, "delta_decode", whole_column)
+    monkeypatch.setattr(bytealigned, "_gather_payload", whole_column)
+    t0, v0, lineage = compressed_sort(sorted_t, v)
+    assert lineage["path"] == "noop" and lineage["decoded_elements"] == 0
+    assert t0 is sorted_t and v0 is v
+    t1, v1, lineage = compressed_sort(t, v)
+    assert lineage["path"] == "rotate"
+    assert (_planes(t1), _planes(v1)) == (_planes(want[0]), _planes(want[1]))
+    assert 0 < lineage["decoded_elements"] < n // 10
+
+
+def test_empty_and_single_point_series():
+    for ts in ([], [5]):
+        ts = np.asarray(ts, dtype=np.int64)
+        t, v = delta_encode(ts), varint_encode(ts)
+        assert compressed_sort(t, v)[2]["path"] == "noop"
+        assert sort_reencode(t, v)[2] == 0
 
 
 def test_stable_sort_order_is_stable():

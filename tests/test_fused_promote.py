@@ -289,6 +289,22 @@ def test_bucket_over_worker_memory_takes_repartition_plan(spark, tmp_path, multi
     _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
 
 
+def test_python_worker_memory_reads_the_session_key(spark):
+    """The budget comes from the one ``spark.python.worker.memory`` key:
+    Spark's default when nothing sets it, the builder's value when one
+    does."""
+    from pyspark.sql import SparkSession
+
+    key = "spark.python.worker.memory"
+    assert pipeline._python_worker_memory(spark) == 512 << 20
+    try:
+        assert SparkSession.builder.config(key, "300m").getOrCreate() is spark
+        assert pipeline._python_worker_memory(spark) == 300 << 20
+    finally:
+        spark.conf.unset(key)
+    assert pipeline._python_worker_memory(spark) == 512 << 20
+
+
 def test_crash_between_tier_commits_rerun_finishes(spark, tmp_path, multi_chunk, monkeypatch):
     """write_slices fails after the first tier table's manifest swap; a
     promote_all rerun (the same plan, the committed tier a noop) then

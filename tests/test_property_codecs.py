@@ -24,11 +24,13 @@ from sorting_compressed_time_series_spark.codecs.chunk import (
     encode_chunk,
 )
 from sorting_compressed_time_series_spark.operators.compressed_sort import (
+    ROTATION_INVERSION_THRESHOLD,
     bounded_ooo_sort,
     compressed_sort,
     ts_delta_sort_dc,
 )
 from sorting_compressed_time_series_spark.operators.page_merge import merge_pages
+from test_compressed_sort import _lineage_from_values
 
 SETTINGS = settings(
     max_examples=40, deadline=None,
@@ -100,6 +102,9 @@ def nearly_sorted_arrays(draw):
 @example(ts=[10, 20, 20, 30, 20, 20, 40], l=3)  # duplicates straddling seams
 @example(ts=[0, 1, 2**40, 2, 2**40 + 1], l=3)  # seam deltas switch 1 <-> 8 bytes
 @example(ts=[-(2**63), 2**63 - 1, 0, -(2**63) + 5, -1], l=3)  # deltas wrap
+@example(ts=list(range(0, 1000, 10)) + [5], l=3)  # descent at the last element, far back
+@example(ts=[0] * 60 + [1] * 60 + [0], l=3)  # ties run across window edges
+@example(ts=[0, 2**40] + list(range(2**40, 2**40 + 80)) + [2**40 - 1], l=3)  # 8-byte delta
 @SETTINGS
 def test_sorters_agree_on_canonical_bytes(ts, l):
     ts = np.asarray(ts, np.int64)
@@ -111,6 +116,9 @@ def test_sorters_agree_on_canonical_bytes(ts, l):
         ts_delta_sort_dc(delta_encode(ts), varint_encode(vs), block_threshold=37),
         bounded_ooo_sort(delta_encode(ts), varint_encode(vs), l=l),
     ]
+    for (_, _, lineage), threshold in zip(outs, (ROTATION_INVERSION_THRESHOLD, 1.0)):
+        del lineage["decoded_elements"]
+        assert lineage == _lineage_from_values(ts, threshold)
     for td, vd, _ in outs:
         assert td.vals.tobytes() == want.vals.tobytes()
         assert np.array_equal(td.codes, want.codes)

@@ -8,7 +8,8 @@ each page the tool times these, best of ``--reps`` repetitions of at
 least 200k points each:
 
 - ``rotate``: `compressed_sort` forced down its run-move path
-  (``inversion_threshold=1.0``);
+  (``inversion_threshold=1.0``): descents from the delta sign bits, only
+  the disorder windows decoded and sorted, runs moved as byte slices;
 - ``compressed_sort``: the default regime switch
   (``ROTATION_INVERSION_THRESHOLD``), which picks rotate or re-encode;
 - ``sort_reencode``: decode, stable sort, re-encode.
@@ -116,6 +117,7 @@ def measure(n: int, rate: float, reps: int, rng: np.random.Generator) -> dict:
             raise AssertionError(f"{name} {n}@{rate}: not byte-identical to sort_reencode")
         if name == "rotate":
             row["runs"] = out[2]["patched_codes"]
+            row["decoded_elements"] = out[2]["decoded_elements"]
         if name == "compressed_sort":
             row["path"] = out[2]["path"]
         row["ns_per_point"][name] = _best(fn, reps, n, t, v)
