@@ -43,11 +43,17 @@ length alone (`_SMALL`), with byte-identical results:
   on long ones. `_SMALL` is the crossover measured by
   ``tools/sort_microbench.py`` (its ``codec`` section).
 
-All kernels are whole-array numpy; no per-element Python in any hot path.
+The kernels are whole-array numpy, with one exception: a merge of a few
+dozen points (`page_merge`'s short stacks; the reference's compaction
+pages hold 10) reads and writes each plane with one ``struct`` call
+(`unpack_plane`, `pack_plane`) and works on Python ints. A numpy call
+costs ~1.5-3 us whatever its length, and a merge needs ~30 of them, so
+below ``page_merge._SHORT`` points per-element Python is the cheaper loop.
 """
 
 from __future__ import annotations
 
+import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -55,6 +61,10 @@ import numpy as np
 # class code -> payload byte width (class 0 is the widest, matching the
 # reference's "code 0 = 8 bytes" convention)
 CLASS_WIDTH = np.array([8, 1, 2, 4], dtype=np.int64)
+# bytes.translate tables: class code -> struct format character of its
+# payload, and bit length of a zigzag code (0..64) -> its smallest class
+_CLASS_FORMAT = bytes.maketrans(bytes(range(4)), b"QBHI")
+_BITS_CLASS = bytes([1] * 9 + [2] * 8 + [3] * 16 + [0] * 223)
 # (class code, little-endian dtype of that payload width)
 _CLASS_DTYPES = tuple((c, np.dtype(f"<u{w}")) for c, w in enumerate(CLASS_WIDTH.tolist()))
 # elements per bucket pass: bounds the index temporaries of the gathers
@@ -85,6 +95,19 @@ def unzigzag(z: np.ndarray) -> np.ndarray:
     np.negative(sign, out=sign)
     out ^= sign
     return out
+
+
+def unpack_plane(vals, codes: bytes) -> tuple[int, ...]:
+    """Zigzag codes of a payload plane as Python ints (the raw element 0
+    of a delta column as its unsigned 64-bit pattern), by one
+    ``struct.unpack``. ``codes`` holds one class per byte."""
+    return struct.unpack(b"<" + codes.translate(_CLASS_FORMAT), vals)
+
+
+def pack_plane(zz, codes: bytes) -> bytes:
+    """Inverse of `unpack_plane`: the payload plane of codes ``zz`` (ints
+    in 0..2**64 - 1) in classes ``codes``, by one ``struct.pack``."""
+    return struct.pack(b"<" + codes.translate(_CLASS_FORMAT), *zz)
 
 
 @dataclass
@@ -203,9 +226,11 @@ def _emit_classes(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return out
 
 
-def _gather_classes(vals: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Zigzag codes by one gather per width class."""
-    off = _offsets(codes)
+def _gather_classes(vals: np.ndarray, codes: np.ndarray, off: np.ndarray | None = None) -> np.ndarray:
+    """Zigzag codes by one gather per width class. ``off`` is the column's
+    `_offsets`, when the caller has them."""
+    if off is None:
+        off = _offsets(codes)
     zz = np.empty(len(codes), dtype=np.uint64)
     for idx, dt in _buckets(codes):
         zz[idx] = _window(vals, dt)[off[idx].astype(np.intp)]
@@ -220,13 +245,13 @@ def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return _emit_classes(zz, codes)
 
 
-def _gather_payload(data: ByteAlignedData) -> np.ndarray:
+def _gather_payload(data: ByteAlignedData, off: np.ndarray | None = None) -> np.ndarray:
     """Inverse of `_emit_payload`: vals + codes -> zigzag codes, by the
     same length switch (lanes up to `_SMALL` elements, width classes
-    above)."""
+    above, through the `_offsets` ``off`` when given)."""
     if data.count <= _SMALL:
         return _gather_lanes(data.vals, data.codes)
-    return _gather_classes(data.vals, data.codes)
+    return _gather_classes(data.vals, data.codes, off)
 
 
 def _gather_at(data: ByteAlignedData, off: np.ndarray, idx: np.ndarray) -> np.ndarray:
@@ -270,16 +295,19 @@ def delta_encode(values: np.ndarray) -> ByteAlignedData:
     return ByteAlignedData(vals, codes, n)
 
 
-def delta_decode(data: ByteAlignedData, backward: bool = False) -> np.ndarray:
+def delta_decode(
+    data: ByteAlignedData, backward: bool = False, off: np.ndarray | None = None
+) -> np.ndarray:
     """Decode the delta codec. ``backward=True`` exercises the reverse
     cursor semantics (reference TS_DELTA_decoder.backwardDecode,
     TS_DELTA_decoder.java:119-140): reconstruct by walking lens from the
     tail, subtracting deltas from the last value. Outputs are identical;
-    both paths are fully vectorized.
+    both paths are fully vectorized. ``off`` is the column's `_offsets`,
+    when the caller has them.
     """
     if data.count == 0:
         return np.empty(0, dtype=np.int64)
-    zz = _gather_payload(data)
+    zz = _gather_payload(data, off)
     deltas = unzigzag(zz)
     first = zz[0].view(np.int64)
     del zz

@@ -23,7 +23,7 @@ from collections.abc import Generator, Iterator
 import numpy as np
 import pyarrow as pa
 
-from ..codecs.bytealigned import varint_decode
+from ..codecs.bytealigned import CLASS_WIDTH, ByteAlignedData, unpack_plane
 from ..codecs.chunk import (
     CODEC_DELTA,
     CODEC_VARINT,
@@ -74,6 +74,19 @@ def _compact(rows: pa.RecordBatch) -> Generator[pa.RecordBatch, None, int]:
     return int(multi.sum())
 
 
+def _end_values(data: ByteAlignedData) -> tuple[int, int]:
+    """First and last element of a varint column (0, 0 when empty), read
+    from their payload bytes alone: element 0 is the plane's first
+    ``width(codes[0])`` bytes, the last element its final
+    ``width(codes[-1])``."""
+    if data.count == 0:
+        return 0, 0
+    codes = bytes(data.codes[[0, -1]])
+    ends = (data.vals[:CLASS_WIDTH[codes[0]]], data.vals[-CLASS_WIDTH[codes[1]]:])
+    z0, z1 = unpack_plane(b"".join(ends), codes)
+    return (z0 >> 1) ^ -(z0 & 1), (z1 >> 1) ^ -(z1 & 1)
+
+
 def _merge_docs(rows: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
     """One chunk per doc run ``rows[starts[i]:starts[i + 1]]`` (each of two
     or more rows): the pages merged by ``merge_pages`` in the run's order,
@@ -91,9 +104,9 @@ def _merge_docs(rows: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         mt, mv, _ = merge_pages(tpages, vpages)
         t_blobs.append(serialize_bytealigned(mt, CODEC_DELTA))
         v_blobs.append(serialize_bytealigned(mv, CODEC_VARINT))
-        vals = varint_decode(mv)
-        firsts.append(int(vals[0]) if len(vals) else 0)
-        lasts.append(int(vals[-1]) if len(vals) else 0)
+        v0, v1 = _end_values(mv)
+        firsts.append(v0)
+        lasts.append(v1)
     first = pa.array(starts)
     min_ts = fold(np.minimum, "min_ts")
     cols = {

@@ -279,7 +279,7 @@ def compressed_sort(
         odd = np.take(time_data.vals, off[1:n]) & 1  # zigzag code odd: delta < 0
         descents = 1 + odd.view(bool).nonzero()[0]
     else:
-        ts = delta_decode(time_data)
+        ts = delta_decode(time_data, off=off)
         lineage["decoded_elements"] = n
         descents = 1 + (ts[1:] < ts[:-1]).nonzero()[0]
     if len(descents) == 0:
@@ -287,7 +287,7 @@ def compressed_sort(
 
     if len(descents) > max(1, n * inversion_threshold):
         if ts is None:
-            ts = delta_decode(time_data)
+            ts = delta_decode(time_data, off=off)
         order = stable_sort_order(ts)
         lineage.update(path="reencode", moved_elements=_runs(order)[1], decoded_elements=n)
         return delta_encode(ts[order]), permute(value_data, order), lineage

@@ -4,48 +4,82 @@ Re-expresses the reference's compaction-time compressed merge
 (PersistUncompressingSorter, reference db/iotdb-core/tsfile/.../encoding/
 sorter/PersistUncompressingSorter.java:42-206 — semantics only, no code):
 
-The pages' planes are stacked back to back and decoded in one pass: one
-payload gather over the stacked plane, then a cumulative sum segmented at
-the page starts (each page's first element is a raw value, not a delta).
+Two kernels, picked by stack length alone (`_SHORT`), give byte-identical
+planes and equal lineage:
+
+- **numpy** (`_merge_stacked`, longer stacks): the pages' planes are
+  stacked back to back and decoded in one pass: one payload gather over
+  the stacked plane, then a cumulative sum segmented at the page starts
+  (each page's first element is a raw value, not a delta).
+- **Python ints** (`_merge_short`, at most `_SHORT` points; the
+  reference's compaction pages hold 10): one ``struct.unpack`` reads a
+  whole plane (`unpack_plane`) and one ``struct.pack`` writes one
+  (`pack_plane`). A merge that small spends nearly all its numpy time on
+  the fixed cost of ~30 calls, against well under a microsecond per point
+  in the Python loops. int64 wrap-around is reproduced where a timestamp
+  or a delta can leave the int64 range.
+
+Both take the same two paths:
 
 - **Non-overlapping pages** (the common case once series are sorted): the
   merged stream is the stacked planes with ONE patched delta per page
   boundary — the first element of each later page stops being a raw value
   and becomes a delta against the previous page's last timestamp
-  (reference sortPage fast path, :96-102). All seams are re-encoded in
-  one `delta_splice` call, the seam splice `compressed_sort` uses; page
-  interiors are copied as stored. A stack of at most `_SMALL` points (the
-  reference's compaction pages hold 10) skips the run slicing: the seam
-  deltas are written into the zigzag codes and classes the decode already
-  holds, and the column is emitted once through the lane codec. Interior
-  codes keep their stored class, so the bytes equal `delta_splice`'s.
+  (reference sortPage fast path, :96-102). Page interiors are copied as
+  stored. The numpy kernel re-encodes all seams in one `delta_splice`
+  call, the seam splice `compressed_sort` uses; up to `_SMALL` points it
+  writes the seam deltas into the zigzag codes and classes the decode
+  already holds and emits the column once through the lane codec. The
+  short kernel packs each seam delta and joins it with the pages' stored
+  bytes; the value pages are joined with no decode at all.
 - **Overlapping pages**: k-way stable merge. The reference splices byte
-  ranges across page boundaries; we merge-order with a stable argsort
-  keyed (ts, page_order), re-encode the time column and gather the value
-  column's bytes in that order — identical output (the canonical encode of
-  the merged sequence), which the oracle asserts.
+  ranges across page boundaries; we merge-order with a stable sort keyed
+  (ts, page_order), re-encode the time column and reorder the value
+  column's codes in that order — identical output (the canonical encode
+  of the merged sequence), which the oracle asserts.
 
-In the Spark pipeline this kernel runs per series inside `applyInPandas`
-during tier compaction; page order = flush order, so stability gives
-last-writer-wins determinism for duplicate timestamps.
+In the Spark pipeline this kernel runs once per multi-chunk doc inside
+`compaction.compact_kernel`, the whole-bucket compaction job; page order
+= flush order, so stability gives last-writer-wins determinism for
+duplicate timestamps.
 """
 
 from __future__ import annotations
 
+import struct
+from itertools import accumulate
+from operator import add, itemgetter, sub
+
 import numpy as np
 
 from ..codecs.bytealigned import (
+    _BITS_CLASS,
+    _CLASS_FORMAT,
     _SMALL,
+    CLASS_WIDTH,
     ByteAlignedData,
     _classify,
     _emit_payload,
     _gather_payload,
     delta_encode,
     delta_splice,
+    pack_plane,
     permute,
+    unpack_plane,
     unzigzag,
     zigzag,
 )
+
+# longest stack merged on Python ints (`_merge_short`); longer stacks take
+# the numpy kernels (`_merge_stacked`). The crossover of the two measured
+# by tools/sort_microbench.py (merge section, tools/sort_microbench.json)
+_SHORT = 200
+_I64 = 2**63
+_U64 = 2**64 - 1
+_WIDTH = tuple(CLASS_WIDTH.tolist())
+# class code -> packer of one payload
+_PACK = tuple(struct.Struct(b"<" + bytes([c]).translate(_CLASS_FORMAT)).pack for c in range(4))
+_U8 = np.dtype(np.uint8)
 
 
 def _stack(parts: list[ByteAlignedData]) -> ByteAlignedData:
@@ -71,15 +105,103 @@ def _decode_pages(
 
 def _splice_small(t: ByteAlignedData, zz: np.ndarray, ts: np.ndarray,
                   starts: np.ndarray) -> ByteAlignedData:
-    """`delta_splice` of the page starts for a short stack: patch the seam
-    deltas into the decoded codes ``zz`` and the classes ``t.codes`` (both
-    owned by this merge) and emit the column once."""
+    """`delta_splice` of the page starts for a stack of at most `_SMALL`
+    points: patch the seam deltas into the decoded codes ``zz`` and the
+    classes ``t.codes`` (both owned by this merge) and emit the column
+    once."""
     seams = starts[1:]
     d = zigzag(ts[seams] - ts[seams - 1])
     zz[seams] = d
     t.codes[seams] = _classify(d)
     t.codes[0] = 0  # element 0 keeps the raw first value
     return ByteAlignedData(_emit_payload(zz, t.codes), t.codes, t.count)
+
+
+def _wrap(x: list[int], lo: int, hi: int) -> list[int]:
+    """``x`` as int64, wrapped as numpy's int64 math wraps, given bounds
+    ``lo <= min(x)`` and ``max(x) <= hi``: a copy only when they leave
+    the int64 range."""
+    if lo >= -_I64 and hi < _I64:
+        return x
+    return [((v + _I64) & _U64) - _I64 for v in x]
+
+
+def _zigzag(x: list[int]) -> list[int]:
+    return [(v << 1) ^ (v >> 63) for v in x]
+
+
+def _u8(buf) -> np.ndarray:
+    """A fresh, writable uint8 array of the bytes ``buf``."""
+    return np.frombuffer(bytearray(buf), _U8)
+
+
+def _merge_short(pages: list[ByteAlignedData], vpages: list[ByteAlignedData]):
+    """`_merge_stacked` on Python ints, for stacks of at most `_SHORT`
+    points: one ``struct`` call per plane and direction instead of ~30
+    numpy calls. Byte-identical output; returns (time, value, path)."""
+    counts = [p.count for p in pages]
+    n = sum(counts)
+    tcodes = b"".join([p.codes for p in pages])
+    zz = unpack_plane(b"".join([p.vals for p in pages]), tcodes)
+    d = [(z >> 1) ^ -(z & 1) for z in zz]  # unzigzag
+    starts = [0, *accumulate(counts[:-1])]
+    ts = []
+    for s, k in zip(starts, counts):
+        z = zz[s]  # the page's raw first value, as int64
+        d[s] = z - (z >> 63 << 64)
+        ts += accumulate(d[s:s + k])
+    ts = _wrap(ts, min(ts), max(ts))
+    seams = starts[1:]
+    if all(ts[s - 1] <= ts[s] for s in seams):
+        # one delta per seam, packed in its class; everything else as stored
+        deltas = [ts[s] - ts[s - 1] for s in seams]
+        heads = [zz[0], *_zigzag(_wrap(deltas, 0, max(deltas)))]
+        codes = bytearray(tcodes)
+        pieces = []
+        for s, p, z in zip(starts, pages, heads):
+            c = _BITS_CLASS[z.bit_length()] if s else 0
+            pieces += (_PACK[c](z), memoryview(p.vals)[_WIDTH[codes[s]]:])
+            codes[s] = c
+        t = ByteAlignedData(_u8(b"".join(pieces)), np.frombuffer(codes, _U8), n)
+        v = ByteAlignedData(_u8(b"".join([p.vals for p in vpages])),
+                            _u8(b"".join([p.codes for p in vpages])), n)
+        return t, v, "splice"
+
+    # overlap: stable sort, so ties keep page order (= flush order)
+    take = itemgetter(*sorted(range(n), key=ts.__getitem__))
+    ts = take(ts)
+    deltas = list(map(sub, ts[1:], ts))
+    if ts[-1] - ts[0] < _I64:  # every delta fits: its zigzag code is 2 * delta
+        tz = list(map(add, deltas, deltas))
+    else:
+        tz = _zigzag(_wrap(deltas, 0, ts[-1] - ts[0]))
+    codes = b"\0" + bytes(map(int.bit_length, tz)).translate(_BITS_CLASS)
+    t = ByteAlignedData(_u8(pack_plane((ts[0] & _U64, *tz), codes)), _u8(codes), n)
+    vcodes = b"".join([p.codes for p in vpages])
+    vz = take(unpack_plane(b"".join([p.vals for p in vpages]), vcodes))
+    vcodes = bytes(take(vcodes))
+    return t, ByteAlignedData(_u8(pack_plane(vz, vcodes)), _u8(vcodes), n), "kmerge"
+
+
+def _merge_stacked(pages: list[ByteAlignedData], vpages: list[ByteAlignedData]):
+    """Merge two or more non-empty pages with whole-array numpy kernels:
+    one stacked decode, then a seam splice or a stable k-way merge.
+    Returns (time, value, path)."""
+    counts = np.array([p.count for p in pages], dtype=np.intp)
+    starts = np.cumsum(counts) - counts
+    t = _stack(pages)
+    zz, ts = _decode_pages(t, starts, counts)
+    if np.all(ts[starts[1:] - 1] <= ts[starts[1:]]):
+        # compressed-domain concat: one re-encoded delta per page boundary
+        if t.count <= _SMALL:
+            return _splice_small(t, zz, ts, starts), _stack(vpages), "splice"
+        seams = starts[1:]
+        return (delta_splice(t, starts, ts[0], ts[seams] - ts[seams - 1]),
+                _stack(vpages), "splice")
+
+    # overlap: stable k-way merge (page order breaks ties = flush order)
+    order = np.argsort(ts, kind="stable")
+    return delta_encode(ts[order]), permute(_stack(vpages), order), "kmerge"
 
 
 def merge_pages(
@@ -100,20 +222,8 @@ def merge_pages(
         lineage["path"] = "single"
         return pages[0], vpages[0], lineage
 
-    counts = np.array([p.count for p in pages], dtype=np.intp)
-    starts = np.cumsum(counts) - counts
-    t = _stack(pages)
-    zz, ts = _decode_pages(t, starts, counts)
-    if np.all(ts[starts[1:] - 1] <= ts[starts[1:]]):
-        # compressed-domain concat: one re-encoded delta per page boundary
-        lineage.update(path="splice", spliced_boundaries=len(pages) - 1)
-        if t.count <= _SMALL:
-            return _splice_small(t, zz, ts, starts), _stack(vpages), lineage
-        seams = starts[1:]
-        return (delta_splice(t, starts, ts[0], ts[seams] - ts[seams - 1]),
-                _stack(vpages), lineage)
-
-    # overlap: stable k-way merge (page order breaks ties = flush order)
-    lineage["path"] = "kmerge"
-    order = np.argsort(ts, kind="stable")
-    return delta_encode(ts[order]), permute(_stack(vpages), order), lineage
+    short = sum(p.count for p in pages) <= _SHORT
+    t, v, lineage["path"] = (_merge_short if short else _merge_stacked)(pages, vpages)
+    if lineage["path"] == "splice":
+        lineage["spliced_boundaries"] = len(pages) - 1
+    return t, v, lineage

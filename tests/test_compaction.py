@@ -22,6 +22,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from sorting_compressed_time_series_spark.codecs.bytealigned import varint_encode
 from sorting_compressed_time_series_spark.codecs.chunk import (
     CODEC_DELTA,
     CODEC_VARINT,
@@ -33,6 +34,7 @@ from sorting_compressed_time_series_spark.codecs.chunk import (
 )
 from sorting_compressed_time_series_spark.operators.compaction import (
     COMPACT_ORDER,
+    _end_values,
     compact_kernel,
 )
 from sorting_compressed_time_series_spark.operators.ingest import CHUNK_ARROW, flush
@@ -124,6 +126,16 @@ def test_compaction_reproduces_single_flush(single_flush, interleave):
 # ---------------------------------------------------------------------------
 # Pipeline.compact
 # ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("vals", [
+    [], [0], [-(2**63)], [2**63 - 1, 5, -(2**63)], [-1, 2**40, 255, 256, -(2**31)],
+])
+def test_end_values_read_only_the_end_payloads(vals):
+    # first_v / last_v of a merged chunk come from the value plane's two end
+    # payloads; equal to a full decode at every width class and int64 extreme
+    want = (vals[0], vals[-1]) if vals else (0, 0)
+    assert _end_values(varint_encode(np.asarray(vals, np.int64))) == want
+
 
 @pytest.fixture(scope="module")
 def appended(spark, tmp_path_factory):

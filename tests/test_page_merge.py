@@ -14,7 +14,7 @@ from sorting_compressed_time_series_spark.codecs.bytealigned import (
     varint_decode,
     varint_encode,
 )
-from sorting_compressed_time_series_spark.operators.page_merge import merge_pages
+from sorting_compressed_time_series_spark.operators.page_merge import _SHORT, merge_pages
 
 
 def _mk_pages(ts_pages, vs_pages):
@@ -139,7 +139,9 @@ def _planes(data):
     return data.vals.tobytes(), data.codes.tobytes(), data.count
 
 
-@pytest.mark.parametrize("page", [10, _SMALL // 2])
+# four pages of this many points: merged on Python ints (10, _SHORT // 4),
+# by the numpy lane codec (_SHORT // 4 + 1) and by width class (_SMALL // 2)
+@pytest.mark.parametrize("page", [10, _SHORT // 4, _SHORT // 4 + 1, _SMALL // 2])
 @pytest.mark.parametrize("overlap, path", [(False, "splice"), (True, "kmerge")])
 def test_inputs_unchanged_and_outputs_fresh(overlap, path, page):
     # the small splice patches the decoded codes and classes in place: the
@@ -150,6 +152,8 @@ def test_inputs_unchanged_and_outputs_fresh(overlap, path, page):
     assert lineage["path"] == path
     assert [_planes(d) for d in tp + vp] == before
     for out in (mt, mv):
+        assert out.vals.flags.writeable and out.codes.flags.writeable
+        assert out.vals.dtype == out.codes.dtype == np.uint8
         for inp in tp + vp:
             assert out is not inp
             assert not np.shares_memory(out.vals, inp.vals)

@@ -3,6 +3,8 @@ row shapes and value regimes must round-trip exactly and, for the sorters,
 end byte-identical to a canonical encode of the stable-sorted series.
 Deterministic profile (no deadline flakes on a steal-noisy host)."""
 
+from unittest import mock
+
 import numpy as np
 from hypothesis import HealthCheck, example, given, settings, strategies as st
 
@@ -29,8 +31,10 @@ from sorting_compressed_time_series_spark.operators.compressed_sort import (
     compressed_sort,
     ts_delta_sort_dc,
 )
-from sorting_compressed_time_series_spark.operators.page_merge import merge_pages
+from sorting_compressed_time_series_spark.operators import page_merge
+from sorting_compressed_time_series_spark.operators.page_merge import _SHORT, merge_pages
 from test_compressed_sort import _lineage_from_values
+from test_page_merge import _planes
 
 SETTINGS = settings(
     max_examples=40, deadline=None,
@@ -142,10 +146,26 @@ def tiny_page_sets(draw):
     return [sorted(draw(st.lists(_ts_values, min_size=k, max_size=k))) for k in sizes]
 
 
+# disjoint, then overlapping stacks of _SHORT points (the longest merged on
+# Python ints) and _SHORT + 1 points (the shortest merged by numpy)
+_HALF = _SHORT // 2
+_EDGE_STACKS = [
+    [list(range(_HALF)), list(range(_HALF, n))] for n in (_SHORT, _SHORT + 1)
+] + [[list(range(_HALF)), list(range(n - _HALF))] for n in (_SHORT, _SHORT + 1)]
+
+
 @given(pages=tiny_page_sets())
 @example(pages=[[0, 1, 2], [2, 2**40], [], [2**40, 2**40 + 1]])  # splice: dup seams, 1 <-> 8 bytes
 @example(pages=[[-(2**63), 0], [2**63 - 1]])  # splice: a seam delta that wraps
+@example(pages=[[-(2**63)], [0, 2**63 - 1]])  # splice: a seam delta of 2**63 wraps to -2**63
 @example(pages=[[5, 2**63 - 1], [], [-(2**63), 5, 5], [0]])  # kmerge: extremes, duplicates
+@example(pages=[[], [2**40], [], [], [0, 2**40, 2**41], []])  # kmerge: one point among empty pages
+@example(pages=[[], [7], [], [7, 9]])  # splice: one point among empty pages
+@example(pages=[[3, 3], [3], [3, 3, 3], [3]])  # splice: one timestamp in every page
+@example(pages=_EDGE_STACKS[0])  # splice, _SHORT points
+@example(pages=_EDGE_STACKS[1])  # splice, _SHORT + 1 points
+@example(pages=_EDGE_STACKS[2])  # kmerge, _SHORT points
+@example(pages=_EDGE_STACKS[3])  # kmerge, _SHORT + 1 points
 @SETTINGS
 def test_tiny_merges_equal_canonical_encode(pages):
     ts_pages = [np.asarray(p, np.int64) for p in pages]
@@ -167,3 +187,21 @@ def test_tiny_merges_equal_canonical_encode(pages):
         assert got.count == want.count
         assert got.vals.tobytes() == want.vals.tobytes()
         assert np.array_equal(got.codes, want.codes)
+
+
+@given(pages=tiny_page_sets(), values=st.lists(_ts_values, min_size=240, max_size=240))
+@example(pages=[[-(2**63)], [0, 2**63 - 1]], values=[2**63 - 1, -(2**63), 0] + [0] * 237)
+@example(pages=[[5, 2**63 - 1], [], [-(2**63), 5, 5], [0]], values=[-(2**63)] * 240)
+@SETTINGS
+def test_short_and_numpy_merges_agree(pages, values):
+    # the same stack through the Python-int kernel and the numpy kernels:
+    # equal planes and equal lineage, on both paths
+    sizes = np.cumsum([len(p) for p in pages])[:-1]
+    tp = [delta_encode(np.asarray(p, np.int64)) for p in pages]
+    vp = [varint_encode(v) for v in np.split(np.asarray(values[:sum(map(len, pages))], np.int64), sizes)]
+    outs = []
+    for short in (10**9, 0):
+        with mock.patch.object(page_merge, "_SHORT", short):
+            mt, mv, lineage = merge_pages(tp, vp)
+        outs.append((_planes(mt), _planes(mv), lineage))
+    assert outs[0] == outs[1]

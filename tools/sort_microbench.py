@@ -21,11 +21,15 @@ descent ratio (descents / points) below which ``rotate`` beats
 
 Two more sections, independent of ``--sizes`` and ``--rates``:
 
-- ``merge``: the CompactionSorterTest shape, four sorted pages of 10, 100
-  and 1k points each, disjoint (``merge_pages`` splices) and overlapping
-  (it k-way merges), against decoding every page, stable sorting and
-  re-encoding (``reencode``). ns per merged point; every output equals the
-  canonical encode of the stable-sorted union.
+- ``merge``: the CompactionSorterTest shape, four sorted pages of 10, 25,
+  50, 100 and 1k points each, disjoint (``merge_pages`` splices) and
+  overlapping (it k-way merges), against decoding every page, stable
+  sorting and re-encoding (``reencode``). Each stack also goes through
+  both merge kernels, the Python-int one (``short``) and the numpy one
+  (``numpy``). ns per merged point; every output equals the canonical
+  encode of the stable-sorted union. Its crossover is the largest stack
+  (points) up to which ``short`` wins on both paths, which sets
+  ``page_merge._SHORT``.
 - ``codec``: ns per element of the payload gather and emit, lane path
   against width-class path, at 10 to 1M elements of three payload mixes:
   the deltas of a nearly sorted page, small values (1-2 bytes) and all
@@ -64,6 +68,7 @@ from sorting_compressed_time_series_spark.operators.compressed_sort import (  # 
     compressed_sort,
     sort_reencode,
 )
+from sorting_compressed_time_series_spark.operators import page_merge as pm  # noqa: E402
 from sorting_compressed_time_series_spark.operators.page_merge import merge_pages  # noqa: E402
 
 STEP = 100_000
@@ -149,12 +154,30 @@ def measure_merge(page: int, overlap: bool, reps: int, rng: np.random.Generator)
     tp, vp = [delta_encode(t) for t in ts_pages], [varint_encode(v) for v in vs_pages]
     want = _planes(_reencode_merge(tp, vp))
     mt, mv, lineage = merge_pages(tp, vp)
+    kernels = {"short": pm._merge_short, "numpy": pm._merge_stacked}
+    for name, fn in kernels.items():
+        if _planes(fn(tp, vp)) != want:
+            raise AssertionError(f"{name} merge 4x{page}: not the canonical encode")
     if _planes((mt, mv)) != want:
         raise AssertionError(f"merge_pages 4x{page}: not the canonical encode")
     n = 4 * page
     return {"page_points": page, "pages": 4, "path": lineage["path"],
             "ns_per_point": {lineage["path"]: _best(merge_pages, reps, n, tp, vp),
+                             **{name: _best(fn, reps, n, tp, vp) for name, fn in kernels.items()},
                              "reencode": _best(_reencode_merge, reps, n, tp, vp)}}
+
+
+def merge_crossover(rows: list[dict]) -> dict:
+    """Largest stack (points) up to which the short kernel wins on every
+    path, and the smallest stack at which it loses one."""
+    def wins(n):
+        return all(r["ns_per_point"]["short"] < r["ns_per_point"]["numpy"]
+                   for r in rows if r["pages"] * r["page_points"] == n)
+    sizes = sorted({r["pages"] * r["page_points"] for r in rows})
+    lose_from = min((n for n in sizes if not wins(n)), default=None)
+    win_upto = max((n for n in sizes if wins(n) and (lose_from is None or n < lose_from)),
+                   default=None)
+    return {"short_wins_up_to": win_upto, "short_loses_from": lose_from}
 
 
 CODEC_SIZES = (10, 100, 1000, 1500, 2000, 2500, 3000, 4000, 10_000, 100_000, 1_000_000)
@@ -226,7 +249,7 @@ def main() -> None:
     rows = [measure(int(n), float(r), a.reps, rng)
             for n in a.sizes.split(",") for r in a.rates.split(",")]
     merges = [measure_merge(page, overlap, a.reps, rng)
-              for page in (10, 100, 1000) for overlap in (False, True)]
+              for page in (10, 25, 50, 100, 1000) for overlap in (False, True)]
     codec = [measure_codec(n, a.reps, rng) for n in CODEC_SIZES]
     print(json.dumps({
         "host": {"machine": platform.machine(), "cpus": os.cpu_count(),
@@ -236,7 +259,8 @@ def main() -> None:
         "rotation_inversion_threshold": ROTATION_INVERSION_THRESHOLD,
         "rows": rows,
         "crossover": crossover(rows),
-        "merge": merges,
+        "merge": {"rows": merges, "crossover": merge_crossover(merges)},
+        "short_stack": pm._SHORT,
         "small_column": ba._SMALL,
         "codec": {"rows": codec, "crossover": codec_crossover(codec)},
     }, indent=1))
