@@ -2,19 +2,26 @@
 
 The Spark expression of the reference's write path (SURVEY.md §3.2-3.3):
 memtable append + flush-sort + encode + chunk write collapse into ONE
-distributed map over Arrow batches —
+distributed map over Arrow batches, whose tasks write their own chunk
+files (``Pipeline.ingest``, ``Warehouse.kernel_writer``) —
 
-    input → repartition(hash(doc_id)) → mapInArrow(flush_kernel) → chunks
+    tokens → mapInArrow(flush kernel + parquet writer) → chunk files
 
 Inside the kernel everything is whole-batch vectorized numpy:
 seriesization, per-row inversion counting, stable per-row sort (the
 semantic of the reference flush-sort ``CompressedTVList.convertAndSort2``,
 reference datanode/.../CompressedTVList.java:616-716), batched encode
 (``codecs.batched``), per-row statistics via ``np.*.reduceat``, and blob
-assembly straight into Arrow buffers.  Per-partition lineage + metrics
-(inversions, sorted flag, raw/compressed bytes, encode wall time) ride
-along as chunk columns — they feed both the metrics rollup and the
-Gorilla-GB/s number in bench.
+assembly straight into Arrow buffers (a batch whose planes pass the int32
+Arrow offset range leaves as several chunk batches).  Per-partition
+lineage + metrics (inversions, sorted flag, raw/compressed bytes, encode
+wall time) ride along as chunk columns — they feed both the metrics
+rollup and the Gorilla-GB/s number in bench.
+
+On a fresh warehouse the same task also rolls the sorted points it holds
+up into every tier (``flush_rollup_kernel``), as IoTDB computes chunk
+statistics at flush from the values in hand (§3.3): the rollup's reduce
+runs on arrays the flush already has, with no decode and no second job.
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..codecs.batched import encode_rows
 from ..codecs.chunk import CODEC_DELTA, CODEC_VARINT
+from .rollup import TierReduce, tiers_kernel
 from ..sources.seriesize import doc_index_from_id, doc_t0, synth_timestamps
 
 CHUNK_SCHEMA = (
@@ -104,11 +112,29 @@ def _segmented_stable_sort(flat_ts, splits, counts):
     return np.argsort(composite, kind="stable")
 
 
-def flush_kernel_batches(
-    batches: Iterator[pa.RecordBatch], seed: int = 42
-) -> Iterator[pa.RecordBatch]:
-    """One pass per batch: each input row becomes one sorted, encoded
-    tier-0 chunk row (``CHUNK_ARROW``)."""
+def _row_slices(*splits: np.ndarray) -> Iterator[tuple[int, int]]:
+    """``[r0, r1)`` row ranges, in order and covering every row, over which
+    each plane's bytes (``splits``: its row offsets) fit int32 Arrow
+    offsets (``BINARY_MAX_BYTES``). One range when the whole batch fits;
+    a single row past the limit stays a range of its own (and is refused
+    by ``_binary_from_buffers``)."""
+    n = len(splits[0]) - 1
+    r0 = 0
+    while r0 < n:
+        r1 = min(int(np.searchsorted(sp, sp[r0] + BINARY_MAX_BYTES, side="right")) - 1
+                 for sp in splits)
+        r1 = min(max(r1, r0 + 1), n)
+        yield r0, r1
+        r0 = r1
+
+
+def _flush_batches(batches: Iterator[pa.RecordBatch], seed: int):
+    """The flush: for each chunk batch it emits, ``(chunks, ts, vals,
+    splits)`` — the ``CHUNK_ARROW`` rows and the points they encode, sorted
+    by time within each row (row ``i`` holds ``[splits[i], splits[i+1])``;
+    ``vals`` in the tokens' own int32). An input batch whose blob planes
+    pass the int32 Arrow offset range is emitted as several chunk batches
+    of consecutive rows."""
     for batch in batches:
         t_start = time.perf_counter_ns()
         n = batch.num_rows
@@ -177,36 +203,68 @@ def flush_kernel_batches(
             sum_v[nz] = np.add.reduceat(vals, s_nz, dtype=np.int64)
         encode_ns = time.perf_counter_ns() - t_start
 
-        arrays = [
-            doc_id,
-            source,
-            pa.array(np.full(n, 0, dtype=np.int32)),
-            pa.array((min_ts // WINDOW_1H_US) * WINDOW_1H_US),
-            pa.array(counts.astype(np.int32)),
-            pa.array(min_ts),
-            pa.array(max_ts),
-            pa.array(min_v),
-            pa.array(max_v),
-            pa.array(first_v),
-            pa.array(last_v),
-            pa.array(sum_v),
-            pa.array(n_inv),
-            pa.array(n_inv == 0),
-            pa.array(counts * 16),  # raw bytes: 8B ts + 8B value per point
-            pa.array(np.diff(t_splits).astype(np.int32)),
-            pa.array(np.diff(v_splits).astype(np.int32)),
-            _binary_from_buffers(t_buf, t_splits),
-            _binary_from_buffers(v_buf, v_splits),
-            pa.array(np.full(n, encode_ns // max(n, 1), dtype=np.int64)),
+        columns = [
+            np.full(n, 0, dtype=np.int32),
+            (min_ts // WINDOW_1H_US) * WINDOW_1H_US,
+            counts.astype(np.int32),
+            min_ts, max_ts, min_v, max_v, first_v, last_v, sum_v,
+            n_inv,
+            n_inv == 0,
+            counts * 16,  # raw bytes: 8B ts + 8B value per point
+            np.diff(t_splits).astype(np.int32),
+            np.diff(v_splits).astype(np.int32),
         ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW)
+        for r0, r1 in _row_slices(t_splits, v_splits):
+            t_sp, v_sp, sp = t_splits[r0:r1 + 1], v_splits[r0:r1 + 1], splits[r0:r1 + 1]
+            arrays = (
+                [doc_id.slice(r0, r1 - r0), source.slice(r0, r1 - r0)]
+                + [pa.array(c[r0:r1]) for c in columns]
+                + [_binary_from_buffers(t_buf[t_sp[0]:t_sp[-1]], t_sp - t_sp[0]),
+                   _binary_from_buffers(v_buf[v_sp[0]:v_sp[-1]], v_sp - v_sp[0]),
+                   pa.array(np.full(r1 - r0, encode_ns // max(n, 1), dtype=np.int64))])
+            yield (pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW),
+                   ts[sp[0]:sp[-1]], vals[sp[0]:sp[-1]], sp - sp[0])
+
+
+def flush_kernel_batches(
+    batches: Iterator[pa.RecordBatch], seed: int = 42
+) -> Iterator[pa.RecordBatch]:
+    """One pass per batch: each input row becomes one sorted, encoded
+    tier-0 chunk row (``CHUNK_ARROW``)."""
+    for chunks, *_ in _flush_batches(batches, seed):
+        yield chunks
+
+
+def flush_rollup_kernel(windows_us: list[int], seed: int = 42):
+    """The flush whose task also rolls the points it holds up into every
+    tier, with the rollup's own reduce (``TierReduce``): no decode, no
+    second pass over the chunks. The kernel of a ``KernelWriter`` with a
+    side writer: it yields ``(False, chunks)`` for the chunk files and
+    ``(True, tier rows)`` (``tier`` = index into ``windows_us``) for the
+    side, and returns the key of each doc run it reduced. A doc's tier
+    rows are final only when the doc is one run of one task; the keys let
+    the driver check that."""
+    tiers_kernel(windows_us)  # refuses windows that do not nest
+    windows_us = list(windows_us)
+
+    def kern(batches: Iterator[pa.RecordBatch]):
+        tiers = TierReduce(windows_us)
+        for chunks, ts, vals, splits in _flush_batches(batches, seed):
+            yield False, chunks
+            for rows in tiers.feed(chunks.column("doc_id"), chunks.column("source"),
+                                   ts, vals, splits):
+                yield True, rows
+        for rows in tiers.close():
+            yield True, rows
+        return tiers.run_keys()
+
+    return kern
 
 
 def flush(tokens_df: DataFrame, seed: int = 42, partitions: int | None = None) -> DataFrame:
-    """tokens → tier-0 chunks. Repartition by doc hash for even spread
-    (the source column is skewed; doc_id is not — hashing on it avoids the
-    hot-source problem without salting at this stage; salted paths are used
-    in the source-level metric rollups, see operators/rollup.py)."""
+    """tokens → tier-0 chunk rows as a frame (tests and ``bench.py``; the
+    engine writes them through ``Pipeline.ingest``). ``partitions``
+    repartitions the input by doc hash first."""
     df = tokens_df
     if partitions:
         df = df.repartition(partitions, "doc_id")

@@ -7,16 +7,19 @@ AggrWindowIterator.java:30-33) — with the accumulator set
 count/sum/min/max/avg/first/last (reference execution/aggregation/*).
 
 Physical design (the SeriesAggregationScanOperator idea made structural,
-SURVEY.md §2.5): ``rollup_tiers`` computes every tier in ONE decode pass.
-The finest tier's partials are computed INSIDE the decode kernel — per
-(chunk, window) via ``np.*.reduceat`` on the decoded arrays — and each
-coarser (nested) tier is cascaded from the finer tier's rows in the same
-kernel: every aggregate composes (sum of sums, min of mins, first by
-earliest first_ts, ...), so coarser tiers never touch points again. When
-every chunk of a doc reaches one task the kernel merges the doc's chunks
-itself and needs no shuffle at all; otherwise its partials carry one row
-per (chunk, window), not one per point, and ``_finalize`` merges them
-through one shuffle.
+SURVEY.md §2.5): every tier comes from ONE pass over the points, through
+one reduce (``TierReduce``). The finest tier's partials are computed per
+(chunk, window) via ``np.*.reduceat`` on the time-sorted points, the
+chunks of a doc are merged, and each coarser (nested) tier is cascaded
+from the finer tier's rows: every aggregate composes (sum of sums, min of
+mins, first by earliest first_ts, ...), so coarser tiers never touch
+points again. Two inputs feed the reduce: the promotion kernel
+(``tiers_kernel``) decodes chunk blobs, and the fresh ingest's flush task
+(``operators.ingest.flush_rollup_kernel``) hands it the points it has just
+sorted and encoded. When every chunk of a doc reaches the reduce as one
+run it merges the doc's chunks itself and needs no shuffle at all;
+otherwise its partials carry one row per (chunk, window), not one per
+point, and ``_finalize`` merges them through one shuffle.
 
 Windows fully covered by a chunk can be answered from chunk statistics
 alone (`rollup_from_stats`) without decoding any blob.
@@ -33,6 +36,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs.batched import decode_rows
+from ..functions.hashing import hash2
+from ..sources.seriesize import doc_index_from_id
 
 WINDOW_1M_US = 60_000_000
 WINDOW_1H_US = 3_600_000_000
@@ -156,14 +161,15 @@ def _reduce(p: dict, win, s, e, first, last) -> dict:
 
 def _point_partials(ts, vals, row_of, run_of_row, window_us: int) -> dict:
     """Per-(chunk row, window) partials of time-sorted points, keyed by the
-    row's doc run."""
+    row's doc run. Sums accumulate in int64 whatever the values' width (the
+    flush holds tokens as int32)."""
     if len(ts) == 0:
         return {k: np.empty(0, np.int64) for k in _PARTIAL_KEYS}
     win = ts // window_us * window_us
     s, e = _groups(row_of, win)
     return {
         "run": run_of_row[row_of[s]], "win": win[s], "cnt": e - s,
-        "sum": np.add.reduceat(vals, s), "min": np.minimum.reduceat(vals, s),
+        "sum": np.add.reduceat(vals, s, dtype=np.int64), "min": np.minimum.reduceat(vals, s),
         "max": np.maximum.reduceat(vals, s),
         "fts": ts[s], "fv": vals[s], "lts": ts[e - 1], "lv": vals[e - 1],
     }
@@ -212,24 +218,32 @@ def _run_starts(*cols: pa.Array) -> np.ndarray:
     return starts
 
 
-def _multi_window_partials_kernel(windows_us: list[int]):
-    """Decode each chunk ONCE and emit every tier's window rows from the
-    same decoded arrays: the finest tier by ``np.*.reduceat`` over the
-    points, each coarser (nested) tier by cascading the finer tier's group
-    arrays, so the marginal price of a coarser tier is ~zero.
+class TierReduce:
+    """Every tier's window rows from time-sorted points, fed one batch of
+    chunk rows at a time: the finest tier by ``np.*.reduceat`` over the
+    points (``_point_partials``), each coarser (nested) tier by cascading
+    the finer tier's group arrays (``_cascade``), so the marginal price of
+    a coarser tier is ~zero. The rollup kernel feeds it decoded chunks
+    (``tiers_kernel``); the flush task feeds it the sorted points it has
+    just encoded (``operators.ingest.flush_rollup_kernel``).
 
     Rows of one ``(doc_id, source)`` that arrive next to each other — a
-    *doc run*, possibly straddling Arrow batches — are merged into ONE row
-    per window: the kernel holds the last run of a batch open and merges
-    its finest-tier partials with the next batch's. When every chunk of a
-    doc is adjacent in the task's input (a local sort by doc over whole
-    buckets) the rows are final; memory holds one doc's partials. Otherwise
-    they are partials for ``_finalize``."""
+    *doc run*, possibly straddling batches — are merged into ONE row per
+    window (``_merge_chunks``): the last run of a batch stays open and
+    merges with the next batch's. When every chunk of a doc is adjacent in
+    the input the rows are final; memory holds one doc's partials.
+    Otherwise they are partials for ``_finalize``. ``feed`` and ``close``
+    are generators: the state moves as they are consumed."""
 
-    def emit(p: dict, doc: pa.Array, src: pa.Array) -> Iterator[pa.RecordBatch]:
+    def __init__(self, windows_us: list[int]):
+        self.windows_us = windows_us
+        self.open_p = self.open_doc = self.open_src = None  # the last doc run, still open
+        self.runs: list[tuple[pa.Array, pa.Array]] = []  # (doc_id, source) of closed runs
+
+    def _emit(self, p: dict, doc: pa.Array, src: pa.Array) -> Iterator[pa.RecordBatch]:
         if len(p["run"]) == 0:
             return
-        for t, window_us in enumerate(windows_us):
+        for t, window_us in enumerate(self.windows_us):
             if t:
                 p = _cascade(p, window_us)
             idx = pa.array(p["run"])
@@ -241,43 +255,67 @@ def _multi_window_partials_kernel(windows_us: list[int]):
                        "min_v", "max_v", "first_ts", "first_v", "last_ts", "last_v"],
             )
 
-    def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        open_p = open_doc = open_src = None  # the last doc run seen, still open
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            doc, src = batch.column("doc_id"), batch.column("source")
-            if open_doc is not None:
-                # the open run goes first, as run 0; the batch's first row
-                # joins it when it carries the same key
-                doc = pa.concat_arrays([open_doc, doc])
-                src = pa.concat_arrays([open_src, src])
-            starts = _run_starts(doc, src)
-            run_of = np.cumsum(starts) - 1
-            first_rows = pa.array(np.flatnonzero(starts))
-            run_doc, run_src = doc.take(first_rows), src.take(first_rows)
-            if open_doc is not None:
-                run_of = run_of[1:]
-            tbuf, tsp = _blob_np(batch.column("time_blob"))
-            vbuf, vsp = _blob_np(batch.column("value_blob"))
-            ts, splits = decode_rows(tbuf, tsp)
-            vals, _ = decode_rows(vbuf, vsp)
-            row_of = np.repeat(np.arange(n, dtype=np.int64), np.diff(splits))
-            p = _point_partials(ts, vals, row_of, run_of, windows_us[0])
-            if open_p is not None:
-                p = {k: np.concatenate([open_p[k], p[k]]) for k in _PARTIAL_KEYS}
-            p = _merge_chunks(p)
-            last = len(first_rows) - 1
-            closed = p["run"] < last
-            yield from emit({k: v[closed] for k, v in p.items()}, run_doc, run_src)
-            open_p = {k: v[~closed] for k, v in p.items()}
-            open_p["run"][:] = 0
-            open_doc, open_src = run_doc.slice(last, 1), run_src.slice(last, 1)
-        if open_p is not None:
-            yield from emit(open_p, open_doc, open_src)
+    def feed(self, doc: pa.Array, src: pa.Array, ts: np.ndarray, vals: np.ndarray,
+             splits: np.ndarray) -> Iterator[pa.RecordBatch]:
+        """One batch of chunk rows: their keys, and their points sorted by
+        time within each row (row ``i`` holds ``[splits[i], splits[i+1])``).
+        Yields the rows of the doc runs the batch closes."""
+        n = len(doc)
+        if n == 0:
+            return
+        if self.open_doc is not None:
+            # the open run goes first, as run 0; the batch's first row
+            # joins it when it carries the same key
+            doc = pa.concat_arrays([self.open_doc, doc])
+            src = pa.concat_arrays([self.open_src, src])
+        starts = _run_starts(doc, src)
+        run_of = np.cumsum(starts) - 1
+        first_rows = pa.array(np.flatnonzero(starts))
+        run_doc, run_src = doc.take(first_rows), src.take(first_rows)
+        if self.open_doc is not None:
+            run_of = run_of[1:]
+        row_of = np.repeat(np.arange(n, dtype=np.int64), np.diff(splits))
+        p = _point_partials(ts, vals, row_of, run_of, self.windows_us[0])
+        if self.open_p is not None:
+            p = {k: np.concatenate([self.open_p[k], p[k]]) for k in _PARTIAL_KEYS}
+        p = _merge_chunks(p)
+        last = len(first_rows) - 1
+        closed = p["run"] < last
+        self.runs.append((run_doc.slice(0, last), run_src.slice(0, last)))
+        yield from self._emit({k: v[closed] for k, v in p.items()}, run_doc, run_src)
+        self.open_p = {k: v[~closed] for k, v in p.items()}
+        self.open_p["run"][:] = 0
+        self.open_doc, self.open_src = run_doc.slice(last, 1), run_src.slice(last, 1)
 
-    return kern
+    def close(self) -> Iterator[pa.RecordBatch]:
+        """Yields the rows of the run left open."""
+        if self.open_p is not None:
+            self.runs.append((self.open_doc, self.open_src))
+            yield from self._emit(self.open_p, self.open_doc, self.open_src)
+            self.open_p = self.open_doc = self.open_src = None
+
+    def run_keys(self) -> np.ndarray:
+        """A 64-bit key (int64) of each doc run seen, in order. Equal runs
+        have equal keys; unequal runs share one only on a hash collision
+        (null and empty strings key alike)."""
+        if not self.runs:
+            return np.empty(0, np.int64)
+        doc = pa.concat_arrays([d for d, _ in self.runs])
+        src = pa.concat_arrays([s for _, s in self.runs])
+        return hash2(doc_index_from_id(doc), doc_index_from_id(src)).view(np.int64)
+
+
+def _decoded(batches: Iterator[pa.RecordBatch]):
+    """``ROLLUP_INPUT`` batches → ``TierReduce.feed`` arguments: both
+    planes decoded, in one batched pass each."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        tbuf, tsp = _blob_np(batch.column("time_blob"))
+        vbuf, vsp = _blob_np(batch.column("value_blob"))
+        ts, splits = decode_rows(tbuf, tsp)
+        vals, _ = decode_rows(vbuf, vsp)
+        yield batch.column("doc_id"), batch.column("source"), ts, vals, splits
 
 
 ROLLUP_INPUT = ("doc_id", "source", "time_blob", "value_blob")
@@ -285,10 +323,25 @@ ROLLUP_INPUT = ("doc_id", "source", "time_blob", "value_blob")
 DOC_ORDER = ("doc_id", "source")
 
 
+def _multi_window_partials_kernel(windows_us: list[int]):
+    """Decode each ``ROLLUP_INPUT`` chunk ONCE and feed its points to one
+    ``TierReduce``, which emits every tier's window rows from the same
+    decoded arrays."""
+
+    def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        tiers = TierReduce(windows_us)
+        for args in _decoded(batches):
+            yield from tiers.feed(*args)
+        yield from tiers.close()
+
+    return kern
+
+
 def tiers_kernel(windows_us: list[int]):
     """The fused rollup kernel over ``ROLLUP_INPUT`` rows: with every chunk
     of a doc adjacent (``DOC_ORDER``) it emits one final row per (tier,
-    doc, window)."""
+    doc, window). Refuses tier windows that do not nest: each coarser tier
+    is cascaded from the finer tier's rows."""
     for finer, coarser in zip(windows_us, windows_us[1:]):
         if coarser % finer:
             raise ValueError(f"tier windows must nest: {coarser} is not a multiple of {finer}")

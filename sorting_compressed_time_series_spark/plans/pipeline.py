@@ -15,6 +15,7 @@ checkpoint-resume oracle in tests/test_warehouse_promotion.py).
 from __future__ import annotations
 
 import functools
+import os
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -24,7 +25,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.compaction import COMPACT_ORDER, compact_kernel
-from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches
+from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches, flush_rollup_kernel
 from ..operators.retention import apply_retention
 from ..operators.rollup import (
     DOC_ORDER,
@@ -169,6 +170,10 @@ class Pipeline:
         chunks = self.warehouse.read(self.spark, "chunks_tier0").filter(keep).select(*columns)
         return chunks.repartition(n, "doc_id").sortWithinPartitions(*sort_by), None
 
+    def _tier_specs(self) -> list[list]:
+        """The tiers as a prepared record names them: [name, window_us]."""
+        return [[spec.name, spec.window_us] for spec in self.tiers]
+
     # --- stage 1: ingest+flush ------------------------------------------
     @_described
     def ingest(self, tokens_df: DataFrame, seed: int = 42,
@@ -178,7 +183,16 @@ class Pipeline:
         as a new doc-bucketed snapshot (``_bucket_by``), or with
         ``append`` as a segment in the table's own buckets. Returns the
         commit's lineage entry (rows, bytes, files, wall time and the
-        tasks' input/kernel/write seconds); the table is not read back."""
+        tasks' input/kernel/write seconds); the table is not read back.
+
+        A new snapshot on a warehouse with no tier table yet is also
+        rolled up in the same tasks (``flush_rollup_kernel``): each task
+        reduces the sorted points it has just encoded into every tier's
+        rows and stages them (``Warehouse.write`` with a side writer), and
+        the chunk commit records them as its prepared record, which the
+        next ``promote_all`` commits with no Spark job. The record is kept
+        only if every doc is one run of one task (no doc-run key repeats
+        across tasks); one job, no exchange either way."""
         wh = self.warehouse
         src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
         kern = functools.partial(flush_kernel_batches, seed=seed)
@@ -187,10 +201,45 @@ class Pipeline:
             # next promotion MERGEs just the appended docs' windows
             files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._table_buckets())
             wh.append_segment(files.frame(src, kern), "chunks_tier0", op="append", files=files)
-        else:
+        elif any(wh.exists(spec.name) for spec in self.tiers):
             files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by())
             wh.write(files.frame(src, kern), "chunks_tier0", op="ingest", files=files)
+        else:
+            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by()
+                                     ).with_side(TIER_PARTIAL_ARROW, "tier")
+            kern = flush_rollup_kernel([spec.window_us for spec in self.tiers], seed)
+            wh.write(files.frame(src, kern), "chunks_tier0", op="ingest", files=files,
+                     stage={t: spec.name for t, spec in enumerate(self.tiers)},
+                     stage_meta={"tiers": self._tier_specs()})
         return wh.manifest("chunks_tier0")["lineage"][-1]
+
+    def _commit_prepared(self, modes: list[str], wm: list[int], up_to_us: int | None,
+                         pending: list) -> set[int]:
+        """Commit the tiers the chunk table's prepared record (``ingest``)
+        holds, then drop the record: returns the tiers committed. A tier
+        takes its record only when it is a ``full`` promotion of all its
+        windows (``up_to_us`` None, nothing pending) and the record belongs
+        to the live chunk snapshot and to this pipeline's tiers; every other
+        tier runs the promotion job as before. A rerun after a crash
+        between tier commits finds the committed tiers noop and commits
+        the rest."""
+        wh = self.warehouse
+        rec = wh.prepared("chunks_tier0")
+        if rec is None:
+            return set()
+        done = set()
+        if (rec["version"] == wh.manifest("chunks_tier0")["version"]
+                and rec["tiers"] == self._tier_specs() and not pending and up_to_us is None):
+            for t, spec in enumerate(self.tiers):
+                # a tier whose staged dir is gone was moved by a commit
+                # that crashed before its manifest swap
+                if modes[t] == "full" and os.path.isdir(
+                        os.path.join(wh.root, rec["dir"], spec.name)):
+                    wh.commit_prepared("chunks_tier0", spec.name, watermark_us=wm[t],
+                                       op="promote:full")
+                    done.add(t)
+        wh.drop_prepared("chunks_tier0")
+        return done
 
     # --- stage 2: promotion with checkpoint ------------------------------
     @_described
@@ -214,7 +263,11 @@ class Pipeline:
 
         The tier's new watermark is ``W_t = max(hi_t, lo_t)``: an append of
         old data can leave ``hi_t < lo_t``, and the checkpoint never
-        regresses. Every tier with work comes from one kernel job: the
+        regresses. A full promotion of every window after a fresh ingest
+        commits the tier rows the ingest's tasks already computed (the
+        chunk table's prepared record, ``_commit_prepared``): a directory
+        move and a manifest swap per tier, no Spark job. Every other tier
+        with work comes from one kernel job: the
         fused rollup decodes the tier-0 chunks with ``max_ts ≥ min(lo_t)``
         (every chunk for a full tier) and every chunk of a doc in ``D``, and
         keeps tier ``t``'s rows with ``win < W_t`` and ``win ≥ lo_t`` or the
@@ -255,10 +308,30 @@ class Pipeline:
             wm.append(int(complete) if mark is None else max(int(complete), mark))
             modes.append("full" if mark is None else "merge" if pending
                          else "noop" if mark >= complete else "incremental")
-        work = {t: spec.name for t, spec in enumerate(self.tiers) if modes[t] != "noop"}
-        if not work:
-            return [{"tier": spec.name, "mode": "noop"} for spec in self.tiers]
+        prepared = self._commit_prepared(modes, wm, up_to_us, pending)
+        work = {t: spec.name for t, spec in enumerate(self.tiers)
+                if modes[t] != "noop" and t not in prepared}
+        n_kept = self._promote_job(work, lo, wm, modes, collect_stats) if work else {}
+        if pending:
+            wh.clear_pending("chunks_tier0")
+        summary = []
+        for t, spec in enumerate(self.tiers):
+            entry = {"tier": spec.name, "mode": modes[t]}
+            if t in work or t in prepared:
+                entry["watermark_us"] = wm[t]
+                if collect_stats:
+                    rows = wh.manifest(spec.name)["lineage"][-1]["rows"]
+                    kept = n_kept.get(t, 0)
+                    entry.update(kept=kept, recomputed=rows - kept)
+            summary.append(entry)
+        return summary
 
+    def _promote_job(self, work: dict[int, str], lo: list, wm: list[int], modes: list[str],
+                     collect_stats: bool) -> dict[int, int]:
+        """The one kernel job of ``promote_all`` over the tiers in ``work``
+        (``{tier index: table}``); returns the rows each kept (counted only
+        with ``collect_stats``)."""
+        wh = self.warehouse
         dirty = wh.pending_keys("chunks_tier0", "doc_id")
         marks = [lo[t] for t in work]
         lo_min = None if None in marks else min(marks)
@@ -274,13 +347,15 @@ class Pipeline:
             kern, [never if m is None else m for m in lo],
             [wm[t] if t in work else never for t in range(len(self.tiers))], dirty), read)
         kept = None
+        # the old rows of the docs in D are recomputed: one filter for every tier
+        clean = ~F.coalesce(F.col("doc_id").isin(dirty), F.lit(False)) if dirty else None
         for t, name in work.items():
             if lo[t] is None:
                 continue
             old = (wh.read(self.spark, name).drop("p_day")
                    .filter(F.col("window_start") < lo[t]).withColumn("tier", F.lit(t)))
-            if dirty:
-                old = old.filter(~F.coalesce(F.col("doc_id").isin(dirty), F.lit(False)))
+            if clean is not None:
+                old = old.filter(clean)
             kept = old if kept is None else kept.unionByName(old)
         n_kept = dict.fromkeys(work, 0)
         if kept is not None:
@@ -292,18 +367,7 @@ class Pipeline:
         wh.write_slices(out, "tier", work, watermarks={t: wm[t] for t in work},
                         op="promote:" + "+".join(dict.fromkeys(modes[t] for t in work)),
                         files=files)
-        if pending:
-            wh.clear_pending("chunks_tier0")
-        summary = []
-        for t, spec in enumerate(self.tiers):
-            entry = {"tier": spec.name, "mode": modes[t]}
-            if t in work:
-                entry["watermark_us"] = wm[t]
-                if collect_stats:
-                    rows = wh.manifest(spec.name)["lineage"][-1]["rows"]
-                    entry.update(kept=n_kept[t], recomputed=rows - n_kept[t])
-            summary.append(entry)
-        return summary
+        return n_kept
 
     # --- maintenance: compaction ------------------------------------------
     @_described

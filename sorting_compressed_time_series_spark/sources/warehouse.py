@@ -10,8 +10,13 @@ Commit protocol (atomic, resumable):
   the finished tasks reported
 - ``_manifest.json`` names the ONE live snapshot dir, the appended segment
   dirs, watermark and lineage entries (each with the commit's rows, bytes,
-  data files and write wall time, read from parquet footers); readers only
-  ever read the dirs the manifest names
+  data files and write wall time; the rows as the writing tasks counted
+  them when the live set is just what the commit landed, else read from
+  parquet footers); readers only ever read the dirs the manifest names
+- a snapshot write may also stage rows for other tables (a side writer in
+  the same tasks: the fresh ingest's tier rows); the commit names them in
+  its manifest's *prepared* record, and ``commit_prepared`` later commits
+  them to their tables with a rename and a manifest swap
 - a commit = write new snapshot dir, then atomically replace the manifest
   (os.replace). A crash before the manifest swap leaves the old snapshot
   live; re-running the (deterministic) job re-creates the same new
@@ -29,6 +34,7 @@ task reads one bucket's files — all the chunks of its docs — with pyarrow
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import json
 import os
@@ -54,10 +60,11 @@ US_PER_DAY = 86_400_000_000
 ROW_GROUP_BYTES = 4 << 20
 # what a kernel's tasks return instead of its rows: one row per file written,
 # plus each task's seconds blocked on input, in the kernel and writing, and
-# the count its kernel returned (``KernelWriter.task``)
+# the count or the doc-run keys its kernel returned (``KernelWriter.task``)
 TASK_TIMERS = ("input_wait_s", "kernel_s", "write_s")
 FILES_SCHEMA = ("slice int, p_day bigint, bucket int, path string, rows bigint, "
-                + ", ".join(f"{t} double" for t in TASK_TIMERS) + ", kernel_n bigint")
+                + ", ".join(f"{t} double" for t in TASK_TIMERS)
+                + ", kernel_n bigint, run_keys binary")
 _BUCKET = "_bucket"  # the input column carrying Spark's bucket id
 # Spark's rule for the bucket id of a data file (``BucketingUtils.getBucketId``):
 # the digits after the last ``_`` of the name, before its extension
@@ -88,12 +95,22 @@ class KernelWriter:
     ``bucket_reader``); ``_InputBuckets`` is the rule that picks a row's
     bucket. The file schema is ``schema``: zstd level 3, row groups of
     ~4 MB, min/max statistics on every non-binary column, dictionary pages
-    on none of the binary columns (and on no column of a sliced write)."""
+    on none of the binary columns (and on no column of a sliced write).
+
+    A writer may carry a ``side`` writer (``with_side``): the same tasks
+    then write two sets of files from one kernel, e.g. the flush's chunks
+    and the tier rows it rolled up from the same points."""
 
     staging: str
     schema: pa.Schema
     slice_col: str | None = None
     bucket_by: tuple[str, int] | None = None
+    side: KernelWriter | None = None
+
+    def with_side(self, schema: pa.Schema, slice_col: str) -> KernelWriter:
+        """This writer with a side writer of ``schema`` rows sliced by
+        ``slice_col``, staged in the same place."""
+        return dataclasses.replace(self, side=KernelWriter(self.staging, schema, slice_col))
 
     def frame(self, src: DataFrame, kern: Kernel, read: Kernel | None = None) -> DataFrame:
         """``src`` → [``read`` →] ``kern`` → files: the frame
@@ -125,7 +142,13 @@ class KernelWriter:
         kernel and writing (``close()`` included), and ``kernel_n``: what
         the kernel generator returned (compaction: the docs it merged), or
         0; a task that wrote no file yields one row with a null path to
-        carry them."""
+        carry them.
+
+        With a ``side`` writer the kernel yields ``(to_side, batch)``
+        pairs and returns the key of each doc run it saw (int64), carried
+        in ``run_keys``. The side's files follow the task's own, with the
+        seconds spent producing and writing the side's batches on the
+        first of them (none when it wrote nothing)."""
 
         def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             from pyspark import TaskContext
@@ -133,28 +156,41 @@ class KernelWriter:
             ctx = TaskContext.get()
             attempt, part = ((ctx.taskAttemptId(), ctx.partitionId()) if ctx
                              else (uuid.uuid4().hex, 0))
-            files = _TaskFiles(self, os.path.join(self.staging, f"attempt-{attempt}"), part)
-            clock = np.zeros(3)  # input wait, kernel + input wait, write
+            writers = [self] + ([self.side] if self.side is not None else [])
+            files = [_TaskFiles(w, os.path.join(w.staging, f"attempt-{attempt}"), part)
+                     for w in writers]
+            # per writer: input wait, kernel + input wait, write
+            clock = np.zeros((len(writers), 3))
             buckets = _InputBuckets() if self.bucket_by is not None else None
             rows = buckets.read(batches) if buckets is not None else batches
-            rows = _timed(read(rows) if read is not None else rows, clock, 0)
-            kernel_n = 0
+            rows = _timed(read(rows) if read is not None else rows, clock, (0, 0))
+            ret = None
 
             def outputs():
-                nonlocal kernel_n
-                kernel_n = (yield from kern(rows)) or 0
+                nonlocal ret
+                ret = yield from kern(rows)
 
-            for out in _timed(outputs(), clock, 1):
+            paired = self.side is not None  # items are (to_side, batch)
+            slot = (lambda item: (int(item[0]), 1)) if paired else (0, 1)
+            for item in _timed(outputs(), clock, slot):
+                w, out = (int(item[0]), item[1]) if paired else (0, item)
                 if out.num_rows == 0:
                     continue
                 t0 = time.perf_counter()
-                files.add(out, buckets.of(out) if buckets is not None else None)
-                clock[2] += time.perf_counter() - t0
-            t0 = time.perf_counter()
-            written = files.close()
-            clock[2] += time.perf_counter() - t0
-            clock[1] -= clock[0]
-            yield _files_batch(written, clock, kernel_n)
+                files[w].add(out, buckets.of(out) if buckets is not None and w == 0 else None)
+                clock[w, 2] += time.perf_counter() - t0
+            written = []
+            for w, f in enumerate(files):
+                t0 = time.perf_counter()
+                written.append(f.close())
+                clock[w, 2] += time.perf_counter() - t0
+            clock[0, 1] -= clock[0, 0]
+            if paired:
+                yield _files_batch(written[0], clock[0], 0, np.asarray(ret, dtype=np.int64))
+                if written[1]:
+                    yield _files_batch(written[1], clock[1], 0)
+            else:
+                yield _files_batch(written[0], clock[0], ret or 0)
 
         return run
 
@@ -166,29 +202,38 @@ class _InputBuckets:
     reads one bucket id; a ``repartition(n, col)`` task holds one bucket),
     every output row is in that bucket, whatever the kernel emits.
     Otherwise the kernel must emit one row per row of the input batch it
-    read last (the flush), and each row is in its input row's bucket."""
+    read last, in order, in one or more batches (the flush), and each row
+    is in its input row's bucket."""
 
     def __init__(self):
-        self.one, self.mixed, self.last = None, False, None
+        self.one, self.mixed, self.last, self.used = None, False, None, 0
 
     def read(self, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
+            if self.mixed and self.used != len(self.last):
+                self._refuse()
             ids = batch.column(_BUCKET).to_numpy(zero_copy_only=False)
             if self.one is None:
                 self.one = ids[0]
             self.mixed = self.mixed or bool((ids != self.one).any())
-            self.last = ids
+            self.last, self.used = ids, 0
             yield batch
 
     def of(self, out: pa.RecordBatch) -> np.ndarray:
         if self.one is not None and not self.mixed:
             return np.full(out.num_rows, self.one)
-        if self.last is None or out.num_rows != len(self.last):
-            raise ValueError("a bucketed kernel write over rows of several buckets needs "
-                             "one output row per input row")
-        return self.last
+        n = out.num_rows
+        if self.last is None or self.used + n > len(self.last):
+            self._refuse()
+        self.used += n
+        return self.last[self.used - n:self.used]
+
+    @staticmethod
+    def _refuse():
+        raise ValueError("a bucketed kernel write over rows of several buckets needs "
+                         "one output row per input row")
 
 
 def bucket_ids(spark: SparkSession, n: int) -> DataFrame:
@@ -226,35 +271,52 @@ def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
     return read
 
 
-def _timed(it: Iterator, clock: np.ndarray, slot: int) -> Iterator:
-    """``it``, adding the seconds spent producing each item to ``clock[slot]``."""
+def _timed(it: Iterator, clock: np.ndarray, slot) -> Iterator:
+    """``it``, adding the seconds spent producing each item to
+    ``clock[slot]``, or to ``clock[slot(item)]`` when ``slot`` is a
+    function (then the wait for the end of ``it`` counts for the last
+    item's slot)."""
     it = iter(it)
+    last = None if callable(slot) else slot
     while True:
         t0 = time.perf_counter()
         try:
             item = next(it)
         except StopIteration:
-            clock[slot] += time.perf_counter() - t0
+            if last is not None:
+                clock[last] += time.perf_counter() - t0
             return
-        clock[slot] += time.perf_counter() - t0
+        last = slot(item) if callable(slot) else slot
+        clock[last] += time.perf_counter() - t0
         yield item
 
 
-def _files_batch(written: list[tuple], clock: np.ndarray, kernel_n: int) -> pa.RecordBatch:
-    """The ``FILES_SCHEMA`` rows of one task: its files, then its timers
-    and ``kernel_n`` on the first row (on a null-path row when it wrote
-    none)."""
+def _summed(rows: list) -> dict[str, float]:
+    """The ``TASK_TIMERS`` of ``FILES_SCHEMA`` rows, summed over tasks."""
+    return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}
+
+
+def _files_batch(written: list[tuple], clock: np.ndarray, kernel_n: int,
+                 run_keys: np.ndarray | None = None) -> pa.RecordBatch:
+    """The ``FILES_SCHEMA`` rows of one writer of one task: its files,
+    then its timers, ``kernel_n`` and ``run_keys`` on the first row (on a
+    null-path row when it wrote none)."""
     written = written or [(None, None, None, None, 0)]
     cols = list(zip(*written))
     timers = np.zeros((3, len(written)))
     timers[:, 0] = clock
     counts = np.zeros(len(written), dtype=np.int64)
     counts[0] = kernel_n
+    keys = [None] * len(written)
+    if run_keys is not None:
+        keys[0] = run_keys.tobytes()
     return pa.RecordBatch.from_arrays(
         [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
          pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
-         pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers] + [pa.array(counts)],
-        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS, "kernel_n"])
+         pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers]
+        + [pa.array(counts), pa.array(keys, pa.binary())],
+        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS, "kernel_n",
+               "run_keys"])
 
 
 @dataclass
@@ -369,21 +431,31 @@ class Warehouse:
             json.dump(m, f, indent=1)
         os.replace(tmp, self._manifest_path(table))  # the atomic commit point
 
-    def _log(self, table: str, m: dict, entry: dict) -> None:
+    def _log(self, table: str, m: dict, entry: dict, rows: int | None = None) -> None:
         """Append a lineage entry to ``m`` (the last 50 are kept), with the
-        rows, bytes and data files of the live set ``m`` names — read from
-        the parquet footers, no Spark job."""
+        rows, bytes and data files of the live set ``m`` names. ``rows``
+        is given when the live set is exactly the files a commit just
+        landed (their writers counted them); else it is read from the
+        parquet footers. No Spark job either way."""
         files = self._data_files(table, m)
-        rows, _ = self._footer_stats(files, ())
+        if rows is None:
+            rows, _ = self._footer_stats(files, ())
         entry = dict(entry, rows=rows, bytes=sum(os.path.getsize(f) for f in files),
                      files=len(files), ts=time.time(), version=m["version"])
         m["lineage"] = (m["lineage"] + [entry])[-50:]
 
     def _commit(self, table: str, snapshot_dir: str, watermark_us: int | None,
                 lineage_entry: dict, schema_json: str | None = None,
-                bucket_spec: list | None = None) -> None:
+                bucket_spec: list | None = None, rows: int | None = None,
+                prepared: dict | None = None) -> None:
+        """Make ``snapshot_dir`` (holding ``rows`` rows, if known) the
+        table's one live dir. The table's prepared record (``write``) is
+        replaced by ``prepared``: a new snapshot retires the old one."""
         m = self.manifest(table)
         old_dirs = self._live_dirs(table, m)
+        old_prepared = m.pop("prepared", None)
+        if prepared is not None:
+            m["prepared"] = prepared
         m["snapshot"] = snapshot_dir
         m["segments"] = []
         m["pending_appends"] = []
@@ -396,11 +468,13 @@ class Warehouse:
             # that can hollow out every live dir)
             m["schema"] = schema_json
         m["bucket_spec"] = bucket_spec  # [col, n_buckets] or None
-        self._log(table, m, lineage_entry)
+        self._log(table, m, lineage_entry, rows)
         self._swap_manifest(table, m)
         for d in old_dirs:
             if d != snapshot_dir:
                 shutil.rmtree(os.path.join(self.root, table, d), ignore_errors=True)
+        if old_prepared is not None:
+            shutil.rmtree(os.path.join(self.root, old_prepared["dir"]), ignore_errors=True)
 
     # -- io ----------------------------------------------------------------
     def kernel_writer(self, tables: str | list[str], schema: pa.Schema, *,
@@ -415,13 +489,13 @@ class Warehouse:
                             schema, slice_col, bucket_by)
 
     @staticmethod
-    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> tuple[dict[str, float], int]:
+    def _land(df: DataFrame, files: KernelWriter, dirs: dict) -> list:
         """Run a kernel's write job and move the files its finished tasks
         reported into ``dirs[slice]`` (the key is None without slices).
         A failed or speculative attempt's files are never reported, so they
         are never committed. Each dir is cleared first: a crash before the
         manifest swap leaves an orphan dir that the rerun replaces. Returns
-        the tasks' ``TASK_TIMERS`` and ``kernel_n``, summed."""
+        the tasks' ``FILES_SCHEMA`` rows."""
         shutil.rmtree(files.staging, ignore_errors=True)  # a crashed run's attempts
         rows = df.collect()
         for d in dirs.values():
@@ -434,33 +508,109 @@ class Warehouse:
             os.makedirs(part, exist_ok=True)
             os.replace(r.path, os.path.join(part, os.path.basename(r.path)))
         shutil.rmtree(files.staging, ignore_errors=True)  # what no finished task reported
-        return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}, sum(r.kernel_n for r in rows)
+        return rows
 
     def write(self, df: DataFrame, table: str, *, watermark_us: int | None = None,
               op: str | Callable[[int], str | None] = "overwrite",
-              files: KernelWriter) -> int:
+              files: KernelWriter, stage: dict[int, str] | None = None,
+              stage_meta: dict | None = None) -> int:
         """Commit a new snapshot: ``df`` is the frame of a kernel that writes
         its own rows (``files.frame``). With ``files.bucket_by=(col, n)``
         the snapshot is hash-clustered by ``col`` into ``n`` buckets (the
         stand-in for Iceberg ``bucket(col, n)``), which ``bucket_files``
         maps. ``op`` names the commit in the lineage; as a function of the
         tasks' summed ``kernel_n`` it may return None, and then nothing is
-        committed (a compaction that merged no doc). Returns that sum."""
+        committed (a compaction that merged no doc). Returns that sum.
+
+        With a side writer (``files.side``, sliced), the files of slice
+        ``v`` are staged for table ``stage[v]``'s next commit, and the
+        commit records them as the table's *prepared* record (``prepared``,
+        with ``stage_meta``): ``commit_prepared`` later commits them with
+        no job. The side's rows are final per doc run, so they are kept
+        only when no doc-run key repeats across the tasks (every doc one
+        run of one task); otherwise they are deleted at once."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         snap = f"snap-{m['version'] + 1}"
         path = os.path.join(self.root, table, snap)
-        timers, kernel_n = self._land(df, files, {None: path})
+        dirs = {None: path}
+        if files.side is not None:
+            staged = os.path.join("_staging", f"{table}.v{m['version'] + 1}.prepared")
+            self._drop_staged(table, keep=m.get("prepared"))  # a crashed run's
+            dirs.update({v: os.path.join(self.root, staged, name) for v, name in stage.items()})
+        rows = self._land(df, files, dirs)
+        own = [r for r in rows if r.slice is None]
+        kernel_n = sum(r.kernel_n for r in own)
         if callable(op):
             op = op(kernel_n)
             if op is None:
                 shutil.rmtree(path, ignore_errors=True)
                 return kernel_n
+        prepared = None
+        if files.side is not None:
+            keys = [np.frombuffer(r.run_keys, np.int64) for r in own if r.run_keys is not None]
+            keys = np.concatenate(keys) if keys else np.empty(0, np.int64)
+            if len(np.unique(keys)) == len(keys):
+                side = [r for r in rows if r.slice is not None]
+                timers = _summed(side)
+                prepared = dict(stage_meta or {}, version=m["version"] + 1, dir=staged,
+                                schema=files.side.spark_schema().json(), tables={
+                                    name: dict(timers, rows=sum(r.rows for r in side
+                                                                if r.slice == v))
+                                    for v, name in stage.items()})
+            else:
+                shutil.rmtree(os.path.join(self.root, staged), ignore_errors=True)
         bucket_spec = list(files.bucket_by) if files.bucket_by is not None else None
         self._commit(table, snap, watermark_us,
-                     {"op": op, "wall_s": time.perf_counter() - t0, **timers},
-                     schema_json=files.spark_schema().json(), bucket_spec=bucket_spec)
+                     {"op": op, "wall_s": time.perf_counter() - t0, **_summed(own)},
+                     schema_json=files.spark_schema().json(), bucket_spec=bucket_spec,
+                     rows=sum(r.rows for r in own), prepared=prepared)
         return kernel_n
+
+    def prepared(self, table: str) -> dict | None:
+        """The table's prepared record: the side rows its last snapshot's
+        write staged (``write``), under ``dir`` relative to the root, one
+        subdir per table in ``tables`` with its rows and task seconds, and
+        the snapshot ``version`` they belong to. None when there is none."""
+        return self.manifest(table).get("prepared")
+
+    def commit_prepared(self, source: str, table: str, *, watermark_us: int | None,
+                        op: str) -> None:
+        """Commit ``table``'s rows staged in ``source``'s prepared record as
+        ``table``'s new snapshot, with ``watermark_us``: a directory move
+        and a manifest swap, no Spark job and no footer read. The lineage
+        entry carries the staging tasks' seconds and ``prepared_by``, the
+        ``source`` version that computed the rows."""
+        t0 = time.perf_counter()
+        rec = self.prepared(source)
+        snap = f"snap-{self.manifest(table)['version'] + 1}"
+        dest = os.path.join(self.root, table, snap)
+        shutil.rmtree(dest, ignore_errors=True)  # a crashed commit's orphan
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(os.path.join(self.root, rec["dir"], table), dest)
+        info = rec["tables"][table]
+        self._commit(table, snap, watermark_us,
+                     {"op": op, "wall_s": time.perf_counter() - t0,
+                      **{t: info[t] for t in TASK_TIMERS}, "prepared_by": rec["version"]},
+                     schema_json=rec["schema"], rows=info["rows"])
+
+    def drop_prepared(self, table: str) -> None:
+        """Retire ``table``'s prepared record, then delete what it staged
+        (a record never names a half-deleted dir)."""
+        m = self.manifest(table)
+        if m.pop("prepared", None) is not None:
+            self._swap_manifest(table, m)
+        self._drop_staged(table)
+
+    def _drop_staged(self, table: str, keep: dict | None = None) -> None:
+        """Delete every dir ``table``'s prepared records staged, but
+        ``keep``'s."""
+        root = os.path.join(self.root, "_staging")
+        prefix = f"{table}.v"
+        for d in os.listdir(root) if os.path.isdir(root) else []:
+            if (d.startswith(prefix) and d.endswith(".prepared")
+                    and (keep is None or os.path.join("_staging", d) != keep["dir"])):
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
     def write_slices(self, df: DataFrame, slice_col: str,
                      tables: dict[int, str], *,
@@ -484,14 +634,16 @@ class Warehouse:
         assert files.slice_col == slice_col
         t0 = time.perf_counter()
         snaps = {val: f"snap-{self.manifest(tbl)['version'] + 1}" for val, tbl in tables.items()}
-        timers, _ = self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
-                                           for val, snap in snaps.items()})
+        rows = self._land(df, files, {val: os.path.join(self.root, tables[val], snap)
+                                      for val, snap in snaps.items()})
         wall_s = time.perf_counter() - t0  # the one write all tables share
+        timers = _summed(rows)
         schema_json = files.spark_schema().json()
         for val, tbl in tables.items():
             self._commit(tbl, snaps[val], (watermarks or {}).get(val),
                          {"op": op, "wall_s": wall_s, **timers},
-                         schema_json=schema_json, bucket_spec=None)
+                         schema_json=schema_json, bucket_spec=None,
+                         rows=sum(r.rows for r in rows if r.slice == val))
 
     def append_segment(self, df: DataFrame, table: str, *, op: str = "append",
                        files: KernelWriter) -> str:
@@ -512,12 +664,12 @@ class Warehouse:
             raise ValueError(f"segment buckets {files.bucket_by} are not the table's "
                              f"{m.get('bucket_spec')}")
         seg = f"seg-{m['version'] + 1}"
-        timers, _ = self._land(df, files, {None: os.path.join(self.root, table, seg)})
+        rows = self._land(df, files, {None: os.path.join(self.root, table, seg)})
         m["segments"] = m.get("segments", []) + [seg]
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
         self._log(table, m, {"op": op, "segment": seg, "wall_s": time.perf_counter() - t0,
-                             **timers})
+                             **_summed(rows)})
         self._swap_manifest(table, m)
         return seg
 

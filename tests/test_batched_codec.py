@@ -265,24 +265,35 @@ def test_gorilla_rows_constant_and_extreme():
     assert np.array_equal(vals.view(np.uint64), flat.view(np.uint64))
 
 
-def test_blob_plane_past_int32_offsets_is_refused(monkeypatch):
+def test_blob_plane_past_int32_offsets_flushes_as_row_slices(monkeypatch):
     """Arrow binary offsets are int32, so a flush batch whose blob plane
-    passes the limit must raise (naming rows and bytes) instead of wrapping
-    its offsets. The limit is lowered here; at the real 2 GiB a batch of
-    ~20 000 docs of ~32k tokens reaches it."""
+    passes the limit is emitted as several chunk batches of consecutive
+    rows, each within it, instead of wrapping its offsets; their rows equal
+    the unsplit batch's. A single row past the limit cannot be split and is
+    refused (naming rows and bytes). The limit is lowered here; at the real
+    2 GiB a batch of ~20 000 docs of ~32k tokens reaches it."""
     from sorting_compressed_time_series_spark.operators import ingest
     from sorting_compressed_time_series_spark.sources.synth import _gen_batch
 
     batch = _gen_batch(np.arange(40, dtype=np.uint64), 42)
     out = next(ingest.flush_kernel_batches(iter([batch])))
-    largest = max(int(np.frombuffer(out.column(c).buffers()[1], np.int32)[40])
-                  for c in ("time_blob", "value_blob"))
-    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest - 1)
-    with pytest.raises(OverflowError, match=rf"40 rows holds {largest} bytes"):
-        next(ingest.flush_kernel_batches(iter([batch])))
-    # at the limit the batch still flushes, byte for byte as before (all
-    # but the encode wall time)
-    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest)
-    again = next(ingest.flush_kernel_batches(iter([batch])))
     cols = [c for c in out.schema.names if c != "encode_ns"]
-    assert again.select(cols).equals(out.select(cols))
+    ends = {c: np.frombuffer(out.column(c).buffers()[1], np.int32)[1:41]
+            for c in ("time_blob", "value_blob")}
+    largest = max(int(e[-1]) for e in ends.values())
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest - 1)
+    sliced = list(ingest.flush_kernel_batches(iter([batch])))
+    assert len(sliced) > 1
+    assert all(int(np.frombuffer(b.column(c).buffers()[1], np.int32)[b.num_rows])
+               <= largest - 1 for b in sliced for c in ends)
+    joined = pa.Table.from_batches(sliced).select(cols)
+    assert joined.equals(pa.Table.from_batches([out]).select(cols))
+    widest = max(int(np.diff(np.concatenate([[0], e])).max()) for e in ends.values())
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", widest - 1)
+    with pytest.raises(OverflowError, match=rf"1 rows holds {widest} bytes"):
+        list(ingest.flush_kernel_batches(iter([batch])))
+    # at the limit the batch still flushes whole, byte for byte as before
+    # (all but the encode wall time)
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest)
+    again = list(ingest.flush_kernel_batches(iter([batch])))
+    assert len(again) == 1 and again[0].select(cols).equals(out.select(cols))

@@ -468,7 +468,9 @@ def test_pipeline_refuses_windows_that_do_not_nest(tmp_path):
 
 def test_pipeline_stages_describe_their_jobs(spark, tmp_path, monkeypatch):
     """ingest, promote_all, compact and retain run their Spark actions
-    under their own job description and hand the caller's back."""
+    under their own job description and hand the caller's back. The fresh
+    ingest is exactly one labelled job, and the promote after it commits
+    the ingest's staged tier rows with no job at all."""
     seen = []
     for method in ("write", "write_slices", "append_segment"):
         orig = getattr(Warehouse, method)
@@ -482,18 +484,26 @@ def test_pipeline_stages_describe_their_jobs(spark, tmp_path, monkeypatch):
     try:
         for i, caller in enumerate(("caller's label", None)):
             p = Pipeline(spark, Warehouse(str(tmp_path / f"wh{i}")))
-            for stage, fn, args in [
-                    ("ingest", p.ingest, (generate_tokens_df(spark, 20),)),
-                    ("promote_all", p.promote_all, ()),
-                    ("ingest", partial(p.ingest, append=True), (generate_tokens_df(spark, 5),)),
-                    ("promote_all", p.promote_all, ()),
-                    ("compact", p.compact, ()),
-                    ("retain", p.retain, (1_800_000_000_000_000,))]:
+            # (stage, call, args, labelled writes, jobs or None: not counted)
+            for stage, fn, args, writes, jobs in [
+                    ("ingest", p.ingest, (generate_tokens_df(spark, 20),), 1, 1),
+                    ("promote_all", p.promote_all, (), 0, 0),
+                    ("ingest", partial(p.ingest, append=True), (generate_tokens_df(spark, 5),),
+                     1, None),
+                    ("promote_all", p.promote_all, (), 1, None),
+                    ("compact", p.compact, (), 1, None),
+                    ("retain", p.retain, (1_800_000_000_000_000,), 0, None)]:
                 sc.setJobDescription(caller)
+                group = f"stage-{uuid.uuid4().hex}"
+                sc.setLocalProperty("spark.jobGroup.id", group)
                 del seen[:]
                 fn(*args)
-                assert set(seen) <= {f"tsrollup {stage}"}, (stage, seen)
-                assert seen or stage == "retain", stage
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                assert seen == [f"tsrollup {stage}"] * writes, (stage, seen)
                 assert sc.getLocalProperty("spark.job.description") == caller, stage
+                if jobs is not None:
+                    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+                    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, stage
     finally:
         sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,8 +1,8 @@
 """Planner metadata from parquet footers instead of Spark jobs.
 
 Oracles: the manifest's commit metrics equal the tables' ``count()``;
-``promote_all`` runs no probe job beyond its one fused write (and ``retain``
-none at all); its watermarks equal ``(max(max_ts) // w + 1) * w`` computed
+after a fresh ``ingest`` (one job) ``promote_all`` runs no job (and
+``retain`` none at all); its watermarks equal ``(max(max_ts) // w + 1) * w`` computed
 by Spark; a chunk file without statistics falls back to the Spark job and
 commits the same watermarks."""
 
@@ -52,17 +52,22 @@ def loaded(spark, tmp_path_factory):
     group: (warehouse, {call: job ids}, retain summary of tier 1)."""
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_footers")))
     p = Pipeline(spark, wh, TIERS)
-    p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
+    _, ingest_jobs = _jobs_of(spark, "footers.ingest", p.ingest,
+                              generate_tokens_df(spark, N_DOCS, SEED), SEED)
     _, promote_jobs = _jobs_of(spark, "footers.promote", p.promote_all)
     # the clock at the last window: tier 1's 12 h TTL drops its earlier days
     now_us = wh.footer_stats("tier1_1m", ("window_start",))[1]["window_start"][1]
     retained, retain_jobs = _jobs_of(spark, "footers.retain", p.retain, now_us)
-    return wh, {"promote": promote_jobs, "retain": retain_jobs}, retained[0]
+    return wh, {"ingest": ingest_jobs, "promote": promote_jobs, "retain": retain_jobs}, retained[0]
 
 
 def test_promote_and_retain_launch_no_probe_jobs(loaded):
+    """The fresh ingest is one job, which also rolls up the tiers; the
+    promote after it only commits those rows, and retain drops
+    partitions: neither runs a job."""
     _, jobs, retained = loaded
-    assert 1 <= len(jobs["promote"]) <= 2, jobs
+    assert len(jobs["ingest"]) == 1, jobs
+    assert jobs["promote"] == [], jobs
     assert retained["partitions_dropped"], retained
     assert jobs["retain"] == [], jobs
 

@@ -17,7 +17,10 @@ Enable the log with ``spark.eventLog.enabled=true`` and
 With ``--warehouse``, prints every table's lineage entries from its
 ``_manifest.json`` (no Spark, no event log): op, rows, bytes, files, wall
 time, and for a commit whose tasks wrote their own files the seconds they
-spent blocked on input, in the kernel and writing, summed over tasks.
+spent blocked on input, in the kernel and writing, summed over tasks. A
+tier commit of rows a fresh ingest computed names that ingest's version;
+a chunk table whose ingest staged tier rows not yet committed shows its
+prepared record (the version, and each tier's staged rows).
 """
 
 from __future__ import annotations
@@ -105,12 +108,18 @@ def warehouse_report(root: str) -> str:
             m = json.load(f)
         lines.append(f"== {table}: version {m['version']}, snapshot {m['snapshot']}, "
                      f"watermark {m['watermark_us']}")
+        rec = m.get("prepared")
+        if rec:
+            lines.append(f"  prepared by v{rec['version']} in {rec['dir']}: " + ", ".join(
+                f"{name} {t['rows']} rows" for name, t in rec["tables"].items()))
         for e in m["lineage"]:
             line = (f"  v{e.get('version', '?')} {e.get('op', '?')}: {e.get('rows', 0)} rows  "
                     f"{_mb(e.get('bytes', 0))}  {e.get('files', 0)} files  "
                     f"wall {e.get('wall_s', float('nan')):.3f} s")
             if all(k in e for k, _ in TASK_TIMERS):
                 line += "  tasks " + "  ".join(f"{name} {e[k]:.3f} s" for k, name in TASK_TIMERS)
+            if "prepared_by" in e:
+                line += f"  computed by ingest v{e['prepared_by']}"
             lines.append(line)
     return "\n".join(lines)
 
