@@ -2,10 +2,14 @@
 
 The Spark expression of the reference's write path (SURVEY.md §3.2-3.3):
 memtable append + flush-sort + encode + chunk write collapse into ONE
-distributed map over Arrow batches, whose tasks write their own chunk
-files (``Pipeline.ingest``, ``Warehouse.kernel_writer``) —
+distributed map over Arrow batches, whose tasks read their own input and
+write their own chunk files (``Pipeline.ingest``, ``Warehouse.kernel_writer``):
 
-    tokens → mapInArrow(flush kernel + parquet writer) → chunk files
+    token files → mapInArrow(pyarrow read + flush kernel + parquet writer)
+                → chunk files
+
+A token frame that is not exactly a scan of local parquet files reaches
+the same kernel as Arrow batches from Spark's scan (``Pipeline._input_stage``).
 
 Inside the kernel everything is whole-batch vectorized numpy:
 seriesization, per-row inversion counting, stable per-row sort (the
@@ -81,12 +85,14 @@ BINARY_MAX_BYTES = 2**31 - 1
 def _binary_from_buffers(buf: np.ndarray, splits: np.ndarray) -> pa.Array:
     """Arrow ``binary`` array over ``buf`` cut at ``splits``, without copying
     the bytes. Refuses a plane past the int32 offset range: the cast below
-    would wrap silently."""
+    would wrap silently. The flush cuts its batches into row slices that
+    fit (``_row_slices``), so only a single row past the limit gets here,
+    and no batch size helps it."""
     if len(splits) and splits[-1] > BINARY_MAX_BYTES:
         raise OverflowError(
-            f"binary column of {len(splits) - 1} rows holds {int(splits[-1])} bytes, "
-            f"past the {BINARY_MAX_BYTES}-byte limit of int32 Arrow offsets; lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch so each batch fits")
+            f"a chunk row's blob plane holds {int(np.diff(splits).max())} bytes, past "
+            f"the {BINARY_MAX_BYTES}-byte limit of int32 Arrow offsets; a row is never "
+            "split, so ingest the doc's tokens as several rows")
     return pa.Array.from_buffers(
         pa.binary(),
         len(splits) - 1,

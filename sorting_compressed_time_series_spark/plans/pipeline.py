@@ -35,6 +35,7 @@ from ..operators.rollup import (
     WINDOW_1M_US,
     tiers_kernel,
 )
+from ..sources.file_input import arrow_schema, split_reader, task_ids, task_splits
 from ..sources.warehouse import Kernel, Warehouse, bucket_ids, bucket_reader
 
 
@@ -170,6 +171,26 @@ class Pipeline:
         chunks = self.warehouse.read(self.spark, "chunks_tier0").filter(keep).select(*columns)
         return chunks.repartition(n, "doc_id").sortWithinPartitions(*sort_by), None
 
+    def _input_stage(self, tokens_df: DataFrame, partitions: int | None,
+                     bucket_by: tuple[str, int] | None) -> tuple[DataFrame, Kernel | None]:
+        """``(src, read)`` of an ingest's flush job, for
+        ``KernelWriter.frame(src, kern, read)``. When ``tokens_df`` is
+        exactly a scan of local parquet files with a string ``doc_id`` and
+        no ``partitions`` (``file_input.task_splits``), ``src`` is a range
+        of task ids and each task reads its row groups itself with pyarrow
+        (``split_reader``, which tags each row with its ``bucket_by``
+        bucket): no scan in the JVM and no rows sent to Python. Its tasks
+        hold the rows the scan's would. Otherwise ``src`` is the frame,
+        repartitioned by ``doc_id`` hash with ``partitions``, and ``read``
+        None."""
+        splits = None if partitions else task_splits(tokens_df, "doc_id")
+        if splits is None:
+            src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
+            return src, None
+        batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        return task_ids(self.spark, len(splits)), split_reader(
+            splits, arrow_schema(tokens_df), batch_rows=batch_rows, bucket_by=bucket_by)
+
     def _tier_specs(self) -> list[list]:
         """The tiers as a prepared record names them: [name, window_us]."""
         return [[spec.name, spec.window_us] for spec in self.tiers]
@@ -181,9 +202,14 @@ class Pipeline:
         """Flush ``tokens_df`` into the chunk table: the flush tasks write
         their chunks to parquet themselves (``Warehouse.kernel_writer``),
         as a new doc-bucketed snapshot (``_bucket_by``), or with
-        ``append`` as a segment in the table's own buckets. Returns the
-        commit's lineage entry (rows, bytes, files, wall time and the
-        tasks' input/kernel/write seconds); the table is not read back.
+        ``append`` as a segment in the table's own buckets. A frame that is
+        exactly a scan of local parquet files (string ``doc_id``, no
+        ``partitions``) is read by the flush tasks themselves with pyarrow;
+        any other frame reaches them through Spark's scan as Arrow batches
+        (``_input_stage``). Returns the commit's lineage entry (rows,
+        bytes, files, wall time, the tasks' input/kernel/write seconds,
+        their count and ``input``: ``files`` or ``scan``); the table is not
+        read back.
 
         A new snapshot on a warehouse with no tier table yet is also
         rolled up in the same tasks (``flush_rollup_kernel``): each task
@@ -194,23 +220,25 @@ class Pipeline:
         only if every doc is one run of one task (no doc-run key repeats
         across tasks); one job, no exchange either way."""
         wh = self.warehouse
-        src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
+        append = append and wh.exists("chunks_tier0")
+        fresh = not append and not any(wh.exists(spec.name) for spec in self.tiers)
+        bucket_by = self._table_buckets() if append else self._bucket_by()
+        files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=bucket_by)
         kern = functools.partial(flush_kernel_batches, seed=seed)
-        if append and wh.exists("chunks_tier0"):
+        if fresh:
+            files = files.with_side(TIER_PARTIAL_ARROW, "tier")
+            kern = flush_rollup_kernel([spec.window_us for spec in self.tiers], seed)
+        src, read = self._input_stage(tokens_df, partitions, bucket_by)
+        out = files.frame(src, kern, read)
+        lineage = {"input": "scan" if read is None else "files"}
+        if append:
             # manifest-add only: the existing snapshot is untouched and the
             # next promotion MERGEs just the appended docs' windows
-            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._table_buckets())
-            wh.append_segment(files.frame(src, kern), "chunks_tier0", op="append", files=files)
-        elif any(wh.exists(spec.name) for spec in self.tiers):
-            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by())
-            wh.write(files.frame(src, kern), "chunks_tier0", op="ingest", files=files)
+            wh.append_segment(out, "chunks_tier0", op="append", files=files, lineage=lineage)
         else:
-            files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._bucket_by()
-                                     ).with_side(TIER_PARTIAL_ARROW, "tier")
-            kern = flush_rollup_kernel([spec.window_us for spec in self.tiers], seed)
-            wh.write(files.frame(src, kern), "chunks_tier0", op="ingest", files=files,
-                     stage={t: spec.name for t, spec in enumerate(self.tiers)},
-                     stage_meta={"tiers": self._tier_specs()})
+            staged = dict(stage={t: spec.name for t, spec in enumerate(self.tiers)},
+                          stage_meta={"tiers": self._tier_specs()}) if fresh else {}
+            wh.write(out, "chunks_tier0", op="ingest", files=files, lineage=lineage, **staged)
         return wh.manifest("chunks_tier0")["lineage"][-1]
 
     def _commit_prepared(self, modes: list[str], wm: list[int], up_to_us: int | None,

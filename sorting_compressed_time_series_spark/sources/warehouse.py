@@ -58,11 +58,12 @@ US_PER_DAY = 86_400_000_000
 # tables (they are smaller than one group anyway) and let decode scans
 # split chunk files.
 ROW_GROUP_BYTES = 4 << 20
-# what a kernel's tasks return instead of its rows: one row per file written,
-# plus each task's seconds blocked on input, in the kernel and writing, and
-# the count or the doc-run keys its kernel returned (``KernelWriter.task``)
+# what a kernel's tasks return instead of its rows: one row per file written
+# (with the task's partition id), plus each task's seconds blocked on input,
+# in the kernel and writing, and the count or the doc-run keys its kernel
+# returned (``KernelWriter.task``)
 TASK_TIMERS = ("input_wait_s", "kernel_s", "write_s")
-FILES_SCHEMA = ("slice int, p_day bigint, bucket int, path string, rows bigint, "
+FILES_SCHEMA = ("task int, slice int, p_day bigint, bucket int, path string, rows bigint, "
                 + ", ".join(f"{t} double" for t in TASK_TIMERS)
                 + ", kernel_n bigint, run_keys binary")
 _BUCKET = "_bucket"  # the input column carrying Spark's bucket id
@@ -115,10 +116,11 @@ class KernelWriter:
     def frame(self, src: DataFrame, kern: Kernel, read: Kernel | None = None) -> DataFrame:
         """``src`` → [``read`` →] ``kern`` → files: the frame
         ``Warehouse.write``, ``write_slices`` and ``append_segment`` commit.
-        A bucketed write's input carries each row's bucket id in
-        ``_BUCKET``: the bucket ids themselves for a whole-bucket stage
-        (``bucket_ids``), else Spark's bucket of ``col``."""
-        if self.bucket_by is not None and _BUCKET not in src.columns:
+        A bucketed write's kernel input carries each row's bucket id in
+        ``_BUCKET``: ``read`` tags the rows it reads (``bucket_reader``,
+        ``file_input.split_reader``), else ``src`` gets Spark's bucket of
+        ``col``."""
+        if self.bucket_by is not None and read is None:
             col, n = self.bucket_by
             # Spark's bucketed write assigns pmod(murmur3(col), n): the same
             # expression, so the files' suffixes agree with Spark's own
@@ -161,9 +163,9 @@ class KernelWriter:
                      for w in writers]
             # per writer: input wait, kernel + input wait, write
             clock = np.zeros((len(writers), 3))
+            rows = read(batches) if read is not None else batches
             buckets = _InputBuckets() if self.bucket_by is not None else None
-            rows = buckets.read(batches) if buckets is not None else batches
-            rows = _timed(read(rows) if read is not None else rows, clock, (0, 0))
+            rows = _timed(buckets.read(rows) if buckets is not None else rows, clock, (0, 0))
             ret = None
 
             def outputs():
@@ -186,22 +188,23 @@ class KernelWriter:
                 clock[w, 2] += time.perf_counter() - t0
             clock[0, 1] -= clock[0, 0]
             if paired:
-                yield _files_batch(written[0], clock[0], 0, np.asarray(ret, dtype=np.int64))
+                yield _files_batch(part, written[0], clock[0], 0,
+                                   np.asarray(ret, dtype=np.int64))
                 if written[1]:
-                    yield _files_batch(written[1], clock[1], 0)
+                    yield _files_batch(part, written[1], clock[1], 0)
             else:
-                yield _files_batch(written[0], clock[0], ret or 0)
+                yield _files_batch(part, written[0], clock[0], ret or 0)
 
         return run
 
 
 class _InputBuckets:
     """The rule that puts a bucketed write's output rows in buckets, from
-    the ``_BUCKET`` ids of the task's input as the kernel reads it. While
-    every input row so far lies in one bucket (a whole-bucket stage's task
-    reads one bucket id; a ``repartition(n, col)`` task holds one bucket),
-    every output row is in that bucket, whatever the kernel emits.
-    Otherwise the kernel must emit one row per row of the input batch it
+    the ``_BUCKET`` ids of the task's input as the kernel reads it (after
+    ``read``). While every input row so far lies in one bucket (a
+    whole-bucket stage's task reads one bucket; a ``repartition(n, col)``
+    task holds one bucket), every output row is in that bucket, whatever
+    the kernel emits. Otherwise the kernel must emit one row per row of the input batch it
     read last, in order, in one or more batches (the flush), and each row
     is in its input row's bucket."""
 
@@ -250,8 +253,9 @@ def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
     bucket's files read with pyarrow — only ``columns``, only the rows
     matching ``filters`` (pyarrow's disjunctive normal form: OR of ANDs) —
     sorted by ``sort_by`` and cut into batches of ``batch_rows`` (none if
-    ≤ 0, as Spark's ``maxRecordsPerBatch``). The sort is stable, so rows
-    that tie keep the files' order. One bucket is in memory at a time."""
+    ≤ 0, as Spark's ``maxRecordsPerBatch``), each row tagged with its
+    bucket in ``_BUCKET``. The sort is stable, so rows that tie keep the
+    files' order. One bucket is in memory at a time."""
 
     def read(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
@@ -266,7 +270,9 @@ def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
                 table = pq.read_table(paths, columns=list(columns), filters=filters,
                                       use_threads=False)
                 table = table.sort_by([(c, "ascending") for c in sort_by])
-                yield from table.to_batches(batch_rows if batch_rows > 0 else None)
+                for rows in table.to_batches(batch_rows if batch_rows > 0 else None):
+                    yield rows.append_column(
+                        _BUCKET, pa.array(np.full(rows.num_rows, b, np.int32)))
 
     return read
 
@@ -292,13 +298,15 @@ def _timed(it: Iterator, clock: np.ndarray, slot) -> Iterator:
 
 
 def _summed(rows: list) -> dict[str, float]:
-    """The ``TASK_TIMERS`` of ``FILES_SCHEMA`` rows, summed over tasks."""
-    return {t: sum(r[t] for r in rows) for t in TASK_TIMERS}
+    """The ``TASK_TIMERS`` of ``FILES_SCHEMA`` rows, summed over tasks, and
+    the number of tasks."""
+    return {**{t: sum(r[t] for r in rows) for t in TASK_TIMERS},
+            "tasks": len({r.task for r in rows})}
 
 
-def _files_batch(written: list[tuple], clock: np.ndarray, kernel_n: int,
+def _files_batch(task: int, written: list[tuple], clock: np.ndarray, kernel_n: int,
                  run_keys: np.ndarray | None = None) -> pa.RecordBatch:
-    """The ``FILES_SCHEMA`` rows of one writer of one task: its files,
+    """The ``FILES_SCHEMA`` rows of one writer of task ``task``: its files,
     then its timers, ``kernel_n`` and ``run_keys`` on the first row (on a
     null-path row when it wrote none)."""
     written = written or [(None, None, None, None, 0)]
@@ -311,11 +319,12 @@ def _files_batch(written: list[tuple], clock: np.ndarray, kernel_n: int,
     if run_keys is not None:
         keys[0] = run_keys.tobytes()
     return pa.RecordBatch.from_arrays(
-        [pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
+        [pa.array(np.full(len(written), task, np.int32)),
+         pa.array(cols[0], pa.int32()), pa.array(cols[1], pa.int64()),
          pa.array(cols[2], pa.int32()), pa.array(cols[3], pa.string()),
          pa.array(cols[4], pa.int64())] + [pa.array(t) for t in timers]
         + [pa.array(counts), pa.array(keys, pa.binary())],
-        names=["slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS, "kernel_n",
+        names=["task", "slice", "p_day", "bucket", "path", "rows", *TASK_TIMERS, "kernel_n",
                "run_keys"])
 
 
@@ -513,14 +522,16 @@ class Warehouse:
     def write(self, df: DataFrame, table: str, *, watermark_us: int | None = None,
               op: str | Callable[[int], str | None] = "overwrite",
               files: KernelWriter, stage: dict[int, str] | None = None,
-              stage_meta: dict | None = None) -> int:
+              stage_meta: dict | None = None, lineage: dict | None = None) -> int:
         """Commit a new snapshot: ``df`` is the frame of a kernel that writes
         its own rows (``files.frame``). With ``files.bucket_by=(col, n)``
         the snapshot is hash-clustered by ``col`` into ``n`` buckets (the
         stand-in for Iceberg ``bucket(col, n)``), which ``bucket_files``
         maps. ``op`` names the commit in the lineage; as a function of the
         tasks' summed ``kernel_n`` it may return None, and then nothing is
-        committed (a compaction that merged no doc). Returns that sum.
+        committed (a compaction that merged no doc). Returns that sum. The
+        lineage entry also carries the tasks' summed timers, their count
+        and ``lineage``.
 
         With a side writer (``files.side``, sliced), the files of slice
         ``v`` are staged for table ``stage[v]``'s next commit, and the
@@ -562,7 +573,8 @@ class Warehouse:
                 shutil.rmtree(os.path.join(self.root, staged), ignore_errors=True)
         bucket_spec = list(files.bucket_by) if files.bucket_by is not None else None
         self._commit(table, snap, watermark_us,
-                     {"op": op, "wall_s": time.perf_counter() - t0, **_summed(own)},
+                     {"op": op, "wall_s": time.perf_counter() - t0, **_summed(own),
+                      **(lineage or {})},
                      schema_json=files.spark_schema().json(), bucket_spec=bucket_spec,
                      rows=sum(r.rows for r in own), prepared=prepared)
         return kernel_n
@@ -579,8 +591,8 @@ class Warehouse:
         """Commit ``table``'s rows staged in ``source``'s prepared record as
         ``table``'s new snapshot, with ``watermark_us``: a directory move
         and a manifest swap, no Spark job and no footer read. The lineage
-        entry carries the staging tasks' seconds and ``prepared_by``, the
-        ``source`` version that computed the rows."""
+        entry carries the staging tasks' seconds and count and
+        ``prepared_by``, the ``source`` version that computed the rows."""
         t0 = time.perf_counter()
         rec = self.prepared(source)
         snap = f"snap-{self.manifest(table)['version'] + 1}"
@@ -591,7 +603,8 @@ class Warehouse:
         info = rec["tables"][table]
         self._commit(table, snap, watermark_us,
                      {"op": op, "wall_s": time.perf_counter() - t0,
-                      **{t: info[t] for t in TASK_TIMERS}, "prepared_by": rec["version"]},
+                      **{k: v for k, v in info.items() if k != "rows"},
+                      "prepared_by": rec["version"]},
                      schema_json=rec["schema"], rows=info["rows"])
 
     def drop_prepared(self, table: str) -> None:
@@ -646,15 +659,15 @@ class Warehouse:
                          rows=sum(r.rows for r in rows if r.slice == val))
 
     def append_segment(self, df: DataFrame, table: str, *, op: str = "append",
-                       files: KernelWriter) -> str:
+                       files: KernelWriter, lineage: dict | None = None) -> str:
         """Append-only commit: land the new rows as an extra SEGMENT dir and
         add it to the manifest — the existing snapshot is untouched (no
         table rewrite; Iceberg's append = manifest-add is exactly this).
-        ``df`` and ``files`` as in ``write``; a bucketed segment takes the
-        table's buckets (``bucket_spec``), so ``bucket_files`` still maps
-        the table. The segment is also recorded under ``pending_appends``
-        so the next promotion can MERGE just the affected keys instead of
-        recomputing every tier. A crash before the manifest swap leaves an
+        ``df``, ``files`` and ``lineage`` as in ``write``; a bucketed
+        segment takes the table's buckets (``bucket_spec``), so
+        ``bucket_files`` still maps the table. The segment is also
+        recorded under ``pending_appends`` so the next promotion can MERGE
+        just the affected keys instead of recomputing every tier. A crash before the manifest swap leaves an
         orphan dir the manifest never names; the rerun overwrites it."""
         t0 = time.perf_counter()
         m = self.manifest(table)
@@ -669,7 +682,7 @@ class Warehouse:
         m["pending_appends"] = m.get("pending_appends", []) + [seg]
         m["version"] += 1
         self._log(table, m, {"op": op, "segment": seg, "wall_s": time.perf_counter() - t0,
-                             **_summed(rows)})
+                             **_summed(rows), **(lineage or {})})
         self._swap_manifest(table, m)
         return seg
 

@@ -270,8 +270,8 @@ def test_blob_plane_past_int32_offsets_flushes_as_row_slices(monkeypatch):
     passes the limit is emitted as several chunk batches of consecutive
     rows, each within it, instead of wrapping its offsets; their rows equal
     the unsplit batch's. A single row past the limit cannot be split and is
-    refused (naming rows and bytes). The limit is lowered here; at the real
-    2 GiB a batch of ~20 000 docs of ~32k tokens reaches it."""
+    refused (naming the row's plane size). The limit is lowered here; at
+    the real 2 GiB a batch of ~20 000 docs of ~32k tokens reaches it."""
     from sorting_compressed_time_series_spark.operators import ingest
     from sorting_compressed_time_series_spark.sources.synth import _gen_batch
 
@@ -290,7 +290,7 @@ def test_blob_plane_past_int32_offsets_flushes_as_row_slices(monkeypatch):
     assert joined.equals(pa.Table.from_batches([out]).select(cols))
     widest = max(int(np.diff(np.concatenate([[0], e])).max()) for e in ends.values())
     monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", widest - 1)
-    with pytest.raises(OverflowError, match=rf"1 rows holds {widest} bytes"):
+    with pytest.raises(OverflowError, match=rf"a chunk row's blob plane holds {widest} bytes"):
         list(ingest.flush_kernel_batches(iter([batch])))
     # at the limit the batch still flushes whole, byte for byte as before
     # (all but the encode wall time)

@@ -376,7 +376,9 @@ def test_ingest_and_promote_register_no_catalog_table(spark, tmp_path):
 
 def test_lineage_records_task_timers(spark, tmp_path):
     """The kernel commits of ingest, an append and the fused promote carry
-    the tasks' summed seconds blocked on input, in the kernel and writing."""
+    the tasks' summed seconds blocked on input, in the kernel and writing,
+    and the number of tasks; the ingest and the append also name their
+    input path (a generated frame: Spark's scan)."""
     p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
     p.ingest(generate_tokens_df(spark, 40))
     p.promote_all()
@@ -388,6 +390,8 @@ def test_lineage_records_task_timers(spark, tmp_path):
     for e in entries:
         assert all(e[t] >= 0 for t in TASK_TIMERS), e
         assert e["kernel_s"] > 0, e
+        assert e["tasks"] >= 1, e
+    assert [e.get("input") for e in entries] == ["scan", "scan", None, None, None]
 
 
 ODD_IDS = ["user-α/7", "doc", "doc12x", "", "doc0000000003", "DOC5", "doc 9", "séries/ü"]

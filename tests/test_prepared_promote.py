@@ -408,7 +408,8 @@ def test_oversized_planes_flush_as_row_slices(tmp_path, monkeypatch):
     flushed as several chunk batches of consecutive rows, each within the
     limit. The fused task feeds each slice's points to the reduce, and its
     rows of several buckets keep their buckets: the chunk files, their
-    buckets and the tier rows equal an unsplit run."""
+    buckets and the tier rows equal an unsplit run. A single row past the
+    limit is refused with its plane's size."""
     rng = np.random.default_rng(5)
     n = 60
     lengths = rng.integers(1, 40, n)
@@ -431,3 +432,9 @@ def test_oversized_planes_flush_as_row_slices(tmp_path, monkeypatch):
         cols = [c for c in want[key].columns if c != "encode_ns"]
         pd.testing.assert_frame_equal(got[key][cols], want[key][cols])
     assert set(want["chunks"].bucket) == {0, 1, 2, 3}
+    # a row whose own plane passes the limit cannot be sliced: refused,
+    # naming the row's plane size
+    widest = int(max(want["chunks"].bytes_time.max(), want["chunks"].bytes_value.max()))
+    monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", widest - 1)
+    with pytest.raises(OverflowError, match=rf"a chunk row's blob plane holds {widest} bytes"):
+        _task_files(tmp_path, "refused", table)

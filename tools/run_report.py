@@ -17,8 +17,10 @@ Enable the log with ``spark.eventLog.enabled=true`` and
 With ``--warehouse``, prints every table's lineage entries from its
 ``_manifest.json`` (no Spark, no event log): op, rows, bytes, files, wall
 time, and for a commit whose tasks wrote their own files the seconds they
-spent blocked on input, in the kernel and writing, summed over tasks. A
-tier commit of rows a fresh ingest computed names that ingest's version;
+spent blocked on input, in the kernel and writing, summed over tasks, and
+the number of tasks; for an ingest or append also where its tasks' input
+came from (``files``: read by the tasks themselves, ``scan``: Spark's
+scan). A tier commit of rows a fresh ingest computed names that ingest's version;
 a chunk table whose ingest staged tier rows not yet committed shows its
 prepared record (the version, and each tier's staged rows).
 """
@@ -118,6 +120,10 @@ def warehouse_report(root: str) -> str:
                     f"wall {e.get('wall_s', float('nan')):.3f} s")
             if all(k in e for k, _ in TASK_TIMERS):
                 line += "  tasks " + "  ".join(f"{name} {e[k]:.3f} s" for k, name in TASK_TIMERS)
+            if "tasks" in e:
+                line += f"  {e['tasks']} tasks"
+            if "input" in e:
+                line += f", input {e['input']}"
             if "prepared_by" in e:
                 line += f"  computed by ingest v{e['prepared_by']}"
             lines.append(line)
