@@ -1,6 +1,6 @@
 """Vectorized numpy codec kernels.
 
-Two codec families, mirroring the reference's split (see /root/repo/SURVEY.md §2.1):
+Two codec families, mirroring the reference's split (see SURVEY.md §2.1):
 
 1. ``bytealigned`` — the "compressed-sortable" family. Payload bytes live in a
    ``vals`` plane; a 2-bit-per-element length-class ``lens`` plane makes every
@@ -12,18 +12,19 @@ Two codec families, mirroring the reference's split (see /root/repo/SURVEY.md §
    datastructure/compressedsort/TS_DELTA_encoder.java:19-129,
    V_VARINT_encoder.java:16-89 — format re-designed clean-room, not copied).
 
-2. ``bitpacked`` — the high-ratio family: delta-of-delta for timestamps
-   (reference DeltaDeltaLongEncoder.java:117-174) and Gorilla XOR for values
+2. ``bitpacked`` — the high-ratio family: delta-of-delta and TS_2DIFF for
+   timestamps (reference DeltaDeltaLongEncoder.java:117-174) and Gorilla XOR
+   for values
    (reference LongGorillaEncoder.java:105-150 / DoublePrecisionEncoderV2).
    Our format separates fixed-width control planes (tags, window params) from
    the variable-width payload plane so DECODE is fully vectorizable — the
    reference's interleaved prefix codes force sequential decode; ours do not.
 
-Plus ``chimp`` — the CHIMP-128 benchmark-baseline codec (reference
-LongChimpEncoder.java; the reference uses it only as a comparison point in
-MemtableSortTest): same plane-split idiom, with the XOR back-reference
-chain resolved by pointer doubling at decode, and ``deltagorilla`` — the
-fork's interleaved single-delta research codec + bit-level in-place sorter.
+Both families have a per-series form (``encode_chunk``/``decode_chunk``)
+and a multi-row batched form (``batched``) that encodes every series of an
+Arrow batch in one set of numpy operations; the batched kernels are tested
+byte for byte against the per-series ones. These are the only codecs: the
+engine encodes with nothing else.
 """
 
 from .bytealigned import (  # noqa: F401
@@ -43,22 +44,13 @@ from .bitpacked import (  # noqa: F401
     gorilla_encode_doubles,
     gorilla_encode_longs,
 )
-from .chimp import (  # noqa: F401
-    chimp_decode_doubles,
-    chimp_decode_longs,
-    chimp_encode_doubles,
-    chimp_encode_longs,
-)
 from .chunk import (  # noqa: F401
-    CODEC_CHIMP,
-    CODEC_CHIMP_F64,
     CODEC_DELTA,
     CODEC_DOD,
     CODEC_GORILLA,
     CODEC_GORILLA_F64,
     CODEC_TS2DIFF,
     CODEC_VARINT,
-    chunk_stats,
     decode_chunk,
     encode_chunk,
 )

@@ -40,29 +40,11 @@ from .chunk import (
     CODEC_VARINT,
     MAGIC,
     VERSION,
-    decode_chunk,
-    encode_chunk,
 )
 
 _HDR = 8  # magic(2) + version(1) + codec(1) + count(u32)
 
 _CLASS_WIDTH_U8 = CLASS_WIDTH.astype(np.uint8)
-
-
-def _block_copy(
-    out: np.ndarray,
-    dest_starts: np.ndarray,
-    src: np.ndarray,
-    src_starts: np.ndarray,
-    lengths: np.ndarray,
-) -> None:
-    """Vectorized multi-block memcpy: out[dest+i] = src[src+i] for each block."""
-    total = int(lengths.sum())
-    if total == 0:
-        return
-    ends = np.cumsum(lengths)
-    intra = np.arange(total, dtype=np.int64) - np.repeat(ends - lengths, lengths)
-    out[np.repeat(dest_starts, lengths) + intra] = src[np.repeat(src_starts, lengths) + intra]
 
 
 def _block_place(
@@ -840,9 +822,8 @@ def ts2diff_decode_rows(
 def encode_chunk_rows(
     flat_values: np.ndarray, row_splits: np.ndarray, codec: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Encode one Arrow batch of series into chunk blobs, batched whenever
-    the codec has a multi-row kernel, per-row scalar fallback otherwise
-    (CHIMP). Float inputs are expected for CODEC_GORILLA_F64 only."""
+    """Encode one Arrow batch of series into chunk blobs with the codec's
+    multi-row kernel. Float inputs are expected for CODEC_GORILLA_F64 only."""
     if codec in (CODEC_DELTA, CODEC_VARINT):
         return encode_rows(flat_values, row_splits, codec)
     if codec == CODEC_DOD:
@@ -855,29 +836,15 @@ def encode_chunk_rows(
     if codec == CODEC_GORILLA_F64:
         pats = np.ascontiguousarray(flat_values, dtype=np.float64).view(np.uint64)
         return gorilla_encode_rows(pats, row_splits, CODEC_GORILLA_F64)
-    splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    blobs = [
-        encode_chunk(flat_values[splits[i] : splits[i + 1]], codec)
-        for i in range(len(splits) - 1)
-    ]
-    lens = np.array([len(b) for b in blobs], dtype=np.int64)
-    blob_splits = np.empty(len(blobs) + 1, dtype=np.int64)
-    blob_splits[0] = 0
-    np.cumsum(lens, out=blob_splits[1:])
-    buf = (
-        np.frombuffer(b"".join(blobs), dtype=np.uint8)
-        if blobs
-        else np.empty(0, np.uint8)
-    )
-    return buf, blob_splits
+    raise ValueError(f"unknown codec {codec}")
 
 
 def decode_chunk_rows(
     blob_buffer: np.ndarray, blob_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one Arrow batch of chunk blobs (all the same codec): batched
-    kernels for DELTA/VARINT/DOD/GORILLA/TS2DIFF, per-row fallback otherwise.
-    Returns (flat values — float64 for GORILLA_F64, else int64, splits)."""
+    """Decode one Arrow batch of chunk blobs (all the same codec) with the
+    codec's multi-row kernel. Returns (flat values — float64 for
+    GORILLA_F64, else int64 — and the per-row splits)."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
     n_rows = len(bs) - 1
@@ -895,14 +862,4 @@ def decode_chunk_rows(
         return pats.view(view), splits
     if codec == CODEC_TS2DIFF:
         return ts2diff_decode_rows(buf, bs)
-    rows = [
-        decode_chunk(buf[bs[i] : bs[i + 1]].tobytes()) if bs[i + 1] - bs[i] >= 4
-        else np.empty(0, np.int64)
-        for i in range(n_rows)
-    ]
-    counts = np.array([len(r) for r in rows], dtype=np.int64)
-    splits = np.empty(n_rows + 1, dtype=np.int64)
-    splits[0] = 0
-    np.cumsum(counts, out=splits[1:])
-    flat = np.concatenate(rows) if rows else np.empty(0, np.int64)
-    return flat, splits
+    raise ValueError(f"unknown codec {codec}")

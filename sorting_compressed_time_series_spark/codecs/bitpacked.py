@@ -238,52 +238,6 @@ def dod_decode(blob: bytes | np.ndarray) -> np.ndarray:
     return out
 
 
-def dod_encode_backward(values: np.ndarray) -> bytes:
-    """Tail-decodable (sort-on-insert) variant of delta-of-delta: the
-    stream is encoded from the NEWEST point backwards, so the latest
-    points sit at the stream head and :func:`dod_decode_tail` can
-    materialize the last ``k`` points reading only O(k) codes — the
-    reference's ``DeltaDeltaBackwardEncoder`` (DeltaDeltaBackwardEncoder.
-    java:181-342) exists for exactly this access pattern (LAST /
-    latest-window queries against a sort-on-insert memtable)."""
-    v = np.asarray(values, dtype=np.int64)
-    return dod_encode(v[::-1])
-
-
-def dod_decode_backward(blob: bytes | np.ndarray) -> np.ndarray:
-    """Full decode of a backward stream, in chronological order."""
-    return dod_decode(blob)[::-1]
-
-
-def dod_decode_tail(blob: bytes | np.ndarray, k: int) -> np.ndarray:
-    """Decode only the LAST ``k`` points (chronological order) of a
-    backward-encoded stream, touching O(k) tag/payload bits: unpack the
-    first ``k-1`` 3-bit tags, gather just their payload bits, one short
-    cumsum. The fixed-width tag plane is what makes the tail seekable
-    without decoding the body (same plane-split idea as the byte-aligned
-    family's ``lens`` array)."""
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    n = int(buf[:4].view("<u4")[0])
-    if n == 0 or k <= 0:
-        return np.empty(0, dtype=np.int64)
-    k = min(k, n)
-    first = int(buf[4:12].view("<i8")[0])
-    if k == 1:
-        return np.array([first], dtype=np.int64)
-    tag_bytes_full = (3 * (n - 1) + 7) // 8
-    tag_bytes_k = (3 * (k - 1) + 7) // 8
-    tags = _fixed_unpack(buf[12 : 12 + tag_bytes_k], 3, k - 1).astype(np.int64)
-    widths = _DOD_WIDTH[tags]
-    zz = unpack_bits(buf[12 + tag_bytes_full :], widths)
-    dod = unzigzag(zz)
-    delta = np.cumsum(dod)
-    out = np.empty(k, dtype=np.int64)
-    out[0] = first
-    np.cumsum(delta, out=out[1:])
-    out[1:] += first
-    return out[::-1]
-
-
 # ---------------------------------------------------------------------------
 # Gorilla XOR
 # ---------------------------------------------------------------------------

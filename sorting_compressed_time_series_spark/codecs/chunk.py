@@ -17,8 +17,9 @@ Layout:  magic 'SC' | version u8 | codec u8 | body
   codec 1 (DELTA)   body = u32 count | lens (2-bit packed) | vals
   codec 2 (VARINT)  body = u32 count | lens (2-bit packed) | vals
   codec 3 (DOD)     body = dod_encode output
-  codec 4 (GORILLA) body = gorilla_encode output
-  codec 7/8 (CHIMP) body = chimp_encode output (long / double)
+  codec 4/5 (GORILLA, GORILLA_F64) body = gorilla_encode output (long / double)
+  codec 6 (TS2DIFF) body = ts2diff_encode output
+Any other codec id is refused with a ``ValueError`` naming it.
 """
 
 from __future__ import annotations
@@ -34,12 +35,6 @@ from .bitpacked import (
     gorilla_decode_longs,
     gorilla_encode_doubles,
     gorilla_encode_longs,
-)
-from .chimp import (
-    chimp_decode_doubles,
-    chimp_decode_longs,
-    chimp_encode_doubles,
-    chimp_encode_longs,
 )
 from .bytealigned import (
     ByteAlignedData,
@@ -57,8 +52,6 @@ CODEC_DOD = 3
 CODEC_GORILLA = 4
 CODEC_GORILLA_F64 = 5
 CODEC_TS2DIFF = 6
-CODEC_CHIMP = 7
-CODEC_CHIMP_F64 = 8
 
 _HEADER = 4  # magic(2) + version(1) + codec(1)
 
@@ -106,11 +99,6 @@ def encode_chunk(values: np.ndarray, codec: int) -> bytes:
         return _wrap(codec, gorilla_encode_doubles(values))
     if codec == CODEC_TS2DIFF:
         return _wrap(codec, ts2diff_encode(values))
-    if codec == CODEC_CHIMP:
-        return _wrap(codec, chimp_encode_longs(
-            np.ascontiguousarray(values, dtype=np.int64).view(np.uint64)))
-    if codec == CODEC_CHIMP_F64:
-        return _wrap(codec, chimp_encode_doubles(values))
     raise ValueError(f"unknown codec {codec}")
 
 
@@ -129,27 +117,5 @@ def decode_chunk(blob: bytes | memoryview) -> np.ndarray:
         return gorilla_decode_doubles(body)
     if codec == CODEC_TS2DIFF:
         return ts2diff_decode(body)
-    if codec == CODEC_CHIMP:
-        return chimp_decode_longs(body).view(np.int64)
-    if codec == CODEC_CHIMP_F64:
-        return chimp_decode_doubles(body)
     raise ValueError(f"unknown codec {codec}")
 
-
-def chunk_stats(ts: np.ndarray, values: np.ndarray) -> dict:
-    """Per-chunk statistics, the columns IoTDB keeps in chunk metadata
-    (count, min/max time, min/max/first/last/sum value) and uses to answer
-    aggregates without reading the page (SURVEY.md §2.5,
-    AbstractSeriesAggregationScanOperator)."""
-    order_first = int(np.argmin(ts)) if len(ts) else 0
-    order_last = int(np.argmax(ts)) if len(ts) else 0
-    return {
-        "count": int(len(ts)),
-        "min_ts": int(ts.min()) if len(ts) else None,
-        "max_ts": int(ts.max()) if len(ts) else None,
-        "min_v": int(values.min()) if len(values) else None,
-        "max_v": int(values.max()) if len(values) else None,
-        "first_v": int(values[order_first]) if len(values) else None,
-        "last_v": int(values[order_last]) if len(values) else None,
-        "sum_v": int(values.sum()) if len(values) else None,
-    }

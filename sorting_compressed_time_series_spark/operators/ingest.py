@@ -267,15 +267,11 @@ def flush_rollup_kernel(windows_us: list[int], seed: int = 42):
     return kern
 
 
-def flush(tokens_df: DataFrame, seed: int = 42, partitions: int | None = None) -> DataFrame:
+def flush(tokens_df: DataFrame, seed: int = 42) -> DataFrame:
     """tokens → tier-0 chunk rows as a frame (tests and ``bench.py``; the
-    engine writes them through ``Pipeline.ingest``). ``partitions``
-    repartitions the input by doc hash first."""
-    df = tokens_df
-    if partitions:
-        df = df.repartition(partitions, "doc_id")
+    engine writes them through ``Pipeline.ingest``)."""
 
     def kern(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         return flush_kernel_batches(it, seed)
 
-    return df.mapInArrow(kern, schema=CHUNK_SCHEMA)
+    return tokens_df.mapInArrow(kern, schema=CHUNK_SCHEMA)

@@ -41,7 +41,6 @@ from ..sources.seriesize import doc_index_from_id
 
 WINDOW_1M_US = 60_000_000
 WINDOW_1H_US = 3_600_000_000
-WINDOW_1D_US = 86_400_000_000
 
 TIER_PARTIAL_SCHEMA = (
     "doc_id string, source string, window_start bigint, cnt bigint, "

@@ -171,22 +171,20 @@ class Pipeline:
         chunks = self.warehouse.read(self.spark, "chunks_tier0").filter(keep).select(*columns)
         return chunks.repartition(n, "doc_id").sortWithinPartitions(*sort_by), None
 
-    def _input_stage(self, tokens_df: DataFrame, partitions: int | None,
+    def _input_stage(self, tokens_df: DataFrame,
                      bucket_by: tuple[str, int] | None) -> tuple[DataFrame, Kernel | None]:
         """``(src, read)`` of an ingest's flush job, for
         ``KernelWriter.frame(src, kern, read)``. When ``tokens_df`` is
-        exactly a scan of local parquet files with a string ``doc_id`` and
-        no ``partitions`` (``file_input.task_splits``), ``src`` is a range
-        of task ids and each task reads its row groups itself with pyarrow
+        exactly a scan of local parquet files with a string ``doc_id``
+        (``file_input.task_splits``), ``src`` is a range of task ids and
+        each task reads its row groups itself with pyarrow
         (``split_reader``, which tags each row with its ``bucket_by``
         bucket): no scan in the JVM and no rows sent to Python. Its tasks
-        hold the rows the scan's would. Otherwise ``src`` is the frame,
-        repartitioned by ``doc_id`` hash with ``partitions``, and ``read``
-        None."""
-        splits = None if partitions else task_splits(tokens_df, "doc_id")
+        hold the rows the scan's would. Otherwise ``src`` is the frame and
+        ``read`` None."""
+        splits = task_splits(tokens_df, "doc_id")
         if splits is None:
-            src = tokens_df.repartition(partitions, "doc_id") if partitions else tokens_df
-            return src, None
+            return tokens_df, None
         batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
         return task_ids(self.spark, len(splits)), split_reader(
             splits, arrow_schema(tokens_df), batch_rows=batch_rows, bucket_by=bucket_by)
@@ -197,14 +195,13 @@ class Pipeline:
 
     # --- stage 1: ingest+flush ------------------------------------------
     @_described
-    def ingest(self, tokens_df: DataFrame, seed: int = 42,
-               partitions: int | None = None, append: bool = False) -> dict:
+    def ingest(self, tokens_df: DataFrame, seed: int = 42, append: bool = False) -> dict:
         """Flush ``tokens_df`` into the chunk table: the flush tasks write
         their chunks to parquet themselves (``Warehouse.kernel_writer``),
         as a new doc-bucketed snapshot (``_bucket_by``), or with
         ``append`` as a segment in the table's own buckets. A frame that is
-        exactly a scan of local parquet files (string ``doc_id``, no
-        ``partitions``) is read by the flush tasks themselves with pyarrow;
+        exactly a scan of local parquet files (string ``doc_id``) is read by
+        the flush tasks themselves with pyarrow;
         any other frame reaches them through Spark's scan as Arrow batches
         (``_input_stage``). Returns the commit's lineage entry (rows,
         bytes, files, wall time, the tasks' input/kernel/write seconds,
@@ -228,7 +225,7 @@ class Pipeline:
         if fresh:
             files = files.with_side(TIER_PARTIAL_ARROW, "tier")
             kern = flush_rollup_kernel([spec.window_us for spec in self.tiers], seed)
-        src, read = self._input_stage(tokens_df, partitions, bucket_by)
+        src, read = self._input_stage(tokens_df, bucket_by)
         out = files.frame(src, kern, read)
         lineage = {"input": "scan" if read is None else "files"}
         if append:
@@ -286,8 +283,9 @@ class Pipeline:
           of JUST the appended docs ``D`` below ``lo_t`` over the kept rows
           — an append never triggers a full recompute (the reference's
           compaction-then-requery shape; per-key MERGE INTO on Iceberg);
-        - **noop**: ``lo_t ≥ hi_t`` and nothing pending. When every tier is
-          a noop the call returns without a Spark job.
+        - **noop**: ``lo_t ≥ hi_t`` and nothing pending, or a chunk table
+          with no row. When every tier is a noop the call returns without a
+          Spark job.
 
         The tier's new watermark is ``W_t = max(hi_t, lo_t)``: an append of
         old data can leave ``hi_t < lo_t``, and the checkpoint never
@@ -317,22 +315,22 @@ class Pipeline:
         Returns a per-tier summary; with ``collect_stats`` it includes the
         kept and recomputed row counts (an extra count job — tests only)."""
         wh = self.warehouse
-        # the parquet footers answer max(max_ts) when every row is a tier-0
-        # chunk; a Spark job only when a file lacks the statistics
-        _, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
-        if stats["tier"] == (0, 0) and stats["max_ts"] is not None:
-            data_max = stats["max_ts"][1]
-        else:
-            chunks = wh.read(self.spark, "chunks_tier0")
-            data_max = chunks.filter(F.col("tier") == 0).agg(F.max("max_ts")).collect()[0][0]
+        # max(max_ts) from the parquet footers: every chunk file is written
+        # with min/max statistics (footer_stats refuses one without them)
+        _, stats = wh.footer_stats("chunks_tier0", ("max_ts",))
+        data_max = None if stats["max_ts"] is None else stats["max_ts"][1]
         pending = wh.pending_appends("chunks_tier0")
         lo, wm, modes = [], [], []  # per tier: watermark, new watermark, mode
         for spec in self.tiers:
+            mark = wh.watermark(spec.name)
+            lo.append(mark)
+            if data_max is None:  # no chunk row: nothing to promote
+                wm.append(mark)
+                modes.append("noop")
+                continue
             w = spec.window_us
             complete = ((data_max // w + 1) * w if up_to_us is None
                         else min(up_to_us, data_max) // w * w)
-            mark = wh.watermark(spec.name)
-            lo.append(mark)
             wm.append(int(complete) if mark is None else max(int(complete), mark))
             modes.append("full" if mark is None else "merge" if pending
                          else "noop" if mark >= complete else "incremental")
@@ -431,10 +429,3 @@ class Pipeline:
                     apply_retention(self.warehouse, spec.name, now_us, spec.ttl_us)
                 )
         return out
-
-    # --- one-shot ----------------------------------------------------------
-    def run(self, tokens_df: DataFrame, seed: int = 42, now_us: int | None = None) -> None:
-        self.ingest(tokens_df, seed)
-        self.promote_all()
-        if now_us is not None:
-            self.retain(now_us)

@@ -163,32 +163,19 @@ def _encode_user_series(spark: SparkSession, sf_dir: str, value_expr: str = "q",
 
 
 def _decode_user_series(chunks: DataFrame, out_value: str) -> DataFrame:
+    from .codecs.batched import decode_chunk_rows
     from .operators.rollup import _blob_np
-
-    def _plane(col: pa.Array) -> np.ndarray:
-        """Decode one blob column with the codec-dispatching batched kernel
-        (byte-aligned, DOD and Gorilla are all whole-batch numpy)."""
-        from .codecs.batched import decode_chunk_rows
-
-        buf, splits = _blob_np(col)
-        vals, _ = decode_chunk_rows(buf, splits)
-        return vals
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             if b.num_rows == 0:
                 continue
             uid = b.column("user_id").to_numpy(zero_copy_only=False)
-            ts = _plane(b.column("time_blob"))
-            vs = _plane(b.column("value_blob"))
-            # per-row counts from the time plane headers
-            tbuf, tsp = _blob_np(b.column("time_blob"))
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            valid = np.diff(tsp) >= 8
-            st = tsp[:-1][valid]
-            for k in range(4):
-                counts[valid] |= tbuf[st + 4 + k].astype(np.int64) << (8 * k)
-            users = np.repeat(uid.astype(np.int64), counts)
+            # each plane is decoded by its codec's batched kernel; the time
+            # plane's splits give every row's point count
+            ts, splits = decode_chunk_rows(*_blob_np(b.column("time_blob")))
+            vs, _ = decode_chunk_rows(*_blob_np(b.column("value_blob")))
+            users = np.repeat(uid.astype(np.int64), np.diff(splits))
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(users),

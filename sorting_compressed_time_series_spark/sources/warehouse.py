@@ -708,7 +708,7 @@ class Warehouse:
     def _footer_stats(files: list[str], columns) -> tuple[int, dict]:
         import pyarrow.parquet as pq
 
-        rows, lo, hi, missing = 0, {}, {}, set()
+        rows, lo, hi = 0, {}, {}
         for path in files:
             md = pq.read_metadata(path)
             rows += md.num_rows
@@ -717,18 +717,18 @@ class Warehouse:
                 for g in range(md.num_row_groups):
                     st = md.row_group(g).column(idx[col]).statistics if col in idx else None
                     if st is None or not st.has_min_max:
-                        missing.add(col)
-                    elif col not in missing:
-                        lo[col] = min(lo.get(col, st.min), st.min)
-                        hi[col] = max(hi.get(col, st.max), st.max)
-        return rows, {c: (lo[c], hi[c]) if c in lo and c not in missing else None
-                      for c in columns}
+                        raise ValueError(f"{path}: row group {g} has no min/max "
+                                         f"statistics on {col}")
+                    lo[col] = min(lo.get(col, st.min), st.min)
+                    hi[col] = max(hi.get(col, st.max), st.max)
+        return rows, {c: (lo[c], hi[c]) if c in lo else None for c in columns}
 
     def footer_stats(self, table: str, columns=()) -> tuple[int, dict]:
         """``(rows, {col: (min, max) | None})`` of the live table, read from
         the parquet footers with pyarrow — no Spark job. A column is None
-        when any row group lacks min/max statistics for it (or it is not
-        stored in the files, e.g. a partition column)."""
+        when the table holds no row; a row group without min/max statistics
+        for it (or a file that does not store it) raises ``ValueError``
+        naming the file."""
         return self._footer_stats(self._data_files(table), columns)
 
     @staticmethod
@@ -863,16 +863,6 @@ class Warehouse:
                                  "wall_s": time.perf_counter() - t0})
             self._swap_manifest(table, m)
         return dropped
-
-    def reset_watermark(self, table: str) -> None:
-        """Invalidate a tier's promotion watermark (e.g. after an append of
-        data that may fall below it); the next promotion recomputes fully —
-        deterministic and idempotent, so correctness is unaffected."""
-        if not self.exists(table):
-            return
-        m = self.manifest(table)
-        m["watermark_us"] = None
-        self._swap_manifest(table, m)
 
     def watermark(self, table: str) -> int | None:
         return self.manifest(table)["watermark_us"]

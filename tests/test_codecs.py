@@ -282,6 +282,27 @@ def test_chunk_container_int(codec):
     assert np.array_equal(decode_chunk(blob), v)
 
 
+@pytest.mark.parametrize("codec", [7, 8, 99])
+def test_chunk_container_refuses_unknown_codec_ids(codec):
+    """Ids with no codec, the retired 7 and 8 among them, are refused by the
+    per-series and the batched forms alike."""
+    from sorting_compressed_time_series_spark.codecs.batched import (
+        decode_chunk_rows,
+        encode_chunk_rows,
+    )
+    from sorting_compressed_time_series_spark.codecs.chunk import MAGIC, VERSION
+
+    v = np.arange(16, dtype=np.int64)
+    blob = MAGIC + bytes([VERSION, codec]) + np.array([len(v)], "<u4").tobytes()
+    for call in (lambda: decode_chunk(blob),
+                 lambda: decode_chunk_rows(np.frombuffer(blob, np.uint8),
+                                           np.array([0, len(blob)])),
+                 lambda: encode_chunk(v, codec),
+                 lambda: encode_chunk_rows(v, np.array([0, 8, 16]), codec)):
+        with pytest.raises(ValueError, match=rf"unknown codec {codec}$"):
+            call()
+
+
 def test_chunk_container_f64():
     rng = np.random.default_rng(37)
     v = rng.normal(size=4096)
@@ -315,27 +336,3 @@ def test_ts2diff_compresses_regular():
     v = np.arange(100_000, dtype=np.int64) * 1000
     blob = ts2diff_encode(v)
     assert len(blob) < 100_000 * 0.2  # constant deltas -> ~9B per block
-
-
-def test_dod_backward_tail_decodable():
-    """Backward (sort-on-insert) delta-of-delta: the stream head holds the
-    NEWEST points, so the last k points decode from O(k) codes (reference
-    DeltaDeltaBackwardEncoder tail reads)."""
-    from sorting_compressed_time_series_spark.codecs.bitpacked import (
-        dod_decode_backward,
-        dod_decode_tail,
-        dod_encode_backward,
-    )
-
-    rng = np.random.default_rng(57)
-    v = np.cumsum(rng.integers(-5, 3000, size=5000)).astype(np.int64)
-    blob = dod_encode_backward(v)
-    assert np.array_equal(dod_decode_backward(blob), v)
-    for k in (1, 2, 7, 100, 4999, 5000, 6000):
-        want = v[-min(k, len(v)):]
-        assert np.array_equal(dod_decode_tail(blob, k), want), k
-    assert len(dod_decode_tail(blob, 0)) == 0
-    # empty / singleton streams
-    assert len(dod_decode_tail(dod_encode_backward(np.array([], np.int64)), 5)) == 0
-    one = dod_encode_backward(np.array([123], np.int64))
-    assert np.array_equal(dod_decode_tail(one, 5), [123])

@@ -10,8 +10,8 @@ frame reaches the flush through Spark's scan. Both give one table:
 - a fresh load and an append through either path give byte-identical
   chunk blobs in the same buckets, a kept prepared record and equal tier
   tables, and the lineage names the path and the task count;
-- an in-memory frame, a filtered frame, a ``p=``-partitioned dataset, an
-  integer ``doc_id`` and ``partitions=`` take the scan path.
+- an in-memory frame, a filtered frame, a ``p=``-partitioned dataset and
+  an integer ``doc_id`` take the scan path.
 """
 
 import os
@@ -258,26 +258,22 @@ def _int_ids(root) -> str:
     return path
 
 
-@pytest.mark.parametrize("case", ["in_memory", "filtered", "partitioned", "int_doc_id",
-                                  "partitions"])
+@pytest.mark.parametrize("case", ["in_memory", "filtered", "partitioned", "int_doc_id"])
 def test_other_frames_take_the_scan_path(spark, corpus, tmp_path, case):
     """Only a frame that is exactly a scan of parquet files with a string
-    ``doc_id`` and no ``partitions=`` is read by the tasks; these are not."""
+    ``doc_id`` is read by the tasks; these are not."""
     p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
     files = spark.read.parquet(corpus[1])
-    partitions = None
     if case == "in_memory":
         df = spark.createDataFrame(files.toPandas(), files.schema)
     elif case == "filtered":
         df = files.filter(F.col("n_tok") > 16)
     elif case == "partitioned":
         df = spark.read.parquet(_partitioned(tmp_path))
-    elif case == "int_doc_id":
-        df = spark.read.parquet(_int_ids(tmp_path))
     else:
-        df, partitions = files, 2
-    assert p._input_stage(files, None, ("doc_id", 4))[1] is not None
-    assert p._input_stage(df, partitions, ("doc_id", 4))[1] is None
+        df = spark.read.parquet(_int_ids(tmp_path))
+    assert p._input_stage(files, ("doc_id", 4))[1] is not None
+    assert p._input_stage(df, ("doc_id", 4))[1] is None
     if case != "int_doc_id":
-        entry = p.ingest(df, partitions=partitions)
+        entry = p.ingest(df)
         assert entry["input"] == "scan" and entry["rows"] == df.count()

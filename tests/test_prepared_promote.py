@@ -19,6 +19,8 @@ chunk table's prepared record dropped before ``promote_all``):
 - no discard leaves a staged dir behind;
 - the commits of a fresh load read no parquet footer but the promote's one
   ``footer_stats``;
+- a fresh load of no row: the promote makes every tier a noop with no job
+  and drops the record;
 - a batch whose blob planes pass the int32 offset limit is flushed as row
   slices, with the chunks and tiers of an unsplit run.
 """
@@ -153,6 +155,23 @@ def test_fresh_load_reads_one_footer_pass(spark, tmp_path, monkeypatch):
     assert calls == []
     p.promote_all()
     assert sorted(calls) == sorted(p.warehouse._data_files("chunks_tier0"))
+
+
+def test_empty_load_promotes_nothing(spark, tmp_path):
+    """An empty frame's ingest commits a 0-row chunk snapshot and a prepared
+    record; the promote after it finds no chunk row, so every tier is a
+    noop: no Spark job, no tier table, and the record is dropped."""
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(generate_tokens_df(spark, 10).limit(0))
+    wh = p.warehouse
+    assert wh.manifest("chunks_tier0")["lineage"][-1]["rows"] == 0
+    assert wh.prepared("chunks_tier0") is not None
+    summary, jobs = _jobs(spark, p.promote_all)
+    assert jobs == 0
+    assert summary == [{"tier": name, "mode": "noop"} for name in TIER_WINDOWS]
+    assert wh.prepared("chunks_tier0") is None
+    assert not any(wh.exists(name) for name in TIER_WINDOWS)
+    _no_staged(wh)
 
 
 # ---------------------------------------------------------------------------

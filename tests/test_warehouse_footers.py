@@ -3,11 +3,12 @@
 Oracles: the manifest's commit metrics equal the tables' ``count()``;
 after a fresh ``ingest`` (one job) ``promote_all`` runs no job (and
 ``retain`` none at all); its watermarks equal ``(max(max_ts) // w + 1) * w`` computed
-by Spark; a chunk file without statistics falls back to the Spark job and
-commits the same watermarks."""
+by Spark; a chunk file without statistics is refused by name, with no job
+and no commit."""
 
 import glob
 import os
+import re
 
 import pandas as pd
 import pyarrow as pa
@@ -112,27 +113,24 @@ def test_lineage_metrics_follow_append_and_drop(spark, tmp_path_factory):
     assert all(e["files"] > 0 and e["wall_s"] >= 0 for e in wh.manifest("t")["lineage"])
 
 
-def test_chunk_file_without_statistics_falls_back(spark, tmp_path_factory, loaded):
+def test_chunk_file_without_statistics_is_refused(spark, tmp_path_factory):
+    """Every chunk file is written with min/max statistics, which promote
+    reads max(max_ts) from; a file without them is refused by name before
+    any job or tier commit."""
     wh = Warehouse(str(tmp_path_factory.mktemp("wh_nostats")))
     p = Pipeline(spark, wh, TIERS)
-    tables = spark.catalog.listTables()
     p.ingest(generate_tokens_df(spark, N_DOCS, SEED), SEED)
     snap = os.path.join(wh.root, "chunks_tier0", wh.manifest("chunks_tier0")["snapshot"])
     victim = sorted(glob.glob(os.path.join(snap, "p_day=*", "part-*")))[0]
     pq.write_table(pq.read_table(victim), victim, compression="zstd", write_statistics=False)
-    crc = os.path.join(os.path.dirname(victim), f".{os.path.basename(victim)}.crc")
-    if os.path.exists(crc):  # only Spark's writer leaves a Hadoop checksum to invalidate
-        os.remove(crc)
-    # ingest registered nothing, so no catalog entry holds a stale listing
-    assert spark.catalog.listTables() == tables
 
-    rows, stats = wh.footer_stats("chunks_tier0", ("tier", "max_ts"))
-    assert rows == N_DOCS
-    assert stats == {"tier": None, "max_ts": None}
-    _, jobs = _jobs_of(spark, "footers.fallback", p.promote_all)
-    assert len(jobs) > len(loaded[1]["promote"])  # the max(max_ts) job ran
-    want = {s.name: loaded[0].watermark(s.name) for s in TIERS}
-    assert {s.name: wh.watermark(s.name) for s in TIERS} == want == _spark_watermarks(spark, wh)
+    def refused():
+        with pytest.raises(ValueError, match=re.escape(victim)):
+            p.promote_all()
+
+    _, jobs = _jobs_of(spark, "footers.refused", refused)
+    assert jobs == []
+    assert not any(wh.exists(s.name) for s in TIERS)
 
 
 def test_read_takes_the_manifest_schema(spark, tmp_path_factory):
