@@ -22,9 +22,13 @@ Two codec families, mirroring the reference's split (see SURVEY.md §2.1):
 
 Both families have a per-series form (``encode_chunk``/``decode_chunk``)
 and a multi-row batched form (``batched``) that encodes every series of an
-Arrow batch in one set of numpy operations; the batched kernels are tested
-byte for byte against the per-series ones. These are the only codecs: the
-engine encodes with nothing else.
+Arrow batch in one set of numpy operations. The byte-aligned batched form
+runs the per-series plane kernels once over the whole batch and only
+frames each row as a blob, so ``bytealigned._SMALL`` picks the payload
+path for a whole Arrow batch as it does for one column; a golden digest
+test pins its bytes. The bit-packed batched kernels are their own code,
+tested byte for byte against the per-series ones. These are the only
+codecs: the engine encodes with nothing else.
 """
 
 from .bytealigned import (  # noqa: F401

@@ -5,11 +5,16 @@ The reference encodes one series at a time (a Java loop per point,
 CompressedTVList.java:108-124 — "simplified implementation" per its own
 comment).  At 10^12-sequence scale, per-series Python dispatch is the enemy:
 an Arrow batch of N token arrays arrives as ONE flat value buffer plus row
-splits, so we encode ALL series in the batch together — flat deltas with
-row-boundary fixups, flat zigzag/classify/payload-emission, per-row-aligned
-2-bit length-plane packing, and a single gather that assembles every row's
-blob into one output buffer.  The only per-row Python anywhere is Arrow's
-own offset bookkeeping.
+splits, so we encode ALL series in the batch together.  The byte-aligned
+codecs (`encode_rows`/`decode_rows`) are row framing around the per-series
+plane kernels of ``bytealigned``: flat zigzag codes with row-boundary
+fixups, then one classify, one payload emit (or gather) and one 2-bit lens
+pack over the whole batch, and one placement of every row's slice of the
+planes behind its header.  The payload path is the per-series one too:
+``bytealigned._SMALL`` picks lanes or width classes by the batch's point
+count.  The bit-packed codecs (DOD, Gorilla, TS_2DIFF) have kernels of
+their own below.  The only per-row Python anywhere is Arrow's own offset
+bookkeeping.
 
 Blob layout per row matches ``codecs.chunk`` (magic 'SC' | ver | codec |
 u32 count | lens | vals) so scalar and batched kernels interoperate —
@@ -30,7 +35,17 @@ from .bitpacked import (
     pack_bits,
     unpack_bits,
 )
-from .bytealigned import CLASS_WIDTH, _classify, unzigzag, zigzag
+from .bytealigned import (
+    ByteAlignedData,
+    _classify,
+    _emit_payload,
+    _gather_payload,
+    _offsets,
+    _pack_lens,
+    _unpack_lens,
+    unzigzag,
+    zigzag,
+)
 from .chunk import (
     CODEC_DELTA,
     CODEC_DOD,
@@ -43,8 +58,6 @@ from .chunk import (
 )
 
 _HDR = 8  # magic(2) + version(1) + codec(1) + count(u32)
-
-_CLASS_WIDTH_U8 = CLASS_WIDTH.astype(np.uint8)
 
 
 def _block_place(
@@ -90,210 +103,98 @@ def _block_gather(
 def encode_rows(
     flat_values: np.ndarray, row_splits: np.ndarray, codec: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Encode many series at once.
+    """Encode many series at once: the ``bytealigned`` plane kernels run
+    once over the whole batch, then each row's slice of the planes goes
+    behind its header.
 
-    Parameters: ``flat_values`` int64 (all rows concatenated), ``row_splits``
+    Parameters: ``flat_values`` (all rows concatenated; int32 VARINT input
+    is zigzagged in uint32, anything else in int64), ``row_splits``
     int64[n_rows+1] (Arrow list offsets). ``codec`` CODEC_DELTA or
     CODEC_VARINT. Returns (blob_buffer uint8, blob_splits int64[n_rows+1])
     ready to wrap as an Arrow binary array with zero copies.
     """
-    use32 = codec == CODEC_VARINT and np.asarray(flat_values).dtype == np.int32
-    flat = np.ascontiguousarray(
-        flat_values, dtype=np.int32 if use32 else np.int64
-    )
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    n_rows = len(splits) - 1
     counts = np.diff(splits)
-    row_starts = splits[:-1]
-    nz_starts = row_starts[counts > 0]
-
-    first_raw = None  # set on the int32 delta fast path (row firsts, 8B raw)
     if codec == CODEC_DELTA:
-        d = flat.copy()
-        d[1:] -= flat[:-1]
-        d[nz_starts] = 0  # row firsts carry the raw value, not a delta
-        # int32 delta fast path: consecutive-timestamp deltas almost always
-        # fit int32 (token series step ~1ms); running zigzag/classify/emit
-        # on 4-byte lanes halves the traffic of the bandwidth-bound kernel.
-        # Row firsts (raw int64, class 0) are emitted separately below.
-        if len(d) and -(1 << 31) <= int(d.min()) and int(d.max()) < (1 << 31):
-            d32 = d.astype(np.int32)
-            zz = ((d32 << 1) ^ (d32 >> 31)).view(np.uint32)
-            codes = np.full(zz.shape, 3, dtype=np.uint8)  # <2^32 always
-            codes[zz < np.uint32(1 << 16)] = 2
-            codes[zz < np.uint32(1 << 8)] = 1
-            codes[nz_starts] = 0
-            first_raw = flat[nz_starts].astype("<i8").view(np.uint8).reshape(-1, 8)
-        else:
-            zz = zigzag(d)
-            # first element of every row is the raw value, class 0
-            zz[nz_starts] = flat[nz_starts].view(np.uint64)
-            codes = _classify(zz)
-            codes[nz_starts] = 0
-    elif codec == CODEC_VARINT and use32:
-        # int32 fast path: half the memory traffic on zigzag/classify/emit
-        # (the kernels are bandwidth-bound at full worker concurrency);
-        # encoded bytes are identical to the int64 path by construction
-        zz = ((flat << 1) ^ (flat >> 31)).view(np.uint32)
-        codes = np.full(zz.shape, 3, dtype=np.uint8)  # <2^32 always
-        codes[zz < np.uint32(1 << 16)] = 2
-        codes[zz < np.uint32(1 << 8)] = 1
+        flat = np.ascontiguousarray(flat_values, dtype=np.int64)
+        firsts = splits[:-1][counts > 0]
+        d = np.empty_like(flat)
+        d[:1] = 0
+        np.subtract(flat[1:], flat[:-1], out=d[1:])
+        zz = zigzag(d)
+        zz[firsts] = flat[firsts].view(np.uint64)  # row firsts: raw, class 0
+        codes = _classify(zz)
+        codes[firsts] = 0
     elif codec == CODEC_VARINT:
-        zz = zigzag(flat)
+        flat = np.ascontiguousarray(flat_values)
+        if flat.dtype == np.int32:  # the flush's tokens: half the traffic
+            zz = ((flat << 1) ^ (flat >> 31)).view(np.uint32)
+        else:
+            zz = zigzag(np.ascontiguousarray(flat, dtype=np.int64))
         codes = _classify(zz)
     else:
         raise ValueError(f"batched encode supports DELTA/VARINT, got {codec}")
-
-    widths = _CLASS_WIDTH_U8[codes]  # uint8: 1/8 the gather+cumsum traffic
-    pay_off = np.empty(len(widths) + 1, dtype=np.int64)
-    pay_off[0] = 0
-    np.cumsum(widths, out=pay_off[1:])
-    payload = np.zeros(int(pay_off[-1]), dtype=np.uint8)
-    # index-set scatter: one flatnonzero per width tier instead of a full
-    # boolean pass per byte (the kernels are bandwidth-bound at 32 workers)
-    small = len(payload) < (1 << 31)
-    off0 = pay_off[:-1].astype(np.int32) if small else pay_off[:-1]
-    if len(widths):
-        # plain-int shifts/masks keep the working dtype (uint32 fast path)
-        payload[off0] = (zz & 0xFF).astype(np.uint8)
-        i2 = np.flatnonzero(widths > 1)
-        payload[off0[i2] + 1] = ((zz[i2] >> 8) & 0xFF).astype(np.uint8)
-        i4 = i2[widths[i2] > 2]
-        for b in (2, 3):
-            payload[off0[i4] + b] = ((zz[i4] >> (8 * b)) & 0xFF).astype(np.uint8)
-        if first_raw is not None:
-            # int32 fast path: the ONLY width-8 elements are row firsts;
-            # their 8 raw little-endian bytes come from first_raw (zz is
-            # uint32 and cannot shift past bit 31)
-            f0 = off0[nz_starts]
-            for b in range(8):
-                payload[f0 + b] = first_raw[:, b]
-        else:
-            i8 = i4[widths[i4] > 4]
-            if len(i8):
-                for b in range(4, 8):
-                    payload[off0[i8] + b] = ((zz[i8] >> (8 * b)) & 0xFF).astype(np.uint8)
-
-    # per-row-aligned 2-bit length plane: pad each row's codes to 4 elements
-    padded_counts = (counts + 3) // 4 * 4
-    padded_splits = np.empty(n_rows + 1, dtype=np.int64)
-    padded_splits[0] = 0
-    np.cumsum(padded_counts, out=padded_splits[1:])
-    flat_padded = np.zeros(int(padded_splits[-1]), dtype=np.uint8)
-    if len(flat):
-        idt = np.int32 if len(flat_padded) < (1 << 31) else np.int64
-        dest = np.repeat((padded_splits[:-1] - row_starts).astype(idt), counts)
-        dest += np.arange(len(flat), dtype=idt)
-        flat_padded[dest] = codes
-    q = flat_padded.reshape(-1, 4)
-    packed = (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6)).astype(np.uint8)
-
-    lens_len = padded_counts // 4
-    pay_row_len = pay_off[splits[1:]] - pay_off[splits[:-1]]
-    blob_len = _HDR + lens_len + pay_row_len
-    blob_splits = np.empty(n_rows + 1, dtype=np.int64)
-    blob_splits[0] = 0
-    np.cumsum(blob_len, out=blob_splits[1:])
+    off = _offsets(codes)
+    payload = _emit_payload(zz, codes, off)
+    # per-row-aligned lens plane: each row's classes padded to 4
+    lens_len = (counts + 3) // 4
+    padded = np.zeros(4 * int(lens_len.sum()), dtype=np.uint8)
+    _block_place(padded, 4 * (np.cumsum(lens_len) - lens_len), codes, counts)
+    pay_len = off[splits[1:]] - off[splits[:-1]]
+    blob_splits = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(_HDR + lens_len + pay_len, out=blob_splits[1:])
     out = np.empty(int(blob_splits[-1]), dtype=np.uint8)
     starts = blob_splits[:-1]
-    # headers (8 fixed strided writes)
-    out[starts + 0] = MAGIC[0]
-    out[starts + 1] = MAGIC[1]
-    out[starts + 2] = VERSION
-    out[starts + 3] = codec
-    c32 = counts.astype("<u4").view(np.uint8).reshape(-1, 4)
-    for b in range(4):
-        out[starts + 4 + b] = c32[:, b]
-    # length plane + payload plane: both sources are contiguous and in row
-    # order → single-shift placement, no source gather
-    _block_place(out, starts + _HDR, packed, lens_len)
-    _block_place(out, starts + _HDR + lens_len, payload, pay_row_len)
+    _write_headers(out, starts, codec, counts)
+    _block_place(out, starts + _HDR, _pack_lens(padded), lens_len)
+    _block_place(out, starts + _HDR + lens_len, payload, pay_len)
     return out, blob_splits
 
 
 def decode_rows(
     blob_buffer: np.ndarray, blob_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Decode many blobs (all the same codec) back to (flat_values, row_splits)."""
+    """Decode many blobs (all the same codec) back to (flat_values,
+    row_splits): every row's planes are gathered contiguously, then the
+    ``bytealigned`` kernels run once over the whole batch."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
     n_rows = len(bs) - 1
-    starts = bs[:-1]
     if n_rows == 0:
         return np.empty(0, np.int64), np.zeros(1, np.int64)
     # rows with no/short blob decode to empty
     valid = np.diff(bs) >= _HDR
     if not valid.any():
         return np.empty(0, np.int64), np.zeros(n_rows + 1, np.int64)
-    safe_starts = np.where(valid, starts, starts[np.argmax(valid)])
-    codec = int(buf[safe_starts[np.argmax(valid)] + 3])
-    counts = np.zeros(n_rows, dtype=np.int64)
-    for b in range(4):
-        counts |= buf[safe_starts + 4 + b].astype(np.int64) << (8 * b)
+    starts = np.where(valid, bs[:-1], bs[np.argmax(valid)])
+    codec = int(buf[starts[np.argmax(valid)] + 3])
+    counts = _read_u32_le(buf, starts + 4)
     counts[~valid] = 0
-    starts = safe_starts
-    splits = np.empty(n_rows + 1, dtype=np.int64)
-    splits[0] = 0
+    splits = np.zeros(n_rows + 1, dtype=np.int64)
     np.cumsum(counts, out=splits[1:])
-    row_starts = splits[:-1]
     total = int(splits[-1])
-
-    # gather the per-row length planes into one padded buffer, then unpack
     lens_len = (counts + 3) // 4
-    padded_splits = np.empty(n_rows + 1, dtype=np.int64)
-    padded_splits[0] = 0
-    np.cumsum(lens_len, out=padded_splits[1:])
-    packed = np.empty(int(padded_splits[-1]), dtype=np.uint8)
+    packed = np.empty(int(lens_len.sum()), dtype=np.uint8)
     _block_gather(packed, buf, starts + _HDR, lens_len)
-    unpacked = np.empty(len(packed) * 4, dtype=np.uint8)
-    unpacked[0::4] = packed & 3
-    unpacked[1::4] = (packed >> 2) & 3
-    unpacked[2::4] = (packed >> 4) & 3
-    unpacked[3::4] = (packed >> 6) & 3
     codes = np.empty(total, dtype=np.uint8)
-    if total:
-        idt = np.int32 if len(unpacked) < (1 << 31) else np.int64
-        src = np.repeat((padded_splits[:-1] * 4 - row_starts).astype(idt), counts)
-        src += np.arange(total, dtype=idt)
-        codes = unpacked[src]
-
-    widths = _CLASS_WIDTH_U8[codes].astype(np.int64)
-    pay_off = np.empty(total + 1, dtype=np.int64)
-    pay_off[0] = 0
-    np.cumsum(widths, out=pay_off[1:])
-    # gather payload planes contiguous
-    pay_row_len = pay_off[splits[1:]] - pay_off[splits[:-1]]
-    payload = np.empty(int(pay_off[-1]), dtype=np.uint8)
-    _block_gather(payload, buf, starts + _HDR + lens_len, pay_row_len)
-    zz = np.zeros(total, dtype=np.uint64)
-    if total:
-        off0 = pay_off[:-1]
-        zz |= payload[off0]
-        i2 = np.flatnonzero(widths > 1)
-        zz[i2] |= payload[off0[i2] + 1].astype(np.uint64) << np.uint64(8)
-        i4 = i2[widths[i2] > 2]
-        for b in (2, 3):
-            zz[i4] |= payload[off0[i4] + b].astype(np.uint64) << np.uint64(8 * b)
-        i8 = i4[widths[i4] > 4]
-        if len(i8):
-            for b in range(4, 8):
-                zz[i8] |= payload[off0[i8] + b].astype(np.uint64) << np.uint64(8 * b)
-
+    _block_gather(codes, _unpack_lens(packed), 4 * (np.cumsum(lens_len) - lens_len), counts)
+    off = _offsets(codes)
+    pay_len = off[splits[1:]] - off[splits[:-1]]
+    payload = np.empty(int(off[-1]), dtype=np.uint8)
+    _block_gather(payload, buf, starts + _HDR + lens_len, pay_len)
+    zz = _gather_payload(ByteAlignedData(payload, codes, total), off)
+    vals = unzigzag(zz)
     if codec == CODEC_VARINT:
-        return unzigzag(zz), splits
+        return vals, splits
     if codec != CODEC_DELTA:
         raise ValueError(f"batched decode supports DELTA/VARINT, got {codec}")
-    d = unzigzag(zz)
     nz = counts > 0
-    firsts = np.zeros(n_rows, dtype=np.int64)
-    firsts[nz] = zz[row_starts[nz]].view(np.int64)  # raw first values
-    d[row_starts[nz]] = firsts[nz]
-    c = np.cumsum(d)
-    # segmented cumsum: subtract each row's predecessor total
-    base = np.repeat(c[row_starts[nz]] - firsts[nz], counts[nz])
-    vals = c
-    if total:
-        vals = c - base
+    firsts = splits[:-1][nz]
+    first = zz[firsts].view(np.int64)  # raw first values
+    vals[firsts] = first
+    # segmented cumsum: subtract the running total before each row
+    np.cumsum(vals, out=vals)
+    vals -= np.repeat(vals[firsts] - first, counts[nz])
     return vals, splits
 
 

@@ -21,14 +21,20 @@ Two codecs share the container:
 
 - **delta** (time column): element 0 is the raw int64 (class 0, 8 bytes);
   element i>0 stores ``zigzag(v[i] - v[i-1])`` in the smallest class that
-  holds it.  Forward decode = cumulative sum; backward decode = suffix
-  subtraction — both vectorized.
+  holds it.  Decode = cumulative sum.
 - **varint** (value column): every element independently stores
   ``zigzag(v)``; elements are order-independent, so the sorter can permute
   them by pure byte rotation with no re-encoding.
 
-Payload bytes move by one of two whole-array paths, picked by column
-length alone (`_SMALL`), with byte-identical results:
+The same kernels (`_classify`, `_offsets`, `_emit_payload`,
+`_gather_payload`, the 2-bit `_pack_lens`/`_unpack_lens`) encode and
+decode one series here and a whole Arrow batch of series in
+``codecs.batched`` (`encode_rows`/`decode_rows`), which only frames each
+row's slice of the planes as a blob.
+
+Payload bytes move by one of two whole-array paths, picked by element
+count alone (`_SMALL`: a column's here, a whole batch's in
+``codecs.batched``), with byte-identical results:
 
 - **lanes** (at most `_SMALL` elements): each zigzag code is viewed as its
   8 little-endian bytes, one row of an ``n x 8`` lane matrix, and the mask
@@ -124,21 +130,31 @@ class ByteAlignedData:
     count: int
 
     def pack_lens(self) -> bytes:
-        n = self.count
-        padded = np.zeros((n + 3) // 4 * 4, dtype=np.uint8)
-        padded[:n] = self.codes
-        q = padded.reshape(-1, 4)
-        return (q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6)).tobytes()
+        return _pack_lens(self.codes).tobytes()
 
     @staticmethod
     def unpack_lens(buf: np.ndarray, count: int) -> np.ndarray:
-        b = np.frombuffer(buf, dtype=np.uint8)
-        out = np.empty(len(b) * 4, dtype=np.uint8)
-        out[0::4] = b & 3
-        out[1::4] = (b >> 2) & 3
-        out[2::4] = (b >> 4) & 3
-        out[3::4] = (b >> 6) & 3
-        return out[:count]
+        return _unpack_lens(np.frombuffer(buf, dtype=np.uint8))[:count]
+
+
+def _pack_lens(codes: np.ndarray) -> np.ndarray:
+    """The 2-bit lens plane of ``codes``: 4 classes per byte, LSB-first,
+    the last byte's spare slots zero."""
+    if len(codes) % 4:
+        codes = np.concatenate((codes, np.zeros(-len(codes) % 4, dtype=np.uint8)))
+    q = codes.reshape(-1, 4)
+    return q[:, 0] | (q[:, 1] << 2) | (q[:, 2] << 4) | (q[:, 3] << 6)
+
+
+def _unpack_lens(packed: np.ndarray) -> np.ndarray:
+    """Inverse of `_pack_lens`: 4 classes per byte of ``packed``, the
+    padding slots included."""
+    out = np.empty(len(packed) * 4, dtype=np.uint8)
+    out[0::4] = packed & 3
+    out[1::4] = (packed >> 2) & 3
+    out[2::4] = (packed >> 4) & 3
+    out[3::4] = (packed >> 6) & 3
+    return out
 
 
 def _classify(zz: np.ndarray) -> np.ndarray:
@@ -217,9 +233,11 @@ def _gather_lanes(vals: np.ndarray, codes: np.ndarray) -> np.ndarray:
     return lanes.view("<u8").reshape(-1).astype(np.uint64, copy=False)
 
 
-def _emit_classes(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
-    """Payload plane by one scatter per width class."""
-    off = _offsets(codes)
+def _emit_classes(zz: np.ndarray, codes: np.ndarray, off: np.ndarray | None = None) -> np.ndarray:
+    """Payload plane by one scatter per width class. ``off`` is the
+    column's `_offsets`, when the caller has them."""
+    if off is None:
+        off = _offsets(codes)
     out = np.empty(int(off[-1]), dtype=np.uint8)
     for idx, dt in _buckets(codes):
         _window(out, dt)[off[idx].astype(np.intp)] = zz[idx]
@@ -237,12 +255,14 @@ def _gather_classes(vals: np.ndarray, codes: np.ndarray, off: np.ndarray | None 
     return zz
 
 
-def _emit_payload(zz: np.ndarray, codes: np.ndarray) -> np.ndarray:
+def _emit_payload(zz: np.ndarray, codes: np.ndarray, off: np.ndarray | None = None) -> np.ndarray:
     """Little-endian payload plane of all elements: one masked lane copy
-    up to `_SMALL` elements, one scatter per width class above."""
+    up to `_SMALL` elements, one scatter per width class above (through
+    the `_offsets` ``off`` when given). ``zz`` may be uint32 when every
+    code fits 4 bytes."""
     if len(codes) <= _SMALL:
         return _emit_lanes(zz, codes)
-    return _emit_classes(zz, codes)
+    return _emit_classes(zz, codes, off)
 
 
 def _gather_payload(data: ByteAlignedData, off: np.ndarray | None = None) -> np.ndarray:
@@ -295,35 +315,18 @@ def delta_encode(values: np.ndarray) -> ByteAlignedData:
     return ByteAlignedData(vals, codes, n)
 
 
-def delta_decode(
-    data: ByteAlignedData, backward: bool = False, off: np.ndarray | None = None
-) -> np.ndarray:
-    """Decode the delta codec. ``backward=True`` exercises the reverse
-    cursor semantics (reference TS_DELTA_decoder.backwardDecode,
-    TS_DELTA_decoder.java:119-140): reconstruct by walking lens from the
-    tail, subtracting deltas from the last value. Outputs are identical;
-    both paths are fully vectorized. ``off`` is the column's `_offsets`,
-    when the caller has them.
-    """
+def delta_decode(data: ByteAlignedData, off: np.ndarray | None = None) -> np.ndarray:
+    """Decode the delta codec: the raw first value, then a running sum of
+    the deltas (int64 wraps, as Java long arithmetic does). ``off`` is the
+    column's `_offsets`, when the caller has them."""
     if data.count == 0:
         return np.empty(0, dtype=np.int64)
     zz = _gather_payload(data, off)
     deltas = unzigzag(zz)
     first = zz[0].view(np.int64)
     del zz
-    if not backward:
-        deltas[0] = first
-        return np.cumsum(deltas, out=deltas)
-    deltas[0] = 0
-    # backward: v[i] = v[n-1] - sum(deltas[i+1:]); the suffix-sum over the
-    # reversed delta stream proves the lens plane is walkable from the tail
-    # (reference TS_DELTA_decoder.backwardDecode semantics). All int64 math
-    # wraps (two's complement), matching Java long arithmetic.
-    suffix = np.cumsum(deltas[::-1])[::-1]  # suffix[i] = sum(deltas[i:])
-    total = suffix[0]
-    out = (total - suffix) + deltas
-    out += first
-    return out
+    deltas[0] = first
+    return np.cumsum(deltas, out=deltas)
 
 
 def varint_encode(values: np.ndarray) -> ByteAlignedData:
@@ -336,12 +339,8 @@ def varint_encode(values: np.ndarray) -> ByteAlignedData:
     return ByteAlignedData(vals, codes, len(v))
 
 
-def varint_decode(data: ByteAlignedData, backward: bool = False) -> np.ndarray:
-    out = unzigzag(_gather_payload(data))
-    # backward decode of an order-independent codec is a tail-first walk of
-    # the same lens plane; vectorized it is the same gather (kept for API
-    # parity with the reference's forward/backward cursor pair).
-    return out
+def varint_decode(data: ByteAlignedData) -> np.ndarray:
+    return unzigzag(_gather_payload(data))
 
 
 def permute(data: ByteAlignedData, order: np.ndarray) -> ByteAlignedData:

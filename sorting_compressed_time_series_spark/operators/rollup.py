@@ -69,22 +69,10 @@ def decode_points(chunks_df: DataFrame) -> DataFrame:
     """chunks → (doc_id, source, ts, value) point rows, batched decode."""
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            tbuf, tsp = _blob_np(batch.column("time_blob"))
-            vbuf, vsp = _blob_np(batch.column("value_blob"))
-            ts, splits = decode_rows(tbuf, tsp)
-            vals, _ = decode_rows(vbuf, vsp)
-            counts = np.diff(splits)
-            idx = pa.array(np.repeat(np.arange(batch.num_rows), counts))
+        for doc_id, source, ts, vals, splits in _decoded(batches):
+            idx = pa.array(np.repeat(np.arange(len(doc_id)), np.diff(splits)))
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id").take(idx),
-                    batch.column("source").take(idx),
-                    pa.array(ts),
-                    pa.array(vals),
-                ],
+                [doc_id.take(idx), source.take(idx), pa.array(ts), pa.array(vals)],
                 names=["doc_id", "source", "ts", "value"],
             )
 

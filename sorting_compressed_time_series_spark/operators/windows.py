@@ -15,16 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 
-def tumbling(df: DataFrame, ts_col: str, window_us: int) -> Column:
-    """Left-closed right-open epoch-aligned buckets (AggrWindowIterator).
-
-    Exact integer `div`, not double `/` + cast: epoch-microsecond timestamps
-    (~1.8e18) exceed 2^53, so double division can round boundary-exact
-    timestamps into the wrong bucket for window sizes whose multiples aren't
-    representable (float64 ulp at this magnitude is 256)."""
-    return F.expr(f"({ts_col} div {window_us}) * {window_us}")
-
-
 def natural_month(ts_col: str) -> Column:
     """Calendar-aligned month buckets (IoTDB GROUP BY ([t1,t2), 1mo) — the
     reference's PreAggrWindowWithNaturalMonthIterator, datanode/.../
@@ -39,9 +29,11 @@ def sliding_windows(df: DataFrame, ts_col: str, interval_us: int, step_us: int) 
     """Each point joins every window [w, w+interval) containing it; windows
     start at multiples of step (IoTDB GROUP BY ([t1,t2), interval, step)).
     Implemented with sequence+explode — no UDF, no range join."""
-    # exact integer arithmetic (see tumbling() docstring): ceil(a/step) for
-    # positive a = (a + step - 1) div step; non-positive a is clamped to
-    # window 0 by the greatest() below either way.
+    # exact integer `div`, not double `/` + cast: epoch-microsecond
+    # timestamps (~1.8e18) pass 2^53, where a float64 ulp is 256, so double
+    # division can put a boundary-exact timestamp in the wrong window.
+    # ceil(a/step) for positive a = (a + step - 1) div step; non-positive a
+    # is clamped to window 0 by the greatest() below either way.
     first = F.expr(
         f"(({ts_col} - {interval_us - 1} + {step_us - 1}) div {step_us}) * {step_us}"
     )

@@ -29,14 +29,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from .codecs.chunk import (
-    CODEC_DELTA,
-    CODEC_DOD,
-    CODEC_GORILLA_F64,
-    CODEC_VARINT,
-    decode_chunk,
-    encode_chunk,
-)
+from .codecs.chunk import CODEC_DELTA, CODEC_DOD, CODEC_GORILLA_F64, CODEC_VARINT
 from .operators import windows as WIN
 from .operators.compressed_sort import compressed_sort
 from .codecs.bytealigned import delta_decode, delta_encode, varint_decode, varint_encode

@@ -9,13 +9,20 @@ front-end for the same semantics:
 - watermarked tumbling-window aggregates = tier1 in append mode, late
   points older than the watermark dropped (the streaming analogue of the
   write-path TTL check);
-- `foreachBatch` sink writes through the same warehouse commit protocol,
-  so a streaming deployment and a batch deployment produce the same
-  tables.
+- streaming twins of the batch session, variation-window, packing and
+  exact-dedup operators.
+
+Each twin returns a streaming DataFrame; `run_stream_to_memory` drives a
+bounded source to completion into Spark's in-memory sink, and the tests
+compare that table with the batch operator's output. Nothing here writes
+to the warehouse: a ``foreachBatch`` sink that lands micro-batches through
+the warehouse commit protocol, so that a streamed warehouse equals a batch
+load, is ROADMAP item 14.
 
 The tumbling aggregate uses the same left-closed/right-open epoch-aligned
 windows as operators/rollup.py, so streaming output rows are directly
-comparable to the batch tier (asserted in tests/test_streaming.py).
+comparable to the batch tier (asserted in tests/test_streaming.py); it
+carries cnt/sum/min/max, not the tier's first/last.
 """
 
 from __future__ import annotations

@@ -1,6 +1,8 @@
 """Batched multi-series codec vs scalar chunk codec: byte-identical blobs,
 exact round trip, Arrow list-offset compatibility."""
 
+import hashlib
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -12,6 +14,16 @@ from sorting_compressed_time_series_spark.codecs import (
     encode_chunk,
 )
 from sorting_compressed_time_series_spark.codecs.batched import decode_rows, encode_rows
+from sorting_compressed_time_series_spark.codecs.bytealigned import _BLOCK, _SMALL
+from sorting_compressed_time_series_spark.operators.ingest import _flush_batches
+from sorting_compressed_time_series_spark.sources.synth import _gen_batch
+
+# `test_flush_batch_planes_golden`: (time plane, value plane) sha256
+GOLDEN_POINTS = 85_888
+GOLDEN_DIGESTS = [
+    "d45f60b97ba8f2b71afcb3c22c5a745a2fff560670bd850ff492bc7faba737b6",
+    "342c1da4204fbed5ff069aaf2e1e882cfe64b94a130bfca6002a6141b792513a",
+]
 
 
 def _random_rows(rng, n_rows, max_len=200, lo=-(10**4), hi=10**4):
@@ -23,15 +35,64 @@ def _random_rows(rng, n_rows, max_len=200, lo=-(10**4), hi=10**4):
     return rows, flat, splits
 
 
+I64, I32 = np.iinfo(np.int64), np.iinfo(np.int32)
+
+
+def _sized_rows(rng, total, row_len=200):
+    """Random rows of at most ``row_len`` points, ``total`` points in all."""
+    lens = [row_len] * (total // row_len) + [total % row_len] * bool(total % row_len)
+    return [rng.integers(-(10**4), 10**4, size=n) for n in lens]
+
+
+def _scalar_cases():
+    """Batches for `encode_rows`: random rows; empty rows between others;
+    point counts at and past `bytealigned._SMALL` (the lane/width-class
+    switch) and past `_BLOCK`; int64 extremes at row starts, so the DELTA
+    deltas wrap, and int32 extremes."""
+    rng = np.random.default_rng(1)
+    yield _random_rows(rng, 100)[0]
+    empty = np.empty(0, np.int64)
+    yield [empty, np.array([5, 3, 9]), empty, empty, np.array([-7]), empty]
+    for total in (_SMALL, _SMALL + 1, _BLOCK + 4_464):
+        yield _sized_rows(rng, total)
+    yield [np.array([I64.min, I64.max, -1, I64.min]), np.array([I64.max, I64.min, 0]),
+           np.array([I64.min]), empty, np.array([I64.max, 1])]
+    yield [np.array([I32.min, I32.max, 0, -1, I32.min]), np.array([I32.max]), empty]
+
+
 @pytest.mark.parametrize("codec", [CODEC_DELTA, CODEC_VARINT])
 def test_batched_matches_scalar_blobs(codec):
-    rng = np.random.default_rng(1)
-    rows, flat, splits = _random_rows(rng, 100)
-    buf, bsp = encode_rows(flat, splits, codec)
-    for i, r in enumerate(rows):
-        blob = buf[bsp[i]:bsp[i + 1]].tobytes()
-        assert blob == encode_chunk(r, codec), f"row {i} blob mismatch"
-        assert np.array_equal(decode_chunk(blob), r)
+    for rows in _scalar_cases():
+        rows = [np.asarray(r, dtype=np.int64) for r in rows]
+        splits = np.zeros(len(rows) + 1, dtype=np.int64)
+        np.cumsum([len(r) for r in rows], out=splits[1:])
+        flat = np.concatenate(rows)
+        dtypes = [np.int64]
+        if codec == CODEC_VARINT and np.array_equal(flat.astype(np.int32), flat):
+            dtypes.append(np.int32)  # the flush's own token dtype
+        for dt in dtypes:
+            buf, bsp = encode_rows(flat.astype(dt), splits, codec)
+            for i, r in enumerate(rows):
+                blob = buf[bsp[i]:bsp[i + 1]].tobytes()
+                assert blob == encode_chunk(r, codec), f"row {i} blob mismatch ({dt.__name__})"
+                assert np.array_equal(decode_chunk(blob), r)
+            back, back_splits = decode_rows(buf, bsp)
+            assert np.array_equal(back_splits, splits)
+            assert np.array_equal(back, flat)
+
+
+def test_flush_batch_planes_golden():
+    """Pins the bytes `encode_rows` gives for a seeded flush batch. The
+    per-series reference above shares its plane kernels with `encode_rows`,
+    so it cannot catch a change to the payload bytes both would make."""
+    ids = np.arange(300, dtype=np.uint64)
+    (_, ts, vals, splits), = _flush_batches(iter([_gen_batch(ids, 5)]), 5)
+    assert (len(ts), vals.dtype) == (GOLDEN_POINTS, np.int32)
+    digests = []
+    for flat, codec in ((ts, CODEC_DELTA), (vals, CODEC_VARINT)):
+        buf, bsp = encode_rows(flat, splits, codec)
+        digests.append(hashlib.sha256(buf.tobytes() + bsp.tobytes()).hexdigest())
+    assert digests == GOLDEN_DIGESTS
 
 
 @pytest.mark.parametrize("codec", [CODEC_DELTA, CODEC_VARINT])
