@@ -198,10 +198,8 @@ def gorilla_pass(spark, n_docs: int, seed: int = 42) -> dict:
     import numpy as np
     import pyarrow as pa
 
-    from sorting_compressed_time_series_spark.codecs.bitpacked import (
-        dod_encode,
-        gorilla_encode_longs,
-    )
+    from sorting_compressed_time_series_spark.codecs import CODEC_DOD, CODEC_GORILLA
+    from sorting_compressed_time_series_spark.codecs.batched import encode_chunk_rows
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
@@ -209,15 +207,14 @@ def gorilla_pass(spark, n_docs: int, seed: int = 42) -> dict:
             if isinstance(tok, pa.ChunkedArray):
                 tok = tok.combine_chunks()
             flat = tok.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = tok.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = offs - offs[0]
             # one stream per Arrow batch: the whole batch's values through the
             # Gorilla kernel, its synthetic timestamps through delta-of-delta
             # (pure kernel throughput; per-doc chunking is the flush path)
             ts = np.cumsum((flat & 1023) + 1)
+            one = np.array([0, len(flat)])
             t0 = time.perf_counter_ns()
-            total_out = len(gorilla_encode_longs(flat.view(np.uint64)))
-            total_out += len(dod_encode(ts))
+            total_out = len(encode_chunk_rows(flat, one, CODEC_GORILLA)[0])
+            total_out += len(encode_chunk_rows(ts, one, CODEC_DOD)[0])
             dt = time.perf_counter_ns() - t0
             yield pa.RecordBatch.from_arrays(
                 [

@@ -20,17 +20,18 @@ Two codec families, mirroring the reference's split (see SURVEY.md §2.1):
    the variable-width payload plane so DECODE is fully vectorizable — the
    reference's interleaved prefix codes force sequential decode; ours do not.
 
-Both families have a per-series form (``encode_chunk``/``decode_chunk``)
-and a multi-row batched form (``batched``) that encodes every series of an
-Arrow batch in one set of numpy operations. The byte-aligned batched form
-runs the per-series plane kernels once over the whole batch and only
-frames each row as a blob, so ``bytealigned._SMALL`` picks the payload
-path for a whole Arrow batch as it does for one column; a golden digest
-test pins its bytes. The bit-packed batched kernels are their own code,
-tested byte for byte against the per-series ones. These are the only
-codecs: the engine encodes with nothing else.
+Every codec is encoded and decoded by the multi-row kernels of
+``batched`` (`encode_chunk_rows`/`decode_chunk_rows`), which code every
+series of an Arrow batch in one set of numpy operations; one series is a
+batch of one row (`encode_chunk`/`decode_chunk`). The byte-aligned
+kernels run the per-series plane kernels of ``bytealigned`` once over the
+whole batch and only frame each row as a blob, so ``bytealigned._SMALL``
+picks the payload path for a whole Arrow batch as it does for one column.
+Golden digests pin the bytes of every codec. These are the only codecs:
+the engine encodes with nothing else.
 """
 
+from .batched import decode_chunk, encode_chunk  # noqa: F401
 from .bytealigned import (  # noqa: F401
     ByteAlignedData,
     delta_decode,
@@ -40,14 +41,6 @@ from .bytealigned import (  # noqa: F401
     zigzag,
     unzigzag,
 )
-from .bitpacked import (  # noqa: F401
-    dod_decode,
-    dod_encode,
-    gorilla_decode_doubles,
-    gorilla_decode_longs,
-    gorilla_encode_doubles,
-    gorilla_encode_longs,
-)
 from .chunk import (  # noqa: F401
     CODEC_DELTA,
     CODEC_DOD,
@@ -55,6 +48,4 @@ from .chunk import (  # noqa: F401
     CODEC_GORILLA_F64,
     CODEC_TS2DIFF,
     CODEC_VARINT,
-    decode_chunk,
-    encode_chunk,
 )

@@ -1,5 +1,6 @@
 """Multi-series batched codec kernels: encode/decode a whole Arrow batch of
-series in one set of numpy operations.
+series in one set of numpy operations. They are the only codec kernels:
+one series is a batch of one row (`encode_chunk`/`decode_chunk`).
 
 The reference encodes one series at a time (a Java loop per point,
 CompressedTVList.java:108-124 — "simplified implementation" per its own
@@ -12,13 +13,14 @@ fixups, then one classify, one payload emit (or gather) and one 2-bit lens
 pack over the whole batch, and one placement of every row's slice of the
 planes behind its header.  The payload path is the per-series one too:
 ``bytealigned._SMALL`` picks lanes or width classes by the batch's point
-count.  The bit-packed codecs (DOD, Gorilla, TS_2DIFF) have kernels of
-their own below.  The only per-row Python anywhere is Arrow's own offset
-bookkeeping.
+count.  The bit-packed codecs (DOD, Gorilla, TS_2DIFF; formats in
+``bitpacked``) pack every row's planes in one `pack_bits` call each.  The
+only per-row Python anywhere is Arrow's own offset bookkeeping.
 
-Blob layout per row matches ``codecs.chunk`` (magic 'SC' | ver | codec |
-u32 count | lens | vals) so scalar and batched kernels interoperate —
-`decode_chunk` can read any blob produced here, and vice versa.
+Every row is a ``codecs.chunk`` blob (magic 'SC' | ver | codec | u32
+count | body), so a row's bytes do not depend on the rows around it.  All
+decoders read the headers through `_read_headers`: a row shorter than the
+8-byte header decodes to zero points, and a batch must hold one codec.
 """
 
 from __future__ import annotations
@@ -100,6 +102,75 @@ def _block_gather(
     np.take(src, idx, out=dst)
 
 
+# ---------------------------------------------------------------------------
+# blob headers
+# ---------------------------------------------------------------------------
+
+_CODECS = (CODEC_DELTA, CODEC_VARINT, CODEC_DOD, CODEC_GORILLA,
+           CODEC_GORILLA_F64, CODEC_TS2DIFF)
+
+
+def _splits(counts: np.ndarray) -> np.ndarray:
+    """Offsets of consecutive runs of ``counts`` elements: 0, then the
+    running totals."""
+    out = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=out[1:])
+    return out
+
+
+def _read_le(buf: np.ndarray, pos: np.ndarray, dtype: str) -> np.ndarray:
+    """Read little-endian ``dtype`` words at byte offsets ``pos``."""
+    return buf[pos[:, None] + np.arange(np.dtype(dtype).itemsize)].view(dtype).reshape(-1)
+
+
+def _write_le(out: np.ndarray, pos: np.ndarray, vals: np.ndarray, dtype: str) -> None:
+    """Write ``vals`` as little-endian ``dtype`` words at byte offsets ``pos``."""
+    width = np.dtype(dtype).itemsize
+    b = np.asarray(vals).astype(dtype).view(np.uint8).reshape(len(pos), width)
+    for k in range(width):
+        out[pos + k] = b[:, k]
+
+
+def _write_headers(
+    out: np.ndarray, starts: np.ndarray, codec: int, counts: np.ndarray
+) -> None:
+    out[starts] = MAGIC[0]
+    out[starts + 1] = MAGIC[1]
+    out[starts + 2] = VERSION
+    out[starts + 3] = codec
+    _write_le(out, starts + 4, counts, "<u4")
+
+
+def _read_headers(
+    buf: np.ndarray, bs: np.ndarray, accept: tuple[int, ...]
+) -> tuple[np.ndarray, np.ndarray, int | None]:
+    """Read the headers of a batch of blobs: (starts, counts, codec).
+
+    A row shorter than the 8-byte header decodes to zero points: its count
+    is 0 and its start is the first full row's, so reads there stay in the
+    buffer. Every full row must carry the magic and version, and all of
+    them one codec, which must be one of ``accept``. ``codec`` is None when
+    no row is full."""
+    row_starts = bs[:-1]
+    valid = np.diff(bs) >= _HDR
+    if not valid.any():
+        return row_starts, np.zeros(len(valid), np.int64), None
+    starts = np.where(valid, row_starts, row_starts[np.argmax(valid)])
+    head = buf[starts[valid][:, None] + np.arange(4)]
+    if (head[:, :3] != np.frombuffer(MAGIC + bytes([VERSION]), np.uint8)).any():
+        raise ValueError("bad chunk blob header")
+    codec = int(head[0, 3])
+    if (head[:, 3] != codec).any():
+        raise ValueError(f"one batch holds blobs of codecs {np.unique(head[:, 3]).tolist()}")
+    if codec not in _CODECS:
+        raise ValueError(f"unknown codec {codec}")
+    if codec not in accept:
+        raise ValueError(f"codec {codec} blobs given to a decoder of codecs {list(accept)}")
+    counts = _read_le(buf, starts + 4, "<u4").astype(np.int64)
+    counts[~valid] = 0
+    return starts, counts, codec
+
+
 def encode_rows(
     flat_values: np.ndarray, row_splits: np.ndarray, codec: int
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -159,19 +230,8 @@ def decode_rows(
     ``bytealigned`` kernels run once over the whole batch."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
-    n_rows = len(bs) - 1
-    if n_rows == 0:
-        return np.empty(0, np.int64), np.zeros(1, np.int64)
-    # rows with no/short blob decode to empty
-    valid = np.diff(bs) >= _HDR
-    if not valid.any():
-        return np.empty(0, np.int64), np.zeros(n_rows + 1, np.int64)
-    starts = np.where(valid, bs[:-1], bs[np.argmax(valid)])
-    codec = int(buf[starts[np.argmax(valid)] + 3])
-    counts = _read_u32_le(buf, starts + 4)
-    counts[~valid] = 0
-    splits = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(counts, out=splits[1:])
+    starts, counts, codec = _read_headers(buf, bs, (CODEC_DELTA, CODEC_VARINT))
+    splits = _splits(counts)
     total = int(splits[-1])
     lens_len = (counts + 3) // 4
     packed = np.empty(int(lens_len.sum()), dtype=np.uint8)
@@ -184,10 +244,8 @@ def decode_rows(
     _block_gather(payload, buf, starts + _HDR + lens_len, pay_len)
     zz = _gather_payload(ByteAlignedData(payload, codes, total), off)
     vals = unzigzag(zz)
-    if codec == CODEC_VARINT:
-        return vals, splits
     if codec != CODEC_DELTA:
-        raise ValueError(f"batched decode supports DELTA/VARINT, got {codec}")
+        return vals, splits
     nz = counts > 0
     firsts = splits[:-1][nz]
     first = zz[firsts].view(np.int64)  # raw first values
@@ -199,41 +257,28 @@ def decode_rows(
 
 
 # ---------------------------------------------------------------------------
-# multi-row bit planes (batched DOD / Gorilla)
+# multi-row bit planes (DOD / Gorilla / TS_2DIFF)
 # ---------------------------------------------------------------------------
 #
 # The bit-packed codecs store their planes byte-aligned per blob.  To encode
-# MANY rows in one `pack_bits` call while keeping every row's plane
-# byte-identical to the scalar encoder's, we insert one zero-valued pad
+# MANY rows in one `pack_bits` call while every row's planes stay the bytes
+# the row packs to on its own, we insert one zero-valued pad
 # element of width (-row_bits) % 8 at each row end: row boundaries then land
 # exactly on byte boundaries, so slicing the packed stream at the per-row
-# byte offsets reproduces the scalar outputs bit for bit.
+# byte offsets gives each row's planes bit for bit.
 
 
-def _padded_widths(
+def _row_pads(
     widths: np.ndarray, row_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Insert per-row pad widths. Returns (widths_with_pads, positions of the
-    original elements inside the padded array, per-row byte lengths)."""
-    w = widths.astype(np.int64, copy=False)
+    """The pad element of every row: where it goes (the row's end), its
+    width (the bits that fill the row's last byte), and each row's padded
+    length in bytes."""
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    n_rows = len(splits) - 1
-    counts = np.diff(splits)
-    total = len(w)
-    cw = np.empty(total + 1, dtype=np.int64)
-    cw[0] = 0
-    np.cumsum(w, out=cw[1:])
+    cw = _splits(widths)
     row_bits = cw[splits[1:]] - cw[splits[:-1]]
     pad_w = (-row_bits) % 8
-    out_len = total + n_rows
-    widths2 = np.empty(out_len, dtype=np.int64)
-    orig_pos = np.arange(total, dtype=np.int64) + np.repeat(
-        np.arange(n_rows, dtype=np.int64), counts
-    )
-    pad_pos = splits[1:] + np.arange(n_rows, dtype=np.int64)
-    widths2[pad_pos] = pad_w
-    widths2[orig_pos] = w
-    return widths2, orig_pos, (row_bits + pad_w) >> 3
+    return splits[1:], pad_w, (row_bits + pad_w) >> 3
 
 
 def pack_bits_rows(
@@ -241,14 +286,9 @@ def pack_bits_rows(
 ) -> tuple[np.ndarray, np.ndarray]:
     """`pack_bits` per row with byte-aligned row boundaries, in ONE call.
     Returns (packed uint8 buffer, per-row byte splits)."""
-    widths2, orig_pos, row_bytes = _padded_widths(widths, row_splits)
-    values2 = np.zeros(len(widths2), dtype=np.uint64)
-    values2[orig_pos] = values.astype(np.uint64, copy=False)
-    buf = pack_bits(values2, widths2)
-    byte_splits = np.empty(len(row_bytes) + 1, dtype=np.int64)
-    byte_splits[0] = 0
-    np.cumsum(row_bytes, out=byte_splits[1:])
-    return buf, byte_splits
+    at, pad_w, row_bytes = _row_pads(widths, row_splits)
+    buf = pack_bits(np.insert(values, at, 0), np.insert(widths, at, pad_w))
+    return buf, _splits(row_bytes)
 
 
 def unpack_bits_rows(
@@ -256,60 +296,50 @@ def unpack_bits_rows(
 ) -> np.ndarray:
     """Inverse of `pack_bits_rows`: ``buf`` is the concatenation of per-row
     byte-aligned planes; unpack all rows' elements in ONE call."""
-    widths2, orig_pos, _ = _padded_widths(widths, row_splits)
-    return unpack_bits(buf, widths2)[orig_pos]
-
-
-def _read_u32_le(buf: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(starts), dtype=np.int64)
-    for b in range(4):
-        out |= buf[starts + b].astype(np.int64) << (8 * b)
-    return out
-
-
-def _read_u64_le(buf: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(starts), dtype=np.uint64)
-    for b in range(8):
-        out |= buf[starts + b].astype(np.uint64) << np.uint64(8 * b)
-    return out
-
-
-def _write_headers(
-    out: np.ndarray, starts: np.ndarray, codec: int, counts: np.ndarray
-) -> None:
-    out[starts] = MAGIC[0]
-    out[starts + 1] = MAGIC[1]
-    out[starts + 2] = VERSION
-    out[starts + 3] = codec
-    c32 = counts.astype("<u4").view(np.uint8).reshape(-1, 4)
-    for b in range(4):
-        out[starts + 4 + b] = c32[:, b]
+    at, pad_w, _ = _row_pads(widths, row_splits)
+    padded = unpack_bits(buf, np.insert(widths, at, pad_w))
+    return np.delete(padded, at + np.arange(len(at)))
 
 
 def _enc_domain(flat_len: int, splits: np.ndarray) -> tuple:
     """Per-row 'encoded element' domain: every element except each row's
     first (rows of length 0/1 encode nothing)."""
     counts = np.diff(splits)
-    row_starts = splits[:-1]
-    nz_starts = row_starts[counts > 0]
+    nz_starts = splits[:-1][counts > 0]
     keep = np.ones(flat_len, dtype=bool)
     keep[nz_starts] = False
     enc_counts = np.maximum(counts - 1, 0)
-    enc_splits = np.empty(len(counts) + 1, dtype=np.int64)
-    enc_splits[0] = 0
-    np.cumsum(enc_counts, out=enc_splits[1:])
-    return counts, row_starts, nz_starts, keep, enc_counts, enc_splits
+    return counts, nz_starts, keep, enc_counts, _splits(enc_counts)
+
+
+def _frame(codec: int, counts: np.ndarray, head: int, firsts: np.ndarray,
+           planes: list[tuple[np.ndarray, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """Lay out the bit-packed blobs of a batch: each row's ``head`` header
+    bytes (codec and count written, anything past byte 8 left to the
+    caller), its first value (8 bytes, rows with points only), then its
+    slice of every (plane buffer, per-row byte lengths) in order."""
+    has = counts >= 1
+    blob_splits = _splits(head + has * 8 + sum(lens for _, lens in planes))
+    out = np.empty(int(blob_splits[-1]), dtype=np.uint8)
+    starts = blob_splits[:-1]
+    _write_headers(out, starts, codec, counts)
+    _write_le(out, starts[has] + head, firsts, "<u8")
+    pos = starts + head + has * 8
+    for plane, lens in planes:
+        _block_place(out, pos, plane, lens)
+        pos = pos + lens
+    return out, blob_splits
 
 
 def dod_encode_rows(
     flat_values: np.ndarray, row_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Batched delta-of-delta: encode every row of an Arrow batch in one set
-    of whole-array passes.  Per-row blobs are byte-identical to
-    ``encode_chunk(row, CODEC_DOD)`` (asserted by pytest)."""
+    of whole-array passes (layout in ``bitpacked``). The previous delta of
+    a row's first delta is defined as 0, as in the reference."""
     flat = np.ascontiguousarray(flat_values, dtype=np.int64)
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    counts, row_starts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
+    counts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
         len(flat), splits
     )
     d = np.empty_like(flat)
@@ -322,77 +352,37 @@ def dod_encode_rows(
         dod[nz_starts] = 0  # dropped below; keeps the array fully defined
     zz = zigzag(dod[keep])
     codes = _dod_classify(zz)
-    widths = _DOD_WIDTH[codes]
-    ne = len(zz)
-    tag_buf, tag_sp = pack_bits_rows(codes, np.full(ne, 3, np.int64), enc_splits)
-    pay_buf, pay_sp = pack_bits_rows(zz, widths, enc_splits)
-    tag_len = np.diff(tag_sp)
-    pay_len = np.diff(pay_sp)
-    has_first = (counts >= 1).astype(np.int64)
-    blob_len = 8 + has_first * 8 + tag_len + pay_len
-    blob_splits = np.empty(len(counts) + 1, dtype=np.int64)
-    blob_splits[0] = 0
-    np.cumsum(blob_len, out=blob_splits[1:])
-    out = np.empty(int(blob_splits[-1]), dtype=np.uint8)
-    starts = blob_splits[:-1]
-    _write_headers(out, starts, CODEC_DOD, counts)
-    nz = counts >= 1
-    if nz.any():
-        firsts = flat[row_starts[nz]].astype("<i8").view(np.uint8).reshape(-1, 8)
-        fs = starts[nz]
-        for b in range(8):
-            out[fs + 8 + b] = firsts[:, b]
-    body = starts + 8 + has_first * 8
-    _block_place(out, body, tag_buf, tag_len)
-    _block_place(out, body + tag_len, pay_buf, pay_len)
-    return out, blob_splits
+    tag_buf, tag_sp = pack_bits_rows(codes, np.full(len(zz), 3, np.int64), enc_splits)
+    pay_buf, pay_sp = pack_bits_rows(zz, _DOD_WIDTH[codes], enc_splits)
+    return _frame(CODEC_DOD, counts, 8, flat[nz_starts],
+                  [(tag_buf, np.diff(tag_sp)), (pay_buf, np.diff(pay_sp))])
 
 
 def dod_decode_rows(
     blob_buffer: np.ndarray, blob_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batched inverse of `dod_encode_rows` (accepts scalar-encoder blobs)."""
+    """Batched inverse of `dod_encode_rows`."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
-    n_rows = len(bs) - 1
-    if n_rows == 0:
-        return np.empty(0, np.int64), np.zeros(1, np.int64)
-    starts = bs[:-1]
-    valid = np.diff(bs) >= 8
-    if not valid.any():
-        return np.empty(0, np.int64), np.zeros(n_rows + 1, np.int64)
-    starts = np.where(valid, starts, starts[np.argmax(valid)])
-    counts = _read_u32_le(buf, starts + 4)
-    counts[~valid] = 0
-    splits = np.empty(n_rows + 1, dtype=np.int64)
-    splits[0] = 0
-    np.cumsum(counts, out=splits[1:])
-    row_starts_out = splits[:-1]
+    starts, counts, _ = _read_headers(buf, bs, (CODEC_DOD,))
+    splits = _splits(counts)
     has = counts >= 1
-    firsts = np.zeros(n_rows, dtype=np.int64)
-    if has.any():
-        firsts[has] = _read_u64_le(buf, starts[has] + 8).view(np.int64)
+    out = np.empty(int(splits[-1]), dtype=np.int64)
+    out[splits[:-1][has]] = _read_le(buf, starts[has] + 8, "<i8")
+    body = starts + 8 + has * 8
     enc_counts = np.maximum(counts - 1, 0)
-    enc_splits = np.empty(n_rows + 1, dtype=np.int64)
-    enc_splits[0] = 0
-    np.cumsum(enc_counts, out=enc_splits[1:])
+    enc_splits = _splits(enc_counts)
     ne = int(enc_splits[-1])
     tag_len = (3 * enc_counts + 7) >> 3
-    body = starts + 8 + has.astype(np.int64) * 8
     tag_buf = np.empty(int(tag_len.sum()), dtype=np.uint8)
     _block_gather(tag_buf, buf, body, tag_len)
     tags = unpack_bits_rows(tag_buf, np.full(ne, 3, np.int64), enc_splits).astype(np.int64)
     widths = _DOD_WIDTH[tags]
-    cw = np.empty(ne + 1, dtype=np.int64)
-    cw[0] = 0
-    np.cumsum(widths, out=cw[1:])
+    cw = _splits(widths)
     pay_len = (cw[enc_splits[1:]] - cw[enc_splits[:-1]] + 7) >> 3
     pay_buf = np.empty(int(pay_len.sum()), dtype=np.uint8)
     _block_gather(pay_buf, buf, body + tag_len, pay_len)
     dod = unzigzag(unpack_bits_rows(pay_buf, widths, enc_splits))
-    out = np.empty(int(splits[-1]), dtype=np.int64)
-    if has.any():
-        out[row_starts_out[has]] = firsts[has]
     if ne:
         henc = enc_counts > 0
         es = enc_splits[:-1][henc]
@@ -401,22 +391,29 @@ def dod_decode_rows(
         delta = c1 - np.repeat(c1[es] - dod[es], reps)  # per-row delta chain
         c2 = np.cumsum(delta)
         pref = c2 - np.repeat(c2[es] - delta[es], reps)  # per-row Σ delta
-        vals = np.repeat(firsts[henc], reps) + pref
-        pos = np.repeat(row_starts_out[henc] + 1 - es, reps) + np.arange(ne)
-        out[pos] = vals
+        firsts = out[splits[:-1][henc]]
+        pos = np.repeat(splits[:-1][henc] + 1 - es, reps) + np.arange(ne)
+        out[pos] = np.repeat(firsts, reps) + pref
     return out, splits
 
 
 def gorilla_encode_rows(
     flat_patterns: np.ndarray, row_splits: np.ndarray, codec: int = CODEC_GORILLA
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batched Gorilla-XOR over uint64 bit patterns; per-row blobs are
-    byte-identical to ``encode_chunk(row, codec)``.  The reuse decision
-    resets at every row's first non-zero XOR (tag 2 = new window), which is
-    what makes the global forward-fills row-safe."""
+    """Batched Gorilla XOR over uint64 bit patterns (int64 values, or
+    float64 through ``.view(np.uint64)``; layout in ``bitpacked``).
+
+    Window policy (vectorized, decoder-agnostic): an element reuses the
+    running window iff its own (lead, trail) fit inside the *previous
+    non-zero element's own* window — a conservative one-pass test that
+    guarantees containment in the running window by induction, so the whole
+    decision is one vectorized comparison instead of the reference's
+    sequential loop (LongGorillaEncoder.java:105-150). The decision resets
+    at every row's first non-zero XOR (tag 2 = new window), which is what
+    makes the global forward-fills row-safe."""
     x = np.ascontiguousarray(flat_patterns, dtype=np.uint64)
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    counts, row_starts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
+    counts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
         len(x), splits
     )
     n_rows = len(counts)
@@ -432,11 +429,11 @@ def gorilla_encode_rows(
     trail = np.zeros(ne, dtype=np.int64)
     xnz = xor[nzm]
     if len(xnz):
-        lead[nzm] = _clz64(xnz)
+        lead[nzm] = _clz64(xnz)  # xnz ≥ 1 → clz ≤ 63, no extra clamp
         trail[nzm] = _ctz64(xnz)
     mlen = np.where(nzm, 64 - lead - trail, 0)
     nz_idx = np.flatnonzero(nzm)
-    tags = np.zeros(ne, dtype=np.uint64)
+    tags = np.zeros(ne, dtype=np.uint64)  # 0 = xor==0
     if len(nz_idx):
         pl = lead[nz_idx]
         pt = trail[nz_idx]
@@ -447,6 +444,7 @@ def gorilla_encode_rows(
             reuse[1:] &= rb[1:] == rb[:-1]  # window never crosses a row
         tags[nz_idx[reuse]] = 1
         tags[nz_idx[~reuse]] = 2
+    # effective window for every element = forward-fill from new-window elems
     is_new = tags == 2
     eff_lead = lead.copy()
     eff_trail = trail.copy()
@@ -458,13 +456,9 @@ def gorilla_encode_rows(
         eff_trail[filled] = trail[idx[filled]]
     eff_mlen = 64 - eff_lead - eff_trail
     tag_buf, tag_sp = pack_bits_rows(tags, np.full(ne, 2, np.int64), enc_splits)
-    cnw = np.empty(ne + 1, dtype=np.int64)
-    cnw[0] = 0
-    np.cumsum(is_new, out=cnw[1:])
+    cnw = _splits(is_new)
     n_win = cnw[enc_splits[1:]] - cnw[enc_splits[:-1]]
-    win_splits = np.empty(n_rows + 1, dtype=np.int64)
-    win_splits[0] = 0
-    np.cumsum(n_win, out=win_splits[1:])
+    win_splits = _splits(n_win)
     win_vals = (lead[is_new].astype(np.uint64) << np.uint64(6)) | (
         mlen[is_new] - 1
     ).astype(np.uint64)
@@ -474,30 +468,10 @@ def gorilla_encode_rows(
     pay_w = np.where(tags == 0, 0, eff_mlen)
     pay_vals = xor >> eff_trail.astype(np.uint64)
     pay_buf, pay_sp = pack_bits_rows(pay_vals, pay_w, enc_splits)
-    tag_len = np.diff(tag_sp)
-    win_len = np.diff(win_sp)
-    pay_len = np.diff(pay_sp)
-    has_first = (counts >= 1).astype(np.int64)
-    blob_len = 12 + has_first * 8 + tag_len + win_len + pay_len
-    blob_splits = np.empty(n_rows + 1, dtype=np.int64)
-    blob_splits[0] = 0
-    np.cumsum(blob_len, out=blob_splits[1:])
-    out = np.empty(int(blob_splits[-1]), dtype=np.uint8)
-    starts = blob_splits[:-1]
-    _write_headers(out, starts, codec, counts)
-    w32 = n_win.astype("<u4").view(np.uint8).reshape(-1, 4)
-    for b in range(4):
-        out[starts + 8 + b] = w32[:, b]
-    nz = counts >= 1
-    if nz.any():
-        firsts = x[row_starts[nz]].astype("<u8").view(np.uint8).reshape(-1, 8)
-        fs = starts[nz]
-        for b in range(8):
-            out[fs + 12 + b] = firsts[:, b]
-    body = starts + 12 + has_first * 8
-    _block_place(out, body, tag_buf, tag_len)
-    _block_place(out, body + tag_len, win_buf, win_len)
-    _block_place(out, body + tag_len + win_len, pay_buf, pay_len)
+    out, blob_splits = _frame(codec, counts, 12, x[nz_starts],
+                              [(tag_buf, np.diff(tag_sp)), (win_buf, np.diff(win_sp)),
+                               (pay_buf, np.diff(pay_sp))])
+    _write_le(out, blob_splits[:-1] + 8, n_win, "<u4")
     return out, blob_splits
 
 
@@ -508,40 +482,23 @@ def gorilla_decode_rows(
     (caller views as int64/float64 per the codec byte)."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
-    n_rows = len(bs) - 1
-    if n_rows == 0:
-        return np.empty(0, np.uint64), np.zeros(1, np.int64)
-    starts = bs[:-1]
-    valid = np.diff(bs) >= 12
-    if not valid.any():
-        return np.empty(0, np.uint64), np.zeros(n_rows + 1, np.int64)
-    starts = np.where(valid, starts, starts[np.argmax(valid)])
-    counts = _read_u32_le(buf, starts + 4)
-    counts[~valid] = 0
-    n_win = _read_u32_le(buf, starts + 8)
-    n_win[~valid] = 0
-    splits = np.empty(n_rows + 1, dtype=np.int64)
-    splits[0] = 0
-    np.cumsum(counts, out=splits[1:])
-    row_starts_out = splits[:-1]
+    starts, counts, _ = _read_headers(buf, bs, (CODEC_GORILLA, CODEC_GORILLA_F64))
+    splits = _splits(counts)
     has = counts >= 1
-    firsts = np.zeros(n_rows, dtype=np.uint64)
-    if has.any():
-        firsts[has] = _read_u64_le(buf, starts[has] + 12)
+    out = np.empty(int(splits[-1]), dtype=np.uint64)
+    out[splits[:-1][has]] = _read_le(buf, starts[has] + 12, "<u8")
+    body = starts + 12 + has * 8
+    n_win = np.zeros(len(counts), dtype=np.int64)
+    n_win[has] = _read_le(buf, starts[has] + 8, "<u4")
     enc_counts = np.maximum(counts - 1, 0)
-    enc_splits = np.empty(n_rows + 1, dtype=np.int64)
-    enc_splits[0] = 0
-    np.cumsum(enc_counts, out=enc_splits[1:])
+    enc_splits = _splits(enc_counts)
     ne = int(enc_splits[-1])
     tag_len = (2 * enc_counts + 7) >> 3
     win_len = (12 * n_win + 7) >> 3
-    body = starts + 12 + has.astype(np.int64) * 8
     tag_buf = np.empty(int(tag_len.sum()), dtype=np.uint8)
     _block_gather(tag_buf, buf, body, tag_len)
     tags = unpack_bits_rows(tag_buf, np.full(ne, 2, np.int64), enc_splits).astype(np.int64)
-    win_splits = np.empty(n_rows + 1, dtype=np.int64)
-    win_splits[0] = 0
-    np.cumsum(n_win, out=win_splits[1:])
+    win_splits = _splits(n_win)
     win_buf = np.empty(int(win_len.sum()), dtype=np.uint8)
     _block_gather(win_buf, buf, body + tag_len, win_len)
     wins = unpack_bits_rows(
@@ -561,18 +518,13 @@ def gorilla_decode_rows(
         eff_lead[filled] = eff_lead[idx[filled]]
         eff_mlen[filled] = eff_mlen[idx[filled]]
     widths = np.where(tags == 0, 0, eff_mlen)
-    cw = np.empty(ne + 1, dtype=np.int64)
-    cw[0] = 0
-    np.cumsum(widths, out=cw[1:])
+    cw = _splits(widths)
     pay_len = (cw[enc_splits[1:]] - cw[enc_splits[:-1]] + 7) >> 3
     pay_buf = np.empty(int(pay_len.sum()), dtype=np.uint8)
     _block_gather(pay_buf, buf, body + tag_len + win_len, pay_len)
     payload = unpack_bits_rows(pay_buf, widths, enc_splits)
     shift = (64 - eff_lead - eff_mlen).astype(np.uint64)
     xor = np.where(tags == 0, np.uint64(0), payload << shift)
-    out = np.empty(int(splits[-1]), dtype=np.uint64)
-    if has.any():
-        out[row_starts_out[has]] = firsts[has]
     if ne:
         henc = enc_counts > 0
         es = enc_splits[:-1][henc]
@@ -580,9 +532,9 @@ def gorilla_decode_rows(
         c = xor.copy()
         np.bitwise_xor.accumulate(c, out=c)
         seg = c ^ np.repeat(c[es] ^ xor[es], reps)  # per-row xor prefix
-        vals = np.repeat(firsts[henc], reps) ^ seg
-        pos = np.repeat(row_starts_out[henc] + 1 - es, reps) + np.arange(ne)
-        out[pos] = vals
+        firsts = out[splits[:-1][henc]]
+        pos = np.repeat(splits[:-1][henc] + 1 - es, reps) + np.arange(ne)
+        out[pos] = np.repeat(firsts, reps) ^ seg
     return out, splits
 
 
@@ -590,14 +542,13 @@ def ts2diff_encode_rows(
     flat_values: np.ndarray, row_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Batched TS_2DIFF (block min-delta, reference
-    DeltaBinaryEncoder.java:46-129 block layout): every 128-delta block of
-    every row in the batch is one row of ONE (total_blocks × 128) matrix, so
-    min/width/relativize are three whole-array passes and the payload is a
-    single `pack_bits_rows` call.  Per-row blobs are byte-identical to
-    ``encode_chunk(row, CODEC_TS2DIFF)`` (asserted by pytest)."""
+    DeltaBinaryEncoder.java:46-129 block layout; layout in ``bitpacked``):
+    every 128-delta block of every row in the batch is one row of ONE
+    (total_blocks × 128) matrix, so min/width/relativize are three
+    whole-array passes and the payload is a single `pack_bits_rows` call."""
     flat = np.ascontiguousarray(flat_values, dtype=np.int64)
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    counts, row_starts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
+    counts, nz_starts, keep, enc_counts, enc_splits = _enc_domain(
         len(flat), splits
     )
     n_rows = len(counts)
@@ -615,8 +566,8 @@ def ts2diff_encode_rows(
         block_count = np.minimum(m[block_row] - block_in_row * B, B)
         slot = np.arange(B, dtype=np.int64)
         validm = slot[None, :] < block_count[:, None]
-        # the scalar encoder pads a short final block with the block's own
-        # first delta — clamp pad slots to the block start to match
+        # a short final block is padded with the block's own first delta,
+        # so the pad never moves the block's min or width
         gidx = np.where(validm, block_start[:, None] + slot[None, :],
                         block_start[:, None])
         mat = deltas[gidx]
@@ -636,27 +587,9 @@ def ts2diff_encode_rows(
         flat_rel = np.empty(0, np.uint64)
         flat_w = np.empty(0, np.int64)
         table = np.empty(0, np.uint8)
-        block_count = np.empty(0, np.int64)
     pay_buf, pay_sp = pack_bits_rows(flat_rel, flat_w, enc_splits)
-    pay_len = np.diff(pay_sp)
-    has_first = (counts >= 1).astype(np.int64)
-    blob_len = 8 + has_first * 8 + 9 * nb + pay_len
-    blob_splits = np.empty(n_rows + 1, dtype=np.int64)
-    blob_splits[0] = 0
-    np.cumsum(blob_len, out=blob_splits[1:])
-    out = np.zeros(int(blob_splits[-1]), dtype=np.uint8)
-    starts = blob_splits[:-1]
-    _write_headers(out, starts, CODEC_TS2DIFF, counts)
-    nz = counts >= 1
-    if nz.any():
-        firsts = flat[row_starts[nz]].astype("<i8").view(np.uint8).reshape(-1, 8)
-        fs = starts[nz]
-        for b in range(8):
-            out[fs + 8 + b] = firsts[:, b]
-    body = starts + 8 + has_first * 8
-    _block_place(out, body, table, 9 * nb)
-    _block_place(out, body + 9 * nb, pay_buf, pay_len)
-    return out, blob_splits
+    return _frame(CODEC_TS2DIFF, counts, 8, flat[nz_starts],
+                  [(table, 9 * nb), (pay_buf, np.diff(pay_sp))])
 
 
 def ts2diff_decode_rows(
@@ -666,57 +599,45 @@ def ts2diff_decode_rows(
     planes, one `unpack_bits_rows`, one segmented cumsum."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
-    n_rows = len(bs) - 1
-    starts = bs[:-1]
+    starts, counts, _ = _read_headers(buf, bs, (CODEC_TS2DIFF,))
+    splits = _splits(counts)
+    has = counts >= 1
+    out = np.empty(int(splits[-1]), dtype=np.int64)
+    out[splits[:-1][has]] = _read_le(buf, starts[has] + 8, "<i8")
+    table_start = starts + 8 + has * 8
     B = TS2DIFF_BLOCK
-    n = _read_u32_le(buf, starts + 4)
-    m = np.maximum(n - 1, 0)
+    m = np.maximum(counts - 1, 0)
     nb = (m + B - 1) // B
-    has_first = (n >= 1).astype(np.int64)
-    firsts = np.zeros(n_rows, dtype=np.int64)
-    nz = n >= 1
-    if nz.any():
-        firsts[nz] = _read_u64_le(buf, starts[nz] + 8).view(np.int64)
-    table_start = starts + 8 + has_first * 8
     total_blocks = int(nb.sum())
-    out_splits = np.empty(n_rows + 1, dtype=np.int64)
-    out_splits[0] = 0
-    np.cumsum(n, out=out_splits[1:])
-    out = np.empty(int(out_splits[-1]), dtype=np.int64)
-    out[out_splits[:-1][nz]] = firsts[nz]
     if total_blocks == 0:
-        return out, out_splits
-    block_row = np.repeat(np.arange(n_rows, dtype=np.int64), nb)
+        return out, splits
+    block_row = np.repeat(np.arange(len(counts), dtype=np.int64), nb)
     cum_nb = np.cumsum(nb) - nb
     block_in_row = np.arange(total_blocks, dtype=np.int64) - cum_nb[block_row]
     tstart = table_start[block_row] + 9 * block_in_row
-    mins = _read_u64_le(buf, tstart).view(np.int64)
+    mins = _read_le(buf, tstart, "<i8")
     widths = buf[tstart + 8].astype(np.int64)
     block_count = np.minimum(m[block_row] - block_in_row * B, B)
     flat_w = np.repeat(widths, block_count)
-    enc_splits = np.empty(n_rows + 1, dtype=np.int64)
-    enc_splits[0] = 0
-    np.cumsum(m, out=enc_splits[1:])
+    enc_splits = _splits(m)
+    hm = m > 0
     pay_start = table_start + 9 * nb
-    pay_len = bs[1:] - pay_start
+    pay_len = np.where(hm, bs[1:] - pay_start, 0)
     pbuf = np.empty(int(pay_len.sum()), dtype=np.uint8)
     _block_gather(pbuf, buf, pay_start, pay_len)
     rel = unpack_bits_rows(pbuf, flat_w, enc_splits)
     deltas = rel.view(np.int64) + np.repeat(mins, block_count)
-    # segmented cumsum: global running sum, re-based per row (two's
-    # complement wrap matches the scalar per-row cumsum)
+    es = enc_splits[:-1][hm]
+    reps = m[hm]
     cs = np.cumsum(deltas)
-    cs_before = np.concatenate([[0], cs])[enc_splits[:-1]]
-    base = np.repeat(firsts - cs_before, m)
-    pos = np.repeat(out_splits[:-1] + 1 - enc_splits[:-1], m) + np.arange(
-        len(deltas), dtype=np.int64
-    )
-    out[pos] = cs + base
-    return out, out_splits
+    pref = cs - np.repeat(cs[es] - deltas[es], reps)  # per-row Σ delta
+    pos = np.repeat(splits[:-1][hm] + 1 - es, reps) + np.arange(len(deltas))
+    out[pos] = np.repeat(out[splits[:-1][hm]], reps) + pref
+    return out, splits
 
 
 # ---------------------------------------------------------------------------
-# codec-dispatching batched chunk encode/decode
+# codec-dispatching chunk encode/decode
 # ---------------------------------------------------------------------------
 
 
@@ -748,19 +669,24 @@ def decode_chunk_rows(
     GORILLA_F64, else int64 — and the per-row splits)."""
     buf = np.ascontiguousarray(blob_buffer, dtype=np.uint8)
     bs = np.ascontiguousarray(blob_splits, dtype=np.int64)
-    n_rows = len(bs) - 1
-    valid = np.diff(bs) >= 4
-    if not valid.any():
-        return np.empty(0, np.int64), np.zeros(n_rows + 1, np.int64)
-    codec = int(buf[bs[:-1][np.argmax(valid)] + 3])
-    if codec in (CODEC_DELTA, CODEC_VARINT):
-        return decode_rows(buf, bs)
+    codec = _read_headers(buf, bs, _CODECS)[2]
     if codec == CODEC_DOD:
         return dod_decode_rows(buf, bs)
-    if codec in (CODEC_GORILLA, CODEC_GORILLA_F64):
-        pats, splits = gorilla_decode_rows(buf, bs)
-        view = np.float64 if codec == CODEC_GORILLA_F64 else np.int64
-        return pats.view(view), splits
     if codec == CODEC_TS2DIFF:
         return ts2diff_decode_rows(buf, bs)
-    raise ValueError(f"unknown codec {codec}")
+    if codec in (CODEC_GORILLA, CODEC_GORILLA_F64):
+        pats, splits = gorilla_decode_rows(buf, bs)
+        return pats.view(np.float64 if codec == CODEC_GORILLA_F64 else np.int64), splits
+    return decode_rows(buf, bs)  # DELTA, VARINT, or no full row: no points
+
+
+def encode_chunk(values: np.ndarray, codec: int) -> bytes:
+    """Encode one column into a chunk blob: `encode_chunk_rows` on one row."""
+    v = np.asarray(values)
+    return encode_chunk_rows(v, np.array([0, len(v)]), codec)[0].tobytes()
+
+
+def decode_chunk(blob: bytes | memoryview) -> np.ndarray:
+    """Decode one chunk blob: `decode_chunk_rows` on one row."""
+    buf = np.frombuffer(blob, dtype=np.uint8)
+    return decode_chunk_rows(buf, np.array([0, len(buf)]))[0]

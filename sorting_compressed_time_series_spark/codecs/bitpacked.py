@@ -1,6 +1,10 @@
-"""Bit-packed codecs: delta-of-delta (timestamps) and Gorilla XOR (values).
+"""Bit-packed codecs: delta-of-delta and TS_2DIFF (timestamps) and Gorilla
+XOR (values) — their formats and the bit-plane helpers their kernels share.
+The kernels themselves are the multi-row ones in ``batched``
+(`dod_encode_rows`, `gorilla_encode_rows`, `ts2diff_encode_rows` and their
+decoders); one series is a batch of one row.
 
-Re-expresses the reference's two bit-packed codecs (SURVEY.md §2.1 #7-#10):
+Re-expresses the reference's bit-packed codecs (SURVEY.md §2.1 #7-#10):
 
 - ``DeltaDeltaLongEncoder`` (TSEncoding DELTA_OF_DELTA, reference
   db/iotdb-core/tsfile/.../encoder/DeltaDeltaLongEncoder.java:117-174):
@@ -23,6 +27,10 @@ This is the same control/payload-plane split the reference's byte-aligned
 the compression ratio of delta-of-delta / Gorilla while making both encode
 and decode whole-array numpy kernels.
 
+Each layout below is a chunk blob's body, after magic, version and codec
+(``codecs.chunk``); rows with no points stop after the count (Gorilla:
+after the window count), rows with one point after the first value.
+
 Delta-of-delta layout (little header, then planes):
     u32 count | i64 first | tag plane: 3 bits/elem for elems 1..n-1 |
     payload plane: zigzag(dod) bits per class
@@ -44,12 +52,10 @@ from __future__ import annotations
 
 import numpy as np
 
-from .bytealigned import unzigzag, zigzag
-
 _U64 = np.uint64
 
 # ---------------------------------------------------------------------------
-# bit plane helpers (shared by both codecs)
+# bit plane helpers (shared by the codecs)
 # ---------------------------------------------------------------------------
 
 
@@ -172,13 +178,6 @@ def unpack_bits(buf: np.ndarray, widths: np.ndarray) -> np.ndarray:
     return out
 
 
-def _fixed_unpack(buf: np.ndarray, width: int, count: int) -> np.ndarray:
-    """Unpack ``count`` fixed-``width``-bit MSB-first codes."""
-    if count == 0:
-        return np.empty(0, dtype=np.uint64)
-    return unpack_bits(buf, np.full(count, width, dtype=np.int64))
-
-
 # ---------------------------------------------------------------------------
 # delta-of-delta
 # ---------------------------------------------------------------------------
@@ -195,47 +194,6 @@ def _dod_classify(zz: np.ndarray) -> np.ndarray:
     codes[zz < _U64(1) << _U64(7)] = 1
     codes[zz == _U64(0)] = 0
     return codes
-
-
-def dod_encode(values: np.ndarray) -> bytes:
-    v = np.asarray(values, dtype=np.int64)
-    n = len(v)
-    header = np.array([n], dtype="<u4").tobytes()
-    if n == 0:
-        return header
-    first = v[0:1].astype("<i8").tobytes()
-    if n == 1:
-        return header + first
-    delta = np.diff(v)
-    dod = np.empty(n - 1, dtype=np.int64)
-    dod[0] = delta[0]  # previous delta is defined as 0, as in the reference
-    np.subtract(delta[1:], delta[:-1], out=dod[1:])
-    zz = zigzag(dod)
-    codes = _dod_classify(zz)
-    tag_plane = pack_bits(codes.astype(np.uint64), np.full(n - 1, 3, dtype=np.int64))
-    payload = pack_bits(zz, _DOD_WIDTH[codes])
-    return header + first + tag_plane.tobytes() + payload.tobytes()
-
-
-def dod_decode(blob: bytes | np.ndarray) -> np.ndarray:
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    n = int(buf[:4].view("<u4")[0])
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    first = int(buf[4:12].view("<i8")[0])
-    if n == 1:
-        return np.array([first], dtype=np.int64)
-    tag_bytes = (3 * (n - 1) + 7) // 8
-    tags = _fixed_unpack(buf[12 : 12 + tag_bytes], 3, n - 1).astype(np.int64)
-    widths = _DOD_WIDTH[tags]
-    zz = unpack_bits(buf[12 + tag_bytes :], widths)
-    dod = unzigzag(zz)
-    delta = np.cumsum(dod)  # prev-delta chain starts at 0
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    np.cumsum(delta, out=out[1:])
-    out[1:] += first
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -272,117 +230,6 @@ def _ctz64(x: np.ndarray) -> np.ndarray:
     return ((lowbit.view(np.uint64) >> _U64(52)) & _U64(0x7FF)).astype(np.int64) - 1023
 
 
-def gorilla_encode_longs(bit_patterns: np.ndarray) -> bytes:
-    """Gorilla-XOR encode a uint64 bit-pattern array (works for int64 values
-    and for float64 via ``.view(np.uint64)``).
-
-    Window policy (vectorized, decoder-agnostic): an element reuses the
-    running window iff its own (lead, trail) fit inside the *previous
-    non-zero element's own* window — a conservative one-pass test that
-    guarantees containment in the running window by induction, so the whole
-    decision is a single vectorized comparison instead of the reference's
-    sequential loop (LongGorillaEncoder.java:105-150).
-    """
-    x = np.ascontiguousarray(bit_patterns, dtype=np.uint64)
-    n = len(x)
-    head = np.array([n, 0], dtype="<u4")
-    if n == 0:
-        return head.tobytes()
-    if n == 1:
-        return head.tobytes() + x[0:1].astype("<u8").tobytes()
-    xor = x[1:] ^ x[:-1]
-    nz = xor != 0
-    lead = np.zeros(n - 1, dtype=np.int64)
-    trail = np.zeros(n - 1, dtype=np.int64)
-    xnz = xor[nz]
-    lead[nz] = _clz64(xnz)  # xnz ≥ 1 → clz ≤ 63, no extra clamp
-    trail[nz] = _ctz64(xnz)
-    mlen = np.where(nz, 64 - lead - trail, 0)
-
-    # previous non-zero element's (lead, trail), aligned to each element
-    nz_idx = np.flatnonzero(nz)
-    tags = np.zeros(n - 1, dtype=np.uint64)  # 0 = xor==0
-    if len(nz_idx):
-        pl = lead[nz_idx]
-        pt = trail[nz_idx]
-        reuse = np.zeros(len(nz_idx), dtype=bool)
-        if len(nz_idx) > 1:
-            reuse[1:] = (pl[1:] >= pl[:-1]) & (pt[1:] >= pt[:-1])
-        tags[nz_idx[reuse]] = 1
-        tags[nz_idx[~reuse]] = 2
-    # effective window for every element = forward-fill from new-window elems
-    is_new = tags == 2
-    eff_lead = lead.copy()
-    eff_trail = trail.copy()
-    if is_new.any():
-        idx = np.where(is_new, np.arange(n - 1), -1)
-        np.maximum.accumulate(idx, out=idx)
-        filled = idx >= 0
-        eff_lead[filled] = lead[idx[filled]]
-        eff_trail[filled] = trail[idx[filled]]
-    eff_mlen = 64 - eff_lead - eff_trail
-
-    tag_plane = pack_bits(tags, np.full(n - 1, 2, dtype=np.int64))
-    win_vals = ((lead[is_new].astype(np.uint64) << _U64(6))
-                | (mlen[is_new] - 1).astype(np.uint64))
-    win_plane = pack_bits(win_vals, np.full(int(is_new.sum()), 12, dtype=np.int64))
-    pay_widths = np.where(tags == 0, 0, eff_mlen)
-    payload_vals = (xor >> eff_trail.astype(np.uint64))
-    payload = pack_bits(payload_vals, pay_widths)
-    head[1] = int(is_new.sum())
-    return (head.tobytes() + x[0:1].astype("<u8").tobytes()
-            + tag_plane.tobytes() + win_plane.tobytes() + payload.tobytes())
-
-
-def gorilla_decode_longs(blob: bytes | np.ndarray) -> np.ndarray:
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    n = int(buf[:4].view("<u4")[0])
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    n_win = int(buf[4:8].view("<u4")[0])
-    first = buf[8:16].view("<u8")[0]
-    if n == 1:
-        return np.array([first], dtype=np.uint64)
-    pos = 16
-    tag_bytes = (2 * (n - 1) + 7) // 8
-    tags = _fixed_unpack(buf[pos : pos + tag_bytes], 2, n - 1).astype(np.int64)
-    pos += tag_bytes
-    win_bytes = (12 * n_win + 7) // 8
-    wins = _fixed_unpack(buf[pos : pos + win_bytes], 12, n_win)
-    pos += win_bytes
-    lead_new = (wins >> _U64(6)).astype(np.int64)
-    mlen_new = (wins & _U64(0x3F)).astype(np.int64) + 1
-    is_new = tags == 2
-    eff_lead = np.zeros(n - 1, dtype=np.int64)
-    eff_mlen = np.zeros(n - 1, dtype=np.int64)
-    eff_lead[is_new] = lead_new
-    eff_mlen[is_new] = mlen_new
-    idx = np.where(is_new, np.arange(n - 1), -1)
-    np.maximum.accumulate(idx, out=idx)
-    filled = idx >= 0
-    eff_lead[filled] = eff_lead[idx[filled]]
-    eff_mlen[filled] = eff_mlen[idx[filled]]
-    widths = np.where(tags == 0, 0, eff_mlen)
-    payload = unpack_bits(buf[pos:], widths)
-    shift = (64 - eff_lead - eff_mlen).astype(np.uint64)
-    xor = np.where(tags == 0, _U64(0), payload << shift)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = first
-    # xor-scan: cumulative bitwise xor has no ufunc.accumulate fast path for
-    # arbitrary dtypes pre-numpy2; use bitwise_xor.accumulate (supported).
-    np.bitwise_xor.accumulate(xor, out=xor)
-    out[1:] = first ^ xor
-    return out
-
-
-def gorilla_encode_doubles(values: np.ndarray) -> bytes:
-    return gorilla_encode_longs(np.ascontiguousarray(values, dtype=np.float64).view(np.uint64))
-
-
-def gorilla_decode_doubles(blob: bytes | np.ndarray) -> np.ndarray:
-    return gorilla_decode_longs(blob).view(np.float64)
-
-
 # ---------------------------------------------------------------------------
 # TS_2DIFF (block min-delta, fixed width per block)
 # ---------------------------------------------------------------------------
@@ -393,75 +240,11 @@ def gorilla_decode_doubles(blob: bytes | np.ndarray) -> np.ndarray:
 # (delta - min_delta) at the block's fixed width. Fixed width per block is
 # what makes this the FASTEST codec here: pack/unpack stay on the pow2/
 # reduceat fast paths and there is no per-element class decision chain.
-# Layout: u32 count | i64 first | per block: [i64 min_delta | u8 width |
-# ceil(128*width/8) payload bytes] (last block truncated).
+# Layout: u32 count | i64 first | block table: [i64 min_delta | u8 width]
+# per block | payload plane: each (delta - min_delta) at its block's width
+# (the last block holds the remaining < 128 deltas).
 
 TS2DIFF_BLOCK = 128
-
-
-def ts2diff_encode(values: np.ndarray) -> bytes:
-    v = np.asarray(values, dtype=np.int64)
-    n = len(v)
-    head = np.array([n], dtype="<u4").tobytes()
-    if n == 0:
-        return head
-    first = v[0:1].astype("<i8").tobytes()
-    if n == 1:
-        return head + first
-    d = np.diff(v)
-    m = len(d)
-    n_blocks = (m + TS2DIFF_BLOCK - 1) // TS2DIFF_BLOCK
-    pad = n_blocks * TS2DIFF_BLOCK - m
-    dp = np.concatenate([d, np.zeros(pad, dtype=np.int64)]).reshape(
-        n_blocks, TS2DIFF_BLOCK
-    )
-    if pad:
-        dp[-1, TS2DIFF_BLOCK - pad :] = dp[-1, 0]  # pad with a real delta
-    mins = dp.min(axis=1)
-    rel = (dp - mins[:, None]).astype(np.uint64)
-    maxs = rel.max(axis=1)
-    widths = np.zeros(n_blocks, dtype=np.int64)
-    nzb = maxs > 0
-    widths[nzb] = _bitlen_u64(maxs[nzb])
-    # block table: [min i64 | width u8] per block, then ONE payload plane —
-    # per-element widths = repeat(block width); single pack_bits call
-    counts = np.full(n_blocks, TS2DIFF_BLOCK, dtype=np.int64)
-    if pad:
-        counts[-1] -= pad
-    keep = np.repeat(np.arange(n_blocks), TS2DIFF_BLOCK)
-    keep_mask = (np.arange(n_blocks * TS2DIFF_BLOCK) % TS2DIFF_BLOCK) < counts[keep]
-    flat_rel = rel.reshape(-1)[keep_mask]
-    flat_w = np.repeat(widths, counts)
-    payload = pack_bits(flat_rel, flat_w)
-    table = np.zeros(n_blocks * 9, dtype=np.uint8)
-    table.reshape(n_blocks, 9)[:, :8] = mins.astype("<i8").view(np.uint8).reshape(n_blocks, 8)
-    table.reshape(n_blocks, 9)[:, 8] = widths.astype(np.uint8)
-    return head + first + table.tobytes() + payload.tobytes()
-
-
-def ts2diff_decode(blob: bytes | np.ndarray) -> np.ndarray:
-    buf = np.frombuffer(blob, dtype=np.uint8)
-    n = int(buf[:4].view("<u4")[0])
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    first = int(buf[4:12].view("<i8")[0])
-    if n == 1:
-        return np.array([first], dtype=np.int64)
-    m = n - 1
-    n_blocks = (m + TS2DIFF_BLOCK - 1) // TS2DIFF_BLOCK
-    table = buf[12 : 12 + 9 * n_blocks].reshape(n_blocks, 9)
-    mins = np.ascontiguousarray(table[:, :8]).view("<i8").reshape(-1)
-    widths = table[:, 8].astype(np.int64)
-    counts = np.full(n_blocks, TS2DIFF_BLOCK, dtype=np.int64)
-    counts[-1] = m - TS2DIFF_BLOCK * (n_blocks - 1)
-    flat_w = np.repeat(widths, counts)
-    rel = unpack_bits(buf[12 + 9 * n_blocks :], flat_w)
-    deltas = rel.view(np.int64) + np.repeat(mins, counts)
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    np.cumsum(deltas, out=out[1:])
-    out[1:] += first
-    return out
 
 
 def _bitlen_u64(x: np.ndarray) -> np.ndarray:

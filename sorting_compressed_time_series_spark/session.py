@@ -11,6 +11,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at most 48 GB. A maximum heap above
+    the host's memory lets the driver JVM grow past it before collecting
+    garbage; the driver holds manifests, lineage and collected results."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(half_mb, 48 << 10)}m"
+
+
 def get_spark(
     app: str = "spark-tsrollup",
     cores: int | None = None,
@@ -33,7 +41,8 @@ def get_spark(
         # bigger Arrow batches amortize the Python worker round trip for the
         # vectorized codec kernels (whole-batch encode)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # token corpora are dense (≈4 B/token on disk): the 128 MB default

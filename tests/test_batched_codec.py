@@ -1,5 +1,6 @@
-"""Batched multi-series codec vs scalar chunk codec: byte-identical blobs,
-exact round trip, Arrow list-offset compatibility."""
+"""Batched multi-series codecs: golden bytes, row independence (a row of a
+batch is the one-row call's blob), exact round trip, Arrow list-offset
+compatibility, and the blob-header rules every decoder shares."""
 
 import hashlib
 
@@ -11,10 +12,13 @@ from sorting_compressed_time_series_spark.codecs import (
     CODEC_DELTA,
     CODEC_VARINT,
     decode_chunk,
+    delta_encode,
     encode_chunk,
+    varint_encode,
 )
 from sorting_compressed_time_series_spark.codecs.batched import decode_rows, encode_rows
 from sorting_compressed_time_series_spark.codecs.bytealigned import _BLOCK, _SMALL
+from sorting_compressed_time_series_spark.codecs.chunk import MAGIC, VERSION, serialize_bytealigned
 from sorting_compressed_time_series_spark.operators.ingest import _flush_batches
 from sorting_compressed_time_series_spark.sources.synth import _gen_batch
 
@@ -24,6 +28,15 @@ GOLDEN_DIGESTS = [
     "d45f60b97ba8f2b71afcb3c22c5a745a2fff560670bd850ff492bc7faba737b6",
     "342c1da4204fbed5ff069aaf2e1e882cfe64b94a130bfca6002a6141b792513a",
 ]
+# `test_bitpacked_golden`: sha256 of each codec's blobs and splits for
+# `_bitpacked_golden_rows`, recorded from the per-series encoders the
+# batched kernels replaced
+BITPACKED_GOLDEN_DIGESTS = {
+    3: "93b5de4e92124da6ef80a50fbd3758cb385a1482f898172dc69d398caf1f5bf5",  # DOD
+    4: "acd4c6540064a92a51b9225839cc9fb47d7bbbc7c276afedc9b12e78281f3332",  # GORILLA
+    5: "68a9ede4acd698ba46b6a0bab09a33548d1c2761d29f35b51f90d83cc31964fa",  # GORILLA_F64
+    6: "ae33dfb709b733d4dc71d5bebcf55fcd31443d2910ffe94b8fd646c4b06e5f03",  # TS2DIFF
+}
 
 
 def _random_rows(rng, n_rows, max_len=200, lo=-(10**4), hi=10**4):
@@ -74,7 +87,10 @@ def test_batched_matches_scalar_blobs(codec):
             buf, bsp = encode_rows(flat.astype(dt), splits, codec)
             for i, r in enumerate(rows):
                 blob = buf[bsp[i]:bsp[i + 1]].tobytes()
-                assert blob == encode_chunk(r, codec), f"row {i} blob mismatch ({dt.__name__})"
+                # the per-series serializer compaction writes pages with
+                series = (delta_encode if codec == CODEC_DELTA else varint_encode)(r)
+                assert blob == serialize_bytealigned(series, codec), (
+                    f"row {i} blob mismatch ({dt.__name__})")
                 assert np.array_equal(decode_chunk(blob), r)
             back, back_splits = decode_rows(buf, bsp)
             assert np.array_equal(back_splits, splits)
@@ -83,7 +99,7 @@ def test_batched_matches_scalar_blobs(codec):
 
 def test_flush_batch_planes_golden():
     """Pins the bytes `encode_rows` gives for a seeded flush batch. The
-    per-series reference above shares its plane kernels with `encode_rows`,
+    per-series serializer above shares its plane kernels with `encode_rows`,
     so it cannot catch a change to the payload bytes both would make."""
     ids = np.arange(300, dtype=np.uint64)
     (_, ts, vals, splits), = _flush_batches(iter([_gen_batch(ids, 5)]), 5)
@@ -169,7 +185,7 @@ def test_decode_rows_skips_empty_blobs():
 
 
 # ---------------------------------------------------------------------------
-# batched bit-packed kernels (DOD / Gorilla) vs scalar encoders
+# batched bit-packed kernels (DOD / Gorilla / TS_2DIFF)
 # ---------------------------------------------------------------------------
 
 from sorting_compressed_time_series_spark.codecs import (  # noqa: E402
@@ -219,6 +235,7 @@ def test_pack_bits_rows_roundtrip():
 
 
 def test_dod_rows_byte_identical_to_scalar():
+    """Row independence: each row of a batch is its one-row blob."""
     rng = np.random.default_rng(6)
     rows, flat, splits = _ts_rows(rng, 60)
     buf, bsp = dod_encode_rows(flat, splits)
@@ -229,6 +246,7 @@ def test_dod_rows_byte_identical_to_scalar():
 
 
 def test_gorilla_rows_byte_identical_to_scalar():
+    """Row independence: each row of a batch is its one-row blob."""
     rng = np.random.default_rng(7)
     # float64 values with runs of identical values (tag-0 path) and noise
     rows = []
@@ -261,6 +279,7 @@ def test_gorilla_longs_rows_roundtrip():
 
 
 def test_batched_decode_reads_scalar_bitpacked_blobs():
+    """One-row blobs, concatenated, decode as one batch."""
     rng = np.random.default_rng(9)
     rows, flat, splits = _ts_rows(rng, 20)
     blobs = [encode_chunk(r, CODEC_DOD) for r in rows]
@@ -272,6 +291,7 @@ def test_batched_decode_reads_scalar_bitpacked_blobs():
 
 
 def test_ts2diff_rows_byte_identical_to_scalar():
+    """Row independence: each row of a batch is its one-row blob."""
     rng = np.random.default_rng(10)
     rows, flat, splits = _ts_rows(rng, 60)
     buf, bsp = encode_chunk_rows(flat, splits, CODEC_TS2DIFF)
@@ -283,8 +303,9 @@ def test_ts2diff_rows_byte_identical_to_scalar():
 
 def test_ts2diff_rows_block_boundaries_and_negatives():
     """Block-edge row lengths (128k and 128k±1 deltas), negative and huge
-    deltas, constant rows (zero-width blocks) — byte-identical to scalar
-    and exact round trip, both directions of interop."""
+    deltas, constant rows (zero-width blocks): each row is its one-row
+    blob, the batch round-trips exactly, and so do the one-row blobs
+    concatenated."""
     rng = np.random.default_rng(11)
     rows = [
         np.arange(129, dtype=np.int64) * 7,                 # exactly 1 full block
@@ -303,7 +324,7 @@ def test_ts2diff_rows_block_boundaries_and_negatives():
         assert buf[bsp[i]:bsp[i + 1]].tobytes() == encode_chunk(r, CODEC_TS2DIFF)
     vals, vsp = decode_chunk_rows(buf, bsp)
     assert np.array_equal(vals, flat) and np.array_equal(vsp, splits)
-    # batched decode must also read scalar-encoded blobs
+    # the one-row blobs, concatenated, decode as one batch
     blobs = [encode_chunk(r, CODEC_TS2DIFF) for r in rows]
     cat = np.frombuffer(b"".join(blobs), np.uint8)
     bsp2 = np.zeros(len(blobs) + 1, np.int64)
@@ -358,3 +379,95 @@ def test_blob_plane_past_int32_offsets_flushes_as_row_slices(monkeypatch):
     monkeypatch.setattr(ingest, "BINARY_MAX_BYTES", largest)
     again = list(ingest.flush_kernel_batches(iter([batch])))
     assert len(again) == 1 and again[0].select(cols).equals(out.select(cols))
+
+
+F64_MAX = np.finfo(np.float64).max
+
+
+def _bitpacked_golden_rows(f64):
+    """Rows of 0/1/2 points; 128, 129 and 130 deltas (TS_2DIFF block
+    edges); int64 extremes; runs of equal values (xor == 0, dod == 0);
+    random 64-bit patterns and x, ~x pairs (64-bit Gorilla windows); and
+    for floats, +-max, -0.0 and the smallest normal."""
+    rng = np.random.default_rng(20)
+    if f64:
+        walk = np.cumsum(rng.normal(0, 1, 300))
+        runs = np.round(rng.normal(100.0, 4.0, 200), 2)
+        runs[::3] = runs[0]
+        return [np.empty(0), np.array([1.5]), np.array([2.25, -0.5]),
+                np.full(40, 123.456), walk, runs,
+                np.array([F64_MAX, -F64_MAX, 0.0, -0.0,
+                          np.finfo(np.float64).tiny, -0.0, F64_MAX])]
+
+    def ts(n):
+        return 1_600_000_000_000_000 + np.cumsum(rng.integers(0, 5_000, n))
+
+    alt = rng.integers(0, 2**63, 64, dtype=np.int64)
+    return [np.empty(0, np.int64), np.array([7]), np.array([3, -2]),
+            np.arange(129) * 7, ts(130), ts(131),
+            np.array([I64.min, I64.max, -1, 0, I64.max, I64.min, I64.min]),
+            np.full(50, -42), np.repeat(ts(20), 5),
+            np.column_stack([alt, ~alt]).ravel(),
+            rng.integers(I64.min, I64.max, 300, endpoint=True), ts(400)]
+
+
+def _concat(rows):
+    splits = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum([len(r) for r in rows], out=splits[1:])
+    return np.concatenate(rows), splits
+
+
+@pytest.mark.parametrize("codec", [CODEC_DOD, CODEC_GORILLA, CODEC_GORILLA_F64, CODEC_TS2DIFF])
+def test_bitpacked_golden(codec):
+    """Pins the bit-packed formats byte for byte: the batched kernels are
+    the only implementation, so row-independence checks alone would not
+    see a change to the bytes every row makes."""
+    rows = _bitpacked_golden_rows(codec == CODEC_GORILLA_F64)
+    flat, splits = _concat(rows)
+    buf, bsp = encode_chunk_rows(flat, splits, codec)
+    assert hashlib.sha256(buf.tobytes() + bsp.tobytes()).hexdigest() == (
+        BITPACKED_GOLDEN_DIGESTS[codec])
+    vals, vsp = decode_chunk_rows(buf, bsp)
+    assert vals.tobytes() == flat.tobytes() and np.array_equal(vsp, splits)
+
+
+def _blob_batch(blobs):
+    bsp = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=bsp[1:])
+    return np.frombuffer(b"".join(blobs), np.uint8), bsp
+
+
+@pytest.mark.parametrize("codec", [CODEC_DELTA, CODEC_VARINT, CODEC_DOD,
+                                   CODEC_GORILLA, CODEC_GORILLA_F64, CODEC_TS2DIFF])
+def test_empty_blob_rows_decode_to_no_points(codec):
+    """A zero-length row, between two rows or last, decodes to zero points
+    in every codec (the flush table's partial rows carry empty blobs)."""
+    a, b = np.array([10, 20, 30, 40, 50]), np.array([-3, 7, 7])
+    if codec == CODEC_GORILLA_F64:
+        a, b = a / 3, b / 3
+    buf, bsp = _blob_batch([encode_chunk(a, codec), b"", encode_chunk(b, codec), b""])
+    vals, vsp = decode_chunk_rows(buf, bsp)
+    assert vals.tobytes() == np.concatenate([a, b]).tobytes()
+    assert vsp.tolist() == [0, 5, 5, 8, 8]
+
+
+def test_mixed_codec_batch_is_refused():
+    """A batch decodes with one codec, so blobs of two are refused, naming
+    both, instead of decoding one row with the other's codec."""
+    v = np.array([10, 20, 30, 40, 50])
+    for second, found in ((CODEC_VARINT, r"\[1, 2\]"), (CODEC_DOD, r"\[1, 3\]")):
+        buf, bsp = _blob_batch([encode_chunk(v, CODEC_DELTA), encode_chunk(v, second)])
+        for decode in (decode_chunk_rows, decode_rows):
+            with pytest.raises(ValueError, match=rf"codecs {found}"):
+                decode(buf, bsp)
+
+
+@pytest.mark.parametrize("pos, byte", [(0, ord("X")), (1, ord("X")), (2, VERSION + 1)])
+def test_bad_magic_or_version_is_refused(pos, byte):
+    v = np.array([10, 20, 30, 40, 50])
+    bad = bytearray(encode_chunk(v, CODEC_DOD))
+    bad[pos] = byte
+    assert bytes(bad[:3]) != MAGIC + bytes([VERSION])
+    buf, bsp = _blob_batch([encode_chunk(v, CODEC_DOD), bytes(bad)])
+    with pytest.raises(ValueError, match="bad chunk blob header"):
+        decode_chunk_rows(buf, bsp)

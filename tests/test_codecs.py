@@ -17,6 +17,8 @@ from sorting_compressed_time_series_spark.codecs import (
     CODEC_DELTA,
     CODEC_DOD,
     CODEC_GORILLA,
+    CODEC_GORILLA_F64,
+    CODEC_TS2DIFF,
     CODEC_VARINT,
     decode_chunk,
     encode_chunk,
@@ -24,12 +26,6 @@ from sorting_compressed_time_series_spark.codecs import (
 from sorting_compressed_time_series_spark.codecs.bitpacked import (
     _clz64,
     _ctz64,
-    dod_decode,
-    dod_encode,
-    gorilla_decode_doubles,
-    gorilla_decode_longs,
-    gorilla_encode_doubles,
-    gorilla_encode_longs,
     pack_bits,
     unpack_bits,
 )
@@ -48,8 +44,6 @@ from sorting_compressed_time_series_spark.codecs.bytealigned import (
     zigzag,
     unzigzag,
 )
-from sorting_compressed_time_series_spark.codecs.chunk import CODEC_GORILLA_F64
-
 RNG = np.random.default_rng(42)
 
 
@@ -199,28 +193,29 @@ def test_dod_roundtrip(n):
         _nearly_sorted(max(n, 1), rng)[:n],
         rng.integers(-(10**9), 10**9, size=n).astype(np.int64),
     ):
-        assert np.array_equal(dod_decode(dod_encode(v)), v)
+        assert np.array_equal(decode_chunk(encode_chunk(v, CODEC_DOD)), v)
 
 
 def test_dod_compresses_sorted():
     rng = np.random.default_rng(17)
     # constant-step timestamps: dod == 0 -> ~3 bits/elem (tag plane only)
     v = np.arange(0, 10_000 * 50, 50, dtype=np.int64)
-    blob = dod_encode(v)
-    assert len(blob) < 10_000 * 0.5 + 16
+    blob = encode_chunk(v, CODEC_DOD)
+    assert len(blob) - 4 < 10_000 * 0.5 + 16  # body, past the container header
 
 
 def test_dod_extreme_values():
     v = np.array([0, 2**62, -(2**62), 1, -1, np.iinfo(np.int64).max,
                   np.iinfo(np.int64).min], dtype=np.int64)
-    assert np.array_equal(dod_decode(dod_encode(v)), v)
+    assert np.array_equal(decode_chunk(encode_chunk(v, CODEC_DOD)), v)
 
 
 @pytest.mark.parametrize("n", [0, 1, 2, 20, 1000, 100_000])
 def test_gorilla_longs_roundtrip(n):
     rng = np.random.default_rng(n + 23)
     x = rng.integers(0, 2**64, size=n, dtype=np.uint64)
-    assert np.array_equal(gorilla_decode_longs(gorilla_encode_longs(x)), x)
+    back = decode_chunk(encode_chunk(x.view(np.int64), CODEC_GORILLA))
+    assert np.array_equal(back.view(np.uint64), x)
 
 
 def test_gorilla_near_2pow64_xor():
@@ -229,20 +224,16 @@ def test_gorilla_near_2pow64_xor():
     silently corrupt the stream — e.g. [5, -6, 7, 123] decoded to [5,5,5,5].
     """
     v = np.array([5, -6, 7, 123], dtype=np.int64)
-    back = gorilla_decode_longs(gorilla_encode_longs(v.view(np.uint64)))
-    assert np.array_equal(back.view(np.int64), v)
+    assert np.array_equal(decode_chunk(encode_chunk(v, CODEC_GORILLA)), v)
     # alternating x / ~x: every XOR is all-ones (2^64-1)
     rng = np.random.default_rng(41)
     a = rng.integers(0, 2**63, size=500, dtype=np.int64)
     inter = np.empty(1000, dtype=np.int64)
     inter[0::2] = a
     inter[1::2] = ~a
-    back = gorilla_decode_longs(gorilla_encode_longs(inter.view(np.uint64)))
-    assert np.array_equal(back.view(np.int64), inter)
+    assert np.array_equal(decode_chunk(encode_chunk(inter, CODEC_GORILLA)), inter)
     # exhaustive _clz64 sweep across every power-of-two boundary ±2 and the
     # whole rounds-to-2^64 tail, vs int.bit_length
-    from sorting_compressed_time_series_spark.codecs.bitpacked import _clz64
-
     vals = sorted(
         {(1 << k) + d for k in range(1, 64) for d in (-2, -1, 0, 1, 2)}
         | {(1 << 64) - 1 - d for d in range(1200)}
@@ -257,18 +248,18 @@ def test_gorilla_doubles_walk():
     # FIXTURES.md: gorilla-friendly random walk, exact bit equality
     rng = np.random.default_rng(29)
     v = np.cumsum(rng.normal(0, 1, size=50_000))
-    blob = gorilla_encode_doubles(v)
-    back = gorilla_decode_doubles(blob)
+    blob = encode_chunk(v, CODEC_GORILLA_F64)
+    back = decode_chunk(blob)
     assert np.array_equal(back.view(np.uint64), v.view(np.uint64))
-    # XOR of a smooth walk must beat raw 8B/elem
-    assert len(blob) < 8 * 50_000
+    # XOR of a smooth walk must beat raw 8B/elem (body, past the header)
+    assert len(blob) - 4 < 8 * 50_000
 
 
 def test_gorilla_repeats():
     v = np.array([1.5] * 1000)
-    blob = gorilla_encode_doubles(v)
-    assert np.array_equal(gorilla_decode_doubles(blob), v)
-    assert len(blob) < 300  # repeated values -> tag plane only
+    blob = encode_chunk(v, CODEC_GORILLA_F64)
+    assert np.array_equal(decode_chunk(blob), v)
+    assert len(blob) - 4 < 300  # repeated values -> tag plane only
 
 
 @pytest.mark.parametrize("codec", [CODEC_DELTA, CODEC_VARINT, CODEC_DOD, CODEC_GORILLA])
@@ -282,7 +273,7 @@ def test_chunk_container_int(codec):
 @pytest.mark.parametrize("codec", [7, 8, 99])
 def test_chunk_container_refuses_unknown_codec_ids(codec):
     """Ids with no codec, the retired 7 and 8 among them, are refused by the
-    per-series and the batched forms alike."""
+    one-row and the batched calls alike."""
     from sorting_compressed_time_series_spark.codecs.batched import (
         decode_chunk_rows,
         encode_chunk_rows,
@@ -307,12 +298,6 @@ def test_chunk_container_f64():
     assert np.array_equal(decode_chunk(blob), v)
 
 
-from sorting_compressed_time_series_spark.codecs.bitpacked import (
-    ts2diff_decode,
-    ts2diff_encode,
-)
-
-
 @pytest.mark.parametrize("n", [0, 1, 2, 127, 128, 129, 1000, 100_000])
 def test_ts2diff_roundtrip(n):
     rng = np.random.default_rng(n + 41)
@@ -321,15 +306,15 @@ def test_ts2diff_roundtrip(n):
         rng.integers(-(10**9), 10**9, size=n).astype(np.int64),
         np.arange(n, dtype=np.int64) * 50,
     ):
-        assert np.array_equal(ts2diff_decode(ts2diff_encode(v)), v), n
+        assert np.array_equal(decode_chunk(encode_chunk(v, CODEC_TS2DIFF)), v), n
 
 
 def test_ts2diff_extremes():
     v = np.array([0, 2**62, -(2**62), 5, 5, 5], dtype=np.int64)
-    assert np.array_equal(ts2diff_decode(ts2diff_encode(v)), v)
+    assert np.array_equal(decode_chunk(encode_chunk(v, CODEC_TS2DIFF)), v)
 
 
 def test_ts2diff_compresses_regular():
     v = np.arange(100_000, dtype=np.int64) * 1000
-    blob = ts2diff_encode(v)
-    assert len(blob) < 100_000 * 0.2  # constant deltas -> ~9B per block
+    blob = encode_chunk(v, CODEC_TS2DIFF)
+    assert len(blob) - 4 < 100_000 * 0.2  # constant deltas -> ~9B per block

@@ -23,13 +23,12 @@ import pyarrow as pa
 import pytest
 
 from sorting_compressed_time_series_spark.codecs.bytealigned import varint_encode
+from sorting_compressed_time_series_spark.codecs import decode_chunk, encode_chunk
 from sorting_compressed_time_series_spark.codecs.chunk import (
     CODEC_DELTA,
     CODEC_VARINT,
     _body,
-    decode_chunk,
     deserialize_bytealigned,
-    encode_chunk,
     serialize_bytealigned,
 )
 from sorting_compressed_time_series_spark.operators.compaction import (

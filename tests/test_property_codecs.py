@@ -18,7 +18,7 @@ from sorting_compressed_time_series_spark.codecs.bytealigned import (
     varint_decode,
     varint_encode,
 )
-from sorting_compressed_time_series_spark.codecs.chunk import (
+from sorting_compressed_time_series_spark.codecs import (
     CODEC_DELTA,
     CODEC_DOD,
     CODEC_TS2DIFF,
@@ -66,6 +66,7 @@ def _pack(rows):
                                               CODEC_DOD, CODEC_TS2DIFF]))
 @SETTINGS
 def test_batched_chunk_rows_roundtrip_and_scalar_parity(rows, codec):
+    """Row independence: each row of a batch is its one-row blob."""
     flat, splits = _pack(rows)
     buf, bsp = encode_chunk_rows(flat, splits, codec)
     for i, r in enumerate(rows):
