@@ -271,14 +271,17 @@ def decode_rows(
 def _row_pads(
     widths: np.ndarray, row_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The pad element of every row: where it goes (the row's end), its
-    width (the bits that fill the row's last byte), and each row's padded
-    length in bytes."""
+    """Each row's pad elements (at its end; one, or whole elements of a plane's
+    one power-of-two width, to keep ``pack_bits``' fixed-width path), their
+    widths (filling the row's last byte), and each row's padded bytes."""
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
     cw = _splits(widths)
     row_bits = cw[splits[1:]] - cw[splits[:-1]]
-    pad_w = (-row_bits) % 8
-    return splits[1:], pad_w, (row_bits + pad_w) >> 3
+    pad_w, w = (-row_bits) % 8, int(widths[0]) if len(widths) else 0
+    at, row_bytes = splits[1:], (row_bits + pad_w) >> 3
+    if w in (1, 2, 4, 8, 16, 32, 64) and (widths == w).all():
+        at, pad_w = np.repeat(at, pad_w // w), np.full(int((pad_w // w).sum()), w)
+    return at, pad_w, row_bytes
 
 
 def pack_bits_rows(

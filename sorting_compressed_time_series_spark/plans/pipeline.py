@@ -22,7 +22,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.compaction import COMPACT_ORDER, compact_kernel
 from ..operators.ingest import CHUNK_ARROW, flush_kernel_batches, flush_rollup_kernel
@@ -35,8 +35,8 @@ from ..operators.rollup import (
     WINDOW_1M_US,
     tiers_kernel,
 )
-from ..sources.file_input import arrow_schema, split_reader, task_ids, task_splits
-from ..sources.warehouse import Kernel, Warehouse, bucket_ids, bucket_reader
+from ..sources.file_input import arrow_schema, split_reader, task_splits
+from ..sources.warehouse import Kernel, Warehouse, bucket_reader, task_ids
 
 
 @dataclass
@@ -80,9 +80,9 @@ def _promoted_rows(kern, lo: list[int], hi: list[int], dirty: list[str]):
 
 def _python_worker_memory(spark: SparkSession) -> int:
     """Bytes a Python worker may hold before Spark's own Python aggregation
-    spills (``spark.python.worker.memory``, default 512m). Reads the one
-    key from the session conf; ``sparkContext.getConf()`` would copy the
-    whole SparkConf over py4j first."""
+    spills (``spark.python.worker.memory``, default 512m), and so what a
+    ``bucket_reader`` task may hold. Reads the one key from the session
+    conf; ``sparkContext.getConf()`` would copy the whole SparkConf first."""
     from pyspark.rdd import _parse_memory
 
     return _parse_memory(spark.conf.get("spark.python.worker.memory", "512m")) << 20
@@ -134,42 +134,20 @@ class Pipeline:
         spec = self.warehouse.manifest("chunks_tier0").get("bucket_spec")
         return tuple(spec) if spec else None
 
-    def _doc_buckets(self) -> dict[int, list[str]] | None:
-        """The chunk table's files by doc_id bucket (snapshot and segments),
-        for a whole-bucket stage's tasks to read one bucket each:
-        ``Warehouse.bucket_files``, or None when a bucket's uncompressed
-        bytes pass ``spark.python.worker.memory``."""
-        wh = self.warehouse
-        buckets = wh.bucket_files("chunks_tier0")
-        budget = _python_worker_memory(self.spark)
-        if buckets is None or any(wh.uncompressed_bytes(fs) > budget
-                                  for fs in buckets.values()):
-            return None
-        return buckets
-
     def _bucket_stage(self, columns: tuple[str, ...], filters: list[list[tuple]],
-                      sort_by: tuple[str, ...]) -> tuple[DataFrame, Kernel | None]:
+                      sort_by: tuple[str, ...]) -> tuple[DataFrame, Kernel]:
         """``(src, read)`` of a stage in which every task holds whole docs
         of the chunk table — ``columns`` of the rows matching ``filters``
         (pyarrow's OR of ANDs), sorted by ``sort_by`` — for
         ``KernelWriter.frame(src, kern, read)``. Task ``b`` reads bucket
-        ``b``'s files itself (``bucket_ids`` → ``bucket_reader``: no scan,
-        no exchange in the JVM). When the table does not map to buckets
-        (``_doc_buckets``), the rows are read as a frame and
-        ``repartition(n, "doc_id")``: Spark's hash partitioning is the
-        bucket rule, so task ``p`` then holds exactly bucket ``p``."""
-        buckets = self._doc_buckets()
-        if buckets is not None:
-            batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-            return bucket_ids(self.spark, len(buckets)), bucket_reader(
-                buckets, columns, filters=filters, sort_by=sort_by, batch_rows=batch_rows)
-        ops = {"=": Column.__eq__, ">=": Column.__ge__, "in": Column.isin}
-        keep = functools.reduce(Column.__or__, [
-            functools.reduce(Column.__and__, [ops[op](F.col(c), v) for c, op, v in conj])
-            for conj in filters])
-        n = (self._table_buckets() or self._bucket_by())[1]
-        chunks = self.warehouse.read(self.spark, "chunks_tier0").filter(keep).select(*columns)
-        return chunks.repartition(n, "doc_id").sortWithinPartitions(*sort_by), None
+        ``b``'s files itself (``bucket_reader``: no scan, no exchange in the
+        JVM) within ``spark.python.worker.memory``. A table whose files do
+        not all name a bucket (``Warehouse.bucket_files``) is refused here."""
+        buckets = self.warehouse.bucket_files("chunks_tier0")
+        batch_rows = int(self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        return task_ids(self.spark, len(buckets)), bucket_reader(
+            buckets, columns, filters=filters, sort_by=sort_by, batch_rows=batch_rows,
+            memory=_python_worker_memory(self.spark))
 
     def _input_stage(self, tokens_df: DataFrame,
                      bucket_by: tuple[str, int] | None) -> tuple[DataFrame, Kernel | None]:
@@ -308,9 +286,8 @@ class Pipeline:
         with its own watermark.
 
         The kernel's tasks read the chunk files themselves, one bucket each
-        (``_bucket_stage``: snapshot and segments alike, no scan or
-        exchange in the JVM), unless the table does not map to buckets.
-        ``D`` is read on the driver from the pending segments' files.
+        (``_bucket_stage``, no scan or exchange in the JVM); ``D`` is read
+        on the driver from the pending segments' files.
 
         Returns a per-tier summary; with ``collect_stats`` it includes the
         kept and recomputed row counts (an extra count job — tests only)."""
@@ -365,7 +342,7 @@ class Pipeline:
         filters = ([[tier0]] if lo_min is None
                    else [[tier0, ("max_ts", ">=", lo_min)]]
                    + ([[tier0, ("doc_id", "in", dirty)]] if dirty else []))
-        src, read = self._bucket_stage(ROLLUP_INPUT, filters, DOC_ORDER)
+        src, read = self._bucket_stage((*ROLLUP_INPUT, "count"), filters, DOC_ORDER)
         kern = tiers_kernel([spec.window_us for spec in self.tiers])
         files = wh.kernel_writer(list(work.values()), TIER_PARTIAL_ARROW, slice_col="tier")
         never = np.iinfo(np.int64).min  # a full tier's lo; a noop tier's hi
@@ -413,8 +390,7 @@ class Pipeline:
             raise ValueError("promote_all() before compact(): pending appends")
         src, read = self._bucket_stage(tuple(CHUNK_ARROW.names), [[("tier", "=", 0)]],
                                        COMPACT_ORDER)
-        files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW,
-                                 bucket_by=self._table_buckets() or self._bucket_by())
+        files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW, bucket_by=self._table_buckets())
         merged = wh.write(files.frame(src, compact_kernel, read), "chunks_tier0",
                           op=lambda n: f"compact:{n}" if n else None, files=files)
         return {"compacted_docs": merged}

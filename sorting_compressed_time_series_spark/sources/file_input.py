@@ -3,7 +3,7 @@
 When a frame is exactly a scan of local parquet files, a kernel job need
 not scan it in the JVM and ship its rows to Python as Arrow: each task
 reads its share of the files with pyarrow (``split_reader``) over a
-``spark.range`` of task ids (``task_ids``). ``task_splits`` decides
+``spark.range`` of task ids (``warehouse.task_ids``). ``task_splits`` decides
 whether a frame qualifies and cuts the files into tasks by Spark's own
 split rule, so a task holds the rows it would have held in the scan.
 """
@@ -17,13 +17,11 @@ from urllib.parse import unquote, urlparse
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType
 
 from ..functions.hashing import spark_hash
-from .warehouse import _BUCKET, Kernel
-
-_TASK = "_task"  # the input column carrying a task's id
+from .warehouse import _BUCKET, _TASK, Kernel
 
 # a task's input: (file path, row group indexes) read in this order
 Split = list[tuple[str, list[int]]]
@@ -143,12 +141,6 @@ def arrow_schema(df: DataFrame) -> pa.Schema:
 
     large = df.sparkSession.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false")
     return to_arrow_schema(df.schema, prefers_large_types=large == "true")
-
-
-def task_ids(spark: SparkSession, n: int) -> DataFrame:
-    """The input of a job whose tasks read their own files: the ids
-    ``0..n-1`` in ``_TASK``, task ``t`` holding id ``t`` alone."""
-    return spark.range(n, numPartitions=n).withColumnRenamed("id", _TASK)
 
 
 def split_reader(splits: list[Split], schema: pa.Schema, *, batch_rows: int,

@@ -67,9 +67,12 @@ FILES_SCHEMA = ("task int, slice int, p_day bigint, bucket int, path string, row
                 + ", ".join(f"{t} double" for t in TASK_TIMERS)
                 + ", kernel_n bigint, run_keys binary")
 _BUCKET = "_bucket"  # the input column carrying Spark's bucket id
+_TASK = "_task"  # the input column carrying a task's id
 # Spark's rule for the bucket id of a data file (``BucketingUtils.getBucketId``):
 # the digits after the last ``_`` of the name, before its extension
 _BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?")
+HELD_PER_BYTE = 20  # a bucket task's peak RSS per footer byte of a pass (README)
+DECODED_BYTES_PER_POINT = 64  # the rollup kernel's peak RSS per point of a batch
 
 
 def p_day_of(window_start: np.ndarray) -> np.ndarray:
@@ -202,11 +205,10 @@ class _InputBuckets:
     """The rule that puts a bucketed write's output rows in buckets, from
     the ``_BUCKET`` ids of the task's input as the kernel reads it (after
     ``read``). While every input row so far lies in one bucket (a
-    whole-bucket stage's task reads one bucket; a ``repartition(n, col)``
-    task holds one bucket), every output row is in that bucket, whatever
-    the kernel emits. Otherwise the kernel must emit one row per row of the input batch it
-    read last, in order, in one or more batches (the flush), and each row
-    is in its input row's bucket."""
+    whole-bucket stage's task reads one bucket), every output row is in
+    that bucket, whatever the kernel emits. Otherwise the kernel must emit
+    one row per row of the input batch it read last, in order, in one or
+    more batches (the flush), and each row is in its input row's bucket."""
 
     def __init__(self):
         self.one, self.mixed, self.last, self.used = None, False, None, 0
@@ -239,42 +241,82 @@ class _InputBuckets:
                          "one output row per input row")
 
 
-def bucket_ids(spark: SparkSession, n: int) -> DataFrame:
-    """The input of a whole-bucket stage: the bucket ids ``0..n-1`` in
-    ``_BUCKET``, task ``b`` holding id ``b`` alone."""
-    return spark.range(n, numPartitions=n).withColumnRenamed("id", _BUCKET)
+def task_ids(spark: SparkSession, n: int) -> DataFrame:
+    """The input of a job whose tasks read their own files: the ids
+    ``0..n-1`` in ``_TASK``, task ``t`` holding id ``t`` alone."""
+    return spark.range(n, numPartitions=n).withColumnRenamed("id", _TASK)
 
 
 def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
                   filters: list[list[tuple]], sort_by: tuple[str, ...],
-                  batch_rows: int) -> Kernel:
-    """The input of a task that reads its own buckets (``Warehouse.
-    bucket_files``): for each id in the task's input (``bucket_ids``), the
-    bucket's files read with pyarrow — only ``columns``, only the rows
-    matching ``filters`` (pyarrow's disjunctive normal form: OR of ANDs) —
-    sorted by ``sort_by`` and cut into batches of ``batch_rows`` (none if
-    ≤ 0, as Spark's ``maxRecordsPerBatch``), each row tagged with its
-    bucket in ``_BUCKET``. The sort is stable, so rows that tie keep the
-    files' order. One bucket is in memory at a time."""
+                  batch_rows: int, memory: int) -> Kernel:
+    """Task ``b``'s input (``task_ids``): bucket ``b``'s chunk rows matching
+    ``filters`` (pyarrow's OR of ANDs), ``columns`` (with ``count``) only,
+    stably sorted by ``sort_by`` (led by ``doc_id``), tagged ``_BUCKET``, in
+    the passes of ``_doc_passes`` under ``budget = memory // HELD_PER_BYTE``.
+    A batch is its own ``take`` of ≤ ``batch_rows`` rows (if > 0) and, but
+    for one row, ≤ ``budget // DECODED_BYTES_PER_POINT`` points."""
+    budget = memory // HELD_PER_BYTE
 
     def read(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         for batch in ids:
-            for b in batch.column(_BUCKET).to_numpy():
-                paths = buckets[int(b)]
-                if not paths:
-                    continue
-                # one thread: the job's tasks already keep every core busy
-                # (pyarrow's own pool measured slower at 4 tasks on 4 cores)
-                table = pq.read_table(paths, columns=list(columns), filters=filters,
-                                      use_threads=False)
-                table = table.sort_by([(c, "ascending") for c in sort_by])
-                for rows in table.to_batches(batch_rows if batch_rows > 0 else None):
-                    yield rows.append_column(
-                        _BUCKET, pa.array(np.full(rows.num_rows, b, np.int32)))
+            for b in batch.column(_TASK).to_numpy():
+                for where in _doc_passes(buckets[int(b)], columns, filters, budget):
+                    # one thread: the job's tasks already keep every core busy
+                    # (pyarrow's own pool measured slower at 4 tasks on 4 cores)
+                    table = pq.read_table(buckets[int(b)], columns=list(columns),
+                                          filters=where, use_threads=False).combine_chunks()
+                    order = pc.sort_indices(table, [(c, "ascending") for c in sort_by])
+                    cum = np.cumsum(table["count"].to_numpy()[order.to_numpy()])
+                    for lo, hi in _runs(cum, budget // DECODED_BYTES_PER_POINT,
+                                        batch_rows if batch_rows > 0 else len(cum)):
+                        rows = table.take(order[lo:hi]).to_batches()[0]
+                        yield rows.append_column(
+                            _BUCKET, pa.array(np.full(rows.num_rows, b, np.int32)))
+                    table = None  # before the next pass's read
 
     return read
+
+
+def _runs(cum: np.ndarray, cap: float, most: int) -> list[tuple[int, int]]:
+    """``(lo, hi)`` of consecutive runs of 1 to ``most`` of the items whose
+    running total is ``cum``, each within ``cap`` or of one item."""
+    runs, lo = [], 0
+    while lo < len(cum):
+        hi = int(np.searchsorted(cum, (cum[lo - 1] if lo else 0) + cap, "right"))
+        runs.append((lo, min(max(hi, lo + 1), lo + most)))
+        lo = runs[-1][1]
+    return runs
+
+
+def _doc_passes(paths: list[str], columns: tuple[str, ...], filters: list[list[tuple]],
+                budget: int) -> list:
+    """``bucket_reader``'s pass filters over one bucket: ``[filters]`` if its
+    footers' uncompressed bytes of ``columns`` fit ``budget``; else, per
+    contiguous range of sorted ``doc_id`` whose points × bytes per point
+    fit it (or one doc), ``filters`` in the range; last, the null id."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    mds = [pq.read_metadata(path) for path in paths]
+    nbytes = sum(md.row_group(g).column(j).total_uncompressed_size for md in mds
+                 for g in range(md.num_row_groups) for j in range(md.num_columns)
+                 if md.schema.column(j).path in columns)
+    if nbytes <= budget:
+        return [filters] if paths else []
+    keys = {c for conj in filters for c, _, _ in conj} | {"doc_id", "count"}
+    rows = pq.read_table(paths, columns=sorted(keys), use_threads=False)
+    per_point = nbytes / max(pc.sum(rows["count"]).as_py() or 0, 1)
+    where = pq.filters_to_expression(filters)
+    docs = rows.filter(where).group_by("doc_id").aggregate([("count", "sum")]).sort_by("doc_id")
+    ids, doc = docs["doc_id"], pc.field("doc_id")
+    n = len(ids) - ids.null_count
+    cum = np.cumsum(docs["count_sum"].to_numpy(zero_copy_only=False)[:n] * per_point)
+    return ([where & (doc >= ids[lo].as_py()) & (doc <= ids[hi - 1].as_py())
+             for lo, hi in _runs(cum, budget, n)] + [where & doc.is_null()] * (n < len(ids)))
 
 
 def _timed(it: Iterator, clock: np.ndarray, slot) -> Iterator:
@@ -663,17 +705,17 @@ class Warehouse:
         """Append-only commit: land the new rows as an extra SEGMENT dir and
         add it to the manifest — the existing snapshot is untouched (no
         table rewrite; Iceberg's append = manifest-add is exactly this).
-        ``df``, ``files`` and ``lineage`` as in ``write``; a bucketed
-        segment takes the table's buckets (``bucket_spec``), so
-        ``bucket_files`` still maps the table. The segment is also
-        recorded under ``pending_appends`` so the next promotion can MERGE
-        just the affected keys instead of recomputing every tier. A crash before the manifest swap leaves an
+        ``df``, ``files`` and ``lineage`` as in ``write``; the segment's
+        bucket spec must be the table's, so ``bucket_files`` still maps
+        the table. The segment is also recorded under ``pending_appends``
+        so the next promotion can MERGE just the affected keys instead of
+        recomputing every tier. A crash before the manifest swap leaves an
         orphan dir the manifest never names; the rerun overwrites it."""
         t0 = time.perf_counter()
         m = self.manifest(table)
         if m["snapshot"] is None:
             raise FileNotFoundError(f"table {table} has no base snapshot to append to")
-        if files.bucket_by is not None and list(files.bucket_by) != m.get("bucket_spec"):
+        if (list(files.bucket_by) if files.bucket_by else None) != m.get("bucket_spec"):
             raise ValueError(f"segment buckets {files.bucket_by} are not the table's "
                              f"{m.get('bucket_spec')}")
         seg = f"seg-{m['version'] + 1}"
@@ -738,37 +780,24 @@ class Warehouse:
         return not (os.path.isdir(path)
                     and any(not e.startswith("_") for e in os.listdir(path)))
 
-    def bucket_files(self, table: str) -> dict[int, list[str]] | None:
+    def bucket_files(self, table: str) -> dict[int, list[str]]:
         """``{bucket: [absolute file path]}`` of the live snapshot and
         segments — snapshot files first, then each segment's in commit
         order — every bucket id of the table's spec present: all rows with
-        one value of the bucket column lie in one bucket's files. None
-        unless the table has a ``bucket_spec`` and every data file names
-        its bucket by Spark's rule (``_BUCKET_ID``), as the kernel writer's
-        ``_<bucket:05d>`` suffix does."""
+        one value of the bucket column lie in one bucket's files, each
+        named by Spark's rule (``_BUCKET_ID``), else ``ValueError``."""
         m = self.manifest(table)
+        if m["snapshot"] is None:
+            raise FileNotFoundError(f"table {table} has no committed snapshot")
         spec = m.get("bucket_spec")
-        if not spec or m["snapshot"] is None:
-            return None
-        n = spec[1]
+        n = spec[1] if spec else 0
         out: dict[int, list[str]] = {b: [] for b in range(n)}
         for path in self._data_files(table, m):
             hit = _BUCKET_ID.fullmatch(os.path.basename(path))
             if hit is None or int(hit.group(1)) >= n:
-                return None
+                raise ValueError(f"{path} names no bucket of {table}'s spec {spec}")
             out[int(hit.group(1))].append(os.path.abspath(path))
         return out
-
-    @staticmethod
-    def uncompressed_bytes(files: list[str]) -> int:
-        """Uncompressed bytes of ``files``' row groups, from their footers."""
-        import pyarrow.parquet as pq
-
-        total = 0
-        for path in files:
-            md = pq.read_metadata(path)
-            total += sum(md.row_group(g).total_byte_size for g in range(md.num_row_groups))
-        return total
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """The live table as plain parquet: the snapshot and segments, with

@@ -1,3 +1,4 @@
+import pyarrow.parquet as pq
 import pytest
 
 
@@ -18,3 +19,30 @@ def small_batches(spark):
     spark.conf.set(key, "2")
     yield
     spark.conf.set(key, prev)
+
+
+@pytest.fixture
+def passes_memory():
+    """``f(warehouse, columns)``: a ``spark.python.worker.memory`` under
+    which ``bucket_reader`` reads every bucket of the chunk table's tier-0
+    rows (``columns`` of them) in at least 3 doc-range passes."""
+    from sorting_compressed_time_series_spark.sources.warehouse import (
+        HELD_PER_BYTE,
+        _doc_passes,
+    )
+
+    def memory(wh, columns: tuple[str, ...], passes: int = 3) -> int:
+        buckets = wh.bucket_files("chunks_tier0")
+
+        def nbytes(paths):
+            mds = [pq.read_metadata(f) for f in paths]
+            return sum(md.row_group(g).column(j).total_uncompressed_size for md in mds
+                       for g in range(md.num_row_groups) for j in range(md.num_columns)
+                       if md.schema.column(j).path in columns)
+
+        out = HELD_PER_BYTE * min(map(nbytes, buckets.values())) // (passes + 2)
+        assert all(len(_doc_passes(fs, columns, [[("tier", "=", 0)]], out // HELD_PER_BYTE))
+                   >= passes for fs in buckets.values())
+        return out
+
+    return memory

@@ -194,6 +194,7 @@ from sorting_compressed_time_series_spark.codecs import (  # noqa: E402
     CODEC_GORILLA_F64,
     CODEC_TS2DIFF,
 )
+from sorting_compressed_time_series_spark.codecs import bitpacked  # noqa: E402
 from sorting_compressed_time_series_spark.codecs.batched import (  # noqa: E402
     decode_chunk_rows,
     dod_decode_rows,
@@ -232,6 +233,33 @@ def test_pack_bits_rows_roundtrip():
     assert int(bsp[-1]) == len(buf)
     got = unpack_bits_rows(buf, widths, splits)
     assert np.array_equal(got, masked)
+
+
+@pytest.mark.parametrize("w", [1, 2, 4, 8, 16, 32, 64])
+def test_pack_bits_rows_keeps_fixed_width_planes_on_the_fast_path(w, monkeypatch):
+    """A plane of one power-of-two width, in rows that end mid-byte, is
+    padded with whole elements of that width: ``pack_bits_rows`` and
+    ``unpack_bits_rows`` reach the fixed-width kernels once each, and each
+    row's bytes are ``pack_bits`` of the row alone."""
+    rng = np.random.default_rng(w)
+    counts = np.array([0, 1, 3, 5, 7, 9, 0, 13, 1])
+    splits = np.concatenate([[0], np.cumsum(counts)]).astype(np.int64)
+    vals = rng.integers(0, 2**63, int(splits[-1]), dtype=np.uint64)
+    widths = np.full(len(vals), w, np.int64)
+    calls = []
+    for name in ("_pack_fixed_pow2", "_unpack_fixed_pow2"):
+        orig = getattr(bitpacked, name)
+        monkeypatch.setattr(bitpacked, name,
+                            lambda *a, _n=name, _f=orig: calls.append(_n) or _f(*a))
+    buf, bsp = pack_bits_rows(vals, widths, splits)
+    got = unpack_bits_rows(buf, widths, splits)
+    assert calls == ["_pack_fixed_pow2", "_unpack_fixed_pow2"]
+    monkeypatch.undo()
+    want = [bitpacked.pack_bits(vals[a:b], widths[a:b]) for a, b in zip(splits[:-1], splits[1:])]
+    assert np.array_equal(np.diff(bsp), [len(r) for r in want])
+    assert bytes(buf) == b"".join(bytes(r) for r in want)
+    mask = np.uint64(2**w - 1) if w < 64 else ~np.uint64(0)
+    assert np.array_equal(got, vals & mask)
 
 
 def test_dod_rows_byte_identical_to_scalar():

@@ -8,8 +8,8 @@
   chunk table) under 2-row Arrow batches; single-chunk rows come out
   byte-identical, merged rows equal ``merge_pages`` per doc, the tiers are
   untouched and the next promote is a no-op, a compaction with nothing to
-  merge commits nothing, and the ``repartition(n, "doc_id")`` plan of an
-  over-memory bucket writes the same table.
+  merge commits nothing, and an over-memory bucket, read in doc-range
+  passes by the same plan, gives the same table.
 """
 
 import contextlib
@@ -240,18 +240,20 @@ def test_compact_is_one_bucket_job(spark, appended, tmp_path, small_batches, mon
     assert wh.manifest("chunks_tier0")["version"] == version  # nothing committed
 
 
-def test_over_memory_bucket_compacts_through_repartition(spark, appended, tmp_path,
-                                                         small_batches, monkeypatch):
+def test_over_memory_bucket_compacts_in_passes(spark, appended, tmp_path, small_batches,
+                                               passes_memory, monkeypatch):
     """A bucket past ``spark.python.worker.memory`` is not read whole into
-    a task: the chunks go through ``repartition(n, "doc_id")`` into the
-    same kernel, and the table equals the bucket plan's, bucket for
-    bucket."""
+    a task: under a bound that cuts every bucket into ≥ 3 doc-range
+    passes, the compaction is the same one-job bucket plan (a ``Range``, no
+    Exchange) and writes the one-pass table, bucket for bucket."""
     ref = _copy(spark, appended, tmp_path / "ref")
     ref.compact()
     p = _copy(spark, appended, tmp_path / "wh")
-    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: 0)
-    out, plan, _ = _compact_plan(spark, p, monkeypatch)
-    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    memory = passes_memory(p.warehouse, tuple(CHUNK_ARROW.names))
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: memory)
+    out, plan, jobs = _compact_plan(spark, p, monkeypatch)
+    assert "Range" in plan and "Exchange" not in plan and "Scan" not in plan, plan
+    assert jobs == 1
     assert out == {"compacted_docs": 10}
     pd.testing.assert_frame_equal(_by_doc(read_table(p.warehouse.root, "chunks_tier0")),
                                   _by_doc(read_table(ref.warehouse.root, "chunks_tier0")))

@@ -8,13 +8,17 @@ no scan and no exchange.
   Exchange nor a file scan (a ``Range`` of bucket ids under the kernel),
   runs one job, and its tier tables equal the pandas recomputation from
   ``decode_points`` (perfbench's oracle);
-- the other plan: a file without a bucket id, or a bucket past
-  ``spark.python.worker.memory``, sends the chunks through
-  ``repartition("doc_id")`` into the same kernel — same tables;
+- bounded bucket read: ``bucket_reader``'s doc-range passes give the rows
+  of one pass, row for row (ties, a doc over the budget, a null id); a
+  bucket past ``spark.python.worker.memory`` is read in ≥ 3 passes by the
+  same plan, and full, resumed and merge promotes give the one-pass
+  tables; a chunk file without a bucket id is refused by name before any
+  job or commit; the driver opens each chunk footer once per promote;
 - crash between tier commits: a rerun finishes the job;
 - one plan for every regime: a no-op promote runs no job, a merge over
   snapshot + bucketed segments reads their buckets in one job and equals a
   one-shot load, an append keeps the table's bucket count, a resume over the bucketed snapshot reads the buckets,
+  a segment whose buckets are not the table's is refused,
   a one-tier pipeline takes the same plan, and tier windows that do not
   nest are refused when the pipeline is made;
 - job descriptions: the engine labels its own actions.
@@ -30,6 +34,7 @@ from functools import partial
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -42,6 +47,7 @@ from sorting_compressed_time_series_spark.operators.ingest import (
     flush,
 )
 from sorting_compressed_time_series_spark.operators.rollup import (
+    ROLLUP_INPUT,
     _multi_window_partials_kernel,
     decode_points,
     rollup_tiers,
@@ -49,7 +55,13 @@ from sorting_compressed_time_series_spark.operators.rollup import (
 from sorting_compressed_time_series_spark.plans import pipeline
 from sorting_compressed_time_series_spark.plans.pipeline import Pipeline, TierSpec
 from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-from sorting_compressed_time_series_spark.sources.warehouse import Warehouse, with_p_day
+from sorting_compressed_time_series_spark.sources.warehouse import (
+    HELD_PER_BYTE,
+    Warehouse,
+    _doc_passes,
+    bucket_reader,
+    with_p_day,
+)
 
 from perfbench.oracle import TIER_COLS, TIER_WINDOWS, check_tiers, expected_tiers, read_table
 
@@ -232,10 +244,11 @@ def _assert_same_tiers(root: str, ref_root: str) -> None:
 
 
 def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
-                                                small_batches, monkeypatch):
+                                                small_batches, passes_memory, monkeypatch):
     """Every file of the bucketed chunk snapshot names its bucket, each
-    task reads one bucket, and the tier tables equal the recompute and
-    the ``repartition("doc_id")`` plan's."""
+    task reads one bucket, and the tier tables equal the recompute; with
+    a memory bound that cuts every bucket into ≥ 3 doc-range passes, the
+    plan and the tables stay the same."""
     chunks, want = multi_chunk
     p = _warehouse(spark, tmp_path / "wh", chunks)
     buckets = p.warehouse.bucket_files("chunks_tier0")
@@ -248,45 +261,142 @@ def test_fused_promote_is_one_exchange_free_job(spark, tmp_path, multi_chunk,
     assert check_tiers(p.warehouse.root, want) == []
 
     ref = _warehouse(spark, tmp_path / "ref", chunks)
-    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: 0)
-    plan, _ = _promote_plan(spark, ref, monkeypatch)
-    assert "hashpartitioning" in plan and "Range" not in plan, plan
+    memory = passes_memory(ref.warehouse, ROLLUP_INPUT)
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: memory)
+    plan, jobs = _promote_plan(spark, ref, monkeypatch)
+    _assert_bucket_read(plan)
+    assert jobs == 1
     _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
 
 
-def test_file_without_bucket_id_takes_repartition_plan(spark, tmp_path, multi_chunk,
-                                                       small_batches, monkeypatch):
-    """One data file renamed without its ``_<bucket>`` suffix: the
-    snapshot no longer maps to buckets, so the chunks go through
-    ``repartition("doc_id")`` into the same kernel — same tables."""
-    chunks, want = multi_chunk
+READ_COLUMNS = ("doc_id", "source", "count", "seq", "blob")
+READ_FILTERS = [[("tier", "=", 0)], [("tier", "=", 1), ("doc_id", "in", ["d01", "d15", "d20"])]]
+
+
+def _bucket_rows(paths: list[str], memory: int, batch_rows: int) -> pa.Table:
+    """What ``bucket_reader`` yields for one bucket of ``paths``."""
+    read = bucket_reader({0: paths}, READ_COLUMNS, filters=READ_FILTERS,
+                         sort_by=("doc_id", "source"), batch_rows=batch_rows, memory=memory)
+    batches = list(read(iter([pa.record_batch({"_task": pa.array([0], pa.int32())})])))
+    assert all(b.num_rows <= batch_rows for b in batches)
+    return pa.Table.from_batches(batches).drop_columns(["_bucket"])
+
+
+def test_bucket_reader_passes_equal_one_pass(tmp_path):
+    """Three files of one bucket (a snapshot and two segments) whose docs
+    repeat within and across files with equal sort keys, a doc over any
+    budget and a null id: read in doc-range passes under ever smaller
+    budgets, the rows equal one pass's, row for row (ties in file order),
+    and the big doc is a pass of its own."""
+    rng = np.random.default_rng(5)
+    paths = []
+    for f in range(3):
+        n = 80
+        docs = [f"d{int(x):02d}" for x in rng.integers(0, 30, n)]
+        tier = rng.integers(0, 2, n)
+        count = rng.integers(1, 20, n)
+        docs[7], tier[7] = None, 0
+        if f == 1:
+            docs[0], tier[0], count[0] = "d15", 0, 5000
+        paths.append(str(tmp_path / f"part-{f}_00000.parquet"))
+        pq.write_table(pa.table({
+            "doc_id": pa.array(docs, pa.string()), "source": ["web"] * n,
+            "tier": pa.array(tier, pa.int32()), "count": pa.array(count, pa.int32()),
+            "seq": np.arange(n) + 1000 * f, "blob": [bytes(int(c) * 8) for c in count]}),
+            paths[-1], row_group_size=16)
+    one = _bucket_rows(paths, 1 << 40, 1000)
+    assert one.slice(len(one) - 3)["doc_id"].null_count == 3  # the null id sorts last
+    assert len(_doc_passes(paths, READ_COLUMNS, READ_FILTERS, 1 << 40)) == 1
+    counts = set()
+    for memory in [1 << 16, 1 << 14, 1 << 12, 1]:
+        passes = _doc_passes(paths, READ_COLUMNS, READ_FILTERS, memory // HELD_PER_BYTE)
+        counts.add(len(passes))
+        docs = [set(pq.read_table(paths, columns=["doc_id"], filters=w)["doc_id"].to_pylist())
+                for w in passes]
+        assert {"d15"} in docs and docs[-1] == {None}
+        for batch_rows in (3, 1000):
+            assert _bucket_rows(paths, memory, batch_rows).equals(one), (memory, batch_rows)
+    assert min(counts) >= 3 and len(counts) >= 3
+
+
+def test_file_without_bucket_id_is_refused(spark, tmp_path, multi_chunk):
+    """One data file renamed without its ``_<bucket>`` suffix: the chunk
+    table no longer maps to buckets, so ``promote_all`` and ``compact``
+    refuse it by naming the file, before any job or commit."""
+    chunks, _ = multi_chunk
     p = _warehouse(spark, tmp_path / "wh", chunks)
     wh = p.warehouse
     path = wh._data_files("chunks_tier0")[0]
-    os.replace(path, re.sub(r"_\d+(\.[^_]*)$", r"\1", path))
-    assert wh.bucket_files("chunks_tier0") is None
-    plan, _ = _promote_plan(spark, p, monkeypatch)
-    assert "hashpartitioning" in plan and "Range" not in plan, plan
-    assert check_tiers(wh.root, want) == []
+    bare = re.sub(r"_\d+(\.[^_]*)$", r"\1", path)
+    os.replace(path, bare)
+    version = wh.manifest("chunks_tier0")["version"]
+
+    for call in (p.promote_all, p.compact):
+        def refused():
+            with pytest.raises(ValueError, match=re.escape(bare)):
+                call()
+
+        assert _jobs(spark, refused)[1] == 0, call
+    assert not any(wh.exists(name) for name in TIER_WINDOWS)
+    assert wh.manifest("chunks_tier0")["version"] == version
 
 
-def test_bucket_over_worker_memory_takes_repartition_plan(spark, tmp_path, multi_chunk,
-                                                          monkeypatch):
-    """A bucket whose uncompressed bytes pass ``spark.python.worker.memory``
-    is not read whole into a task: the promote takes the
-    ``repartition("doc_id")`` plan, with the bucket read's tables."""
-    chunks, want = multi_chunk
-    ref = _warehouse(spark, tmp_path / "ref", chunks)
+def test_bucket_over_worker_memory_reads_in_passes(spark, tmp_path, small_batches,
+                                                   passes_memory, monkeypatch):
+    """A bound that cuts every bucket into ≥ 3 doc-range passes: a promote
+    stopped at ``up_to_us`` and resumed, then a merge after an append of
+    new and re-delivered docs, each run one job of the bucket plan (a
+    ``Range``, no Exchange) and give the tables of the same calls in one
+    pass."""
+    base = generate_tokens_df(spark, 60)
+    batch = generate_tokens_df(spark, 15, start=60).unionByName(
+        generate_tokens_df(spark, 8, start=20))
+    pipes = []
+    for name in ("ref", "wh"):
+        q = Pipeline(spark, Warehouse(str(tmp_path / name)))
+        q.ingest(base)
+        pipes.append(q)
+    ref, p = pipes
+    _, stats = ref.warehouse.footer_stats("chunks_tier0", ("min_ts", "max_ts"))
+    half = (stats["min_ts"][0] + stats["max_ts"][1]) // 2
+    ref.promote_all(up_to_us=half)
     ref.promote_all()
-    p = _warehouse(spark, tmp_path / "wh", chunks)
-    sizes = [p.warehouse.uncompressed_bytes(fs)
-             for fs in p.warehouse.bucket_files("chunks_tier0").values()]
-    assert 0 < max(sizes) < pipeline._python_worker_memory(spark)
-    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: max(sizes) - 1)
-    plan, _ = _promote_plan(spark, p, monkeypatch)
-    assert "hashpartitioning" in plan and "Range" not in plan, plan
-    assert check_tiers(p.warehouse.root, want) == []
-    _assert_same_tiers(p.warehouse.root, ref.warehouse.root)
+    ref.ingest(batch, append=True)
+    ref.promote_all()
+
+    memory = passes_memory(p.warehouse, ROLLUP_INPUT)
+    monkeypatch.setattr(pipeline, "_python_worker_memory", lambda spark: memory)
+    p.promote_all(up_to_us=half)
+    # the resume and the merge scan the tier rows they keep; the chunks are not
+    for ingest in (None, partial(p.ingest, batch, append=True)):
+        if ingest is not None:
+            ingest()
+        plan, jobs = _promote_plan(spark, p, monkeypatch)
+        assert "Range" in plan and "Exchange" not in plan and "chunks_tier0" not in plan, plan
+        assert jobs == 1
+    wh = p.warehouse
+    assert [wh.manifest(name)["lineage"][-1]["op"] for name in TIER_WINDOWS] == [
+        "promote:merge"] * len(TIER_WINDOWS)
+    _assert_same_tiers(wh.root, ref.warehouse.root)
+    for name in TIER_WINDOWS:
+        assert wh.watermark(name) == ref.warehouse.watermark(name)
+
+
+def test_merge_promote_opens_each_chunk_footer_once(spark, tmp_path, monkeypatch):
+    """A merge promote plans from the chunk files' footers on the driver
+    (``footer_stats``): each file is opened once, and no other parquet
+    footer is read there (the bucket tasks read their own)."""
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(generate_tokens_df(spark, 40))
+    p.promote_all()
+    p.ingest(generate_tokens_df(spark, 10, start=35), append=True)
+    files = p.warehouse._data_files("chunks_tier0")
+    opened = []
+    read_metadata = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata",
+                        lambda path, *a, **k: opened.append(path) or read_metadata(path, *a, **k))
+    assert {e["mode"] for e in p.promote_all()} == {"merge"}
+    assert sorted(opened) == sorted(files)
 
 
 def test_python_worker_memory_reads_the_session_key(spark):
@@ -414,6 +524,21 @@ def test_append_keeps_the_tables_bucket_count(spark, tmp_path, monkeypatch):
     assert sum(map(len, buckets.values())) == len(wh._data_files("chunks_tier0"))
     p.promote_all()
     _assert_same_tiers(wh.root, ref.warehouse.root)
+
+
+def test_segment_in_other_buckets_is_refused(spark, tmp_path):
+    """An append's segment must carry the table's bucket spec: a segment
+    written without buckets over a bucketed table is refused before its
+    files are landed, and the manifest is unchanged."""
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(generate_tokens_df(spark, 20))
+    wh = p.warehouse
+    before = wh.manifest("chunks_tier0")
+    files = wh.kernel_writer("chunks_tier0", CHUNK_ARROW)
+    frame = files.frame(flush(generate_tokens_df(spark, 5, start=20)), iter)
+    with pytest.raises(ValueError, match="not the table's"):
+        wh.append_segment(frame, "chunks_tier0", files=files)
+    assert wh.manifest("chunks_tier0") == before
 
 
 def test_resume_over_bucketed_snapshot_reads_buckets(spark, tmp_path, multi_chunk,
