@@ -31,7 +31,7 @@ def passes_memory():
         _doc_passes,
     )
 
-    def memory(wh, columns: tuple[str, ...], passes: int = 3) -> int:
+    def memory(wh, columns: tuple[str, ...]) -> int:
         buckets = wh.bucket_files("chunks_tier0")
 
         def nbytes(paths):
@@ -40,9 +40,9 @@ def passes_memory():
                        for g in range(md.num_row_groups) for j in range(md.num_columns)
                        if md.schema.column(j).path in columns)
 
-        out = HELD_PER_BYTE * min(map(nbytes, buckets.values())) // (passes + 2)
+        out = HELD_PER_BYTE * min(map(nbytes, buckets.values())) // 5
         assert all(len(_doc_passes(fs, columns, [[("tier", "=", 0)]], out // HELD_PER_BYTE))
-                   >= passes for fs in buckets.values())
+                   >= 3 for fs in buckets.values())
         return out
 
     return memory
