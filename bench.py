@@ -154,12 +154,13 @@ def headline(spark, n_docs: int, seed: int = 42, keep_tables: str | None = None)
     tiers_path = os.path.join(tmp, "tiers")
     # FUSED multi-tier rollup: one decode pass emits 1s/1m/1h rows
     # together; one flush → one chunk per doc, so every doc's chunks reach
-    # one task (whole_docs; the 8-vs-32-core tier-hash equality check below
-    # would catch any violation) and the whole promotion cascade is ONE
-    # map-only job with zero exchanges — the per-tier write+read-back jobs
-    # (a fixed ~0.5 s/job wall that does NOT shrink with cores) are gone.
+    # one task (``rollup_tiers``' precondition; the 8-vs-32-core tier-hash
+    # equality check below would catch any violation) and the whole
+    # promotion cascade is ONE map-only job with zero exchanges — the
+    # per-tier write+read-back jobs (a fixed ~0.5 s/job wall that does NOT
+    # shrink with cores) are gone.
     rollup_tiers(
-        chunks, [1_000_000, WINDOW_1M_US, WINDOW_1H_US], whole_docs=True
+        chunks, [1_000_000, WINDOW_1M_US, WINDOW_1H_US]
     ).write.mode("overwrite").parquet(tiers_path)
     t_rollup = time.perf_counter() - t0
     for k, v in saved.items():

@@ -262,26 +262,35 @@ def decode_rows(
 #
 # The bit-packed codecs store their planes byte-aligned per blob.  To encode
 # MANY rows in one `pack_bits` call while every row's planes stay the bytes
-# the row packs to on its own, we insert one zero-valued pad
-# element of width (-row_bits) % 8 at each row end: row boundaries then land
-# exactly on byte boundaries, so slicing the packed stream at the per-row
-# byte offsets gives each row's planes bit for bit.
+# the row packs to on its own, we insert zero-valued pad bits, (-row_bits) % 8
+# of them, at the end of each row whose bits do not end on a byte: row
+# boundaries then land exactly on byte boundaries, so slicing the packed
+# stream at the per-row byte offsets gives each row's planes bit for bit.
 
 
 def _row_pads(
     widths: np.ndarray, row_splits: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Each row's pad elements (at its end; one, or whole elements of a plane's
-    one power-of-two width, to keep ``pack_bits``' fixed-width path), their
-    widths (filling the row's last byte), and each row's padded bytes."""
+    """The pad elements of the rows whose bits do not end on a byte (one
+    each, or whole elements of a plane's one power-of-two width, to keep
+    ``pack_bits``' fixed-width path): where they go (each at its row's
+    end), their widths (filling the row's last byte), and each row's
+    padded bytes. A plane of one width needs no cumsum over its widths."""
     splits = np.ascontiguousarray(row_splits, dtype=np.int64)
-    cw = _splits(widths)
-    row_bits = cw[splits[1:]] - cw[splits[:-1]]
-    pad_w, w = (-row_bits) % 8, int(widths[0]) if len(widths) else 0
-    at, row_bytes = splits[1:], (row_bits + pad_w) >> 3
-    if w in (1, 2, 4, 8, 16, 32, 64) and (widths == w).all():
-        at, pad_w = np.repeat(at, pad_w // w), np.full(int((pad_w // w).sum()), w)
-    return at, pad_w, row_bytes
+    w = int(widths[0]) if len(widths) else 0
+    uniform = bool((widths == w).all())
+    if uniform:
+        row_bits = np.diff(splits) * w
+    else:
+        cw = _splits(widths)
+        row_bits = cw[splits[1:]] - cw[splits[:-1]]
+    pad_w = (-row_bits) % 8
+    row_bytes = (row_bits + pad_w) >> 3
+    if uniform and w in (1, 2, 4, 8, 16, 32, 64):
+        reps = pad_w // w
+        return np.repeat(splits[1:], reps), np.full(int(reps.sum()), w), row_bytes
+    padded = np.flatnonzero(pad_w)
+    return splits[1:][padded], pad_w[padded], row_bytes
 
 
 def pack_bits_rows(
@@ -290,8 +299,9 @@ def pack_bits_rows(
     """`pack_bits` per row with byte-aligned row boundaries, in ONE call.
     Returns (packed uint8 buffer, per-row byte splits)."""
     at, pad_w, row_bytes = _row_pads(widths, row_splits)
-    buf = pack_bits(np.insert(values, at, 0), np.insert(widths, at, pad_w))
-    return buf, _splits(row_bytes)
+    if len(at):
+        values, widths = np.insert(values, at, 0), np.insert(widths, at, pad_w)
+    return pack_bits(values, widths), _splits(row_bytes)
 
 
 def unpack_bits_rows(
@@ -300,6 +310,8 @@ def unpack_bits_rows(
     """Inverse of `pack_bits_rows`: ``buf`` is the concatenation of per-row
     byte-aligned planes; unpack all rows' elements in ONE call."""
     at, pad_w, _ = _row_pads(widths, row_splits)
+    if not len(at):
+        return unpack_bits(buf, widths)
     padded = unpack_bits(buf, np.insert(widths, at, pad_w))
     return np.delete(padded, at + np.arange(len(at)))
 

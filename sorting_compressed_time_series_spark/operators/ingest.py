@@ -102,16 +102,19 @@ def _binary_from_buffers(buf: np.ndarray, splits: np.ndarray) -> pa.Array:
 
 def _segmented_stable_sort(flat_ts, splits, counts):
     """Stable per-row sort order in ONE argsort via a composite key:
-    row_id in the high bits, row-relative ts below (fits: relative spans
-    < 2^33 by construction of the seriesizer)."""
+    row_id in the high bits, row-relative ts below. The key fits while
+    every row spans under 2^33 µs (~2.4 h), as a seriesized token row
+    does; a batch with a longer row (a real series can span days) takes
+    the generic ``lexsort``."""
     row_of = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-    row_min = np.repeat(
-        np.minimum.reduceat(flat_ts, splits[:-1])
-        if len(flat_ts)
-        else np.empty(0, np.int64),
-        counts,
-    )
-    rel = flat_ts - row_min  # >= 0; < 2^33 for seriesized token rows
+    # reduceat over the non-empty rows only: a trailing empty row's start
+    # is past the end of ``flat_ts``
+    nz = counts > 0
+    row_min = np.zeros(len(counts), np.int64)
+    if nz.any():
+        row_min[nz] = np.minimum.reduceat(flat_ts, splits[:-1][nz])
+    row_min = np.repeat(row_min, counts)
+    rel = flat_ts - row_min  # >= 0
     if len(rel) and int(rel.max()) >= (1 << 33):
         return np.lexsort((flat_ts, row_of))  # generic fallback
     composite = (row_of << np.int64(33)) | rel
@@ -134,20 +137,93 @@ def _row_slices(*splits: np.ndarray) -> Iterator[tuple[int, int]]:
         r0 = r1
 
 
+def encode_series_batch(doc_id: pa.Array, source: pa.Array, ts: np.ndarray,
+                        vals: np.ndarray, splits: np.ndarray):
+    """The one encoder of sorted series: row ``i`` of a batch is the series
+    ``(doc_id[i], source[i])`` with points ``[splits[i], splits[i+1])`` of
+    ``ts``/``vals`` (int64 timestamps in arrival order; int32 or int64
+    values). Counts each row's inversions, sorts each row stably by time
+    (skipped when no row has an inversion), encodes the time plane (DELTA)
+    and the value plane (VARINT), and computes the chunk statistics. Yields
+    ``(chunks, ts, vals, splits)``: the ``CHUNK_ARROW`` rows and the points
+    they encode, sorted by time within each row; rows whose blob planes
+    pass the int32 Arrow offset range leave as several chunk batches of
+    consecutive rows."""
+    t_start = time.perf_counter_ns()
+    n = len(splits) - 1
+    counts = np.diff(splits)
+    row_starts = splits[:-1]
+    row_ends = splits[1:]
+
+    # --- lineage: inversions in arrival order ----------------------
+    inv = np.zeros(len(ts), dtype=np.int64)
+    if len(ts) > 1:
+        inv[1:] = ts[1:] < ts[:-1]
+    inv[row_starts[counts > 0]] = 0  # row boundaries are not inversions
+    inv_cum = np.concatenate([[0], np.cumsum(inv)])
+    n_inv = (inv_cum[row_ends] - inv_cum[row_starts]).astype(np.int32)
+
+    # --- flush sort (stable by ts within each row) -----------------
+    if n_inv.sum() > 0:
+        order = _segmented_stable_sort(ts, splits, counts)
+        ts = ts[order]
+        vals = vals[order]
+
+    # --- encode (batched, both planes) -----------------------------
+    t_buf, t_splits = encode_rows(ts, splits, CODEC_DELTA)
+    v_buf, v_splits = encode_rows(vals, splits, CODEC_VARINT)
+
+    # --- per-row statistics (sorted order: min/max ts positional) --
+    nz = counts > 0
+    min_ts = np.zeros(n, np.int64)
+    max_ts = np.zeros(n, np.int64)
+    first_v = np.zeros(n, np.int64)
+    last_v = np.zeros(n, np.int64)
+    min_v = np.zeros(n, np.int64)
+    max_v = np.zeros(n, np.int64)
+    sum_v = np.zeros(n, np.int64)
+    if nz.any():
+        s_nz = row_starts[nz]
+        e_nz = row_ends[nz] - 1
+        min_ts[nz] = ts[s_nz]
+        max_ts[nz] = ts[e_nz]
+        first_v[nz] = vals[s_nz]
+        last_v[nz] = vals[e_nz]
+        min_v[nz] = np.minimum.reduceat(vals, s_nz)
+        max_v[nz] = np.maximum.reduceat(vals, s_nz)
+        sum_v[nz] = np.add.reduceat(vals, s_nz, dtype=np.int64)
+    encode_ns = time.perf_counter_ns() - t_start
+
+    columns = [
+        np.full(n, 0, dtype=np.int32),
+        (min_ts // WINDOW_1H_US) * WINDOW_1H_US,
+        counts.astype(np.int32),
+        min_ts, max_ts, min_v, max_v, first_v, last_v, sum_v,
+        n_inv,
+        n_inv == 0,
+        counts * 16,  # raw bytes: 8B ts + 8B value per point
+        np.diff(t_splits).astype(np.int32),
+        np.diff(v_splits).astype(np.int32),
+    ]
+    for r0, r1 in _row_slices(t_splits, v_splits):
+        t_sp, v_sp, sp = t_splits[r0:r1 + 1], v_splits[r0:r1 + 1], splits[r0:r1 + 1]
+        arrays = (
+            [doc_id.slice(r0, r1 - r0), source.slice(r0, r1 - r0)]
+            + [pa.array(c[r0:r1]) for c in columns]
+            + [_binary_from_buffers(t_buf[t_sp[0]:t_sp[-1]], t_sp - t_sp[0]),
+               _binary_from_buffers(v_buf[v_sp[0]:v_sp[-1]], v_sp - v_sp[0]),
+               pa.array(np.full(r1 - r0, encode_ns // max(n, 1), dtype=np.int64))])
+        yield (pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW),
+               ts[sp[0]:sp[-1]], vals[sp[0]:sp[-1]], sp - sp[0])
+
+
 def _flush_batches(batches: Iterator[pa.RecordBatch], seed: int):
-    """The flush: for each chunk batch it emits, ``(chunks, ts, vals,
-    splits)`` — the ``CHUNK_ARROW`` rows and the points they encode, sorted
-    by time within each row (row ``i`` holds ``[splits[i], splits[i+1])``;
-    ``vals`` in the tokens' own int32). An input batch whose blob planes
-    pass the int32 Arrow offset range is emitted as several chunk batches
-    of consecutive rows."""
+    """The flush: seriesize each token batch (``vals`` in the tokens' own
+    int32), then ``encode_series_batch``; yields what it yields."""
     for batch in batches:
-        t_start = time.perf_counter_ns()
-        n = batch.num_rows
-        if n == 0:
+        if batch.num_rows == 0:
             continue
         doc_id = batch.column("doc_id")
-        source = batch.column("source")
         doc_index = doc_index_from_id(doc_id)
         tok = batch.column("tokens")
         if isinstance(tok, pa.ChunkedArray):
@@ -159,77 +235,11 @@ def _flush_batches(batches: Iterator[pa.RecordBatch], seed: int):
         # list offsets may not start at 0 after slicing; normalize
         splits = offs - offs[0]
         counts = np.diff(splits)
-        row_starts = splits[:-1]
-        row_ends = splits[1:]
-
-        # --- seriesize ------------------------------------------------
-        positions = np.arange(len(flat), dtype=np.int64) - np.repeat(row_starts, counts)
+        positions = np.arange(len(flat), dtype=np.int64) - np.repeat(splits[:-1], counts)
         flat_doc = np.repeat(doc_index, counts)
         t0 = np.repeat(doc_t0(doc_index, seed), counts)
         ts = synth_timestamps(flat_doc, positions, seed, t0=t0)
-
-        # --- lineage: inversions in arrival order ----------------------
-        inv = np.zeros(len(flat), dtype=np.int64)
-        if len(flat) > 1:
-            inv[1:] = ts[1:] < ts[:-1]
-        inv[row_starts[counts > 0]] = 0  # row boundaries are not inversions
-        inv_cum = np.concatenate([[0], np.cumsum(inv)])
-        n_inv = (inv_cum[row_ends] - inv_cum[row_starts]).astype(np.int32)
-
-        # --- flush sort (stable by ts within each row) -----------------
-        if n_inv.sum() > 0:
-            order = _segmented_stable_sort(ts, splits, counts)
-            ts = ts[order]
-            vals = flat[order]
-        else:
-            vals = flat
-
-        # --- encode (batched, both planes) -----------------------------
-        t_buf, t_splits = encode_rows(ts, splits, CODEC_DELTA)
-        v_buf, v_splits = encode_rows(vals, splits, CODEC_VARINT)
-
-        # --- per-row statistics (sorted order: min/max ts positional) --
-        nz = counts > 0
-        min_ts = np.zeros(n, np.int64)
-        max_ts = np.zeros(n, np.int64)
-        first_v = np.zeros(n, np.int64)
-        last_v = np.zeros(n, np.int64)
-        min_v = np.zeros(n, np.int64)
-        max_v = np.zeros(n, np.int64)
-        sum_v = np.zeros(n, np.int64)
-        if nz.any():
-            s_nz = row_starts[nz]
-            e_nz = row_ends[nz] - 1
-            min_ts[nz] = ts[s_nz]
-            max_ts[nz] = ts[e_nz]
-            first_v[nz] = vals[s_nz]
-            last_v[nz] = vals[e_nz]
-            min_v[nz] = np.minimum.reduceat(vals, s_nz)
-            max_v[nz] = np.maximum.reduceat(vals, s_nz)
-            sum_v[nz] = np.add.reduceat(vals, s_nz, dtype=np.int64)
-        encode_ns = time.perf_counter_ns() - t_start
-
-        columns = [
-            np.full(n, 0, dtype=np.int32),
-            (min_ts // WINDOW_1H_US) * WINDOW_1H_US,
-            counts.astype(np.int32),
-            min_ts, max_ts, min_v, max_v, first_v, last_v, sum_v,
-            n_inv,
-            n_inv == 0,
-            counts * 16,  # raw bytes: 8B ts + 8B value per point
-            np.diff(t_splits).astype(np.int32),
-            np.diff(v_splits).astype(np.int32),
-        ]
-        for r0, r1 in _row_slices(t_splits, v_splits):
-            t_sp, v_sp, sp = t_splits[r0:r1 + 1], v_splits[r0:r1 + 1], splits[r0:r1 + 1]
-            arrays = (
-                [doc_id.slice(r0, r1 - r0), source.slice(r0, r1 - r0)]
-                + [pa.array(c[r0:r1]) for c in columns]
-                + [_binary_from_buffers(t_buf[t_sp[0]:t_sp[-1]], t_sp - t_sp[0]),
-                   _binary_from_buffers(v_buf[v_sp[0]:v_sp[-1]], v_sp - v_sp[0]),
-                   pa.array(np.full(r1 - r0, encode_ns // max(n, 1), dtype=np.int64))])
-            yield (pa.RecordBatch.from_arrays(arrays, schema=CHUNK_ARROW),
-                   ts[sp[0]:sp[-1]], vals[sp[0]:sp[-1]], sp - sp[0])
+        yield from encode_series_batch(doc_id, batch.column("source"), ts, flat, splits)
 
 
 def flush_kernel_batches(

@@ -16,10 +16,9 @@ mins, first by earliest first_ts, ...), so coarser tiers never touch
 points again. Two inputs feed the reduce: the promotion kernel
 (``tiers_kernel``) decodes chunk blobs, and the fresh ingest's flush task
 (``operators.ingest.flush_rollup_kernel``) hands it the points it has just
-sorted and encoded. When every chunk of a doc reaches the reduce as one
-run it merges the doc's chunks itself and needs no shuffle at all;
-otherwise its partials carry one row per (chunk, window), not one per
-point, and ``_finalize`` merges them through one shuffle.
+sorted and encoded. Every chunk of a doc reaches the reduce as one run
+(a task holds whole docs, sorted by doc), so the reduce merges the doc's
+chunks itself and its rows are final: no plan has a shuffle.
 
 Windows fully covered by a chunk can be answered from chunk statistics
 alone (`rollup_from_stats`) without decoding any blob.
@@ -78,21 +77,6 @@ def decode_points(chunks_df: DataFrame) -> DataFrame:
 
     return chunks_df.select("doc_id", "source", "time_blob", "value_blob").mapInArrow(
         kern, schema="doc_id string, source string, ts bigint, value bigint"
-    )
-
-
-def _finalize(partials: DataFrame) -> DataFrame:
-    """Merge partials across chunks of the same (tier, doc, window) —
-    Catalyst plans this as partial+final HashAggregate, map-side combined."""
-    return partials.groupBy("tier", "doc_id", "source", "window_start").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_v").alias("sum_v"),
-        F.min("min_v").alias("min_v"),
-        F.max("max_v").alias("max_v"),
-        F.min("first_ts").alias("first_ts"),
-        F.min_by("first_v", "first_ts").alias("first_v"),
-        F.max("last_ts").alias("last_ts"),
-        F.max_by("last_v", "last_ts").alias("last_v"),
     )
 
 
@@ -217,10 +201,12 @@ class TierReduce:
     Rows of one ``(doc_id, source)`` that arrive next to each other — a
     *doc run*, possibly straddling batches — are merged into ONE row per
     window (``_merge_chunks``): the last run of a batch stays open and
-    merges with the next batch's. When every chunk of a doc is adjacent in
-    the input the rows are final; memory holds one doc's partials.
-    Otherwise they are partials for ``_finalize``. ``feed`` and ``close``
-    are generators: the state moves as they are consumed."""
+    merges with the next batch's. Every chunk of a doc must be adjacent in
+    the input; the rows are then final, and memory holds one doc's
+    partials. A doc fed as several runs gets one row per run and window;
+    ``run_keys`` lets the caller see that (the fresh ingest then drops its
+    staged tier rows). ``feed`` and ``close`` are generators: the state
+    moves as they are consumed."""
 
     def __init__(self, windows_us: list[int]):
         self.windows_us = windows_us
@@ -335,20 +321,17 @@ def tiers_kernel(windows_us: list[int]):
     return _multi_window_partials_kernel(list(windows_us))
 
 
-def rollup_tiers(chunks_df: DataFrame, windows_us: list[int],
-                 whole_docs: bool = False) -> DataFrame:
+def rollup_tiers(chunks_df: DataFrame, windows_us: list[int]) -> DataFrame:
     """All retention tiers in ONE pass: rows carry ``tier`` = index into
     ``windows_us``, each window a multiple of the one before. Every tier
     equals a pandas recompute from the decoded points (pytest-asserted).
 
-    ``whole_docs=True`` promises that every chunk of a doc reaches one task
-    (a frame hash-partitioned by ``doc_id``, or one chunk per doc): each
-    task sorts its rows by doc, the kernel merges every
-    doc's chunks itself, and the plan has no exchange. Otherwise a doc's
-    chunks may sit in several tasks and ``_finalize`` merges the partials
-    through a shuffle."""
+    Precondition: every chunk of a doc sits in one partition of
+    ``chunks_df`` (one chunk per doc, as a flush of one-row-per-doc tokens
+    or one chunk per user gives, or a frame partitioned by ``doc_id``).
+    Each task sorts its rows by doc and the kernel merges every doc's
+    chunks itself: the plan is a sort within partitions and the kernel,
+    with no exchange."""
     kern = tiers_kernel(windows_us)
-    src = chunks_df.select(*ROLLUP_INPUT)
-    if whole_docs:
-        return src.sortWithinPartitions(*DOC_ORDER).mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA)
-    return _finalize(src.mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA))
+    return (chunks_df.select(*ROLLUP_INPUT).sortWithinPartitions(*DOC_ORDER)
+            .mapInArrow(kern, schema=TIERS_PARTIAL_SCHEMA))

@@ -75,13 +75,8 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events → chunk encoding helpers (per-user series through the real codecs)
+# events → per-user series: chunks from the engine's encoder, codec round trips
 # ---------------------------------------------------------------------------
-
-_ENC_SCHEMA = (
-    "user_id bigint, count int, min_ts bigint, max_ts bigint, "
-    "time_blob binary, value_blob binary"
-)
 
 
 def _collected_series(ev: DataFrame, *value_cols: str) -> DataFrame:
@@ -116,71 +111,60 @@ def _pts_np(b: pa.RecordBatch) -> tuple[np.ndarray, pa.StructArray, np.ndarray]:
     return uid, pts.flatten(), offs - offs[0]
 
 
-def _encode_user_series(spark: SparkSession, sf_dir: str, value_expr: str = "q",
-                        codec_pair: tuple[int, int] = (CODEC_DELTA, CODEC_VARINT)) -> DataFrame:
-    """events → one chunk per user: sort by (ts, event_id) JVM-side, encode
-    ALL series of each Arrow batch through the batched codec kernels
-    (``codecs.batched.encode_chunk_rows``) — no per-group Python at all."""
-    from .codecs.batched import encode_chunk_rows
-    from .operators.ingest import _binary_from_buffers
+def _encode_user_series(spark: SparkSession, sf_dir: str, value_expr: str = "q") -> DataFrame:
+    """events → one ``CHUNK_SCHEMA`` chunk per user (``doc_id`` the user id
+    as a string, ``source`` "events"), from the flush's own encoder
+    (``operators.ingest.encode_series_batch``) over whole Arrow batches of
+    series. The JVM delivers each series sorted by (ts, event_id), so the
+    encoder counts no inversion and skips its sort."""
+    from .operators.ingest import CHUNK_SCHEMA, encode_series_batch
 
     ev = _events(spark, sf_dir).select(
         "user_id", "ts_us", "event_id", F.expr(value_expr).alias("v")
     )
-    t_codec, v_codec = codec_pair
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             if b.num_rows == 0:
                 continue
             uid, flat, splits = _pts_np(b)
+            doc = pa.array(uid).cast(pa.string())
+            src = pa.array(["events"] * b.num_rows, pa.string())
             ts = flat.field("ts_us").to_numpy(zero_copy_only=False).astype(np.int64)
             vals = flat.field("v").to_numpy(zero_copy_only=False)
-            t_buf, t_sp = encode_chunk_rows(ts, splits, t_codec)
-            v_buf, v_sp = encode_chunk_rows(vals, splits, v_codec)
-            counts = np.diff(splits)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(uid),
-                    pa.array(counts.astype(np.int32)),
-                    pa.array(ts[splits[:-1]]),  # sorted → positional min/max
-                    pa.array(ts[splits[1:] - 1]),
-                    _binary_from_buffers(t_buf, t_sp),
-                    _binary_from_buffers(v_buf, v_sp),
-                ],
-                names=["user_id", "count", "min_ts", "max_ts", "time_blob", "value_blob"],
-            )
+            for chunks, *_ in encode_series_batch(doc, src, ts, vals, splits):
+                yield chunks
 
-    pts = _collected_series(ev, "v")
-    return pts.mapInArrow(kern, schema=_ENC_SCHEMA)
+    return _collected_series(ev, "v").mapInArrow(kern, schema=CHUNK_SCHEMA)
 
 
-def _decode_user_series(chunks: DataFrame, out_value: str) -> DataFrame:
-    from .codecs.batched import decode_chunk_rows
-    from .operators.rollup import _blob_np
+def _roundtrip_series(spark: SparkSession, sf_dir: str,
+                      planes: tuple[tuple[str, int], ...]) -> DataFrame:
+    """events → each user's series, sorted by (ts, event_id) JVM-side; every
+    ``(column, codec)`` of ``planes`` is encoded and decoded again in one
+    kernel over whole Arrow batches of series
+    (``codecs.batched.encode_chunk_rows``/``decode_chunk_rows``). Emits
+    ``user_id`` and the decoded columns, each in its own type (doubles stay
+    float64)."""
+    from .codecs.batched import decode_chunk_rows, encode_chunk_rows
+
+    names = [c for c, _ in planes]
+    extra = [c for c in names if c not in ("ts_us", "event_id")]
+    ev = _events(spark, sf_dir).select("user_id", "ts_us", "event_id", *extra)
+    schema = ev.select("user_id", *names).schema
 
     def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
             if b.num_rows == 0:
                 continue
-            uid = b.column("user_id").to_numpy(zero_copy_only=False)
-            # each plane is decoded by its codec's batched kernel; the time
-            # plane's splits give every row's point count
-            ts, splits = decode_chunk_rows(*_blob_np(b.column("time_blob")))
-            vs, _ = decode_chunk_rows(*_blob_np(b.column("value_blob")))
-            users = np.repeat(uid.astype(np.int64), np.diff(splits))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(users),
-                    pa.array(np.asarray(ts, dtype=np.int64)),
-                    pa.array(vs if np.asarray(vs).dtype == np.float64
-                             else np.asarray(vs, dtype=np.int64)),
-                ],
-                names=["user_id", "ts_us", out_value],
-            )
+            uid, flat, splits = _pts_np(b)
+            cols = [pa.array(np.repeat(uid, np.diff(splits)))]
+            for name, codec in planes:
+                raw = flat.field(name).to_numpy(zero_copy_only=False)
+                cols.append(pa.array(decode_chunk_rows(*encode_chunk_rows(raw, splits, codec))[0]))
+            yield pa.RecordBatch.from_arrays(cols, names=["user_id", *names])
 
-    out_type = "double" if out_value == "value" else "bigint"
-    return chunks.mapInArrow(kern, schema=f"user_id bigint, ts_us bigint, {out_value} {out_type}")
+    return _collected_series(ev, *extra).mapInArrow(kern, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -216,9 +200,11 @@ def roundtrip_bytealigned(spark, sf_dir):
     emit every point (value plane carries event_id). The order-insensitive
     value hash against raw `events` proves exact round-trip at table scale
     (reference EncodeDecodeTest re-expression on real data)."""
-    chunks = _encode_user_series(spark, sf_dir, value_expr="event_id")
-    return _decode_user_series(chunks, "event_id_out").select(
-        "user_id", "ts_us", F.col("event_id_out").alias("event_id")
+    pts = decode_points(_encode_user_series(spark, sf_dir, value_expr="event_id"))
+    return pts.select(
+        F.col("doc_id").cast("bigint").alias("user_id"),
+        F.col("ts").alias("ts_us"),
+        F.col("value").alias("event_id"),
     )
 
 
@@ -233,10 +219,7 @@ def roundtrip_bitpacked(spark, sf_dir):
     """Delta-of-delta timestamps + Gorilla-XOR double values end-to-end
     (reference DeltaDeltaLongEncoder + DoublePrecisionEncoderV2 pair),
     through the batched multi-series kernels."""
-    chunks = _encode_user_series(
-        spark, sf_dir, value_expr="value", codec_pair=(CODEC_DOD, CODEC_GORILLA_F64)
-    )
-    return _decode_user_series(chunks, "value")
+    return _roundtrip_series(spark, sf_dir, (("ts_us", CODEC_DOD), ("value", CODEC_GORILLA_F64)))
 
 
 @q(
@@ -324,13 +307,6 @@ def _rollup_oracle(window_us: int) -> str:
     """
 
 
-def _chunks_for_rollup(spark, sf_dir):
-    ch = _encode_user_series(spark, sf_dir, value_expr="q")
-    return ch.withColumn("doc_id", F.col("user_id").cast("string")).withColumn(
-        "source", F.lit("events")
-    )
-
-
 def _tier_out(df: DataFrame) -> DataFrame:
     return df.select(
         F.col("doc_id").cast("bigint").alias("user_id"),
@@ -347,10 +323,10 @@ def _tier_out(df: DataFrame) -> DataFrame:
 @q("rollup_1m", _rollup_oracle(US_1M))
 def rollup_1m(spark, sf_dir):
     """Tumbling-window continuous aggregate computed FROM THE CHUNK BLOBS:
-    encode per-user chunks, window partials inside the decode kernel,
-    Catalyst final-aggregates (IoTDB GROUP BY ([t1,t2), 1m) semantics,
+    encode one chunk per user, decode and reduce it to its final window
+    rows inside the rollup kernel (IoTDB GROUP BY ([t1,t2), 1m) semantics,
     left-closed right-open, epoch aligned)."""
-    return _tier_out(rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M]))
+    return _tier_out(rollup_tiers(_encode_user_series(spark, sf_dir), [US_1M]))
 
 
 @q("rollup_1h_from_1m", _rollup_oracle(US_1H))
@@ -359,7 +335,7 @@ def rollup_1h_from_1m(spark, sf_dir):
     (sum of sums, min of mins, first by earliest first_ts...) — must equal
     a direct 1h rollup of the raw points (the multi-tier downsampling
     invariant)."""
-    tiers = rollup_tiers(_chunks_for_rollup(spark, sf_dir), [US_1M, US_1H])
+    tiers = rollup_tiers(_encode_user_series(spark, sf_dir), [US_1M, US_1H])
     return _tier_out(tiers.filter(F.col("tier") == 1))
 
 
@@ -376,21 +352,7 @@ def rollup_from_chunk_stats_q(spark, sf_dir):
     """Statistics-only aggregation: answers per-series totals from chunk
     metadata columns without decoding a single blob (reference
     SeriesAggregationScanOperator fast path)."""
-    ch = _encode_user_series(spark, sf_dir, value_expr="q")
-    # recompute stats columns the chunk table would carry (count/min/max/sum)
-    ev = _events(spark, sf_dir)
-    stats = ev.groupBy("user_id").agg(
-        F.count("*").alias("count"),
-        F.sum("q").alias("sum_v"),
-        F.min("q").alias("min_v"),
-        F.max("q").alias("max_v"),
-        F.min("ts_us").alias("min_ts"),
-        F.max("ts_us").alias("max_ts"),
-    )
-    chunks = ch.drop("min_ts", "max_ts", "count").join(stats, "user_id").withColumn(
-        "doc_id", F.col("user_id").cast("string")
-    ).withColumn("source", F.lit("events"))
-    out = rollup_from_stats(chunks)
+    out = rollup_from_stats(_encode_user_series(spark, sf_dir))
     return out.select(
         F.col("doc_id").cast("bigint").alias("user_id"),
         F.col("cnt"),
@@ -2413,12 +2375,7 @@ from .operators.windows import variation_windows_delta  # noqa: E402
 def roundtrip_ts2diff(spark, sf_dir):
     """TS_2DIFF (block min-delta, fixed width per block — reference
     DeltaBinaryEncoder) end-to-end round trip on real series."""
-    chunks = _encode_user_series(
-        spark, sf_dir, value_expr="event_id", codec_pair=(CODEC_TS2DIFF, CODEC_VARINT)
-    )
-    return _decode_user_series(chunks, "event_id_out").select(
-        "user_id", "ts_us", F.col("event_id_out").alias("event_id")
-    )
+    return _roundtrip_series(spark, sf_dir, (("ts_us", CODEC_TS2DIFF), ("event_id", CODEC_VARINT)))
 
 
 @q(
@@ -2472,30 +2429,9 @@ def aligned_series_scan(spark, sf_dir):
     planes — encode ts once, two value columns (q, event_id) as separate
     varint planes, decode all three in lockstep (batched kernels, whole
     Arrow batches of series per call)."""
-    from .codecs.batched import decode_chunk_rows, encode_chunk_rows
-
-    ev = _events(spark, sf_dir).select("user_id", "ts_us", "q", "event_id")
-    schema = "user_id bigint, ts_us bigint, q bigint, event_id bigint"
-
-    def kern(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            uid, flat, splits = _pts_np(b)
-            planes = []
-            for name, codec in (
-                ("ts_us", CODEC_DELTA), ("q", CODEC_VARINT), ("event_id", CODEC_VARINT)
-            ):
-                raw = flat.field(name).to_numpy(zero_copy_only=False).astype(np.int64)
-                buf, sp = encode_chunk_rows(raw, splits, codec)
-                planes.append(decode_chunk_rows(buf, sp)[0])
-            counts = np.diff(splits)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(uid, counts))] + [pa.array(p) for p in planes],
-                names=["user_id", "ts_us", "q", "event_id"],
-            )
-
-    return _collected_series(ev, "q").mapInArrow(kern, schema=schema)
+    return _roundtrip_series(
+        spark, sf_dir, (("ts_us", CODEC_DELTA), ("q", CODEC_VARINT), ("event_id", CODEC_VARINT))
+    )
 
 
 @q(

@@ -75,18 +75,6 @@ def get_spark(
         # mitigation when planning dominates.
         .config("spark.sql.constraintPropagation.enabled", "false")
     )
-    # AQE coalescing keeps Spark's default advisory size (64m, with
-    # coalescePartitions.parallelismFirst): the coalesce target is then
-    # min(stage bytes / default parallelism, 64m), i.e. one task wave on a
-    # small host and 64 MB partitions at scale. A fixed 1m target cut the
-    # fused rollup's 13.7 MB finalize shuffle into 10 tasks, 3 waves on 4
-    # cores; Spark's default runs it as 4 and took the traced perfbench
-    # bulk_load promote from 2.2-2.4 s to 1.7-1.8 s on a 4-core host.
-    # SPARK_GRAFT_ADVISORY_PARTITION (e.g. "1m", "256m") sets the target
-    # explicitly for local tuning.
-    advisory = os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION")
-    if advisory:
-        b = b.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

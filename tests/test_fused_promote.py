@@ -113,7 +113,9 @@ def _chunk_rows(rng, n_docs: int) -> tuple[pa.Table, pd.DataFrame]:
 
 
 def _finalize_pandas(rows: pd.DataFrame) -> pd.DataFrame:
-    """What ``_finalize`` does with partial rows, in pandas."""
+    """Merges partial rows of one (tier, doc, window) by the rule they
+    compose under: sums, min of mins, max of maxes, first by the earliest
+    first_ts and last by the latest last_ts."""
     key = ["tier", "doc_id", "source", "window_start"]
     g = rows.groupby(key)
     out = g.agg(cnt=("cnt", "sum"), sum_v=("sum_v", "sum"), min_v=("min_v", "min"),
@@ -127,8 +129,8 @@ def _finalize_pandas(rows: pd.DataFrame) -> pd.DataFrame:
 @pytest.mark.parametrize("adjacent", [True, False])
 def test_kernel_merges_doc_chunks_across_batches(batch_rows, adjacent):
     """With a doc's chunks adjacent the kernel's rows are final, one per
-    (doc, window); interleaved, they are partials that ``_finalize``'s
-    merge completes."""
+    (doc, window); interleaved, they are partials that compose: merging
+    them by the partial-merge rule gives the final rows."""
     rng = np.random.default_rng(batch_rows)
     table, points = _chunk_rows(rng, 40)
     if not adjacent:

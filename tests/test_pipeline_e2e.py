@@ -157,9 +157,9 @@ def test_stats_rollup_no_decode(spark, tokens, chunks):
 
 def test_rollup_tiers_fused_equals_cascade(spark, chunks):
     """The fused one-pass multi-tier rollup equals an independent pandas
-    recompute from the decoded points at every granularity, in both modes:
-    merged in the kernel (one chunk per doc, so every doc's chunks reach
-    one task) and merged by the shuffle."""
+    recompute from the decoded points at every granularity (one chunk per
+    doc, so every doc's chunks reach one task and the kernel's rows are
+    final)."""
     windows = [1_000_000, WINDOW_1M_US, WINDOW_1H_US]
     key = ["doc_id", "source", "window_start"]
 
@@ -174,9 +174,8 @@ def test_rollup_tiers_fused_equals_cascade(spark, chunks):
                         max_v=("value", "max"), first_ts=("ts", "first"),
                         first_v=("value", "first"), last_ts=("ts", "last"),
                         last_v=("value", "last")).reset_index()
-    for whole in (True, False):
-        fused = rollup_tiers(chunks, windows, whole_docs=whole).toPandas()
-        for t in range(len(windows)):
-            got = canon(fused[fused.tier == t].drop(columns=["tier"]))
-            want = canon(refs[t][got.columns])
-            pd.testing.assert_frame_equal(got, want, check_dtype=False), t
+    fused = rollup_tiers(chunks, windows).toPandas()
+    for t in range(len(windows)):
+        got = canon(fused[fused.tier == t].drop(columns=["tier"]))
+        want = canon(refs[t][got.columns])
+        pd.testing.assert_frame_equal(got, want, check_dtype=False), t

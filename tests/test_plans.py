@@ -60,25 +60,6 @@ def test_ttl_scalar_join_is_broadcast(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_rollup_cascade_has_single_shuffle_per_tier(spark, tmp_path):
-    from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import WINDOW_1M_US, rollup_tiers
-    from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-
-    path = str(tmp_path / "chunks")
-    flush(generate_tokens_df(spark, 50)).write.parquet(path)
-    chunks = spark.read.parquet(path)
-    t1 = rollup_tiers(chunks, [1_000_000])
-    plan = plan_of(t1, mode="simple")
-    # partial+final HashAggregate around exactly one exchange
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "HashAggregate" in plan
-    # the coarser tier is cascaded inside the kernel: still one exchange
-    t2 = rollup_tiers(chunks, [1_000_000, WINDOW_1M_US])
-    plan2 = plan_of(t2, mode="simple")
-    assert plan2.count("Exchange hashpartitioning") == 1, plan2
-
-
 def test_pure_sql_operators_are_codegened(spark):
     from sorting_compressed_time_series_spark.queries import transform_filter_project
 
@@ -122,32 +103,6 @@ def test_exact_dedup_shuffles_hashes_not_text(spark):
         # grouping keys are (bigint hash, int length) aliases — the raw
         # text column must never appear in the partitioning expression
         assert "norm_text" not in l and "text" not in l, l
-
-
-def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
-    """With one chunk per doc (single flush) every chunk of a doc reaches
-    one task, so the tier-1 rollup with ``whole_docs=True`` must plan NO
-    exchange at all: the kernel's rows are final and the tier-1 write runs
-    at scan parallelism with no shuffle."""
-    from sorting_compressed_time_series_spark.operators.ingest import flush
-    from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
-    from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
-
-    path = str(tmp_path / "chunks")
-    flush(generate_tokens_df(spark, 50)).write.parquet(path)
-    chunks = spark.read.parquet(path)
-    whole = rollup_tiers(chunks, [1_000_000], whole_docs=True).drop("tier")
-    plan = plan_of(whole, mode="simple")
-    assert "Exchange" not in plan, plan
-    # and it must equal the general (shuffled) path on this input
-    a = whole.toPandas()
-    b = rollup_tiers(chunks, [1_000_000], whole_docs=False).drop("tier").toPandas()
-    key = ["doc_id", "window_start"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)[a.columns]
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_ivf_candidate_join_broadcasts_probes_not_corpus(spark):
@@ -215,11 +170,14 @@ def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path, monkeyp
         assert pipe.warehouse.read(spark, "chunks_tier0").count() == 80
 
 
-def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
-    """The fused multi-tier rollup over one chunk per doc with
-    ``whole_docs=True`` must be a map-only plan: no Exchange anywhere
-    between the chunk scan and the per-tier rows (this is what lets the
-    whole promotion cascade ride a single write job)."""
+@pytest.mark.parametrize("n_tiers", [1, 2])
+def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path, n_tiers):
+    """The fused rollup over one chunk per doc (a single flush) is a
+    map-only plan: no Exchange and no aggregate anywhere between the chunk
+    scan and the per-tier rows, for the finest tier alone and with a
+    cascaded coarser one (this is what lets the whole promotion cascade
+    ride a single write job). The kernel's rows are final: one per (tier,
+    doc, window), and each tier counts every point once."""
     from sorting_compressed_time_series_spark.operators.ingest import flush
     from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
     from sorting_compressed_time_series_spark.sources.synth import generate_tokens_df
@@ -227,10 +185,14 @@ def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
     path = str(tmp_path / "chunks")
     flush(generate_tokens_df(spark, 60)).write.parquet(path)
     chunks = spark.read.parquet(path)
-    plan = plan_of(
-        rollup_tiers(chunks, [1_000_000, 60_000_000], whole_docs=True)
-    )
-    assert "Exchange" not in plan, plan
+    tiers = rollup_tiers(chunks, [1_000_000, 60_000_000][:n_tiers])
+    plan = plan_of(tiers, mode="simple")
+    assert "Exchange" not in plan and "HashAggregate" not in plan, plan
+    rows = tiers.toPandas()
+    assert sorted(rows.tier.unique()) == list(range(n_tiers))
+    assert not rows.duplicated(["tier", "doc_id", "source", "window_start"]).any()
+    n_points = chunks.agg(F.sum("count")).first()[0]
+    assert (rows.groupby("tier").cnt.sum() == n_points).all()
 
 
 def test_cosine_dup_pairs_single_shuffle_no_cartesian(spark):
