@@ -170,13 +170,10 @@ def test_bucketed_chunk_table_compacts_without_exchange(spark, tmp_path, monkeyp
         assert pipe.warehouse.read(spark, "chunks_tier0").count() == 80
 
 
-@pytest.mark.parametrize("n_tiers", [1, 2])
-def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path, n_tiers):
+def _assert_unique_chunks_rollup_is_map_only(spark, tmp_path, n_tiers):
     """The fused rollup over one chunk per doc (a single flush) is a
     map-only plan: no Exchange and no aggregate anywhere between the chunk
-    scan and the per-tier rows, for the finest tier alone and with a
-    cascaded coarser one (this is what lets the whole promotion cascade
-    ride a single write job). The kernel's rows are final: one per (tier,
+    scan and the per-tier rows. The kernel's rows are final: one per (tier,
     doc, window), and each tier counts every point once."""
     from sorting_compressed_time_series_spark.operators.ingest import flush
     from sorting_compressed_time_series_spark.operators.rollup import rollup_tiers
@@ -193,6 +190,18 @@ def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path, n_tiers):
     assert not rows.duplicated(["tier", "doc_id", "source", "window_start"]).any()
     n_points = chunks.agg(F.sum("count")).first()[0]
     assert (rows.groupby("tier").cnt.sum() == n_points).all()
+
+
+def test_tier1_unique_chunks_is_shuffle_free(spark, tmp_path):
+    """The finest tier alone: the tier-1 write runs at scan parallelism
+    with no shuffle."""
+    _assert_unique_chunks_rollup_is_map_only(spark, tmp_path, 1)
+
+
+def test_fused_rollup_tiers_unique_is_shuffle_free(spark, tmp_path):
+    """With a cascaded coarser tier the plan stays map-only (this is what
+    lets the whole promotion cascade ride a single write job)."""
+    _assert_unique_chunks_rollup_is_map_only(spark, tmp_path, 2)
 
 
 def test_cosine_dup_pairs_single_shuffle_no_cartesian(spark):
