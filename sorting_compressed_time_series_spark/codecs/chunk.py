@@ -21,8 +21,9 @@ Layout:  magic 'SC' | version u8 | codec u8 | body
 Any other codec id is refused with a ``ValueError`` naming it.
 
 This module holds the container: its constants, and the per-series
-byte-aligned (de)serializers that compaction merges pages with. Every
-codec is encoded and decoded by the multi-row kernels of ``batched``;
+byte-aligned (de)serializers, which the tests use as the per-series
+reference (``merge_pages`` over deserialized pages). Every codec is
+encoded and decoded by the multi-row kernels of ``batched``;
 ``encode_chunk``/``decode_chunk`` there are their one-row calls.
 """
 

@@ -156,25 +156,28 @@ def encode_series_batch(doc_id: pa.Array, source: pa.Array, ts: np.ndarray,
     row_ends = splits[1:]
 
     # --- lineage: inversions in arrival order ----------------------
-    inv = np.zeros(len(ts), dtype=np.int64)
+    nz = counts > 0
+    inv = np.zeros(len(ts), dtype=bool)
     if len(ts) > 1:
         inv[1:] = ts[1:] < ts[:-1]
-    inv[row_starts[counts > 0]] = 0  # row boundaries are not inversions
-    inv_cum = np.concatenate([[0], np.cumsum(inv)])
-    n_inv = (inv_cum[row_ends] - inv_cum[row_starts]).astype(np.int32)
+    inv[row_starts[nz]] = False  # row boundaries are not inversions
+    n_inv = np.zeros(n, np.int32)
+    if nz.any():
+        n_inv[nz] = np.add.reduceat(inv, row_starts[nz], dtype=np.int64)
+    del inv  # freed before the sort and the encode, where the peak is
 
     # --- flush sort (stable by ts within each row) -----------------
-    if n_inv.sum() > 0:
+    if n_inv.any():
         order = _segmented_stable_sort(ts, splits, counts)
         ts = ts[order]
         vals = vals[order]
+        del order
 
     # --- encode (batched, both planes) -----------------------------
     t_buf, t_splits = encode_rows(ts, splits, CODEC_DELTA)
     v_buf, v_splits = encode_rows(vals, splits, CODEC_VARINT)
 
     # --- per-row statistics (sorted order: min/max ts positional) --
-    nz = counts > 0
     min_ts = np.zeros(n, np.int64)
     max_ts = np.zeros(n, np.int64)
     first_v = np.zeros(n, np.int64)

@@ -38,10 +38,12 @@ Both take the same two paths:
   column's codes in that order — identical output (the canonical encode
   of the merged sequence), which the oracle asserts.
 
-In the Spark pipeline this kernel runs once per multi-chunk doc inside
-`compaction.compact_kernel`, the whole-bucket compaction job; page order
-= flush order, so stability gives last-writer-wins determinism for
-duplicate timestamps.
+Compaction does not run it: `compaction.compact_kernel` merges a batch of
+series with one batched decode and the one series encoder. It serves the
+`compaction_merge` query, the `ooo_sort` benchmark and
+`tools/sort_microbench.py`, and it is the tests' per-series reference for
+compaction; page order = flush order, so stability gives last-writer-wins
+determinism for duplicate timestamps.
 """
 
 from __future__ import annotations

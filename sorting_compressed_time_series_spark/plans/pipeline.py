@@ -375,12 +375,13 @@ class Pipeline:
     # --- maintenance: compaction ------------------------------------------
     @_described
     def compact(self) -> dict:
-        """Merge every series with two or more tier-0 chunks into one chunk
-        (the reference's compaction stage; page-merge kernel: splice fast
-        path for disjoint chunks, stable k-merge for overlap) and commit a
+        """Merge every series ``(doc_id, source)`` with two or more tier-0
+        chunks into one chunk (the reference's compaction stage: one
+        batched decode of a batch's chunks, then the one series encoder,
+        whose stable sort keeps flush order on ties) and commit a
         consolidated snapshot in the table's buckets, in ONE whole-bucket
-        job (``_bucket_stage`` → ``compact_kernel``): single-chunk docs'
-        rows pass through as they are. A compaction that merges no doc
+        job (``_bucket_stage`` → ``compact_kernel``): single-chunk series'
+        rows pass through as they are. A compaction that merges no series
         commits nothing. The point set is preserved exactly, so promoted
         tiers stay valid and are untouched. Refuses to run over
         un-promoted appends: the consolidating write would retire the

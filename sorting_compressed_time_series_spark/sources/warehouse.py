@@ -72,7 +72,7 @@ _TASK = "_task"  # the input column carrying a task's id
 # the digits after the last ``_`` of the name, before its extension
 _BUCKET_ID = re.compile(r".*_(\d+)(?:\..*)?")
 HELD_PER_BYTE = 20  # a bucket task's peak RSS per footer byte of a pass (README)
-DECODED_BYTES_PER_POINT = 64  # the rollup kernel's peak RSS per point of a batch
+DECODED_BYTES_PER_POINT = 88  # the bucket kernels' peak RSS per point of a batch (compaction's)
 
 
 def p_day_of(window_start: np.ndarray) -> np.ndarray:

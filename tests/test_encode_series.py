@@ -1,7 +1,9 @@
 """Property test of the one series encoder (``encode_series_batch``): random
 batches of rows, empty rows and duplicate timestamps among them, int32 and
-int64 values. The decoded planes are the stable sort of each row by time,
-and every statistic and the inversion count equal a numpy recompute."""
+int64 values up to both int64 extremes. The decoded planes are the stable
+sort of each row by time, and every statistic and the inversion count
+equal a numpy recompute; the examples put every varint width class and
+both int64 extremes at both ends of a row (``first_v``/``last_v``)."""
 
 import numpy as np
 import pyarrow as pa
@@ -20,7 +22,12 @@ SETTINGS = settings(max_examples=60, deadline=None, derandomize=True,
 # timestamps: a narrow range (duplicates and ties) or a wide one (rows past
 # the composite sort key's 2^33 span take the lexsort fallback)
 _ts = st.one_of(st.integers(0, 12), st.integers(-(2**45), 2**45))
-_row = st.lists(st.tuples(_ts, st.integers(-(2**31), 2**31 - 1)), max_size=40)
+# values: in the int32 range, or anywhere in the int64 range (the int32
+# case takes them modulo 2^32)
+_val = st.one_of(st.integers(-(2**31), 2**31 - 1), st.integers(-(2**63), 2**63 - 1))
+_row = st.lists(st.tuples(_ts, _val), max_size=40)
+# zigzag widths of 1, 2, 4 and 8 bytes, and both int64 extremes
+_WIDTHS = [-1, 256, -(2**31), 2**40, 2**63 - 1, -(2**63)]
 _rows = st.lists(_row, min_size=1, max_size=10)
 
 _STATS = ("count", "min_ts", "max_ts", "min_v", "max_v", "first_v", "last_v",
@@ -39,16 +46,19 @@ def _expected(ts: np.ndarray, vals: np.ndarray) -> dict[str, int]:
 
 @given(rows=_rows, int64_vals=st.booleans())
 @example(rows=[[], [(5, 1), (3, 2), (5, 3), (3, 4)], []], int64_vals=False)
+@example(rows=[[], [(0, 0)], [(0, -(2**63))], [(2, -(2**63)), (0, 2**63 - 1), (1, 5)],
+               [(0, -1), (1, 2**40), (2, 255), (3, 256), (4, -(2**31))]], int64_vals=True)
+@example(rows=[[(1, 0), (0, a), (2, b)] for a, b in zip(_WIDTHS, _WIDTHS[::-1])],
+         int64_vals=True)
+@example(rows=[[(0, -(2**31)), (1, 2**31 - 1)], [(3, 2**31 - 1), (3, -(2**31)), (2, -1)]],
+         int64_vals=False)
 @SETTINGS
 def test_encode_series_batch_sorts_encodes_and_counts(rows, int64_vals):
     dtype = np.int64 if int64_vals else np.int32
     splits = np.zeros(len(rows) + 1, np.int64)
     np.cumsum([len(r) for r in rows], out=splits[1:])
     ts = np.array([t for r in rows for t, _ in r], np.int64)
-    vals = np.array([v for r in rows for _, v in r], np.int64)
-    if int64_vals:  # past the int32 range
-        vals = vals * 2**20
-    vals = vals.astype(dtype)
+    vals = np.array([v for r in rows for _, v in r], np.int64).astype(dtype)
     doc = pa.array([f"d{i}" for i in range(len(rows))])
     src = pa.array(["s"] * len(rows))
 

@@ -7,7 +7,9 @@ working tree.
 Exports ``<base-rev>`` with ``git archive`` into ``--workdir`` (a new temp
 dir by default), then runs ``perfbench/run.py --trace 0`` once per side and
 pair, base first in odd pairs and change first in even ones. Prints every
-run as it finishes, then for each end-to-end metric of ``BENCHMARK.json``:
+run as it finishes (its end-to-end metrics, then the workload's own named
+metrics, e.g. ``append_merge``'s ``compact_s``), then for each end-to-end
+metric of ``BENCHMARK.json``:
 both medians, the base's IQR, the pairs the change won, and whether a gain
 holds (the change wins >= 9 of 10 pairs and the gap between the medians
 exceeds the base's IQR) or the change is worse than the metric's bound.
@@ -45,16 +47,17 @@ def export(rev: str, dest: str) -> str:
 
 def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     """One untraced perfbench run in ``tree``: its end-to-end metric values
-    plus ``correct`` and ``failed``."""
+    plus ``correct``, ``failed`` and ``workload`` (its named metrics)."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds), "--trace", "0"],
         cwd=tree, capture_output=True, text=True)
     if out.returncode != 0:
         raise RuntimeError(f"perfbench failed in {tree}:\n{out.stderr[-3000:]}")
-    last = json.loads(out.stdout.strip().splitlines()[-1])
+    named, last = map(json.loads, out.stdout.strip().splitlines()[-2:])
     run = {k: v["value"] for k, v in last["metrics"].items()}
-    run.update(correct=last["correct"], failed=last["failed"])
+    run.update(correct=last["correct"], failed=last["failed"],
+               workload={k: v["value"] for k, v in named["workload_metrics"].items()})
     return run
 
 
@@ -119,7 +122,8 @@ def main(argv: list[str] | None = None) -> int:
                 runs[side].append(run)
                 print(json.dumps({"pair": i + 1, "side": side, "correct": run["correct"],
                                   "failed": run["failed"],
-                                  **{n: round(run[n], 4) for n in names}}), flush=True)
+                                  **{n: round(run[n], 4) for n in names},
+                                  "workload": run["workload"]}), flush=True)
     finally:
         if not args.workdir:
             shutil.rmtree(workdir, ignore_errors=True)
