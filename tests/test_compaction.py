@@ -5,7 +5,9 @@
   and overlapping regimes, with docs straddling batches; a property test
   holds ``compact_kernel`` to the per-series reference (``merge_pages``
   over the deserialized pages, then ``serialize_bytealigned``) and to a
-  numpy recompute or fold of every statistic;
+  numpy recompute or fold of every statistic, and a merged chunk's
+  ``first_v``/``last_v`` to its plane's ends at every varint width and
+  int64 extreme;
 - ``Pipeline.compact``: one whole-bucket job over snapshot + segments (a
   ``Range`` of bucket ids under the kernel, no Exchange, no scan of the
   chunk table) under 2-row Arrow batches; single-chunk rows come out
@@ -214,6 +216,25 @@ def test_compact_kernel_equals_per_series_merge(series, batch_rows):
             assert row == run[0]
         else:
             assert row == _merged_row(run), (row["doc_id"], row["source"])
+
+
+@pytest.mark.parametrize("vals", [
+    [], [0], [-(2**63)], [2**63 - 1, 5, -(2**63)], [-1, 2**40, 255, 256, -(2**31)],
+])
+def test_end_values_read_only_the_end_payloads(vals):
+    # first_v / last_v of a merged chunk are the end elements of its value
+    # plane: equal to a full decode at every width class and int64 extreme,
+    # with the ends in different source chunks
+    half = len(vals) // 2
+    chunks = [[(t, v) for t, v in enumerate(vals[:half])],
+              [(t, v) for t, v in enumerate(vals[half:], half)]]
+    out, merged = _drain(compact_kernel(iter(_chunk_rows([(0, "a", True, chunks)]).to_batches())))
+    (row,) = pa.Table.from_batches(out, schema=CHUNK_ARROW).to_pylist()
+    assert merged == 1
+    want = (vals[0], vals[-1]) if vals else (0, 0)
+    assert (row["first_v"], row["last_v"]) == want
+    decoded = decode_chunk(row["value_blob"])
+    assert list(decoded) == vals
 
 
 # ---------------------------------------------------------------------------
