@@ -97,9 +97,11 @@ class KernelWriter:
     n)`` each file gets Spark's ``_<bucket:05d>`` suffix, so
     ``Warehouse.bucket_files`` maps it to its bucket (for
     ``bucket_reader``); ``_InputBuckets`` is the rule that picks a row's
-    bucket. The file schema is ``schema``: zstd level 3, row groups of
-    ~4 MB, min/max statistics on every non-binary column, dictionary pages
-    on none of the binary columns (and on no column of a sliced write).
+    bucket. The file schema is ``schema``, in row groups of ~4 MB, each
+    column encoded by its Arrow type (``_encoding``): integers
+    ``DELTA_BINARY_PACKED``, strings dictionary pages (none in a sliced
+    write), blobs PLAIN, all zstd level 1, min/max statistics on every
+    column but the blobs.
 
     A writer may carry a ``side`` writer (``with_side``): the same tasks
     then write two sets of files from one kernel, e.g. the flush's chunks
@@ -260,15 +262,15 @@ def bucket_reader(buckets: dict[int, list[str]], columns: tuple[str, ...], *,
 
     def read(ids: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         for batch in ids:
             for b in batch.column(_TASK).to_numpy():
-                for where in _doc_passes(buckets[int(b)], columns, filters, budget):
+                data = _footed(buckets[int(b)])
+                for where in _doc_passes(data, columns, filters, budget):
                     # one thread: the job's tasks already keep every core busy
                     # (pyarrow's own pool measured slower at 4 tasks on 4 cores)
-                    table = pq.read_table(buckets[int(b)], columns=list(columns),
-                                          filters=where, use_threads=False).combine_chunks()
+                    table = data.to_table(columns=list(columns), filter=where,
+                                          use_threads=False).combine_chunks()
                     order = pc.sort_indices(table, [(c, "ascending") for c in sort_by])
                     cum = np.cumsum(table["count"].to_numpy()[order.to_numpy()])
                     for lo, hi in _runs(cum, budget // DECODED_BYTES_PER_POINT,
@@ -292,25 +294,42 @@ def _runs(cum: np.ndarray, cap: float, most: int) -> list[tuple[int, int]]:
     return runs
 
 
-def _doc_passes(paths: list[str], columns: tuple[str, ...], filters: list[list[tuple]],
-                budget: int) -> list:
-    """``bucket_reader``'s pass filters over one bucket: ``[filters]`` if its
-    footers' uncompressed bytes of ``columns`` fit ``budget``; else, per
-    contiguous range of sorted ``doc_id`` whose points × bytes per point
-    fit it (or one doc), ``filters`` in the range; last, the null id."""
+def _footed(paths: list[str]) -> pa.dataset.FileSystemDataset:
+    """``paths`` as one ``pyarrow.dataset`` whose fragments hold their
+    footers, each read once here: every later read of it prunes row groups
+    by the cached statistics and opens no footer again (a
+    ``pq.read_table(paths)`` re-reads every footer, per call)."""
+    import pyarrow.dataset as ds
+    from pyarrow import fs
+
+    local, fmt = fs.LocalFileSystem(), ds.ParquetFileFormat()
+    frags = [fmt.make_fragment(path, local) for path in paths]
+    for frag in frags:
+        frag.ensure_complete_metadata()
+    return ds.FileSystemDataset(frags, frags[0].physical_schema if frags else pa.schema([]),
+                                fmt, local)
+
+
+def _doc_passes(data: pa.dataset.FileSystemDataset, columns: tuple[str, ...],
+                filters: list[list[tuple]], budget: int) -> list:
+    """``bucket_reader``'s pass filters over one bucket's files (``_footed``),
+    as expressions: ``filters`` if the footers' uncompressed bytes of
+    ``columns`` fit ``budget``; else, per contiguous range of sorted
+    ``doc_id`` whose points × bytes per point fit it (or one doc),
+    ``filters`` in the range; last, the null id."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    mds = [pq.read_metadata(path) for path in paths]
+    mds = [frag.metadata for frag in data.get_fragments()]
     nbytes = sum(md.row_group(g).column(j).total_uncompressed_size for md in mds
                  for g in range(md.num_row_groups) for j in range(md.num_columns)
                  if md.schema.column(j).path in columns)
-    if nbytes <= budget:
-        return [filters] if paths else []
-    keys = {c for conj in filters for c, _, _ in conj} | {"doc_id", "count"}
-    rows = pq.read_table(paths, columns=sorted(keys), use_threads=False)
-    per_point = nbytes / max(pc.sum(rows["count"]).as_py() or 0, 1)
     where = pq.filters_to_expression(filters)
+    if nbytes <= budget:
+        return [where] if mds else []
+    keys = {c for conj in filters for c, _, _ in conj} | {"doc_id", "count"}
+    rows = data.to_table(columns=sorted(keys), use_threads=False)
+    per_point = nbytes / max(pc.sum(rows["count"]).as_py() or 0, 1)
     docs = rows.filter(where).group_by("doc_id").aggregate([("count", "sum")]).sort_by("doc_id")
     ids, doc = docs["doc_id"], pc.field("doc_id")
     n = len(ids) - ids.null_count
@@ -370,6 +389,21 @@ def _files_batch(task: int, written: list[tuple], clock: np.ndarray, kernel_n: i
                "run_keys"])
 
 
+def _encoding(schema: pa.Schema, sliced: bool) -> dict:
+    """The ``ParquetWriter`` options of a kernel file, from its columns'
+    Arrow types: integers ``DELTA_BINARY_PACKED`` (the reference's TS_2DIFF
+    frame: a min delta per block of 128 values, bit-packed miniblocks),
+    strings dictionary pages unless the write is sliced, the rest (blobs,
+    booleans) PLAIN; zstd level 1; min/max statistics on every column but the blobs
+    (``footer_stats`` and ``_doc_passes`` read them)."""
+    ints = [f.name for f in schema if pa.types.is_integer(f.type)]
+    strings = [f.name for f in schema if pa.types.is_string(f.type)]
+    return dict(compression="zstd", compression_level=1,
+                use_dictionary=False if sliced else strings,
+                column_encoding=dict.fromkeys(ints, "DELTA_BINARY_PACKED"),
+                write_statistics=[f.name for f in schema if not pa.types.is_binary(f.type)])
+
+
 @dataclass
 class _OpenFile:
     path: str
@@ -387,9 +421,7 @@ class _TaskFiles:
         self.spec, self.dir = spec, attempt_dir
         self.prefix = f"part-{part:05d}-{uuid.uuid4()}"
         self.files: dict[tuple[int, int, int], _OpenFile] = {}
-        plain = [f.name for f in spec.schema if not pa.types.is_binary(f.type)]
-        self.dictionary = plain if spec.slice_col is None else False
-        self.statistics = plain
+        self.options = _encoding(spec.schema, sliced=spec.slice_col is not None)
 
     def add(self, batch: pa.RecordBatch, bucket: np.ndarray | None) -> None:
         n = batch.num_rows
@@ -439,9 +471,7 @@ class _TaskFiles:
             return
         if f.writer is None:
             os.makedirs(os.path.dirname(f.path), exist_ok=True)
-            f.writer = pq.ParquetWriter(
-                f.path, self.spec.schema, compression="zstd", compression_level=3,
-                use_dictionary=self.dictionary, write_statistics=self.statistics)
+            f.writer = pq.ParquetWriter(f.path, self.spec.schema, **self.options)
         table = pa.Table.from_batches(f.buffered)
         f.writer.write_table(table, row_group_size=max(
             1, table.num_rows * ROW_GROUP_BYTES // max(f.nbytes, 1)))

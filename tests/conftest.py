@@ -29,6 +29,7 @@ def passes_memory():
     from sorting_compressed_time_series_spark.sources.warehouse import (
         HELD_PER_BYTE,
         _doc_passes,
+        _footed,
     )
 
     def memory(wh, columns: tuple[str, ...]) -> int:
@@ -41,8 +42,8 @@ def passes_memory():
                        if md.schema.column(j).path in columns)
 
         out = HELD_PER_BYTE * min(map(nbytes, buckets.values())) // 5
-        assert all(len(_doc_passes(fs, columns, [[("tier", "=", 0)]], out // HELD_PER_BYTE))
-                   >= 3 for fs in buckets.values())
+        assert all(len(_doc_passes(_footed(fs), columns, [[("tier", "=", 0)]],
+                                   out // HELD_PER_BYTE)) >= 3 for fs in buckets.values())
         return out
 
     return memory

@@ -42,3 +42,13 @@ def test_summary_refuses_a_gain_inside_the_noise_and_flags_a_regression():
     assert work["wins"] == 10 and not work["gain_holds"]  # gap 4.5 < base IQR 20
     assert op["wins"] == 0 and not op["gain_holds"] and op["beyond_bound"]  # +30% > 25%
     assert "WORSE than bound" in ab.report([work, op])
+
+
+def test_summary_claims_no_gain_from_fewer_than_ten_pairs():
+    base = _runs([100, 102, 98, 101, 99, 103], [2.0, 2.1, 1.9, 2.0, 2.2, 1.8])
+    change = _runs([150, 152, 148, 151, 149, 153], [1.5, 1.4, 1.6, 1.5, 1.5, 1.4])
+    work, op = ab.summarize(base, change, METRICS)
+    assert work["wins"] == work["pairs"] == 6 and op["wins"] == 6
+    assert not work["gain_holds"] and not op["gain_holds"]
+    text = ab.report([work, op])
+    assert "gain holds" not in text and text.count("no claimable gain") == 2

@@ -12,7 +12,8 @@ no scan and no exchange.
   of one pass, row for row (ties, a doc over the budget, a null id); a
   bucket past ``spark.python.worker.memory`` is read in ≥ 3 passes by the
   same plan, and full, resumed and merge promotes give the one-pass
-  tables; a chunk file without a bucket id is refused by name before any
+  tables; a task reads each of its files' footers once, whatever its
+  passes; a chunk file without a bucket id is refused by name before any
   job or commit; the driver opens each chunk footer once per promote;
 - crash between tier commits: a rerun finishes the job;
 - one plan for every regime: a no-op promote runs no job, a merge over
@@ -24,6 +25,7 @@ no scan and no exchange.
 - job descriptions: the engine labels its own actions.
 """
 
+import collections
 import contextlib
 import io
 import os
@@ -34,6 +36,7 @@ from functools import partial
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 import pytest
 
@@ -59,6 +62,7 @@ from sorting_compressed_time_series_spark.sources.warehouse import (
     HELD_PER_BYTE,
     Warehouse,
     _doc_passes,
+    _footed,
     bucket_reader,
     with_p_day,
 )
@@ -308,10 +312,10 @@ def test_bucket_reader_passes_equal_one_pass(tmp_path):
             paths[-1], row_group_size=16)
     one = _bucket_rows(paths, 1 << 40, 1000)
     assert one.slice(len(one) - 3)["doc_id"].null_count == 3  # the null id sorts last
-    assert len(_doc_passes(paths, READ_COLUMNS, READ_FILTERS, 1 << 40)) == 1
+    assert len(_doc_passes(_footed(paths), READ_COLUMNS, READ_FILTERS, 1 << 40)) == 1
     counts = set()
     for memory in [1 << 16, 1 << 14, 1 << 12, 1]:
-        passes = _doc_passes(paths, READ_COLUMNS, READ_FILTERS, memory // HELD_PER_BYTE)
+        passes = _doc_passes(_footed(paths), READ_COLUMNS, READ_FILTERS, memory // HELD_PER_BYTE)
         counts.add(len(passes))
         docs = [set(pq.read_table(paths, columns=["doc_id"], filters=w)["doc_id"].to_pylist())
                 for w in passes]
@@ -319,6 +323,86 @@ def test_bucket_reader_passes_equal_one_pass(tmp_path):
         for batch_rows in (3, 1000):
             assert _bucket_rows(paths, memory, batch_rows).equals(one), (memory, batch_rows)
     assert min(counts) >= 3 and len(counts) >= 3
+
+
+class _FooterReads(pafs.FileSystemHandler):
+    """A read-only ``pyarrow.fs.PyFileSystem`` handler over the local disk
+    that counts, per path, the reads that reach a file's last byte: a
+    parquet reader's footer reads (column chunks end before the footer)."""
+
+    def __init__(self):
+        self.local, self.reads = pafs.LocalFileSystem(), collections.Counter()
+
+    def __eq__(self, other):
+        return self is other
+
+    def __ne__(self, other):
+        return self is not other
+
+    def _read_only(self, *args):
+        raise NotImplementedError
+
+    create_dir = delete_dir = delete_dir_contents = delete_root_dir_contents = _read_only
+    delete_file = move = copy_file = open_output_stream = open_append_stream = _read_only
+
+    def get_type_name(self):
+        return "footer-reads"
+
+    def normalize_path(self, path):
+        return path
+
+    def get_file_info(self, paths):
+        return self.local.get_file_info(paths)
+
+    def get_file_info_selector(self, selector):
+        return self.local.get_file_info(selector)
+
+    def open_input_stream(self, path):
+        return self.local.open_input_stream(path)
+
+    def open_input_file(self, path):
+        reads, size = self.reads, os.path.getsize(path)
+
+        class Tail(io.FileIO):
+            def read(self, n=-1):
+                if n < 0 or self.tell() + n >= size:
+                    reads[path] += 1
+                return super().read(n)
+
+        return pa.PythonFile(Tail(path), mode="r")
+
+
+def test_bucket_reader_reads_each_footer_once(spark, tmp_path, multi_chunk, passes_memory,
+                                              monkeypatch):
+    """A task reading its bucket in ≥ 3 doc-range passes reads each file's
+    footer once, and yields the rows of one pass."""
+    chunks, _ = multi_chunk
+    p = _warehouse(spark, tmp_path / "wh", chunks)
+    columns = (*ROLLUP_INPUT, "count")
+    buckets = p.warehouse.bucket_files("chunks_tier0")
+
+    def task(b: int, memory: int) -> pa.Table:
+        read = bucket_reader(buckets, columns, filters=[[("tier", "=", 0)]],
+                             sort_by=("doc_id", "source"), batch_rows=1000, memory=memory)
+        ids = pa.record_batch({"_task": pa.array([b], pa.int32())})
+        return pa.Table.from_batches(list(read(iter([ids]))))
+
+    one = {b: task(b, 1 << 40) for b in buckets}
+    memory = passes_memory(p.warehouse, columns)
+    footers = _FooterReads()
+    counting = pafs.PyFileSystem(footers)
+
+    class Local(pafs.LocalFileSystem):  # every local filesystem made from here on counts
+        def __new__(cls, *args, **kwargs):
+            return counting
+
+    monkeypatch.setattr(pafs, "LocalFileSystem", Local)
+    for name in ("read_metadata", "read_table"):
+        monkeypatch.setattr(pq, name, partial(getattr(pq, name), filesystem=counting))
+    for b, paths in buckets.items():
+        footers.reads.clear()
+        assert task(b, memory).equals(one[b]), b
+        assert footers.reads == collections.Counter(paths), b
 
 
 def test_file_without_bucket_id_is_refused(spark, tmp_path, multi_chunk):

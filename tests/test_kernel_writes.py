@@ -2,7 +2,8 @@
 own files (``Warehouse.kernel_writer``) and return one row per file.
 
 - parquet parity: file schema = manifest schema without ``p_day``, zstd,
-  ~4 MB row groups, no dictionary pages on blobs or tier slices, min/max
+  ~4 MB row groups, ``DELTA_BINARY_PACKED`` integers with no dictionary
+  page, PLAIN blobs, no dictionary pages on tier slices, exact min/max
   statistics where ``footer_stats`` reads them;
 - ingest is one Spark job with no Exchange and no Sort before the writer;
 - bucket semantics: every file's ``_<bucket>`` suffix is the bucket Spark's
@@ -14,7 +15,11 @@ own files (``Warehouse.kernel_writer``) and return one row per file.
 - ingest and promote register nothing in the session catalog, and their
   lineage entries record where the task time went;
 - doc ids of any shape key a series: the flush and the promote give the
-  input's points and their recomputed tiers.
+  input's points and their recomputed tiers;
+- readers: the kernel's chunk and tier files read back alike through
+  Spark, pyarrow and DuckDB; a table whose files carry the old writer
+  settings (zstd 3, dictionary pages, PLAIN integers) takes a new append,
+  a merge promote and a compaction like an all-new one.
 """
 
 import contextlib
@@ -26,6 +31,7 @@ import uuid
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -117,10 +123,47 @@ def _chunk_batch(rng, n: int, blob_bytes: int, days: int) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict(cols, schema=CHUNK_ARROW)
 
 
+def _assert_encoded(md, schema: pa.Schema, dictionary: bool) -> None:
+    """Every column chunk of ``md`` zstd; integers ``DELTA_BINARY_PACKED``
+    with no dictionary page, blobs PLAIN with none, strings a dictionary
+    page iff ``dictionary``."""
+    for g in range(md.num_row_groups):
+        for j in range(md.num_columns):
+            col = md.row_group(g).column(j)
+            name, kind = col.path_in_schema, schema.field(col.path_in_schema).type
+            assert col.compression == "ZSTD", name
+            if pa.types.is_integer(kind):
+                assert "DELTA_BINARY_PACKED" in col.encodings, (name, col.encodings)
+                assert "PLAIN" not in col.encodings, (name, col.encodings)
+                assert not col.has_dictionary_page, name
+            elif pa.types.is_binary(kind):
+                assert col.encodings == ("RLE", "PLAIN"), (name, col.encodings)
+                assert not col.has_dictionary_page, name
+            elif pa.types.is_string(kind):
+                assert col.has_dictionary_page == dictionary, name
+
+
+def _assert_exact_stats(path: str) -> None:
+    """Each row group's min/max statistics are its values' own, on every
+    column but the blobs (which carry none)."""
+    f = pq.ParquetFile(path)
+    for g in range(f.metadata.num_row_groups):
+        values = f.read_row_group(g)
+        for j in range(f.metadata.num_columns):
+            col = f.metadata.row_group(g).column(j)
+            st, name = col.statistics, col.path_in_schema
+            if pa.types.is_binary(values.schema.field(name).type):
+                assert st is None or not st.has_min_max, name
+                continue
+            lo, hi = pc.min_max(values[name]).values()
+            assert st.has_min_max and (st.min, st.max) == (lo.as_py(), hi.as_py()), name
+
+
 def test_writer_parquet_parity(tmp_path):
-    """Chunk files: the kernel's schema, zstd, row groups of ~4 MB, no
-    dictionary pages on the blob columns, min/max statistics on the rest;
-    every row lands in the p_day partition of its window_start."""
+    """Chunk files: the kernel's schema, zstd, row groups of ~4 MB,
+    ``DELTA_BINARY_PACKED`` integers with no dictionary page, PLAIN blob
+    columns with none, min/max statistics (exact) on the rest; every row
+    lands in the p_day partition of its window_start."""
     rng = np.random.default_rng(7)
     batches = [_chunk_batch(rng, 1500, 2048, days=2) for _ in range(2)]  # ~12 MB of blobs
     writer = KernelWriter(str(tmp_path / "staging"), CHUNK_ARROW)
@@ -146,13 +189,16 @@ def test_writer_parquet_parity(tmp_path):
                     assert col.has_dictionary_page != binary, col.path_in_schema
                 st = col.statistics
                 assert (st is not None and st.has_min_max) != binary, col.path_in_schema
+        _assert_encoded(md, CHUNK_ARROW, dictionary=True)
+        _assert_exact_stats(r["path"])
         table = pq.read_table(r["path"])
         assert set(table.column("window_start").to_numpy() // US_PER_DAY) == {r["p_day"]}
 
 
 def test_sliced_writer_has_no_dictionary_pages(tmp_path):
     """Tier slices: one file per (slice, p_day) under ``tier=<v>``, the
-    slice column only in the directory name, no dictionary pages."""
+    slice column only in the directory name, no dictionary pages, zstd,
+    ``DELTA_BINARY_PACKED`` integers and exact min/max statistics."""
     n = 400
     rows = {c: pa.array(np.arange(n, dtype=np.int64)) for c in TIER_PARTIAL_ARROW.names}
     rows["doc_id"] = pa.array([f"doc{i % 7}" for i in range(n)])
@@ -169,6 +215,8 @@ def test_sliced_writer_has_no_dictionary_pages(tmp_path):
         assert pq.read_schema(r["path"]).remove_metadata().equals(TIER_PARTIAL_ARROW)
         md = pq.read_metadata(r["path"])
         assert not any(md.row_group(0).column(j).has_dictionary_page for j in range(md.num_columns))
+        _assert_encoded(md, TIER_PARTIAL_ARROW, dictionary=False)
+        _assert_exact_stats(r["path"])
         assert set(pq.read_table(r["path"]).column("cnt").to_numpy() % 3) == {r["slice"]}
 
 
@@ -426,3 +474,88 @@ def test_arbitrary_doc_ids_ingest_and_promote(spark, tmp_path):
         points.rename(columns={"token": "value"})[cols].sort_values(cols).reset_index(drop=True),
         check_dtype=False)
     assert check_tiers(p.warehouse.root, expected_tiers(points)) == []
+
+
+# ---------------------------------------------------------------------------
+# readers, and tables whose files mix the old and the new encodings
+# ---------------------------------------------------------------------------
+
+def _sorted_rows(df: pd.DataFrame, schema: pa.Schema) -> pd.DataFrame:
+    """``df``'s ``schema`` columns, sorted by all of them but the blobs."""
+    key = [f.name for f in schema if not pa.types.is_binary(f.type)]
+    return df[schema.names].sort_values(key).reset_index(drop=True)
+
+
+def test_kernel_files_read_back_alike_in_spark_pyarrow_and_duckdb(spark, tmp_path):
+    """The chunk and tier tables a fresh load writes (delta-encoded
+    integers, the int32 chunk columns among them) read back equal, row for
+    row and type for type, through ``Warehouse.read`` (Spark),
+    ``pq.read_table`` and DuckDB."""
+    import duckdb
+
+    p = Pipeline(spark, Warehouse(str(tmp_path / "wh")))
+    p.ingest(generate_tokens_df(spark, 60))
+    p.promote_all()
+    wh, con = p.warehouse, duckdb.connect()
+    for table in ("chunks_tier0", *TIER_WINDOWS):
+        paths = wh._data_files(table)
+        schema = pq.read_schema(paths[0]).remove_metadata()
+        for path in paths:
+            _assert_encoded(pq.read_metadata(path), schema, dictionary=table == "chunks_tier0")
+        arrow = _sorted_rows(pq.read_table(paths).to_pandas(), schema)
+        names = ", ".join(f'"{c}"' for c in schema.names)
+        duck = con.execute(
+            f"SELECT {names} FROM read_parquet({paths!r}, hive_partitioning = false)").df()
+        for other in (wh.read(spark, table).toPandas(), duck):
+            pd.testing.assert_frame_equal(_sorted_rows(other, schema), arrow)
+        if table == "chunks_tier0":
+            assert all(arrow[c].dtype == np.int32
+                       for c in ("tier", "count", "n_inversions", "bytes_time"))
+    con.close()
+
+
+def _rewrite_with_old_settings(wh: Warehouse, table: str) -> None:
+    """Every live file of ``table`` rewritten in place the way the kernel
+    wrote it before the delta encoding: zstd level 3, PLAIN integers, and
+    dictionary pages on the non-blob columns of unsliced (chunk) files."""
+    for path in wh._data_files(table):
+        rows = pq.ParquetFile(path).read()
+        plain = [f.name for f in rows.schema if not pa.types.is_binary(f.type)]
+        pq.write_table(rows, path, compression="zstd", compression_level=3,
+                       use_dictionary=plain if table == "chunks_tier0" else False,
+                       write_statistics=plain)
+        md = pq.read_metadata(path)
+        assert not any("DELTA_BINARY_PACKED" in md.row_group(g).column(j).encodings
+                       for g in range(md.num_row_groups) for j in range(md.num_columns))
+
+
+def test_tables_of_old_and_new_files_append_merge_and_compact_alike(spark, tmp_path):
+    """A warehouse whose committed files all carry the old writer settings
+    takes an append from the new writer, a merge promote and a compaction,
+    and ends with the tables of the same calls on an all-new warehouse: no
+    upgrade step."""
+    first = generate_tokens_df(spark, 40)
+    second = generate_tokens_df(spark, 30, start=20)  # docs 20-39 delivered again
+    new, old = (Pipeline(spark, Warehouse(str(tmp_path / name))) for name in ("new", "old"))
+    for p in (new, old):
+        p.ingest(first)
+        p.promote_all()
+    for table in ("chunks_tier0", *TIER_WINDOWS):
+        _rewrite_with_old_settings(old.warehouse, table)
+    for p in (new, old):
+        p.ingest(second, append=True)
+    segment = old.warehouse.pending_appends("chunks_tier0")
+    for path in old.warehouse._dir_files("chunks_tier0", segment[0]):
+        _assert_encoded(pq.read_metadata(path), CHUNK_ARROW, dictionary=True)
+
+    def same_tables():
+        pd.testing.assert_frame_equal(_chunks_of(old.warehouse.root),
+                                      _chunks_of(new.warehouse.root))
+        for name, want in _tiers_of(new.warehouse.root).items():
+            pd.testing.assert_frame_equal(_tiers_of(old.warehouse.root)[name], want)
+
+    for p in (new, old):
+        p.promote_all()
+    same_tables()
+    assert old.compact() == new.compact() == {"compacted_docs": 20}
+    same_tables()

@@ -11,8 +11,9 @@ run as it finishes (its end-to-end metrics, then the workload's own named
 metrics, e.g. ``append_merge``'s ``compact_s``), then for each end-to-end
 metric of ``BENCHMARK.json``:
 both medians, the base's IQR, the pairs the change won, and whether a gain
-holds (the change wins >= 9 of 10 pairs and the gap between the medians
-exceeds the base's IQR) or the change is worse than the metric's bound.
+holds (at least 10 pairs, the change wins >= 9 of 10 of them and the
+gap between the medians exceeds the base's IQR) or the change is worse
+than the metric's bound.
 Run it from the repository root; the workload's seed should be one not
 used while developing the change.
 """
@@ -30,6 +31,7 @@ import tempfile
 import numpy as np
 
 WIN_SHARE = 0.9  # a gain needs the change to win >= 9 of 10 pairs
+MIN_PAIRS = 10  # ... of at least 10 pairs: 6 of 6 is no claim
 
 
 def end_to_end(root: str) -> list[dict]:
@@ -78,7 +80,8 @@ def summarize(base: list[dict], change: list[dict], metrics: list[dict]) -> list
         out.append({"name": name, "unit": m["unit"], "base_median": med_b,
                     "change_median": med_c, "ratio": med_c / med_b if med_b else float("nan"),
                     "base_iqr": float(q3 - q1), "wins": wins, "pairs": len(b),
-                    "gain_holds": wins >= WIN_SHARE * len(b) and gap > q3 - q1,
+                    "gain_holds": (len(b) >= MIN_PAIRS and wins >= WIN_SHARE * len(b)
+                                   and gap > q3 - q1),
                     "beyond_bound": worse > m["bound"]})
     return out
 
